@@ -19,6 +19,7 @@ One `watchedBy` element per event row; `movies` groups these per movie.
 
 from __future__ import annotations
 
+from pyspark import StorageLevel
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
@@ -74,12 +75,16 @@ def derive_movies(spark: SparkSession, sf_dir: str) -> DataFrame:
     NOT a result memo (r12 VERDICT next #6): the dict holds a LAZY
     DataFrame handle, never computed rows — `spark.catalog.clearCache()`
     (which the bench issues between queries) drops the materialized
-    cache and any later use recomputes from the parquet inputs; the
-    handle only lets multiple entries share one persist() registration
-    within a session."""
+    cache, and the next call re-registers the persist, so the next use
+    recomputes once from the parquet inputs; the handle only lets
+    multiple entries share one persist() registration within a session."""
     key = (spark.sparkContext.applicationId, sf_dir)
     cached = _MOVIES_CACHE.get(key)
     if cached is not None:
+        # clearCache() unregisters the persist but keeps the handle:
+        # register it again, or every later use recomputes the nest-groupBy
+        if cached.storageLevel == StorageLevel.NONE:
+            cached.persist()
         return cached
     flat = derive_ratings(spark, sf_dir)
     nested = (

@@ -49,10 +49,8 @@ def target_affinity_scores(
 ) -> DataFrame:
     """(doc_id, source, n_shingles, n_hits, affinity_micro) for every
     NON-seed doc. Seed vocab is distinct-shingle and broadcast."""
-    from movie_data_transformer_spark.operators.dedup import (
-        doc_shingles,
-        widen_for_compute,
-    )
+    from movie_data_transformer_spark.operators.dedup import doc_shingles
+    from movie_data_transformer_spark.operators.sizing import widen_for_compute
 
     sh = doc_shingles(widen_for_compute(docs), n=3)
     seed_ids = docs.filter(seed_filter).select("doc_id")

@@ -21,7 +21,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from movie_data_transformer_spark.fixtures import RATINGS_ORACLE_CTE
-from movie_data_transformer_spark.operators.dedup import widen_for_compute
+from movie_data_transformer_spark.operators.sizing import widen_for_compute
 from movie_data_transformer_spark.operators.ordered_stats import (
     attach_order_stats,
     ntile_expr,

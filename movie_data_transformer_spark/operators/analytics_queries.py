@@ -272,7 +272,7 @@ def q_stats_corr_by_year(spark: SparkSession, sf_dir: str) -> DataFrame:
     One hash aggregation; six mergeable partials per group — the same
     algebraic-decomposition shape as incremental_agg_rollup, so the
     100 TB form maintains the partials incrementally."""
-    from movie_data_transformer_spark.operators.dedup import widen_for_compute
+    from movie_data_transformer_spark.operators.sizing import widen_for_compute
 
     # the driver testdata is single-row-group parquet -> a 1-task scan;
     # the decimal partials dominate, so widen before aggregating (no-op

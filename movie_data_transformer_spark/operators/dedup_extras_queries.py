@@ -233,10 +233,8 @@ def cdc_chunk_table(spark: SparkSession, docs: DataFrame) -> DataFrame:
     ONE ordered window pass per doc (the K lead()s share a window spec;
     boundary flag + running boundary count in the same pass), one
     (doc, chunk) agg — all keyed shuffles, nothing driver-side."""
-    from movie_data_transformer_spark.operators.dedup import (
-        normalize_text,
-        widen_for_compute,
-    )
+    from movie_data_transformer_spark.operators.dedup import normalize_text
+    from movie_data_transformer_spark.operators.sizing import widen_for_compute
 
     toks = widen_for_compute(docs).select(
         "doc_id", F.split(normalize_text(F.col("text")), " ").alias("t")

@@ -72,7 +72,7 @@ def _tokens(spark: SparkSession, sf_dir: str) -> DataFrame:
     # widen the one-row-group scan so both the weight-table pass and the
     # scoring pass run at core parallelism (r12 opt round; no-op on an
     # already-wide cluster scan)
-    from movie_data_transformer_spark.operators.dedup import widen_for_compute
+    from movie_data_transformer_spark.operators.sizing import widen_for_compute
 
     docs = widen_for_compute(load_table(spark, sf_dir, "documents"))
     return docs.selectExpr(

@@ -219,7 +219,7 @@ def q_classifier_macro_f1(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     Scale: one agg over the predictor output + a classes-sized
     reshape; the metric table is |classes| rows."""
-    from movie_data_transformer_spark.operators.dedup import widen_for_compute
+    from movie_data_transformer_spark.operators.sizing import widen_for_compute
     from movie_data_transformer_spark.operators.text import language_id
 
     docs = load_table(spark, sf_dir, "documents")

@@ -96,7 +96,7 @@ def q_text_rake_keywords(spark: SparkSession, sf_dir: str) -> DataFrame:
     # scan first (r12 opt round; no-op on an already-wide cluster scan).
     # The widen repartitions BY doc_id, the same key the window needs, so
     # it replaces rather than adds an exchange of the exploded tokens.
-    from movie_data_transformer_spark.operators.dedup import widen_for_compute
+    from movie_data_transformer_spark.operators.sizing import widen_for_compute
 
     return rake_keywords(widen_for_compute(load_table(spark, sf_dir, "documents")))
 

@@ -496,7 +496,7 @@ def q_bpe_encode_fixed(spark: SparkSession, sf_dir: str) -> DataFrame:
     leftmost non-overlapping occurrences scanning left-to-right —
     probed, see bpe.py)."""
     from movie_data_transformer_spark.operators.bpe import apply_bpe_merges
-    from movie_data_transformer_spark.operators.dedup import widen_for_compute
+    from movie_data_transformer_spark.operators.sizing import widen_for_compute
 
     # the encode replace-chain is pure map work, so WITHOUT a widen the
     # whole query runs at scan parallelism — one task on the testdata's

@@ -27,23 +27,12 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from movie_data_transformer_spark.operators.movie_pipeline import (
-    dedup_latest,
-    explode_watched,
-    group_watched,
-    kv_serialize,
-)
-from movie_data_transformer_spark.schemas import CUSTOMER_MOVIE
+from movie_data_transformer_spark.operators.movie_pipeline import dedup_latest
 
 FLAT_COLS = ["movieId", "title", "yearOfRelease", "customerId", "rating", "date"]
 
 
-def merge_flat(
-    state: DataFrame,
-    batch: DataFrame,
-    dedup_inputs: bool = True,
-    with_decision: bool = False,
-) -> DataFrame:
+def merge_flat(state: DataFrame, batch: DataFrame, with_decision: bool = False) -> DataFrame:
     """Merge new flat rating rows into flat state rows.
 
     Pairwise resolution per (customerId, movieId), exactly the reference's
@@ -54,8 +43,7 @@ def merge_flat(
     (operators/metrics.py) — the taxonomy of the reference's
     newCount/updateCount/successCount (DataTransformationService.java:170-172).
     """
-    if dedup_inputs:
-        state, batch = dedup_latest(state), dedup_latest(batch)
+    state, batch = dedup_latest(state), dedup_latest(batch)
     s = state.select([F.col(c).alias(f"s_{c}") for c in FLAT_COLS])
     b = batch.select([F.col(c).alias(f"b_{c}") for c in FLAT_COLS])
     joined = s.join(
@@ -83,29 +71,3 @@ def merge_flat(
         )
     return joined.select(*cols)
 
-
-def parse_kv_state(kv: DataFrame) -> DataFrame:
-    """Inverse of kv_serialize: ('customer:{id}', json blob) -> flat rows.
-    This is the 'GET existing value and deserialize' side of the reference's
-    merge (DataTransformationService.java:180-185)."""
-    parsed = kv.select(F.from_json("value", CUSTOMER_MOVIE).alias("cm"))
-    return parsed.select(
-        F.col("cm.customerId").alias("customerId"),
-        F.explode("cm.watchedMovies").alias("m"),
-    ).select(
-        F.col("m.movieId").alias("movieId"),
-        F.col("m.title").alias("title"),
-        F.col("m.yearOfRelease").alias("yearOfRelease"),
-        "customerId",
-        F.col("m.rating").alias("rating"),
-        F.col("m.date").alias("date"),
-    )
-
-
-def merge_kv(state_kv: DataFrame, batch_movies: DataFrame) -> DataFrame:
-    """Full op-9 round trip in the sink representation: deserialize prior
-    KV state, merge a new nested-movies batch, re-group, re-serialize.
-    Equivalent of one whole saveToMemoryDB pass (:169-204), as one job."""
-    state_flat = parse_kv_state(state_kv)
-    batch_flat = explode_watched(batch_movies)
-    return kv_serialize(group_watched(merge_flat(state_flat, batch_flat)))

@@ -25,7 +25,7 @@ from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
 
-def explode_watched(movies: DataFrame, coalesce_missing_rating: bool = True) -> DataFrame:
+def explode_watched(movies: DataFrame) -> DataFrame:
     """Unnest watchedBy (ops 4-6): one row per viewer element.
 
     Semantics pinned to the reference:
@@ -37,9 +37,6 @@ def explode_watched(movies: DataFrame, coalesce_missing_rating: bool = True) -> 
       - missing rating deserialized to 0, Java-int style (§2.2 item 9).
     """
     w = F.explode("watchedBy").alias("w")
-    rating = F.col("w.rating")
-    if coalesce_missing_rating:
-        rating = F.coalesce(rating, F.lit(0))
     return movies.select(
         F.col("movieId"),
         F.col("title"),
@@ -50,7 +47,7 @@ def explode_watched(movies: DataFrame, coalesce_missing_rating: bool = True) -> 
         "title",
         "yearOfRelease",
         F.col("w.customer-id").alias("customerId"),
-        rating.cast("int").alias("rating"),
+        F.coalesce(F.col("w.rating"), F.lit(0)).cast("int").alias("rating"),
         F.col("w.date").alias("date"),
     )
 
@@ -107,7 +104,7 @@ def dedup_latest_maxby(flat: DataFrame) -> DataFrame:
     return picked.select(*[F.col(f"_r.{c}").alias(c) for c in flat.columns])
 
 
-def group_watched(flat: DataFrame, sort_list: bool = True) -> DataFrame:
+def group_watched(flat: DataFrame) -> DataFrame:
     """Group per customer into the nested CustomerMovie shape (op 7).
 
     collect_list(struct(...)) == the reference's Map<customerId,
@@ -125,9 +122,7 @@ def group_watched(flat: DataFrame, sort_list: bool = True) -> DataFrame:
             F.col("date"),
         )
     )
-    if sort_list:
-        lst = F.sort_array(lst)
-    return flat.groupBy("customerId").agg(lst.alias("watchedMovies"))
+    return flat.groupBy("customerId").agg(F.sort_array(lst).alias("watchedMovies"))
 
 
 def kv_serialize(grouped: DataFrame) -> DataFrame:

@@ -79,7 +79,7 @@ def _doc_ids_for_synthesis(docs: DataFrame) -> DataFrame:
     widen shuffles ONLY the 8-byte ids — the cheapest possible proxy
     exchange (guide §8: move decisions on small rows, heavy bytes once)
     — and is a no-op on an already-wide cluster scan."""
-    from movie_data_transformer_spark.operators.dedup import widen_for_compute
+    from movie_data_transformer_spark.operators.sizing import widen_for_compute
 
     return widen_for_compute(docs.select("doc_id"))
 

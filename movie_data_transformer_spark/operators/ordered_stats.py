@@ -63,6 +63,8 @@ from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
+from movie_data_transformer_spark.operators.sizing import estimated_bytes
+
 _BUCKETS_CONF = "spark.movieDataTransformer.globalOrderBuckets"
 _TWO_PASS_BYTES_CONF = "spark.movieDataTransformer.globalOrderTwoPassBytes"
 _DEFAULT_TWO_PASS_BYTES = 128 * 1024 * 1024
@@ -80,18 +82,6 @@ def _n_buckets(df: DataFrame) -> int:
     if conf:
         return max(1, int(conf))
     return max(1, sess.sparkContext.defaultParallelism)
-
-
-def _estimated_bytes(df: DataFrame) -> int | None:
-    """Optimizer size estimate for the input plan (no job is run).
-    None on any introspection failure — callers treat unknown as LARGE
-    (scale-safe default)."""
-    try:
-        return int(
-            str(df._jdf.queryExecution().optimizedPlan().stats().sizeInBytes())
-        )
-    except Exception:
-        return None
 
 
 def bucket_by_order(
@@ -203,7 +193,7 @@ def attach_order_stats(
     if not two_pass:
         thr = df.sparkSession.conf.get(_TWO_PASS_BYTES_CONF, None)
         thr_bytes = int(thr) if thr else _DEFAULT_TWO_PASS_BYTES
-        est = _estimated_bytes(df)
+        est = estimated_bytes(df)
         two_pass = est is None or est > thr_bytes
     if not two_pass:
         return _plain_window_stats(

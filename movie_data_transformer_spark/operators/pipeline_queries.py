@@ -46,7 +46,7 @@ def q_corpus_pipeline_e2e(spark: SparkSession, sf_dir: str) -> DataFrame:
     from pyspark.sql import Window
 
     from movie_data_transformer_spark.functions import micro_ratio
-    from movie_data_transformer_spark.operators.dedup import widen_for_compute
+    from movie_data_transformer_spark.operators.sizing import widen_for_compute
     from movie_data_transformer_spark.operators.text import tokens
 
     # the fused quality projection (four tokenizations per row) runs

@@ -180,7 +180,7 @@ def q_agg_rollup(spark: SparkSession, sf_dir: str) -> DataFrame:
     # columns (+ the high-cardinality widen key) and widen first (r12 opt
     # round; no-op when the scan is already wide). Decimal sums are
     # partitioning-invariant.
-    from movie_data_transformer_spark.operators.dedup import widen_for_compute
+    from movie_data_transformer_spark.operators.sizing import widen_for_compute
 
     li = widen_for_compute(
         _t(spark, sf_dir, "lineitem").select(
@@ -1011,7 +1011,7 @@ def q_agg_cms_heavy_hitters(spark: SparkSession, sf_dir: str) -> DataFrame:
     any date range re-merges without rescanning events."""
     from movie_data_transformer_spark.operators.text import PORTABLE_HASH_SPARK_SQL
 
-    from movie_data_transformer_spark.operators.dedup import widen_for_compute
+    from movie_data_transformer_spark.operators.sizing import widen_for_compute
 
     W = 1024
     # the 3x explode + per-copy md5 hashing is the heavy pre-exchange

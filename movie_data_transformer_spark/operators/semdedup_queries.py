@@ -95,7 +95,7 @@ def q_semdedup_ann_recall(spark: SparkSession, sf_dir: str) -> DataFrame:
     from within-cell comparison only, truth at two thresholds and two
     scopes (exhaustive 'full' + production-shaped 'sample_mod8' whose
     broadcast is the deterministic id-sample) — see the module docstring."""
-    from movie_data_transformer_spark.operators.dedup import widen_for_compute
+    from movie_data_transformer_spark.operators.sizing import widen_for_compute
     from movie_data_transformer_spark.operators.similarity import (
         augmented_embeddings,
         cosine,

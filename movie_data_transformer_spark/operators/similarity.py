@@ -366,7 +366,7 @@ def semdedup_pairs(
     cluster). Approximate by construction (a pair split across clusters
     is missed) -> rows-only driver check; recall vs brute force pinned
     in tests."""
-    from movie_data_transformer_spark.operators.dedup import widen_for_compute
+    from movie_data_transformer_spark.operators.sizing import widen_for_compute
 
     assigned = kmeans_assign(
         widen_for_compute(corpus, id_col), k=k, n_iter=n_iter, id_col=id_col, vec_col=vec_col
@@ -400,7 +400,7 @@ def cosine_near_pairs(
     """Embedding near-duplicate pairs (cosine >= threshold). Exact
     definition is all-pairs; label blocking keeps it from being a cross
     join at scale (near-dups land in the same coarse cell)."""
-    from movie_data_transformer_spark.operators.dedup import widen_for_compute
+    from movie_data_transformer_spark.operators.sizing import widen_for_compute
 
     wide = widen_for_compute(corpus, id_col)
     a = wide.select(F.col(id_col).alias("doc_a"), F.col(vec_col).alias("va"), F.col("label"))

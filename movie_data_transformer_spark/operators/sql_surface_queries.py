@@ -34,7 +34,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from movie_data_transformer_spark.operators.dedup import widen_for_compute
+from movie_data_transformer_spark.operators.sizing import widen_for_compute
 from movie_data_transformer_spark.sources.tables import load_table
 
 # decimal-digit hierarchy over the dense customer keys: parent(node) =

@@ -96,7 +96,7 @@ def q_text_line_dedup_boilerplate(spark: SparkSession, sf_dir: str) -> DataFrame
     document frequency reaches BOILERPLATE_DF, reassemble in order."""
     from pyspark.sql import functions as F
 
-    from movie_data_transformer_spark.operators.dedup import widen_for_compute
+    from movie_data_transformer_spark.operators.sizing import widen_for_compute
 
     # the tokenize+chunk transform runs before the first exchange — widen
     # the one-row-group scan so it runs at core parallelism (r12 opt

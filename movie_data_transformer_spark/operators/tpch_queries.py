@@ -36,7 +36,7 @@ def q_tpch_q1_pricing_summary(spark: SparkSession, sf_dir: str) -> DataFrame:
     rows of the seven needed columns (guide §2.3). Group sums are exact
     decimals, so partitioning cannot change the result (pinned in
     tests/test_partitioning_invariance.py)."""
-    from movie_data_transformer_spark.operators.dedup import widen_for_compute
+    from movie_data_transformer_spark.operators.sizing import widen_for_compute
 
     li = _t(spark, sf_dir, "lineitem")
     disc_price = F.col("l_extendedprice") * (1 - F.col("l_discount"))

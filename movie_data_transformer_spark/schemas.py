@@ -8,6 +8,8 @@ Reference schema (all fixed at compile time, SURVEY.md §1):
     Jackson's @JsonProperty renames)
   - CustomerMovie   src/main/java/com/movierecommender/model/output/CustomerMovie.java:6-8
   - WatchedMovie    src/main/java/com/movierecommender/model/output/WatchedMovie.java:4-9
+    (output side: built as JSON by movie_pipeline.group_watched + kv_serialize;
+    nothing parses it back, so no StructType is declared for it)
 
 Dates stay strings ("yyyy-MM-dd") for fidelity; parsed transiently with
 to_date for comparisons (DataTransformationService.java:242-245).
@@ -40,24 +42,6 @@ MOVIE_INPUT = StructType(
         StructField("title", StringType()),
         StructField("yearOfRelease", IntegerType()),
         StructField("watchedBy", ArrayType(WATCHED_BY)),
-    ]
-)
-
-# Per-customer nested movie record (output side).
-WATCHED_MOVIE = StructType(
-    [
-        StructField("movieId", StringType()),
-        StructField("title", StringType()),
-        StructField("yearOfRelease", IntegerType()),
-        StructField("rating", IntegerType()),
-        StructField("date", StringType()),
-    ]
-)
-
-CUSTOMER_MOVIE = StructType(
-    [
-        StructField("customerId", StringType()),
-        StructField("watchedMovies", ArrayType(WATCHED_MOVIE)),
     ]
 )
 

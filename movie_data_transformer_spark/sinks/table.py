@@ -9,7 +9,7 @@ filter pushdown for finer pruning."""
 
 from __future__ import annotations
 
-from pyspark.sql import Column, DataFrame, SparkSession, Window
+from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 
@@ -114,92 +114,6 @@ def write_zorder(
         .write.mode(mode)
         .parquet(path)
     )
-
-
-def merge_into_partitioned(
-    spark: SparkSession,
-    path: str,
-    updates: DataFrame,
-    key_cols: list[str],
-    partition_col: str,
-    seq_col: str,
-    keys_may_move_partitions: bool = True,
-) -> list:
-    """MERGE INTO for a date/enum-partitioned parquet lake table, with
-    last-write-wins-by-`seq_col` resolution — the transactional core of
-    the reference's keyed upsert (SURVEY.md §2.1 op 9) re-expressed as a
-    partition-pruned rewrite instead of per-key GET/SET round-trips.
-
-    Only the partitions touched by `updates` are read (planner partition
-    pruning on `partition_col`) and only those partitions are rewritten
-    (spark.sql.sources.partitionOverwriteMode=dynamic); a 100 TB table
-    with a daily batch touching 3 partitions reads and writes just those
-    3. The merged result is staged to `<path>_staged` first because Spark
-    (correctly) refuses to overwrite a path it is also reading — on Delta
-    or Iceberg this staging disappears into the transaction log.
-
-    An update may move a key to a NEW partition value (e.g. a
-    user's region changes); the key's old row lives in a partition the
-    updates don't mention and must be deleted too. With
-    `keys_may_move_partitions` (the default) those partitions are found
-    by a column-pruned (key, partition) semi-join scan of the target —
-    cheap relative to the rewrite, since only two columns are read and
-    the probe side is the (small, broadcast) distinct update-key set.
-    Pass False only when `partition_col` is provably immutable per key
-    (e.g. it is derived from the key), which skips that scan entirely.
-
-    Ties on `seq_col` resolve update-wins (a deterministic source-
-    priority tiebreak, matching MERGE semantics where the incoming row
-    beats the stale one), never partition-ordering-dependent.
-
-    Returns the list of partition values rewritten.
-    """
-    parts = {r[0] for r in updates.select(partition_col).distinct().collect()}
-    if keys_may_move_partitions:
-        moved = (
-            spark.read.parquet(path)
-            .select(*key_cols, partition_col)
-            .join(F.broadcast(updates.select(*key_cols).distinct()), key_cols, "leftsemi")
-            .select(partition_col)
-            .distinct()
-            .collect()
-        )
-        parts |= {r[0] for r in moved}
-    parts = sorted(parts)
-    target = spark.read.parquet(path).filter(F.col(partition_col).isin(parts))
-    w = Window.partitionBy(*key_cols).orderBy(F.desc(seq_col), F.desc("_src"))
-    merged = (
-        target.withColumn("_src", F.lit(0))
-        .unionByName(updates.withColumn("_src", F.lit(1)))
-        .withColumn("_rn", F.row_number().over(w))
-        .filter(F.col("_rn") == 1)
-        .drop("_rn", "_src")
-    )
-    staged = path.rstrip("/") + "_staged"
-    merged.write.mode("overwrite").parquet(staged)
-    staged_df = spark.read.parquet(staged)
-    prior = spark.conf.get("spark.sql.sources.partitionOverwriteMode", "static")
-    spark.conf.set("spark.sql.sources.partitionOverwriteMode", "dynamic")
-    try:
-        staged_df.write.mode("overwrite").partitionBy(partition_col).parquet(path)
-    finally:
-        spark.conf.set("spark.sql.sources.partitionOverwriteMode", prior)
-    jvm = spark._jvm
-    hconf = spark._jsc.hadoopConfiguration()
-    # a moved key can leave its old partition EMPTY; dynamic overwrite only
-    # rewrites partitions present in the output, so emptied ones must be
-    # dropped explicitly or their stale files survive the merge
-    surviving = {r[0] for r in staged_df.select(partition_col).distinct().collect()}
-    for val in parts:
-        if val not in surviving:
-            jdir = jvm.org.apache.hadoop.fs.Path(f"{path.rstrip('/')}/{partition_col}={val}")
-            fs = jdir.getFileSystem(hconf)
-            if fs.exists(jdir):
-                fs.delete(jdir, True)
-    # drop the staging dir — it exists only to break the read-write cycle
-    jstaged = jvm.org.apache.hadoop.fs.Path(staged)
-    jstaged.getFileSystem(hconf).delete(jstaged, True)
-    return parts
 
 
 def compact_small_files(

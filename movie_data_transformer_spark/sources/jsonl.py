@@ -15,8 +15,8 @@ Covers reference ops 1-3 and 15 (SURVEY.md §2.1):
   - op 15 permissive record-level error handling
           (DataTransformationService.java:141-143): the reference fails the
           whole file on one bad line and retries it; we do strictly better —
-          PERMISSIVE mode isolates the bad *line* into `_corrupt_record`
-          and keeps the rest of the file. DROPMALFORMED/FAILFAST selectable.
+          DROPMALFORMED drops only the bad *line* and keeps the rest of
+          the file; `corrupt_records()` returns the dropped lines.
 
 At 100 TB: listing is metadata-parallel, decode is one task per file split
 (`spark.sql.files.maxPartitionBytes` sizes splits), and the whole
@@ -28,53 +28,71 @@ single-JVM ceiling.
 from __future__ import annotations
 
 from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import functions as F
 from pyspark.sql.types import StringType, StructField, StructType
 
 from movie_data_transformer_spark.schemas import MOVIE_INPUT
 
 CORRUPT_COL = "_corrupt_record"
+#: the reference's `.json` suffix predicate (DataTransformationService.java:88),
+#: applied at listing time
+_JSON_GLOB = "*.json"
+_MOVIE_INPUT_WITH_CORRUPT = StructType(
+    list(MOVIE_INPUT.fields) + [StructField(CORRUPT_COL, StringType())]
+)
 
 
-def read_movies_jsonl(
-    spark: SparkSession,
-    path: str,
-    mode: str = "PERMISSIVE",
-    glob: str = "*.json",
-    keep_corrupt_column: bool = False,
-) -> DataFrame:
-    """Read newline-delimited MovieInput JSON under `path`.
-
-    `path` plays the role of the reference's bucket+prefix
-    (application.properties:8, prefix `movies/`); `glob` the `.json`
-    suffix predicate (DataTransformationService.java:88).
-    """
-    mode = mode.upper()
-    schema = MOVIE_INPUT
-    if mode == "PERMISSIVE":
-        if not keep_corrupt_column:
-            # "parse what you can, drop bad lines" — the reference's net
-            # effect (it fails+retries+skips the whole file,
-            # DataTransformationService.java:124-126; we drop only the bad
-            # LINE). DROPMALFORMED does this scan-side; it also avoids
-            # Spark's restriction on queries that reference only the
-            # corrupt-record column.
-            mode = "DROPMALFORMED"
-        else:
-            schema = StructType(
-                list(MOVIE_INPUT.fields) + [StructField(CORRUPT_COL, StringType())]
-            )
+def _movie_reader(reader):
+    """The one MovieInput decode, for `spark.read` and `spark.readStream`:
+    fixed schema, the `.json` listing filter, and
+    DROPMALFORMED — "parse what you can, drop bad lines", the reference's
+    net effect (it fails+retries+skips the whole file,
+    DataTransformationService.java:124-126; we drop only the bad LINE).
+    Dropping scan-side also avoids Spark's restriction on queries that
+    reference only the corrupt-record column."""
     return (
-        spark.read.schema(schema)
-        .option("mode", mode)
-        .option("pathGlobFilter", glob)
-        .option("columnNameOfCorruptRecord", CORRUPT_COL)
-        .json(path)
+        reader.schema(MOVIE_INPUT)
+        .option("mode", "DROPMALFORMED")
+        .option("pathGlobFilter", _JSON_GLOB)
     )
 
 
-def read_movies_jsonl_skip_bad_files(
-    spark: SparkSession, path: str, glob: str = "*.json"
-) -> DataFrame:
+def read_movies_jsonl(spark: SparkSession, path: str) -> DataFrame:
+    """Read newline-delimited MovieInput JSON under `path`.
+
+    `path` plays the role of the reference's bucket+prefix
+    (application.properties:8, prefix `movies/`).
+    """
+    return _movie_reader(spark.read).json(path)
+
+
+def stream_movies_jsonl(spark: SparkSession, path: str, max_files_per_trigger: int) -> DataFrame:
+    """`read_movies_jsonl` as a file stream: each micro-batch decodes at
+    most `max_files_per_trigger` new files (the reference's BATCH_SIZE
+    slices, DataTransformationService.java:60-68)."""
+    reader = spark.readStream.option("maxFilesPerTrigger", max_files_per_trigger)
+    return _movie_reader(reader).json(path)
+
+
+def _parse_lines(spark: SparkSession, path: str) -> DataFrame:
+    """Raw lines of the matching files parsed PERMISSIVE: `_file` is the
+    source file, `r` the MovieInput struct plus `_corrupt_record`, which
+    holds the raw text of a line that failed to parse."""
+    return (
+        spark.read.option("pathGlobFilter", _JSON_GLOB)
+        .text(path)
+        .select(
+            F.input_file_name().alias("_file"),
+            F.from_json(
+                "value",
+                _MOVIE_INPUT_WITH_CORRUPT,
+                {"mode": "PERMISSIVE", "columnNameOfCorruptRecord": CORRUPT_COL},
+            ).alias("r"),
+        )
+    )
+
+
+def read_movies_jsonl_skip_bad_files(spark: SparkSession, path: str) -> DataFrame:
     """Op 14 — per-file retry-then-skip (DataTransformationService.java:112-129).
 
     The reference processes file-by-file, retries a failing file up to 3
@@ -90,22 +108,7 @@ def read_movies_jsonl_skip_bad_files(
     list is bounded by the file count and broadcasts; the anti-join is
     map-side.
     """
-    from pyspark.sql import functions as F
-
-    schema = StructType(list(MOVIE_INPUT.fields) + [StructField(CORRUPT_COL, StringType())])
-    lines = (
-        spark.read.option("pathGlobFilter", glob)
-        .text(path)
-        .select(F.input_file_name().alias("_file"), "value")
-    )
-    parsed = lines.select(
-        "_file",
-        F.from_json(
-            "value",
-            schema,
-            {"mode": "PERMISSIVE", "columnNameOfCorruptRecord": CORRUPT_COL},
-        ).alias("r"),
-    )
+    parsed = _parse_lines(spark, path)
     # A line like a literal `null` (or anything from_json maps to a NULL
     # struct WITHOUT setting the corrupt column) is also a decode failure
     # under the reference's whole-file-fails semantics — without the
@@ -120,24 +123,11 @@ def read_movies_jsonl_skip_bad_files(
     return good.select("r.*").drop(CORRUPT_COL)
 
 
-def corrupt_records(spark: SparkSession, path: str, glob: str = "*.json") -> DataFrame:
+def corrupt_records(spark: SparkSession, path: str) -> DataFrame:
     """The complement: raw text of lines that failed to parse (op 14/15
     observability — the reference only logs and skips; we expose them)."""
     # Spark's JSON relation forbids queries that reference only the
-    # corrupt-record column, so take the expression route instead: read raw
-    # lines with the text source and parse each with from_json carrying a
-    # corrupt-record field — malformed lines surface there.
-    from pyspark.sql import functions as F
-
-    schema = StructType(list(MOVIE_INPUT.fields) + [StructField(CORRUPT_COL, StringType())])
-    lines = spark.read.option("pathGlobFilter", glob).text(path)
-    parsed = lines.select(
-        F.from_json(
-            "value",
-            schema,
-            {"mode": "PERMISSIVE", "columnNameOfCorruptRecord": CORRUPT_COL},
-        ).alias("r")
-    )
-    return parsed.filter(F.col(f"r.{CORRUPT_COL}").isNotNull()).select(
-        F.col(f"r.{CORRUPT_COL}").alias("raw_line")
-    )
+    # corrupt-record column, so take the expression route instead: the
+    # text source plus from_json carrying a corrupt-record field.
+    bad = F.col(f"r.{CORRUPT_COL}")
+    return _parse_lines(spark, path).filter(bad.isNotNull()).select(bad.alias("raw_line"))

@@ -23,10 +23,16 @@ import os
 import shutil
 
 from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import functions as F
 
 from movie_data_transformer_spark.operators.merge import FLAT_COLS, merge_flat
-from movie_data_transformer_spark.operators.movie_pipeline import explode_watched
-from movie_data_transformer_spark.schemas import MOVIE_INPUT
+from movie_data_transformer_spark.operators.movie_pipeline import (
+    explode_watched,
+    group_watched,
+    kv_serialize,
+)
+from movie_data_transformer_spark.sinks import kv
+from movie_data_transformer_spark.sources.jsonl import stream_movies_jsonl
 
 
 class ParquetStateStore:
@@ -77,7 +83,6 @@ def run_incremental_merge(
     state_root: str,
     checkpoint_dir: str,
     max_files_per_trigger: int = 10,
-    glob: str = "*.json",
     kv_client_factory=None,
 ) -> ParquetStateStore:
     """Consume JSONL movie files from input_dir in micro-batches of
@@ -92,36 +97,19 @@ def run_incremental_merge(
     the reference (DataTransformationService.java:169-204), minus the
     serial driver round-trips."""
     store = ParquetStateStore(spark, state_root)
-
-    stream = (
-        spark.readStream.schema(MOVIE_INPUT)
-        .option("maxFilesPerTrigger", max_files_per_trigger)
-        .option("pathGlobFilter", glob)
-        .option("mode", "DROPMALFORMED")
-        .json(input_dir)
-    )
+    stream = stream_movies_jsonl(spark, input_dir, max_files_per_trigger)
 
     def _merge_batch(batch_movies: DataFrame, batch_id: int) -> None:
         batch_flat = explode_watched(batch_movies)
-        state = store.read()
-        merged = batch_flat if state is None else merge_flat(state, batch_flat)
-        if state is None:
-            from movie_data_transformer_spark.operators.movie_pipeline import dedup_latest
-
-            merged = dedup_latest(merged)
-        store.commit(merged.select(FLAT_COLS))
+        # an empty store merges as an empty state: the optimizer drops the
+        # empty side of the join, leaving the plan of dedup_latest(batch)
+        state = store.read() or batch_flat.limit(0)
+        store.commit(merge_flat(state, batch_flat).select(FLAT_COLS))
         if kv_client_factory is not None:
-            from pyspark.sql import functions as F
-
-            from movie_data_transformer_spark.operators.movie_pipeline import (
-                group_watched,
-                kv_serialize,
-            )
-            from movie_data_transformer_spark.sinks.kv import write_kv
-
             touched = batch_flat.select("customerId").distinct()
             changed = store.read().join(F.broadcast(touched), "customerId", "left_semi")
-            write_kv(kv_serialize(group_watched(changed)), kv_client_factory)
+            # looked up at call time, so a wrapped kv.write_kv sees the publish
+            kv.write_kv(kv_serialize(group_watched(changed)), kv_client_factory)
 
     q = (
         stream.writeStream.foreachBatch(_merge_batch)

@@ -8,10 +8,8 @@ EXISTING date (the parse of either side failing returns false).
 
 from __future__ import annotations
 
-import json
-
-from movie_data_transformer_spark.operators.merge import merge_flat, merge_kv, parse_kv_state
-from movie_data_transformer_spark.schemas import MOVIE_INPUT, RATING_FLAT
+from movie_data_transformer_spark.operators.merge import merge_flat
+from movie_data_transformer_spark.schemas import RATING_FLAT
 
 
 def _flat(spark, rows):
@@ -62,48 +60,3 @@ def test_state_only_rows_survive(spark):
     got = _merged(spark, [("m1", "c1", 3, "2024-01-01"), ("m2", "c1", 4, "2024-01-05")], [])
     assert len(got) == 2
 
-
-def test_merge_kv_round_trip(spark):
-    # state in sink representation; new batch in nested MovieInput shape
-    state_kv = spark.createDataFrame(
-        [
-            (
-                "customer:c1",
-                json.dumps(
-                    {
-                        "customerId": "c1",
-                        "watchedMovies": [
-                            {
-                                "movieId": "m1",
-                                "title": "OLD",
-                                "yearOfRelease": 1999,
-                                "rating": 2,
-                                "date": "2024-01-01",
-                            }
-                        ],
-                    }
-                ),
-            )
-        ],
-        "key string, value string",
-    )
-    batch = spark.createDataFrame(
-        [
-            {
-                "movieId": "m1",
-                "title": "NEW",
-                "yearOfRelease": 1999,
-                "watchedBy": [
-                    {"customer-id": "c1", "movie-id": "m1", "rating": 5, "date": "2024-06-01"}
-                ],
-            }
-        ],
-        MOVIE_INPUT,
-    )
-    out = {r["key"]: json.loads(r["value"]) for r in merge_kv(state_kv, batch).collect()}
-    assert out["customer:c1"]["watchedMovies"] == [
-        {"movieId": "m1", "title": "NEW", "yearOfRelease": 1999, "rating": 5, "date": "2024-06-01"}
-    ]
-    # and parse_kv_state is the exact inverse of kv_serialize
-    flat = parse_kv_state(state_kv).collect()
-    assert len(flat) == 1 and flat[0]["title"] == "OLD"

@@ -4,6 +4,8 @@ from __future__ import annotations
 
 from pyspark.sql import functions as F
 
+from tools.scan_audit import plan_nodes, subtree_end
+
 
 def test_registry_consistent_without_session():
     # imports and builds WITHOUT touching any SparkSession
@@ -80,6 +82,10 @@ def test_plan_shapes_hold(spark, sf_dir):
     qs = e.queries()
 
     def plan_of(name):
+        # persists that earlier tests' entries left registered would be
+        # substituted into this plan (and change its size estimates);
+        # pin the plan the entry builds on its own
+        spark.catalog.clearCache()
         return qs[name](spark, sf_dir)._jdf.queryExecution().executedPlan().toString()
 
     # join_multiway: every dimension side broadcasts; the fact table is
@@ -109,13 +115,37 @@ def test_plan_shapes_hold(spark, sf_dir):
     assert "CartesianProduct" not in p
     assert p.count("SortMergeJoin") == 0
 
-    # r7 single-exchange operators: skyline (sort + windows, NO join),
-    # FIFO matching (the window and the agg REUSE the user_id
-    # partitioning — one exchange total), CDC apply (one sort-free
-    # max_by fold), hash sampling (map-side predicate + one report agg).
-    # A second Exchange creeping in means the partitioning reuse broke.
+    # skyline (r13): a per-cents max-day aggregate, ordered_stats'
+    # running max over that one-row-per-cents table, and a broadcast
+    # join-back on cents. No global window may run at the order-row grain
+    # (the old dense_rank + RANGE pair funneled every order through
+    # Exchange SinglePartition twice).
+    p = plan_of("orders_skyline")
+    nodes = plan_nodes(p)
+    texts = [t for _, t in nodes]
+    (join,) = [i for i, t in enumerate(texts) if t.startswith("BroadcastHashJoin [cents")]
+    build = next(
+        i for i in range(join + 1, subtree_end(nodes, join)) if texts[i].startswith("BroadcastExchange")
+    )
+    build_side = texts[build : subtree_end(nodes, build)]
+    assert any(t.startswith("HashAggregate(keys=[cents") for t in build_side), build_side
+    assert any(t.startswith("Window") for t in build_side), build_side
+    for i, t in enumerate(texts):
+        if t.startswith("Window"):
+            k = i + 1
+            while texts[k].startswith("Sort"):
+                k += 1
+            if texts[k].startswith("Exchange SinglePartition"):
+                assert texts[k + 1].startswith("HashAggregate(keys=[cents"), texts[k + 1]
+    for bad in ("SortMergeJoin", "CartesianProduct"):
+        assert bad not in p, bad
+
+    # r7 single-exchange operators: FIFO matching (the window and the agg
+    # REUSE the user_id partitioning — one exchange total), CDC apply (one
+    # sort-free max_by fold), hash sampling (map-side predicate + one
+    # report agg). A second Exchange creeping in means the partitioning
+    # reuse broke.
     for name in (
-        "orders_skyline",
         "events_fifo_match",
         "cdc_apply_tombstones",
         "sample_hash_threshold_report",
@@ -214,13 +244,16 @@ def test_plan_shapes_hold(spark, sf_dir):
     assert p.count("Exchange") == 1, "stats_equidepth_histogram"
     assert "Join" not in p, "stats_equidepth_histogram"
 
-    # TTL throttle: one user shuffle into ONE Arrow-grouped stateful
-    # pass — the declared pandas surface, never a scalar row-at-a-time
-    # eval, and no join (state lives in the group iterator)
+    # TTL throttle (r13): one user shuffle into ONE collect_list group
+    # (partial + final), whose greedy kept-chain is a JVM `aggregate`
+    # fold — no Python worker anywhere (the old applyInPandas form paid
+    # per-group Python overhead) and no join (state lives in the fold)
     p = plan_of("events_throttle_ttl")
     assert p.count("Exchange hashpartitioning") == 1, "events_throttle_ttl"
-    assert p.count("FlatMapGroupsInPandas") == 1, "events_throttle_ttl"
-    assert "Join" not in p, "events_throttle_ttl"
+    assert p.count("ObjectHashAggregate(keys=[user_id") == 2, "events_throttle_ttl"
+    assert "aggregate(_evs" in p, "events_throttle_ttl"
+    for bad in ("Python", "Pandas", "Join"):
+        assert bad not in p, ("events_throttle_ttl", bad)
 
     # Fellegi-Sunter linkage + Kendall concordance: every join
     # broadcasts (m/u weight tables are parameter-sized; the concordance

@@ -6,17 +6,38 @@ from __future__ import annotations
 import json
 import os
 
-from movie_data_transformer_spark.sources.jsonl import corrupt_records, read_movies_jsonl
+from movie_data_transformer_spark.sources.jsonl import (
+    corrupt_records,
+    read_movies_jsonl,
+    stream_movies_jsonl,
+)
 from movie_data_transformer_spark.streaming.merge_stream import ParquetStateStore
 
 
 def test_corrupt_records_extraction(spark, tmp_path):
+    """The batch reader and the streaming source share one decode: on a
+    directory with a corrupt line and a `.txt` decoy (one valid, one
+    broken line) both yield exactly the good rows, and the corrupt line
+    is the only one `corrupt_records` returns."""
     d = tmp_path / "jsonl"
     d.mkdir()
     good = {"movieId": "m1", "title": "T", "yearOfRelease": 2000, "watchedBy": []}
-    (d / "a.json").write_text(json.dumps(good) + "\nBROKEN {{{\n" + json.dumps(good) + "\n")
-    (d / "skip.txt").write_text("NOT SCANNED {{{\n")
-    assert read_movies_jsonl(spark, str(d)).count() == 2
+    other = {**good, "movieId": "m2"}
+    (d / "a.json").write_text(json.dumps(good) + "\nBROKEN {{{\n" + json.dumps(other) + "\n")
+    decoy = {**good, "movieId": "m_DECOY"}
+    (d / "skip.txt").write_text(json.dumps(decoy) + "\nNOT SCANNED {{{\n")
+    batch = read_movies_jsonl(spark, str(d)).collect()
+    assert sorted(r.movieId for r in batch) == ["m1", "m2"]
+    streamed = []
+    q = (
+        stream_movies_jsonl(spark, str(d), max_files_per_trigger=10)
+        .writeStream.foreachBatch(lambda df, _: streamed.extend(df.collect()))
+        .option("checkpointLocation", str(tmp_path / "ckpt"))
+        .trigger(availableNow=True)
+        .start()
+    )
+    q.awaitTermination()
+    assert sorted(streamed) == sorted(batch)
     bad = [r.raw_line for r in corrupt_records(spark, str(d)).collect()]
     assert bad == ["BROKEN {{{"]
 

@@ -7,14 +7,24 @@ from __future__ import annotations
 import json
 
 from movie_data_transformer_spark.operators.movie_pipeline import group_watched, kv_serialize
-from movie_data_transformer_spark.sinks import FileKVClient, write_kv
+from movie_data_transformer_spark.sinks import FileKVClient, kv, write_kv
 from movie_data_transformer_spark.streaming import run_incremental_merge
 from tests.test_streaming_merge import _movie, _write_file
 
 
-def test_integrated_per_batch_kv_publish(spark, tmp_path):
+def test_integrated_per_batch_kv_publish(spark, tmp_path, monkeypatch):
     """kv_client_factory wired into the stream: each batch publishes the
-    merged state of touched customers (last publish wins per key)."""
+    merged state of touched customers (last publish wins per key). The
+    publish goes through `sinks.kv.write_kv` looked up at call time, so a
+    wrapper installed after import sees every batch."""
+    published = []
+
+    def traced_write_kv(kv_df, factory):
+        published.append(kv_df.count())
+        real_write_kv(kv_df, factory)
+
+    real_write_kv = kv.write_kv
+    monkeypatch.setattr(kv, "write_kv", traced_write_kv)
     inp = tmp_path / "in2"
     inp.mkdir()
     _write_file(inp, "a.json", [_movie("m1", [("c1", 2, "2024-01-01")])])
@@ -31,6 +41,7 @@ def test_integrated_per_batch_kv_publish(spark, tmp_path):
     stored = {k: json.loads(v) for k, v in FileKVClient.read_all(kv_root).items()}
     (m,) = stored["customer:c1"]["watchedMovies"]
     assert (m["rating"], m["date"]) == (5, "2024-05-01")
+    assert published == [1, 1]  # one publish per batch, one touched customer each
 
 
 def test_stream_merge_then_kv_publish(spark, tmp_path):

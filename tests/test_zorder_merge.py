@@ -1,13 +1,10 @@
-"""Z-order clustered layout (two-dimension file skipping) and partitioned
-MERGE INTO with dynamic partition overwrite (sinks/table.py)."""
+"""Z-order clustered layout: two-dimension file skipping (sinks/table.py)."""
 
 from __future__ import annotations
 
-import os
-
 from pyspark.sql import functions as F
 
-from movie_data_transformer_spark.sinks.table import merge_into_partitioned, write_zorder
+from movie_data_transformer_spark.sinks.table import write_zorder
 from movie_data_transformer_spark.sources.tables import load_table
 
 
@@ -39,59 +36,3 @@ def test_zorder_skips_files_on_both_dimensions(spark, sf_dir, tmp_path):
     # values survive the layout rewrite
     assert back.filter(narrow_price).count() == o.filter(narrow_price).count()
 
-
-def _partition_files(path: str, partition_col: str) -> dict[str, set[str]]:
-    out: dict[str, set[str]] = {}
-    for root, _dirs, files in os.walk(path):
-        base = os.path.basename(root)
-        if base.startswith(f"{partition_col}="):
-            out.setdefault(base, set()).update(
-                os.path.join(root, f) for f in files if f.endswith(".parquet")
-            )
-    return out
-
-
-def test_merge_into_rewrites_only_touched_partitions(spark, sf_dir, tmp_path):
-    o = load_table(spark, sf_dir, "orders").select(
-        "o_orderkey", "o_totalprice", "o_orderpriority", F.lit(0).alias("seq")
-    )
-    path = str(tmp_path / "orders_lake")
-    o.write.partitionBy("o_orderpriority").parquet(path)
-    before = _partition_files(path, "o_orderpriority")
-    assert len(before) == 5
-
-    some_keys = [
-        r.o_orderkey
-        for r in o.filter(F.col("o_orderpriority") == "2-HIGH").limit(10).collect()
-    ]
-    updates = (
-        spark.createDataFrame(
-            [(k, "2-HIGH") for k in some_keys] + [(10_000_001, "9-NEW"), (10_000_002, "9-NEW")],
-            "o_orderkey long, o_orderpriority string",
-        )
-        .withColumn("o_totalprice", F.lit(1.5))
-        .withColumn("seq", F.lit(1))
-        .select("o_orderkey", "o_totalprice", "o_orderpriority", "seq")
-    )
-
-    rewritten = merge_into_partitioned(
-        spark, path, updates, ["o_orderkey"], "o_orderpriority", "seq"
-    )
-    assert sorted(rewritten) == ["2-HIGH", "9-NEW"]
-
-    after = _partition_files(path, "o_orderpriority")
-    # untouched partitions keep their exact file set (no rewrite)
-    for part in before:
-        if part not in ("o_orderpriority=2-HIGH", "o_orderpriority=9-NEW"):
-            assert after[part] == before[part], f"{part} was rewritten"
-    assert after["o_orderpriority=2-HIGH"] != before["o_orderpriority=2-HIGH"]
-    assert "o_orderpriority=9-NEW" in after
-
-    back = spark.read.parquet(path)
-    # updated keys carry the new value; row count = original + 2 inserts
-    got = {
-        r.o_orderkey: r.o_totalprice
-        for r in back.filter(F.col("o_orderkey").isin(some_keys + [10_000_001])).collect()
-    }
-    assert all(v == 1.5 for v in got.values()) and len(got) == 11
-    assert back.count() == o.count() + 2
