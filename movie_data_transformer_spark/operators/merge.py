@@ -14,8 +14,12 @@ The reference's read-modify-write is non-atomic and serial per key
 (SURVEY.md §4.2). Here the merge is a single distributed full-outer join —
 one shuffle per side, snapshot-consistent, no per-key round-trips; on a
 real deployment this is exactly a Delta `MERGE INTO state USING batch`.
-At 100 TB: bucket/cluster the state table by (customerId, movieId) so the
-join co-locates without re-shuffling state each batch.
+At 100 TB the state side must not be the whole state: the streaming
+caller (streaming/merge_stream.py) passes only the state rows of the
+batch's keys, found by a broadcast semi join over the unshuffled state,
+and commits the result as a delta of a merge-on-read store, so both
+sides of this join are batch-sized. Clustering the state by customerId
+would let that semi join prune files instead of scanning the whole base.
 
 Both sides are deduped first (the engine's uniform-dedup divergence,
 SURVEY.md §2.2 item 4 — the reference's intra-batch duplicate retention is

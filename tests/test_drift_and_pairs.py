@@ -5,10 +5,7 @@ from __future__ import annotations
 
 import hashlib
 import math
-import sys
 from collections import defaultdict
-
-sys.path.insert(0, "/root/repo")
 
 from movie_data_transformer_spark.operators.ks_queries import (
     q_stats_ks_two_sample,

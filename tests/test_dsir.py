@@ -7,10 +7,7 @@ from __future__ import annotations
 import hashlib
 import math
 import re
-import sys
 from collections import Counter, defaultdict
-
-sys.path.insert(0, "/root/repo")
 
 from movie_data_transformer_spark.operators.dsir_queries import (
     B,

@@ -4,10 +4,7 @@ grid) and stream_psi_monitor == score_psi_bins (slicing invariance)."""
 from __future__ import annotations
 
 import math
-import sys
 from collections import defaultdict
-
-sys.path.insert(0, "/root/repo")
 
 from movie_data_transformer_spark.operators.embnorm_queries import (
     q_emb_norm_stats,

@@ -5,10 +5,7 @@ covers exactly the multi-event users."""
 
 from __future__ import annotations
 
-import sys
 from collections import defaultdict
-
-sys.path.insert(0, "/root/repo")
 
 from pyspark.sql import functions as F
 

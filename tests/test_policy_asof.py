@@ -5,10 +5,7 @@ per purchase, tie/tolerance rules)."""
 from __future__ import annotations
 
 import math
-import sys
 from collections import defaultdict
-
-sys.path.insert(0, "/root/repo")
 
 from movie_data_transformer_spark.operators.asof_nearest_queries import (
     TOL_US,

@@ -10,9 +10,6 @@ for the md5 fingerprint) — independent of BOTH engines.
 from __future__ import annotations
 
 import hashlib
-import sys
-
-sys.path.insert(0, "/root/repo")
 
 from pyspark.sql import functions as F
 

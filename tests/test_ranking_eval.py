@@ -7,9 +7,6 @@ from __future__ import annotations
 
 import hashlib
 import math
-import sys
-
-sys.path.insert(0, "/root/repo")
 
 from movie_data_transformer_spark.operators.ranking_eval_queries import (
     DISC_MICRO,

@@ -6,12 +6,9 @@ from __future__ import annotations
 
 import math
 import re
-import sys
 from collections import Counter, defaultdict
 
 import numpy as np
-
-sys.path.insert(0, "/root/repo")
 
 from movie_data_transformer_spark.operators.autocorr_queries import (
     q_events_autocorr_daily,

@@ -4,9 +4,6 @@ the same tokenization, plus band-report mass conservation."""
 from __future__ import annotations
 
 import re
-import sys
-
-sys.path.insert(0, "/root/repo")
 
 from movie_data_transformer_spark.operators.readability_queries import (
     q_text_readability_band_counts,

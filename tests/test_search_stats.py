@@ -3,10 +3,7 @@ contingency invariants."""
 
 from __future__ import annotations
 
-import sys
 from collections import defaultdict
-
-sys.path.insert(0, "/root/repo")
 
 from pyspark.sql import Window
 from pyspark.sql import functions as F

@@ -5,13 +5,17 @@ from __future__ import annotations
 
 import json
 import os
+import shutil
 
+import pytest
+
+from movie_data_transformer_spark.schemas import RATING_FLAT
 from movie_data_transformer_spark.sources.jsonl import (
     corrupt_records,
     read_movies_jsonl,
     stream_movies_jsonl,
 )
-from movie_data_transformer_spark.streaming.merge_stream import ParquetStateStore
+from movie_data_transformer_spark.streaming.merge_stream import _MAX_DELTAS, ParquetStateStore
 
 
 def test_corrupt_records_extraction(spark, tmp_path):
@@ -43,17 +47,55 @@ def test_corrupt_records_extraction(spark, tmp_path):
 
 
 def test_state_store_prunes_old_versions(spark, tmp_path):
+    """The merge-on-read store against a pure-Python upsert, across two
+    folds at the delta cap and a delta after them. After every commit:
+    `read()` equals the model (null keys never match, so every null-key
+    row is kept); the current version and the two before it each read
+    back from their own chain; and nothing older than the base that the
+    oldest of them reads is left on disk."""
     store = ParquetStateStore(spark, str(tmp_path / "st"))
-    df = spark.range(3).selectExpr("id", "id * 2 AS v")
-    for _ in range(6):
-        store.commit(df)
-    assert store.current_version() == 6
-    versions = sorted(
-        int(n[1:]) for n in os.listdir(store.root) if n.startswith("v") and n[1:].isdigit()
-    )
-    # retain window: current + 2 prior
-    assert versions == [4, 5, 6]
-    assert store.read().count() == 3
+
+    def row(c, m, rating):
+        return (m, f"T{m}", 2000, c, rating, f"2024-01-{rating % 28 + 1:02d}")
+
+    base = [row(f"c{i}", f"m{i % 3}", i % 5) for i in range(50)]
+    base.append(row(None, "m1", 1))
+    later = 2 * (_MAX_DELTAS + 1) + 1
+    small = [
+        [row("c1", "m1", i), row(f"c{i}", "m2", i), row(f"new{i}", "m0", i)] for i in range(later)
+    ]
+    small[1].append(row(None, "m1", 3))
+    small[-2].append(row(None, "m1", 6))
+    commits = [base, *small]
+
+    upserts, nulls, snapshots, bases = {}, [], {}, []
+    for v, rows in enumerate(commits, start=1):
+        assert store.commit(spark.createDataFrame(rows, RATING_FLAT).coalesce(1)) == v
+        assert store.current_version() == v
+        for r in rows:
+            if r[3] is None:
+                nulls.append(r)
+            else:
+                upserts[(r[3], r[0])] = r
+        snapshots[v] = sorted([*upserts.values(), *nulls], key=repr)
+        if store._chain(v) == [v]:
+            bases.append(v)
+        assert sorted(map(tuple, store.read().collect()), key=repr) == snapshots[v]
+        for w in range(max(v - 2, 1), v):
+            got = store._read_chain(store._chain(w)).collect()
+            assert sorted(map(tuple, got), key=repr) == snapshots[w]
+        on_disk = sorted(
+            int(n[1:]) for n in os.listdir(store.root) if n.startswith("v") and n[1:].isdigit()
+        )
+        oldest = store._chain(v - 2)[0] if v > 2 else 1
+        assert on_disk == list(range(oldest, v + 1))
+    # a base carries _MAX_DELTAS deltas; the next commit folds the chain
+    assert bases == [1, _MAX_DELTAS + 2, 2 * _MAX_DELTAS + 3]
+    assert len(nulls) == 3
+    # a chain whose base is gone fails instead of walking back forever
+    shutil.rmtree(store._dir(bases[-1]))
+    with pytest.raises(FileNotFoundError):
+        store.read()
 
 
 def test_kv_text_datasource_writer_round_trip(spark, tmp_path):

@@ -7,8 +7,10 @@ import os
 
 from movie_data_transformer_spark.operators.merge import FLAT_COLS, merge_flat
 from movie_data_transformer_spark.operators.movie_pipeline import dedup_latest, explode_watched
+from movie_data_transformer_spark.schemas import RATING_FLAT
 from movie_data_transformer_spark.sources.jsonl import read_movies_jsonl
-from movie_data_transformer_spark.streaming import run_incremental_merge
+from movie_data_transformer_spark.streaming import merge_stream, run_incremental_merge
+from tools.scan_audit import plan_nodes
 
 
 def _write_file(d, name, movies):
@@ -28,7 +30,32 @@ def _movie(mid, watched):
     }
 
 
-def test_incremental_merge_across_batches(spark, tmp_path):
+def _assert_state_not_shuffled(df):
+    """No Exchange between a parquet (state) scan in `df`'s physical plan
+    and its nearest join; a scan of whole rows is not broadcast either,
+    only the deltas' keys are. Paths are not matched: the plan truncates
+    them."""
+    nodes = plan_nodes(df._jdf.queryExecution().executedPlan().toString())
+    rows = "ReadSchema: struct<" + ",".join(f"{f.name}:{f.dataType.simpleString()}" for f in RATING_FLAT)
+    scans = 0
+    for i, (depth, text) in enumerate(nodes):
+        if not text.startswith("FileScan parquet"):
+            continue
+        scans += 1
+        path = []
+        for d, t in reversed(nodes[:i]):
+            if d < depth:
+                if "Join" in t:
+                    break
+                path.append(t)
+                depth = d
+        assert not any(t.startswith("Exchange") for t in path), (text, path)
+        if rows in text:
+            assert not any("Exchange" in t for t in path), (text, path)
+    assert scans >= 3  # the base's rows, the delta's keys and the delta's rows
+
+
+def test_incremental_merge_across_batches(spark, tmp_path, monkeypatch):
     inp = tmp_path / "in"
     inp.mkdir()
     # batch 1: two files (initial state)
@@ -41,6 +68,17 @@ def test_incremental_merge_across_batches(spark, tmp_path):
     assert got == {("c1", "m1"): (3, "2024-01-01"), ("c1", "m2"): (4, "2024-01-02")}
     v1 = store.current_version()
     assert v1 >= 2  # one commit per micro-batch (maxFilesPerTrigger=1)
+    # a base and a delta: neither the read nor the next batch's restriction
+    # of the state to its keys shuffles the stored state
+    assert store._chain(v1) == [v1 - 1, v1]
+    _assert_state_not_shuffled(store.read())
+    restricted = []
+
+    def spy_merge_flat(state, batch):
+        restricted.append(state)
+        return merge_flat(state, batch)
+
+    monkeypatch.setattr(merge_stream, "merge_flat", spy_merge_flat)
 
     # late batch: newer rating for m1 wins; same-date for m2 keeps existing;
     # malformed date loses
@@ -62,6 +100,9 @@ def test_incremental_merge_across_batches(spark, tmp_path):
     assert got[("c2", "m3")] == (2, "not-a-date")  # new key inserts even if malformed
     # checkpoint prevents reprocessing f1/f2 (only f3 was consumed)
     assert store.current_version() == v1 + 1
+    (hit,) = restricted
+    assert "LeftSemi" in hit._jdf.queryExecution().executedPlan().toString()
+    _assert_state_not_shuffled(hit)
 
 
 def test_first_batch_into_empty_store_equals_dedup_latest(spark, tmp_path):

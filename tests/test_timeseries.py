@@ -3,10 +3,6 @@ the plan shapes that make them scale."""
 
 from __future__ import annotations
 
-import sys
-
-sys.path.insert(0, "/root/repo")
-
 from movie_data_transformer_spark.operators.timeseries_queries import (
     SEVEN_DAYS_S,
     q_docs_length_deciles,

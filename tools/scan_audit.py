@@ -44,10 +44,11 @@ projection that never reached the scan). Clean result = 0 flagged
 
 from __future__ import annotations
 
+import os
 import re
 import sys
 
-sys.path.insert(0, "/root/repo")
+sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 FACTS = [
     "lineitem.parquet",
