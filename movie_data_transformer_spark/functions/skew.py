@@ -1,39 +1,14 @@
 """Skew-handling recipes (SURVEY.md §7 M6): salting for hot keys.
 
 AQE's skew-join splitting (on in ENGINE_CONF) handles most skew at
-runtime; these explicit recipes are for the cases AQE can't fix —
-aggregation skew (one giant group) and broadcast-ineligible joins with a
-known-hot key distribution.
+runtime; the explicit recipe here is for the case AQE can't fix — a
+broadcast-ineligible join with a known-hot key distribution.
 """
 
 from __future__ import annotations
 
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
-from pyspark.sql.column import Column
-
-
-def salted_agg_count_sum(
-    df: DataFrame, key: str, value: str, n_salts: int = 16
-) -> DataFrame:
-    """Two-phase aggregation for skewed group keys: pre-aggregate on
-    (key, salt) — spreading a hot key over n_salts reducers — then combine
-    per key. Result identical to a direct groupBy; the hot key's work is
-    parallelized across n_salts tasks.
-
-    Output: key, n_rows, sum_value (decimal-exact)."""
-    salt = F.pmod(F.hash(F.monotonically_increasing_id()), F.lit(n_salts))
-    phase1 = (
-        df.withColumn("_salt", salt)
-        .groupBy(key, "_salt")
-        .agg(
-            F.count("*").alias("_n"),
-            F.sum(F.col(value).cast("decimal(18,4)")).alias("_s"),
-        )
-    )
-    return phase1.groupBy(key).agg(
-        F.sum("_n").alias("n_rows"), F.sum("_s").alias("sum_value")
-    )
 
 
 def salted_join(

@@ -13,8 +13,7 @@ keys only, with the applied value, the op sequence number, and how many
 ops the key saw (the audit columns a CDC sink reports). FULL oracle.
 
 Scale: last-op-wins is ONE max_by-style hash aggregation on the key —
-no window sort needed (the same sort-free LWW form as
-movies_dedup_latest_maxby, here with tombstone filtering after the
+no window sort needed (here with tombstone filtering after the
 fold). At 100 TB this is a single shuffle on key with map-side partial
 max_by; the changelog never needs to be ordered globally, only the
 per-key argmax survives.
@@ -138,8 +137,8 @@ def q_stream_cdc_apply(spark: SparkSession, sf_dir: str) -> DataFrame:
     idempotently (the stream_snapshot_merge contract).
 
     Scale: per-trigger work is O(batch + touched state) — one fold agg;
-    at 100 TB the state union becomes the partition-pruned MERGE
-    (sinks/table.py), same algebra."""
+    at 100 TB the state union becomes a keyed MERGE into the table,
+    same algebra."""
     import os
 
     from movie_data_transformer_spark.operators.jsonl_queries import (

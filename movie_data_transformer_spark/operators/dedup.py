@@ -38,7 +38,7 @@ from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
 from movie_data_transformer_spark.operators.sizing import widen_for_compute
-from movie_data_transformer_spark.operators.text import portable_hash, tokens
+from movie_data_transformer_spark.operators.text import tokens
 
 # 32 affine minhash functions h_i(x) = (A_i * x + B_i) mod P (P = 2^31-1).
 MINHASH_P = 2147483647
@@ -148,19 +148,6 @@ def doc_shingles(docs: DataFrame, text_col: str = "text", n: int = 3) -> DataFra
     )
 
 
-def minhash_signatures(shingles: DataFrame) -> DataFrame:
-    """32 minhashes per doc from EXPLODED (doc_id, shingle) rows: group
-    once, min() of each affine transform of the portable shingle hash
-    (single shuffle keyed by doc). Prefer minhash_signatures_from_arrays
-    when the shingle sets are already arrays — it needs NO shuffle."""
-    h = portable_hash(F.col("shingle"))
-    aggs = [
-        F.min((h * F.lit(a) + F.lit(b)) % F.lit(MINHASH_P)).alias(f"mh{i}")
-        for i, (a, b) in enumerate(MINHASH_COEFFS)
-    ]
-    return shingles.groupBy("doc_id").agg(*aggs)
-
-
 def minhash_signatures_from_arrays(shingle_sets: DataFrame) -> DataFrame:
     """Shuffle-free signatures: each minhash is array_min of an affine
     transform of the row's pre-hashed shingle array — pure row-local
@@ -188,7 +175,8 @@ def band_table(signatures: DataFrame) -> DataFrame:
     signature table: 16 bands of 2 rows each (LSH threshold
     (1/b)^(1/r) ~= 0.25, recall ~0.94 at jaccard 0.4). Row-local
     expression work only — this IS the LSH index layout a corpus
-    maintains across ingests (see incremental_minhash_pairs). inline()
+    maintains across ingests (see incremental_minhash_pairs_from_index).
+    inline()
     in one selectExpr: explodes AND flattens the struct fields in a
     single cheap-to-construct expression."""
     structs = ", ".join(
@@ -242,32 +230,6 @@ def lsh_candidate_pairs(signatures: DataFrame, max_bucket_size: int | None = Non
 JACCARD_MICRO_EXPR = (
     "CAST(n_inter * 1000000 div (n_a + n_b - n_inter) AS DOUBLE) / 1000000"
 )
-
-
-def jaccard_verify(candidates: DataFrame, shingles: DataFrame, threshold: float) -> DataFrame:
-    """Exact Jaccard on candidate pairs only: join both docs' shingle sets,
-    count intersections, divide by union size (integer micro-units — see
-    JACCARD_MICRO_EXPR)."""
-    sizes = shingles.groupBy("doc_id").agg(F.count("*").alias("n_shingles"))
-    sa = shingles.select(F.col("doc_id").alias("doc_a"), F.col("shingle"))
-    sb = shingles.select(F.col("doc_id").alias("doc_b"), F.col("shingle"))
-    inter = (
-        candidates.join(sa, "doc_a").join(sb, ["doc_b", "shingle"])
-        .groupBy("doc_a", "doc_b")
-        .agg(F.count("*").alias("n_inter"))
-    )
-    za = sizes.select(F.col("doc_id").alias("doc_a"), F.col("n_shingles").alias("n_a"))
-    zb = sizes.select(F.col("doc_id").alias("doc_b"), F.col("n_shingles").alias("n_b"))
-    return (
-        inter.join(za, "doc_a")
-        .join(zb, "doc_b")
-        .select(
-            "doc_a",
-            "doc_b",
-            F.expr(JACCARD_MICRO_EXPR).alias("jaccard"),
-        )
-        .filter(F.col("jaccard") >= threshold)
-    )
 
 
 def jaccard_verify_arrays(
@@ -350,12 +312,19 @@ def incremental_minhash_pairs_from_index(
     max_bucket_size: int | None = None,
     new_bands: DataFrame | None = None,
 ) -> DataFrame:
-    """Incremental linking against a PERSISTED LSH index: the state side
-    arrives as stored tables — shingle sets (doc_shingle_sets rows) AND
-    band rows (doc_id, band, sig) — so NO state signature is ever
-    recomputed; per-ingest compute is batch-sized (r4 VERDICT "What's
-    wrong #1" fix). Contract: stored and new doc_ids are disjoint (the
-    streaming layer guarantees it even across foreachBatch replays).
+    """Incremental corpus dedup: near-dup pairs linking a NEW ingest
+    batch to the existing corpus (and to itself) WITHOUT ever comparing
+    two existing docs. Every candidate pair has >= 1 new side by
+    construction, so the result equals the full recompute
+    (minhash_dedup_pairs over state+batch) filtered to pairs touching a
+    new doc — bucket co-habitation is pairwise.
+
+    The state side arrives as a PERSISTED LSH index — shingle sets
+    (doc_shingle_sets rows) AND band rows (doc_id, band, sig) — so NO
+    state signature is ever recomputed; per-ingest compute is
+    batch-sized (r4 VERDICT "What's wrong #1" fix). Contract: stored and
+    new doc_ids are disjoint (the streaming layer guarantees it even
+    across foreachBatch replays).
 
     `new_bands`, when given, MUST equal
     ``band_table(minhash_signatures_from_arrays(new_sets))`` — it exists
@@ -455,64 +424,6 @@ def incremental_minhash_pairs_from_index(
     )
     all_sets = stored_needed.unionByName(new_sets.select("doc_id", "shingles"))
     return jaccard_verify_arrays(cands, all_sets, threshold)
-
-
-def incremental_minhash_pairs_from_sets(
-    state_sets: DataFrame,
-    new_sets: DataFrame,
-    threshold: float = 0.3,
-    max_bucket_size: int | None = None,
-) -> DataFrame:
-    """Core of incremental_minhash_pairs over PRECOMPUTED shingle-index
-    tables (doc_shingle_sets rows): derives the state band rows inline
-    (row-local map work) and delegates to the persisted-index form. Use
-    incremental_minhash_pairs_from_index directly when band rows are
-    already stored (the streaming/continuous-ingest path keeps them as
-    an append-only table and never recomputes them)."""
-    state_bands = band_table(minhash_signatures_from_arrays(state_sets))
-    return incremental_minhash_pairs_from_index(
-        state_sets,
-        state_bands,
-        new_sets,
-        threshold=threshold,
-        max_bucket_size=max_bucket_size,
-    )
-
-
-def incremental_minhash_pairs(
-    state_docs: DataFrame,
-    new_docs: DataFrame,
-    text_col: str = "text",
-    n: int = 3,
-    threshold: float = 0.3,
-    max_bucket_size: int | None = None,
-) -> DataFrame:
-    """Incremental corpus dedup: near-dup pairs linking a NEW ingest
-    batch to the existing corpus (and to itself) WITHOUT ever comparing
-    two existing docs — the operation a continuously-crawled training
-    corpus runs daily, where re-deduping the whole corpus from scratch
-    (minhash_dedup_pairs over state+batch) would redo |corpus|-sized
-    work for a |batch|-sized change.
-
-    Dataflow: signatures/bands are computed for the BATCH ONLY; the
-    batch's band rows join the combined band index on (band, sig); every
-    candidate pair therefore has >= 1 new side by construction, and the
-    exact-Jaccard verify touches only candidates. Result is identical to
-    the full recompute filtered to pairs touching a new doc (the oracle
-    states exactly that), because bucket co-habitation is pairwise.
-
-    At 100 TB the state band table is a PERSISTED INDEX maintained
-    across ingests (computed once per doc, appended per batch —
-    streaming/dedup_stream.py does exactly that; here it is derived
-    inline because the testdata has no such side table); per ingest the
-    join cost is |batch bands| x bucket hit rate, never |corpus|^2 and
-    never state x state. max_bucket_size drops candidates from oversized
-    buckets, the same escape hatch as lsh_candidate_pairs."""
-    state_sets = doc_shingle_sets(state_docs, text_col, n).persist()
-    new_sets = doc_shingle_sets(new_docs, text_col, n).persist()
-    return incremental_minhash_pairs_from_sets(
-        state_sets, new_sets, threshold=threshold, max_bucket_size=max_bucket_size
-    )
 
 
 def _release_local_checkpoint(df: DataFrame) -> None:

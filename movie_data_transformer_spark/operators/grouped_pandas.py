@@ -72,8 +72,8 @@ def user_value_trend(events_raw: DataFrame) -> DataFrame:
 
 def gmean_udaf():
     """Grouped-aggregate pandas UDF (the UDAF extension surface — the
-    third leg of the UDF/UDAF/UDTF triad next to token_count_vectorized
-    and chunk_text_udtf): geometric mean per group, Arrow-batched.
+    UDAF leg of the UDF/UDAF/UDTF triad, next to chunk_text_udtf):
+    geometric mean per group, Arrow-batched.
     Series -> scalar functionType is inferred by Spark from the
     signature. exp(mean(log)) is FP-order dependent -> rows-only in the
     registry; pinned against numpy in tests."""

@@ -15,8 +15,8 @@ the merge is provably lossless for sum/count, and the oracle binds it.
 Scale: the merge shuffles only the AGGREGATE GRAIN (days), never the
 fact rows of prior increments — the whole point: at 100 TB the daily
 delta is aggregated alone (one scan of the delta) and the view update
-is a grain-sized upsert (sinks/table.py's partition-pruned MERGE is the
-materialization half of this dataflow).
+is a grain-sized upsert (a partition-pruned MERGE into the view table
+is the materialization half of this dataflow).
 """
 
 from __future__ import annotations

@@ -1,8 +1,6 @@
 """Physical data-layout planning as oracle-checked relational ops.
 
-sinks/table.py implements the lake layouts themselves (write_zorder
-range-exchange clustering, range-clustered writes, compaction) with
-plan/file-level pytests; this module puts the LAYOUT MATH behind the
+This module puts the LAYOUT MATH of a clustered lake table behind the
 driver's DuckDB gate: per-tile statistics of a two-dimensional Morton
 (Z-order) tiling vs a one-dimensional linear tiling of the same data.
 The per-tile min/max table IS the file-skipping index a 100 TB lake
@@ -12,8 +10,8 @@ bit interleave, and tile assignment.
 
 Everything is map-side arithmetic (one tiny min/max agg + one shuffle
 to tile grain): tiles are FIXED Morton ranges (zkey div tile_span),
-not an ntile over a global sort — the same shape write_zorder gets
-from its range exchange, without a single-reducer window.
+not an ntile over a global sort — the tiling a range-exchange
+clustered write produces, without a single-reducer window.
 
 The cross-engine contract: bucket ids use the identical IEEE double
 expression tree ((v - lo) / (hi - lo) * 256, floored, clamped) on both
@@ -74,7 +72,7 @@ def q_zorder_tile_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
     (user_id, value) next to a linear tiling of user_id alone: the
     zorder tiles carry tight min/max on BOTH dimensions (every tile can
     be skipped by a selective filter on either), the linear tiles only
-    on one — the quantified case for write_zorder, held to a full
+    on one — the quantified case for Z-order clustering, held to a full
     oracle (asserted over the emitted stats in tests/test_sql_surface.py)."""
     load_table(spark, sf_dir, "events").createOrReplaceTempView("_zf_events")
     return spark.sql(_layout_sql("_zf_events", "DIV"))

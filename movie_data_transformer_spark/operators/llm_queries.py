@@ -472,8 +472,7 @@ def q_dedup_incremental_minhash(spark: SparkSession, sf_dir: str) -> DataFrame:
     # bucket probe, the bucket-cap count, and the candidate join — unpersisted,
     # the tokenize+shingle+32-hash signature lineage recomputed per reference
     # (3-4 full batch passes per ingest; r12 opt round, guide §5 caching — the
-    # tables are |batch|-grain, the contract incremental_minhash_pairs already
-    # follows in its sets form).
+    # tables are |batch|-grain).
     # CALLER OBLIGATION (r12 ADVICE low #2): this query-shaped entry is
     # invoked once per bench/oracle run and the harness clearCache()s
     # between entries; a LONG-LIVED driver calling this per batch must

@@ -70,19 +70,29 @@ matrix AS (
 )"""
 
 
-def _matrix(spark: SparkSession, sf_dir: str) -> DataFrame:
-    counts = (
+def _user_transitions(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """ONE fact scan reduced to the (user_id, from_type, to_type) grain
+    with its transition count n."""
+    return (
         _pairs(spark, sf_dir)
-        .groupBy("from_type", "to_type")
-        .agg(F.count("*").cast("bigint").alias("n_transitions"))
+        .groupBy("user_id", "from_type", "to_type")
+        .agg(F.count("*").cast("bigint").alias("n"))
+    )
+
+
+def _transition_matrix(ut: DataFrame) -> DataFrame:
+    """The global matrix (from_type, to_type, n_transitions, p_micro),
+    rolled up from the user-transition aggregate (never re-scanning
+    events)."""
+    counts = ut.groupBy("from_type", "to_type").agg(
+        F.sum("n").cast("bigint").alias("n_transitions")
     )
     w_row = Window.partitionBy("from_type")
     return counts.select(
         "from_type",
         "to_type",
+        F.expr("CAST(n_transitions * 1000000 AS BIGINT)").alias("_num"),
         "n_transitions",
-        F.expr("CAST(n_transitions * 1000000 AS BIGINT)")
-        .alias("_num"),
         F.sum("n_transitions").over(w_row).alias("_den"),
     ).selectExpr(
         "from_type",
@@ -95,26 +105,10 @@ def _matrix(spark: SparkSession, sf_dir: str) -> DataFrame:
 def q_events_markov_user_typicality(
     spark: SparkSession, sf_dir: str
 ) -> DataFrame:
-    # ONE fact scan: reduce transitions to the (user, from, to) grain
-    # first; the global matrix then rolls up from THAT aggregate (never
-    # re-scanning events) and broadcasts back onto it.
-    ut = (
-        _pairs(spark, sf_dir)
-        .groupBy("user_id", "from_type", "to_type")
-        .agg(F.count("*").cast("bigint").alias("n"))
-    )
-    counts = ut.groupBy("from_type", "to_type").agg(
-        F.sum("n").cast("bigint").alias("n_transitions")
-    )
-    w_row = Window.partitionBy("from_type")
-    matrix = counts.select(
-        "from_type",
-        "to_type",
-        F.expr("CAST(n_transitions * 1000000 AS BIGINT)").alias("_num"),
-        F.sum("n_transitions").over(w_row).alias("_den"),
-    ).selectExpr(
-        "from_type", "to_type", "CAST(_num DIV _den AS BIGINT) AS p_micro"
-    )
+    # ONE fact scan: the matrix rolls up from the user-transition
+    # aggregate and broadcasts back onto it
+    ut = _user_transitions(spark, sf_dir)
+    matrix = _transition_matrix(ut).select("from_type", "to_type", "p_micro")
     joined = ut.join(F.broadcast(matrix), ["from_type", "to_type"])
     return (
         joined.groupBy("user_id")

@@ -1,12 +1,11 @@
 """Real pixel TRANSFORMS over decoded media (beyond decode-and-measure).
 
-`mm_resize_nearest` upgrades the resize story from the fake-decoder
-plan (multimodal.resize_media, schema/plumbing only) to a real pixel
-resample: decode the 24-bit BMP, nearest-neighbor downscale to a fixed
-4x4 target with the floor index mapping sx = (tx * w) DIV tw — pure
-integer arithmetic, so the oracle recomputes the resized pixels from
-the generative formula exactly and a wrong rounding convention, an
-axis swap, or an off-by-one in the index map breaks the driver hash.
+`mm_resize_nearest` is a real pixel resample: decode the 24-bit BMP,
+nearest-neighbor downscale to a fixed 4x4 target with the floor index
+mapping sx = (tx * w) DIV tw — pure integer arithmetic, so the oracle
+recomputes the resized pixels from the generative formula exactly and a
+wrong rounding convention, an axis swap, or an off-by-one in the index
+map breaks the driver hash.
 
 Scale: one mapInPandas projection (decode + numpy fancy-indexing per
 blob), no shuffle; the per-image output is constant-size, which is what

@@ -11,10 +11,13 @@ Scale notes (the 100 TB story):
   - explode+project+partial-agg fuse into one WholeStageCodegen pass per
     input split — no materialization between them, like the reference's
     per-file streamed pass (:131-144) but distributed.
-  - dedup_latest is a single shuffle on (customerId, movieId); group_watched
-    reuses the customerId clustering (Catalyst plans the window and the
-    final groupBy on compatible hash partitioning, so no second full
-    shuffle of the big side).
+  - run_pipeline shuffles twice (executed plan, AQE off). dedup_latest
+    hashes on (customerId, movieId) for its window; a `WindowGroupLimit
+    ... Partial` below that exchange keeps only each map task's top row
+    per key, so the shuffle carries one candidate per key per task.
+    group_watched then hashes on customerId after a map-side partial
+    collect_list, so that second shuffle carries one partial list per
+    customer per task, not every rating.
   - No driver-side state anywhere (the reference's synchronized HashMap at
     :97 is its single-JVM ceiling — SURVEY.md §4.2).
 """
@@ -83,25 +86,6 @@ def dedup_latest(flat: DataFrame) -> DataFrame:
         .filter(F.col("_rn") == 1)
         .drop("_rn")
     )
-
-
-def dedup_latest_maxby(flat: DataFrame) -> DataFrame:
-    """dedup_latest as a hash AGGREGATION instead of a window: per
-    (customerId, movieId), max_by(row, order-key). Same semantics, but no
-    per-partition sort — partial max_by runs map-side (like any agg), so
-    at scale this shuffles one candidate row per key per map task instead
-    of every row. Ordering key mirrors dedup_latest exactly: malformed
-    dates coalesce to year-1 (they lose), then rating, then raw date."""
-    ord_key = F.struct(
-        F.coalesce(F.expr("try_to_date(date, 'yyyy-MM-dd')"), F.lit("0001-01-01").cast("date")),
-        F.col("rating"),
-        F.col("date"),
-    )
-    row = F.struct(*[F.col(c) for c in flat.columns])
-    picked = flat.groupBy("customerId", "movieId").agg(
-        F.max_by(row, ord_key).alias("_r")
-    )
-    return picked.select(*[F.col(f"_r.{c}").alias(c) for c in flat.columns])
 
 
 def group_watched(flat: DataFrame) -> DataFrame:

@@ -14,7 +14,6 @@ from pyspark.sql import functions as F
 from movie_data_transformer_spark.fixtures import RATINGS_ORACLE_CTE, derive_movies
 from movie_data_transformer_spark.operators.movie_pipeline import (
     dedup_latest,
-    dedup_latest_maxby,
     explode_watched,
     group_watched,
     kv_serialize,
@@ -56,12 +55,6 @@ FROM (
 ) t
 WHERE _rn = 1
 """
-
-
-def q_movies_dedup_latest_maxby(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Same LWW semantics via max_by hash-agg (sort-free, map-side
-    partials) — identical oracle as the window form."""
-    return dedup_latest_maxby(_exploded(spark, sf_dir))
 
 
 def q_movies_group_collect(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -262,7 +255,6 @@ QUERIES = {
     "movies_similarity_jaccard": (q_movies_similarity_jaccard, SQL_MOVIES_SIMILARITY_JACCARD),
     "movies_kv_sql": (q_movies_kv_sql, SQL_MOVIES_KV),
     "movies_dedup_latest": (q_movies_dedup_latest, SQL_MOVIES_DEDUP_LATEST),
-    "movies_dedup_latest_maxby": (q_movies_dedup_latest_maxby, SQL_MOVIES_DEDUP_LATEST),
     "movies_group_collect": (q_movies_group_collect, SQL_MOVIES_GROUP_COLLECT),
     "movies_kv": (q_movies_kv, SQL_MOVIES_KV),
 }

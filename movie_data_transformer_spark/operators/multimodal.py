@@ -236,45 +236,6 @@ def extract_features(media: DataFrame, fake_decode: bool = True) -> DataFrame:
     return media.mapInPandas(_extract, schema=FEATURES_SCHEMA)
 
 
-def resize_media(media: DataFrame, target_w: int, target_h: int, fake_decode: bool = True) -> DataFrame:
-    """STUB of image resize: the metadata plan (aspect-preserving scale
-    factor, output dims) is real Spark-side arithmetic; the pixel
-    resample runs through the decode gate (PIL would slot into
-    decode_media). Emits the resized payload untouched under the fake
-    decoder — the schema/batch contract is what downstream code binds to."""
-
-    def _resize(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            out_content = [
-                decode_media(c, f, fake=fake_decode)
-                for c, f in zip(pdf["content"], pdf["format"])
-            ]
-            yield pd.DataFrame(
-                {
-                    "doc_id": pdf["doc_id"],
-                    "content": out_content,
-                    "width": pdf["width"],
-                    "height": pdf["height"],
-                }
-            )
-
-    images = media.filter(F.col("media_type") == "image")
-    scale = F.least(
-        F.lit(float(target_w)) / F.col("width"), F.lit(float(target_h)) / F.col("height")
-    )
-    planned = images.withColumn("out_w", (F.col("width") * scale).cast("int")).withColumn(
-        "out_h", (F.col("height") * scale).cast("int")
-    )
-    resized = planned.select("doc_id", "content", "media_type", "format", "width", "height").mapInPandas(
-        _resize,
-        schema="doc_id long, content binary, width int, height int",
-    )
-    return resized.join(
-        planned.select("doc_id", "out_w", "out_h", F.round(scale, 6).alias("scale")),
-        "doc_id",
-    )
-
-
 def frame_sample(media: DataFrame, every_n: int = 10) -> DataFrame:
     """Metadata-planned frame sampling for formats behind the codec stub
     (the frame plan is real Spark arithmetic; pixels are not decoded).

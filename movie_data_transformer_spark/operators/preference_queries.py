@@ -36,7 +36,7 @@ _CENTS = "CAST(floor(value * 100 + 0.5) AS BIGINT)"
 
 def q_pref_pairs_build(spark: SparkSession, sf_dir: str) -> DataFrame:
     # sort-free argmax/argmin fold: ONE user-keyed aggregate with
-    # map-side partials (the dedup_latest_maxby discipline) — no rank
+    # map-side partial max_by/min_by — no rank
     # windows, no hi x lo self-join, one exchange total (plan-pinned in
     # test_plan_shapes_hold). Tie-breaks ride the ordering structs:
     # chosen = max by (cents, -event_id) => highest cents, lowest id;

@@ -48,24 +48,6 @@ def tokens(col: Column) -> Column:
     return F.split(F.trim(col), r"\s+")
 
 
-def token_count_vectorized():
-    """Arrow-vectorized pandas_udf token counter — the Python-UDF escape
-    hatch done right (batched columnar transfer, ~10-100x over row-at-a-time
-    Python UDFs). The JVM expression form (size(split(...))) in text_stats
-    is still preferred in the hot path; this exists for logic that needs
-    Python libraries (real tokenizers). Equivalence with the JVM form is
-    pinned in tests/test_text_multimodal.py."""
-    # pandas must be imported at module level: pandas_udf resolves the
-    # signature's type hints by name at decoration time
-    from pyspark.sql.functions import pandas_udf
-
-    @pandas_udf("long")
-    def _count(texts: pd.Series) -> pd.Series:
-        return texts.str.strip().str.split(r"\s+").str.len().astype("int64")
-
-    return _count
-
-
 def text_stats(docs: DataFrame, text_col: str = "text") -> DataFrame:
     """Token counting + quality-score features per document. Ratio
     columns are exact integer micro-units (micro_ratio), never

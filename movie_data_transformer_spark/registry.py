@@ -28,29 +28,96 @@ from pyspark.sql import DataFrame, SparkSession
 
 SparkQuery = Callable[[SparkSession, str], DataFrame]
 
-# Module order is load-bearing: the driver's correctness gate checks the
-# FIRST 50 entries each round (CORRECTNESS_r01/r02 both stop at 50), so the
-# front of this list is the round's evidence window and is re-curated per
-# round (round-2 VERDICT advice #1/#8; rotation ledger in NOTES.md).
-#
-# Round-12 window (exactly 50, verified by import): the committed r12 front
-# from NOTES.md, applied EXACTLY as written — the post-r11 slots 51-100
-# minus late_r6's straddled 13th entry (late_r6 rotates back atomically
-# with the other 7 r11-window modules): the 38 r8-addition entries
-# (semdedup 1 + rater_eval 2 + affinity 1 + seqpattern 1 + linkpred 1 +
-# isotonic 1 + blocking 1 + ranking_eval 2 + readability 2 + markov 1 +
-# dsir 2 + krippendorff 1 + zipf 2 + autocorr 1 + ks 1 + span_corruption 1
-# + psi 1 + preference 1 + embnorm 1 + psi_stream 1 + datacard 2 +
-# policy_eval 1 + asof_nearest 1 + scene_cut 1 + fertility 1 + entropy 1 +
-# contrast 1 + stemming 1 + phash 2 + vad 1 + tailindex 1) + the oldest
-# re-green pool head: stateful 2 + streaming_extras 2 + layout 2 +
-# text_cleaning 3 + datasketches first 3 of 5 = 50 EXACTLY (datasketches
-# is the FINAL module and straddles, its last 2 entries out — legal).
-# After this window executes, every registry entry has a driver row: the
-# never-checked backlog reaches ZERO.
+# The driver's correctness gate checks the FIRST 50 entries. The paper's core
+# (movie, merge, jsonl) always leads; the other modules follow oldest driver
+# row first, and a module whose rows were just checked moves to the back.
 _MODULES: list[str] = [
-    # ---- r12 window: the 31 r8-addition modules (38 entries, the last
-    # never-driver-checked set) ----
+    "movie_data_transformer_spark.operators.movie_queries",
+    "movie_data_transformer_spark.operators.merge_queries",
+    "movie_data_transformer_spark.operators.jsonl_queries",
+    "movie_data_transformer_spark.operators.tpch_queries",
+    "movie_data_transformer_spark.operators.grouped_extras_queries",
+    "movie_data_transformer_spark.operators.function_packs",
+    "movie_data_transformer_spark.operators.privacy_queries",
+    "movie_data_transformer_spark.operators.robustness_queries",
+    "movie_data_transformer_spark.operators.geo_queries",
+    "movie_data_transformer_spark.operators.cogroup_queries",
+    "movie_data_transformer_spark.operators.udtf_poly_queries",
+    "movie_data_transformer_spark.operators.ml_queries",
+    "movie_data_transformer_spark.operators.relational_queries",
+    "movie_data_transformer_spark.operators.recall_queries",
+    "movie_data_transformer_spark.operators.mm_decode_queries",
+    "movie_data_transformer_spark.operators.format_queries",
+    "movie_data_transformer_spark.operators.sql_surface_queries",
+    "movie_data_transformer_spark.operators.udf_surface_queries",
+    "movie_data_transformer_spark.operators.behavior_queries",
+    "movie_data_transformer_spark.operators.search_queries",
+    "movie_data_transformer_spark.operators.source_queries",
+    "movie_data_transformer_spark.operators.gate_queries",
+    "movie_data_transformer_spark.operators.flagship_queries",
+    "movie_data_transformer_spark.streaming.streaming_queries",
+    "movie_data_transformer_spark.operators.llm_queries",
+    "movie_data_transformer_spark.operators.mm_transform_extras_queries",
+    "movie_data_transformer_spark.operators.sink_extras_queries",
+    "movie_data_transformer_spark.operators.format_extras_queries",
+    "movie_data_transformer_spark.operators.engagement_queries",
+    "movie_data_transformer_spark.operators.analytics_extras_queries",
+    "movie_data_transformer_spark.operators.privacy_extras_queries",
+    "movie_data_transformer_spark.operators.skew_extras_queries",
+    "movie_data_transformer_spark.operators.search_extras_queries",
+    "movie_data_transformer_spark.operators.temporal_queries",
+    "movie_data_transformer_spark.operators.profile_queries",
+    "movie_data_transformer_spark.operators.lm_queries",
+    "movie_data_transformer_spark.operators.embedding_queries",
+    "movie_data_transformer_spark.operators.search_ranking_queries",
+    "movie_data_transformer_spark.operators.snapshot_queries",
+    "movie_data_transformer_spark.operators.mm_video_queries",
+    "movie_data_transformer_spark.operators.mm_transform_queries",
+    "movie_data_transformer_spark.operators.sql_lang_queries",
+    "movie_data_transformer_spark.operators.pipeline_queries",
+    "movie_data_transformer_spark.operators.embedding_extras_queries",
+    "movie_data_transformer_spark.operators.sql_udf_queries",
+    "movie_data_transformer_spark.operators.linalg_queries",
+    "movie_data_transformer_spark.operators.dedup_extras_queries",
+    "movie_data_transformer_spark.operators.mm_hash_queries",
+    "movie_data_transformer_spark.operators.ml_extras_queries",
+    "movie_data_transformer_spark.operators.timeseries_extras_queries",
+    "movie_data_transformer_spark.operators.calibration_queries",
+    "movie_data_transformer_spark.operators.udtf_table_arg_queries",
+    "movie_data_transformer_spark.operators.interval_queries",
+    "movie_data_transformer_spark.operators.dq_extras_queries",
+    "movie_data_transformer_spark.operators.embedding_pipeline_queries",
+    "movie_data_transformer_spark.operators.recsys_queries",
+    "movie_data_transformer_spark.operators.sampling_queries",
+    "movie_data_transformer_spark.operators.mixing_queries",
+    "movie_data_transformer_spark.operators.cluster_eval_queries",
+    "movie_data_transformer_spark.operators.graph_extras_queries",
+    "movie_data_transformer_spark.operators.storage_queries",
+    "movie_data_transformer_spark.operators.resample_queries",
+    "movie_data_transformer_spark.operators.matching_queries",
+    "movie_data_transformer_spark.operators.changelog_queries",
+    "movie_data_transformer_spark.operators.ivm_queries",
+    "movie_data_transformer_spark.operators.robust_stats_queries",
+    "movie_data_transformer_spark.operators.corpus_stats_queries",
+    "movie_data_transformer_spark.operators.skyline_queries",
+    "movie_data_transformer_spark.operators.redaction_queries",
+    "movie_data_transformer_spark.operators.sketch_extras_queries",
+    "movie_data_transformer_spark.operators.version_diff_queries",
+    "movie_data_transformer_spark.operators.linkage_queries",
+    "movie_data_transformer_spark.operators.backtest_queries",
+    "movie_data_transformer_spark.operators.kendall_queries",
+    "movie_data_transformer_spark.operators.udf_iter_queries",
+    "movie_data_transformer_spark.operators.eval_extras_queries",
+    "movie_data_transformer_spark.operators.throttle_queries",
+    "movie_data_transformer_spark.operators.alerting_queries",
+    "movie_data_transformer_spark.operators.sql_semantics_queries",
+    "movie_data_transformer_spark.operators.curation_queries",
+    "movie_data_transformer_spark.operators.keyword_queries",
+    "movie_data_transformer_spark.operators.geo_extras_queries",
+    "movie_data_transformer_spark.operators.reliability_queries",
+    "movie_data_transformer_spark.operators.analytics_queries",
+    "movie_data_transformer_spark.operators.timeseries_queries",
+    "movie_data_transformer_spark.operators.late_r6_queries",
     "movie_data_transformer_spark.operators.semdedup_queries",
     "movie_data_transformer_spark.operators.rater_eval_queries",
     "movie_data_transformer_spark.operators.affinity_queries",
@@ -82,117 +149,11 @@ _MODULES: list[str] = [
     "movie_data_transformer_spark.operators.phash_queries",
     "movie_data_transformer_spark.operators.vad_queries",
     "movie_data_transformer_spark.operators.tailindex_queries",
-    # ---- r12 re-green fillers (oldest driver rows, r07; datasketches
-    # is the committed final straddler: first 3 of its 5 entries in) ----
     "movie_data_transformer_spark.operators.stateful_queries",
     "movie_data_transformer_spark.operators.streaming_extras_queries",
     "movie_data_transformer_spark.operators.layout_queries",
     "movie_data_transformer_spark.operators.text_cleaning_queries",
     "movie_data_transformer_spark.operators.datasketches_queries",
-    # ---- r13 window staging (committed r12; import-verifiable TODAY at
-    # slots 51-100 once datasketches' straddled last 2 entries are
-    # counted): the steady-state oldest-rows-first cadence — §2-core
-    # re-green movie 8 + merge 1 + jsonl 2 (last driver row r10, due
-    # <= r13 under the every-<=3-rounds rule) + the oldest modules by
-    # min driver row: tpch 22 (r03!) + grouped_extras 2 (r04) +
-    # function_packs first 15 of 18 (r04) = 50 EXACTLY at r13-rotation
-    # time (the r12-window modules move to the back atomically;
-    # function_packs is the FINAL module and straddles, its last 3
-    # entries out — legal; they lead the r14 filler with reliability 2,
-    # due r14). ----
-    "movie_data_transformer_spark.operators.movie_queries",
-    "movie_data_transformer_spark.operators.merge_queries",
-    "movie_data_transformer_spark.operators.jsonl_queries",
-    "movie_data_transformer_spark.operators.tpch_queries",
-    "movie_data_transformer_spark.operators.grouped_extras_queries",
-    "movie_data_transformer_spark.operators.function_packs",
-    # ---- rest of the r6-era re-green pool ----
-    "movie_data_transformer_spark.operators.privacy_queries",
-    "movie_data_transformer_spark.operators.robustness_queries",
-    "movie_data_transformer_spark.operators.geo_queries",
-    "movie_data_transformer_spark.operators.cogroup_queries",
-    "movie_data_transformer_spark.operators.udtf_poly_queries",
-    "movie_data_transformer_spark.operators.ml_queries",
-    "movie_data_transformer_spark.operators.relational_queries",
-    "movie_data_transformer_spark.operators.recall_queries",
-    "movie_data_transformer_spark.operators.mm_decode_queries",
-    "movie_data_transformer_spark.operators.format_queries",
-    "movie_data_transformer_spark.operators.sql_surface_queries",
-    "movie_data_transformer_spark.operators.udf_surface_queries",
-    "movie_data_transformer_spark.operators.behavior_queries",
-    "movie_data_transformer_spark.operators.search_queries",
-    "movie_data_transformer_spark.operators.source_queries",
-    "movie_data_transformer_spark.operators.gate_queries",
-    "movie_data_transformer_spark.operators.flagship_queries",
-    "movie_data_transformer_spark.streaming.streaming_queries",
-    "movie_data_transformer_spark.operators.llm_queries",
-    # ---- r09 window modules (driver-green r09) ----
-    "movie_data_transformer_spark.operators.mm_transform_extras_queries",
-    "movie_data_transformer_spark.operators.sink_extras_queries",
-    "movie_data_transformer_spark.operators.format_extras_queries",
-    "movie_data_transformer_spark.operators.engagement_queries",
-    "movie_data_transformer_spark.operators.analytics_extras_queries",
-    "movie_data_transformer_spark.operators.privacy_extras_queries",
-    "movie_data_transformer_spark.operators.skew_extras_queries",
-    "movie_data_transformer_spark.operators.search_extras_queries",
-    "movie_data_transformer_spark.operators.temporal_queries",
-    "movie_data_transformer_spark.operators.profile_queries",
-    "movie_data_transformer_spark.operators.lm_queries",
-    # ---- r08 window modules (driver-green r08) ----
-    "movie_data_transformer_spark.operators.embedding_queries",
-    "movie_data_transformer_spark.operators.search_ranking_queries",
-    "movie_data_transformer_spark.operators.snapshot_queries",
-    "movie_data_transformer_spark.operators.mm_video_queries",
-    "movie_data_transformer_spark.operators.mm_transform_queries",
-    "movie_data_transformer_spark.operators.sql_lang_queries",
-    "movie_data_transformer_spark.operators.pipeline_queries",
-    "movie_data_transformer_spark.operators.embedding_extras_queries",
-    "movie_data_transformer_spark.operators.sql_udf_queries",
-    "movie_data_transformer_spark.operators.linalg_queries",
-    "movie_data_transformer_spark.operators.dedup_extras_queries",
-    "movie_data_transformer_spark.operators.mm_hash_queries",
-    "movie_data_transformer_spark.operators.ml_extras_queries",
-    "movie_data_transformer_spark.operators.timeseries_extras_queries",
-    "movie_data_transformer_spark.operators.calibration_queries",
-    "movie_data_transformer_spark.operators.udtf_table_arg_queries",
-    "movie_data_transformer_spark.operators.interval_queries",
-    "movie_data_transformer_spark.operators.dq_extras_queries",
-    "movie_data_transformer_spark.operators.embedding_pipeline_queries",
-    # ---- r10 window modules (driver-green r10; newest re-greens,
-    # rotated to the back per the committed r11 plan) ----
-    "movie_data_transformer_spark.operators.recsys_queries",
-    "movie_data_transformer_spark.operators.sampling_queries",
-    "movie_data_transformer_spark.operators.mixing_queries",
-    "movie_data_transformer_spark.operators.cluster_eval_queries",
-    "movie_data_transformer_spark.operators.graph_extras_queries",
-    "movie_data_transformer_spark.operators.storage_queries",
-    "movie_data_transformer_spark.operators.resample_queries",
-    "movie_data_transformer_spark.operators.matching_queries",
-    "movie_data_transformer_spark.operators.changelog_queries",
-    "movie_data_transformer_spark.operators.ivm_queries",
-    "movie_data_transformer_spark.operators.robust_stats_queries",
-    "movie_data_transformer_spark.operators.corpus_stats_queries",
-    "movie_data_transformer_spark.operators.skyline_queries",
-    "movie_data_transformer_spark.operators.redaction_queries",
-    "movie_data_transformer_spark.operators.sketch_extras_queries",
-    "movie_data_transformer_spark.operators.version_diff_queries",
-    "movie_data_transformer_spark.operators.linkage_queries",
-    "movie_data_transformer_spark.operators.backtest_queries",
-    "movie_data_transformer_spark.operators.kendall_queries",
-    "movie_data_transformer_spark.operators.udf_iter_queries",
-    "movie_data_transformer_spark.operators.eval_extras_queries",
-    "movie_data_transformer_spark.operators.throttle_queries",
-    "movie_data_transformer_spark.operators.alerting_queries",
-    # ---- r11 window modules (driver-green r11; newest re-greens,
-    # rotated to the back per the committed r12 plan) ----
-    "movie_data_transformer_spark.operators.sql_semantics_queries",
-    "movie_data_transformer_spark.operators.curation_queries",
-    "movie_data_transformer_spark.operators.keyword_queries",
-    "movie_data_transformer_spark.operators.geo_extras_queries",
-    "movie_data_transformer_spark.operators.reliability_queries",
-    "movie_data_transformer_spark.operators.analytics_queries",
-    "movie_data_transformer_spark.operators.timeseries_queries",
-    "movie_data_transformer_spark.operators.late_r6_queries",
 ]
 
 

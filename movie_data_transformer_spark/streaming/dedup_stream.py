@@ -1,8 +1,8 @@
 """Continuous-ingest dedup: incremental MinHash linking as Structured
 Streaming, with the corpus SHINGLE + BAND index as APPEND-ONLY state.
 
-The batch operator (operators/dedup.incremental_minhash_pairs) links one
-ingest batch against the existing corpus. This module runs that per
+The batch operator (operators/dedup.incremental_minhash_pairs_from_index)
+links one ingest batch against the existing corpus. This module runs that per
 micro-batch over a file stream, the way a continuously crawled training
 corpus actually operates:
 

@@ -11,7 +11,9 @@ of an external KV race.
 
 Scale: state lives per shuffle partition keyed by user_id; each micro-batch
 touches only keys present in the batch (Arrow-batched per group). No
-driver involvement, no external round-trips.
+driver involvement, no external round-trips. State larger than executor
+memory goes to disk by setting `spark.sql.streaming.stateStore.providerClass`
+to `org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider`.
 """
 
 from __future__ import annotations
@@ -22,53 +24,7 @@ from typing import Any
 import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql.streaming.state import GroupState, GroupStateTimeout
-from pyspark.sql.types import (
-    DoubleType,
-    LongType,
-    StringType,
-    StructField,
-    StructType,
-)
-
-RUNNING_TOTALS_SCHEMA = StructType(
-    [
-        StructField("user_id", LongType()),
-        StructField("n_events", LongType()),
-        StructField("sum_value", DoubleType()),
-        StructField("last_event_type", StringType()),
-    ]
-)
-
-_STATE_SCHEMA = "n_events BIGINT, sum_value DOUBLE, last_ts_micros BIGINT, last_event_type STRING"
-
-
-def _update_user_totals(
-    key: tuple[Any, ...], pdfs: Iterator[pd.DataFrame], state: GroupState
-) -> Iterator[pd.DataFrame]:
-    (user_id,) = key
-    if state.exists:
-        n, total, last_ts, last_type = state.get
-    else:
-        n, total, last_ts, last_type = 0, 0.0, -1, None
-    for pdf in pdfs:
-        n += len(pdf)
-        total += float(pdf["value"].sum())
-        # track the latest event by event time (not arrival order)
-        ts_micros = (pdf["ts"].astype("int64") // 1000).astype("int64")
-        idx = int(ts_micros.idxmax())
-        if int(ts_micros.loc[idx]) > last_ts:
-            last_ts = int(ts_micros.loc[idx])
-            last_type = str(pdf["event_type"].loc[idx])
-    state.update((n, round(total, 6), last_ts, last_type))
-    yield pd.DataFrame(
-        {
-            "user_id": [user_id],
-            "n_events": [n],
-            "sum_value": [round(total, 6)],
-            "last_event_type": [last_type],
-        }
-    )
-
+from pyspark.sql.types import LongType, StringType, StructField, StructType
 
 EXACT_TOTALS_SCHEMA = StructType(
     [
@@ -88,8 +44,8 @@ _EXACT_STATE_SCHEMA = (
 def _update_user_totals_exact(
     key: tuple[Any, ...], pdfs: Iterator[pd.DataFrame], state: GroupState
 ) -> Iterator[pd.DataFrame]:
-    """Integer-exact twin of _update_user_totals, built to sit behind a
-    full DuckDB oracle: values accumulate as exact integer CENTS (Python
+    """Per-user running totals, built to sit behind a full DuckDB
+    oracle: values accumulate as exact integer CENTS (Python
     int — order-independent), and "latest" is the total order
     (ts, event_id) so ties cannot make the answer batch-slicing-
     dependent. State totals are therefore identical for EVERY micro-batch
@@ -126,8 +82,11 @@ def _update_user_totals_exact(
 
 
 def running_user_totals_exact(events_stream: DataFrame) -> DataFrame:
-    """Oracle-checkable form of running_user_totals (same raw-nanos input
-    contract)."""
+    """Streaming: cumulative per-user totals, updated every micro-batch.
+
+    Expects the RAW events schema (ts as int64 NANOS — sources.tables
+    load_events_stream(raw_ns=True)) so the pandas-side arithmetic is
+    dtype-unambiguous."""
     return events_stream.groupBy("user_id").applyInPandasWithState(
         _update_user_totals_exact,
         outputStructType=EXACT_TOTALS_SCHEMA,
@@ -137,26 +96,3 @@ def running_user_totals_exact(events_stream: DataFrame) -> DataFrame:
     )
 
 
-def use_rocksdb_state_store(spark) -> None:
-    """Switch stateful streaming to the RocksDB state-store provider:
-    state spills to local disk instead of living on the JVM heap — the
-    100 TB requirement for keyed state (dedup horizons, session windows,
-    applyInPandasWithState) whose key space exceeds executor memory."""
-    spark.conf.set(
-        "spark.sql.streaming.stateStore.providerClass",
-        "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider",
-    )
-
-
-def running_user_totals(events_stream: DataFrame) -> DataFrame:
-    """Streaming: cumulative per-user totals, updated every micro-batch.
-
-    Expects the RAW events schema (ts as int64 NANOS — sources.tables load_events_stream(raw_ns=True) / the legacy nanosAsLong
-    parquet read) so the pandas-side arithmetic is dtype-unambiguous."""
-    return events_stream.groupBy("user_id").applyInPandasWithState(
-        _update_user_totals,
-        outputStructType=RUNNING_TOTALS_SCHEMA,
-        stateStructType=_STATE_SCHEMA,
-        outputMode="update",
-        timeoutConf=GroupStateTimeout.NoTimeout,
-    )

@@ -20,16 +20,15 @@ built-in session_window (state merges adjacent sessions).
 
 from __future__ import annotations
 
-from pyspark.sql import Column, DataFrame
+from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 
-def _win_start_epoch(win: Column) -> Column:
-    return F.unix_timestamp(win["start"]).alias("bucket_start")
-
-
 def tumbling_counts(events: DataFrame, width: str = "1 hour") -> DataFrame:
-    """Per event_type tumbling-window counts + exact value sums."""
+    """Per event_type tumbling-window counts + exact value sums. On a
+    stream, call it on `events.withWatermark("ts", ...)`: the watermark
+    bounds state and drops events older than it (the event-time upgrade
+    of the reference's LWW late-data policy)."""
     return (
         events.groupBy(F.window("ts", width).alias("w"), "event_type")
         .agg(
@@ -85,26 +84,3 @@ def dedup_events(events: DataFrame) -> DataFrame:
     return keyed.dropDuplicates(["user_id", "event_type", "day"])
 
 
-def streaming_tumbling_counts(
-    events_stream: DataFrame, width: str = "1 hour", watermark: str = "2 hours"
-) -> DataFrame:
-    """The streaming form of tumbling_counts: watermark bounds state and
-    defines the late-data policy (events older than the watermark are
-    dropped — the event-time upgrade of the reference's LWW policy)."""
-    return (
-        events_stream.withWatermark("ts", watermark)
-        .groupBy(F.window("ts", width).alias("w"), "event_type")
-        .agg(
-            F.count("*").alias("n_events"),
-            F.sum(F.col("value").cast("decimal(18,2)")).alias("sum_value"),
-        )
-        .select(
-            F.unix_timestamp(F.col("w.start")).alias("bucket_start"),
-            "event_type",
-            "n_events",
-            # final projection: exact decimal -> double (DecimalType in a
-            # registry result breaks the driver's pandas canon; see
-            # functions.core.money_out)
-            F.col("sum_value").cast("double").alias("sum_value"),
-        )
-    )

@@ -1,31 +1,10 @@
-"""Table maintenance (small-files compaction) and schema evolution
-(mergeSchema reads) — the lake-operations gaps between a streaming
-ingest and a scannable table. Plus physical-plan audits for the
-session's new operators."""
+"""Schema evolution (mergeSchema reads) — a lake-operations gap between
+a streaming ingest and a scannable table. Plus physical-plan audits for
+the session's new operators."""
 
 from __future__ import annotations
 
-from pyspark.sql import functions as F
-
 from movie_data_transformer_spark.plans.audit import audit_plan
-from movie_data_transformer_spark.sinks.table import compact_small_files
-from movie_data_transformer_spark.sources.tables import load_table
-
-
-def test_compaction_reduces_file_count_preserves_rows(spark, sf_dir, tmp_path):
-    o = load_table(spark, sf_dir, "orders")
-    path = str(tmp_path / "orders_small")
-    o.repartition(64).write.parquet(path)  # simulate micro-batch litter
-    want = o.count()
-    checksum = o.agg(F.sum("o_orderkey")).first()[0]
-
-    n_before, n_after = compact_small_files(spark, path, target_file_bytes=1 << 30)
-    assert n_before == 64
-    assert n_after == 1  # tiny table packs into a single target file
-
-    back = spark.read.parquet(path)
-    assert back.count() == want
-    assert back.agg(F.sum("o_orderkey")).first()[0] == checksum
 
 
 def test_merge_schema_read_unions_evolved_schemas(spark, tmp_path):

@@ -6,10 +6,14 @@ from pyspark.sql import functions as F
 
 from movie_data_transformer_spark.operators.dedup import (
     augmented_corpus,
+    band_table,
+    doc_shingle_sets,
     doc_shingles,
     exact_dedup,
-    jaccard_verify,
+    incremental_minhash_pairs_from_index,
+    jaccard_verify_arrays,
     minhash_dedup_pairs,
+    minhash_signatures_from_arrays,
     simhash_fingerprints,
 )
 from movie_data_transformer_spark.sources.tables import load_table
@@ -17,6 +21,17 @@ from movie_data_transformer_spark.sources.tables import load_table
 
 def _corpus(spark, sf_dir):
     return augmented_corpus(load_table(spark, sf_dir, "documents"))
+
+
+def _incremental_pairs(state_docs, new_docs):
+    """Batch-form incremental dedup on the path the registry entry and
+    the streaming dedup run: the state's shingle index and band rows,
+    then incremental_minhash_pairs_from_index."""
+    state_sets = doc_shingle_sets(state_docs, n=3)
+    state_bands = band_table(minhash_signatures_from_arrays(state_sets))
+    return incremental_minhash_pairs_from_index(
+        state_sets, state_bands, doc_shingle_sets(new_docs, n=3), threshold=0.3
+    )
 
 
 def test_exact_dedup_finds_planted_copies(spark, sf_dir):
@@ -37,9 +52,10 @@ def test_minhash_lsh_recall_vs_exact_jaccard(spark, sf_dir):
     planted = spark.createDataFrame(
         [(i, i + 100000) for i in range(50)], "doc_a long, doc_b long"
     )
-    sh = doc_shingles(corpus, n=3)
+    sets = doc_shingle_sets(corpus, n=3)
     truth = {
-        (r.doc_a, r.doc_b) for r in jaccard_verify(planted, sh, 0.3).collect()
+        (r.doc_a, r.doc_b)
+        for r in jaccard_verify_arrays(planted, sets, 0.3).collect()
     }
     assert len(truth) > 20  # the fixture actually planted detectable pairs
     recall = len(found & truth) / len(truth)
@@ -67,9 +83,9 @@ def test_lsh_candidates_single_shuffle_and_bucket_cap(spark, sf_dir):
         lsh_candidate_pairs,
         minhash_signatures_from_arrays,
         normalize_text,
-        portable_hash,
         word_shingles,
     )
+    from movie_data_transformer_spark.operators.text import portable_hash
 
     docs = _corpus(spark, sf_dir)
     sets = docs.select(
@@ -206,7 +222,6 @@ def test_incremental_minhash_links_batch_without_state_pairs(spark, sf_dir):
     links to its state original at jaccard 1.0, and the output NEVER
     contains a state x state pair (the whole point of the incremental
     path — state docs were already deduped in earlier ingests)."""
-    from movie_data_transformer_spark.operators.dedup import incremental_minhash_pairs
     from movie_data_transformer_spark.sources.tables import load_table
 
     corpus = _corpus(spark, sf_dir)
@@ -214,7 +229,7 @@ def test_incremental_minhash_links_batch_without_state_pairs(spark, sf_dir):
     batch = corpus.filter(F.col("doc_id") >= 100000)
     got = {
         (r.doc_a, r.doc_b): r.jaccard
-        for r in incremental_minhash_pairs(state, batch, n=3, threshold=0.3).collect()
+        for r in _incremental_pairs(state, batch).collect()
     }
     assert got, "no pairs found"
     # no state x state pair ever
@@ -232,7 +247,6 @@ def test_streaming_incremental_dedup_matches_batch_any_slicing(spark, sf_dir):
     micro-batch of its later-ingested doc, so slicing must not matter."""
     import tempfile
 
-    from movie_data_transformer_spark.operators.dedup import incremental_minhash_pairs
     from movie_data_transformer_spark.streaming.dedup_stream import (
         run_streaming_incremental_dedup,
     )
@@ -245,7 +259,7 @@ def test_streaming_incremental_dedup_matches_batch_any_slicing(spark, sf_dir):
     batch = corpus.filter(F.col("doc_id") >= 100000)
     want = {
         (r.doc_a, r.doc_b, r.jaccard)
-        for r in incremental_minhash_pairs(seed, batch, n=3, threshold=0.3).collect()
+        for r in _incremental_pairs(seed, batch).collect()
     }
     src = _ingest_jsonl_dir(spark, sf_dir)
     work = tempfile.mkdtemp(prefix="mdt_dedup_stream_test_")
@@ -425,7 +439,6 @@ def test_streaming_dedup_restart_processes_only_new_files(spark, sf_dir):
     import shutil
     import tempfile
 
-    from movie_data_transformer_spark.operators.dedup import incremental_minhash_pairs
     from movie_data_transformer_spark.streaming.dedup_stream import (
         run_streaming_incremental_dedup,
     )
@@ -438,7 +451,7 @@ def test_streaming_dedup_restart_processes_only_new_files(spark, sf_dir):
     batch = corpus.filter(F.col("doc_id") >= 100000)
     want = {
         (r.doc_a, r.doc_b, r.jaccard)
-        for r in incremental_minhash_pairs(seed, batch, n=3, threshold=0.3).collect()
+        for r in _incremental_pairs(seed, batch).collect()
     }
 
     fixture = _ingest_jsonl_dir(spark, sf_dir)
@@ -481,7 +494,6 @@ def test_streaming_dedup_compaction_bounds_file_count(spark, sf_dir):
     import os
     import tempfile
 
-    from movie_data_transformer_spark.operators.dedup import incremental_minhash_pairs
     from movie_data_transformer_spark.operators.layout_queries import (
         small_files_inventory,
     )
@@ -498,7 +510,7 @@ def test_streaming_dedup_compaction_bounds_file_count(spark, sf_dir):
     batch = corpus.filter(F.col("doc_id") >= 100000)
     want = {
         (r.doc_a, r.doc_b, r.jaccard)
-        for r in incremental_minhash_pairs(seed, batch, n=3, threshold=0.3).collect()
+        for r in _incremental_pairs(seed, batch).collect()
     }
     src = _ingest_jsonl_dir(spark, sf_dir)
     n_files = len([f for f in os.listdir(src) if f.endswith(".json")])

@@ -6,7 +6,6 @@ from __future__ import annotations
 from movie_data_transformer_spark.operators.merge import merge_flat
 from movie_data_transformer_spark.operators.movie_pipeline import (
     dedup_latest,
-    dedup_latest_maxby,
     explode_watched,
     group_watched,
     kv_serialize,
@@ -35,7 +34,6 @@ def test_pipeline_on_empty_input(spark):
 
 def test_dedup_variants_on_empty(spark):
     assert dedup_latest(_empty_flat(spark)).count() == 0
-    assert dedup_latest_maxby(_empty_flat(spark)).count() == 0
 
 
 def test_merge_empty_sides(spark):

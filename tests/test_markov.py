@@ -1,7 +1,8 @@
-"""Markov-typicality invariants: the internal matrix (shared algebra
-with behavior_queries' events_transition_matrix) conserves transition
-mass and is row-stochastic in micro units; typicality is bounded and
-covers exactly the multi-event users."""
+"""Markov-typicality invariants: the matrix the typicality entry
+broadcasts (shared algebra with behavior_queries'
+events_transition_matrix) conserves transition mass and is
+row-stochastic in micro units; typicality is bounded and covers exactly
+the multi-event users."""
 
 from __future__ import annotations
 
@@ -10,14 +11,15 @@ from collections import defaultdict
 from pyspark.sql import functions as F
 
 from movie_data_transformer_spark.operators.markov_queries import (
-    _matrix,
+    _transition_matrix,
+    _user_transitions,
     q_events_markov_user_typicality,
 )
 from movie_data_transformer_spark.sources.tables import load_table
 
 
 def test_matrix_conserves_mass_and_rows_stochastic(spark, sf_dir):
-    rows = _matrix(spark, sf_dir).collect()
+    rows = _transition_matrix(_user_transitions(spark, sf_dir)).collect()
     ev = load_table(spark, sf_dir, "events")
     n_events = ev.count()
     n_users = ev.select("user_id").distinct().count()
@@ -37,7 +39,7 @@ def test_matrix_conserves_mass_and_rows_stochastic(spark, sf_dir):
 
 
 def test_matrix_matches_registered_transition_matrix(spark, sf_dir):
-    """The typicality module's internal matrix and the REGISTERED
+    """The matrix the typicality entry broadcasts and the REGISTERED
     events_transition_matrix (behavior_queries) are the same algebra —
     pin it so they can never drift silently (the duplicate entry was
     removed; this equivalence is what justified removing it)."""
@@ -47,7 +49,7 @@ def test_matrix_matches_registered_transition_matrix(spark, sf_dir):
 
     mine = {
         (r.from_type, r.to_type): (r.n_transitions, r.p_micro)
-        for r in _matrix(spark, sf_dir).collect()
+        for r in _transition_matrix(_user_transitions(spark, sf_dir)).collect()
     }
     theirs = {
         (r.prev_type, r.next_type): (r.n, round(r.share * 1_000_000))

@@ -4,27 +4,8 @@ from __future__ import annotations
 
 from pyspark.sql import functions as F
 
-from movie_data_transformer_spark.functions.skew import salted_agg_count_sum, salted_join
-from movie_data_transformer_spark.sinks.table import write_partitioned_bucketed
+from movie_data_transformer_spark.functions.skew import salted_join
 from movie_data_transformer_spark.sources.tables import load_table
-
-
-def test_salted_agg_equals_plain_agg(spark, sf_dir):
-    o = load_table(spark, sf_dir, "orders")
-    got = {
-        r.o_orderstatus: (r.n_rows, r.sum_value)
-        for r in salted_agg_count_sum(o, "o_orderstatus", "o_totalprice").collect()
-    }
-    want = {
-        r.o_orderstatus: (r.n, r.s)
-        for r in o.groupBy("o_orderstatus")
-        .agg(
-            F.count("*").alias("n"),
-            F.sum(F.col("o_totalprice").cast("decimal(18,4)")).alias("s"),
-        )
-        .collect()
-    }
-    assert got == want
 
 
 def test_salted_join_equals_plain_join(spark, sf_dir):
@@ -66,41 +47,6 @@ def test_bucketed_state_join_skips_state_shuffle(spark, sf_dir, tmp_path):
     # exactly one exchange: the batch side; the bucketed state side reads
     # pre-partitioned
     assert plan.count("Exchange hashpartitioning") == 1, plan
-
-
-def test_partitioned_bucketed_prunes_and_skips_shuffle(spark, sf_dir, tmp_path):
-    """Combined layout (partition by year, bucket by custkey): a year
-    filter prunes partitions at planning time AND a custkey join reads
-    the state side pre-partitioned — both properties from ONE table."""
-    o = load_table(spark, sf_dir, "orders").withColumn(
-        "o_year", F.year(F.col("o_orderdate").cast("date"))
-    )
-    spark.sql("DROP TABLE IF EXISTS state_pb")
-    write_partitioned_bucketed(
-        o, "state_pb", str(tmp_path / "state_pb"), ["o_year"], "o_custkey", 8
-    )
-    state = spark.table("state_pb")
-    try:
-        # partition pruning: a one-year filter must plan with a partition
-        # filter and touch only that year's files
-        pruned = state.filter(F.col("o_year") == 1996)
-        plan = pruned._jdf.queryExecution().executedPlan().toString()
-        assert "PartitionFilters" in plan and "o_year" in plan
-        touched = pruned.select(F.input_file_name()).distinct().count()
-        total = state.select(F.input_file_name()).distinct().count()
-        assert touched < total, f"partition filter touched {touched}/{total} files"
-        assert pruned.count() == o.filter(F.col("o_year") == 1996).count()
-
-        # bucket-side shuffle elision: join on the bucket key shuffles
-        # ONLY the batch side
-        batch = load_table(spark, sf_dir, "customer")
-        spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
-        joined = state.join(batch, state.o_custkey == batch.c_custkey)
-        jplan = joined._jdf.queryExecution().executedPlan().toString()
-        assert jplan.count("Exchange hashpartitioning") == 1, jplan
-    finally:
-        spark.conf.set("spark.sql.autoBroadcastJoinThreshold", str(64 * 1024 * 1024))
-        spark.sql("DROP TABLE IF EXISTS state_pb")
 
 
 def test_hot_cold_join_plan_routes_hot_keys_broadcast(spark, sf_dir):

@@ -2,23 +2,43 @@
 
 from __future__ import annotations
 
+from pyspark.sql import Window
 from pyspark.sql import functions as F
 
 from movie_data_transformer_spark.sources.tables import load_events_stream, load_table
-from movie_data_transformer_spark.streaming.stateful import running_user_totals
+from movie_data_transformer_spark.streaming.stateful import running_user_totals_exact
+
+_PROVIDER_CONF = "spark.sql.streaming.stateStore.providerClass"
+_ROCKSDB = "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider"
+
+
+def _final_totals(spark, table):
+    """Last update-mode emission per user: n_events only grows, so the
+    row with the largest n_events is the final state."""
+    return {
+        r.user_id: (r.n_events, r.sum_value_cents, r.last_event_type)
+        for r in spark.table(table)
+        .groupBy("user_id")
+        .agg(
+            F.max_by(
+                F.struct("n_events", "sum_value_cents", "last_event_type"),
+                F.col("n_events"),
+            ).alias("s")
+        )
+        .select("user_id", "s.*")
+        .collect()
+    }
 
 
 def test_rocksdb_state_store_provider(spark, sf_dir, tmp_path):
     """The RocksDB provider handles the same stateful query (disk-backed
     state — the at-scale configuration)."""
-    from movie_data_transformer_spark.streaming.stateful import use_rocksdb_state_store
-
-    prev = spark.conf.get("spark.sql.streaming.stateStore.providerClass", None)
-    use_rocksdb_state_store(spark)
+    prev = spark.conf.get(_PROVIDER_CONF, None)
+    spark.conf.set(_PROVIDER_CONF, _ROCKSDB)
     try:
         stream = load_events_stream(spark, sf_dir, raw_ns=True)
         q = (
-            running_user_totals(stream)
+            running_user_totals_exact(stream)
             .writeStream.format("memory")
             .queryName("rocksdb_totals")
             .outputMode("update")
@@ -31,15 +51,15 @@ def test_rocksdb_state_store_provider(spark, sf_dir, tmp_path):
         assert n == load_table(spark, sf_dir, "events").select("user_id").distinct().count()
     finally:
         if prev:
-            spark.conf.set("spark.sql.streaming.stateStore.providerClass", prev)
+            spark.conf.set(_PROVIDER_CONF, prev)
         else:
-            spark.conf.unset("spark.sql.streaming.stateStore.providerClass")
+            spark.conf.unset(_PROVIDER_CONF)
 
 
 def test_running_user_totals_matches_batch(spark, sf_dir, tmp_path):
     stream = load_events_stream(spark, sf_dir, raw_ns=True, maxFilesPerTrigger="1")
     q = (
-        running_user_totals(stream)
+        running_user_totals_exact(stream)
         .writeStream.format("memory")
         .queryName("user_totals")
         .outputMode("update")
@@ -48,34 +68,30 @@ def test_running_user_totals_matches_batch(spark, sf_dir, tmp_path):
         .start()
     )
     q.awaitTermination()
-    # update mode emits one row per key per batch; last emission per key is
-    # the final state
-    got = {
-        r.user_id: (r.n_events, r.sum_value, r.last_event_type)
-        for r in spark.sql("select * from user_totals").collect()
-    }
+    got = _final_totals(spark, "user_totals")
     ev = load_table(spark, sf_dir, "events")
-    want_counts = {
-        r.user_id: (r.n, round(r.s, 6))
-        for r in ev.groupBy("user_id")
-        .agg(F.count("*").alias("n"), F.sum("value").alias("s"))
+    # round-half-up cents: CAST(... AS DECIMAL(18,2)) rounds HALF_UP
+    want_totals = {
+        r.user_id: (r.n, r.c)
+        for r in ev.selectExpr(
+            "user_id", "CAST(CAST(value AS DECIMAL(18,2)) * 100 AS BIGINT) AS cents"
+        )
+        .groupBy("user_id")
+        .agg(F.count("*").alias("n"), F.sum("cents").cast("bigint").alias("c"))
         .collect()
     }
-    assert set(got) == set(want_counts)
-    for uid, (n, s, last_type) in got.items():
-        wn, ws = want_counts[uid]
-        assert n == wn
-        assert abs(s - ws) < 1e-3
-        assert isinstance(last_type, str) and last_type
-    # last_event_type really is the event-time-latest event's type
+    assert set(got) == set(want_totals) and len(got) > 0
+    for uid, (n, cents, _last_type) in got.items():
+        assert (n, cents) == want_totals[uid]
+    # last_event_type is the type of the latest event under (ts, event_id)
     latest = {
         r.user_id: r.event_type
         for r in ev.withColumn(
             "rn",
             F.row_number().over(
-                __import__("pyspark.sql.window", fromlist=["Window"]).Window.partitionBy(
-                    "user_id"
-                ).orderBy(F.col("ts").desc(), F.col("event_id").desc())
+                Window.partitionBy("user_id").orderBy(
+                    F.col("ts").desc(), F.col("event_id").desc()
+                )
             ),
         )
         .filter("rn = 1")
@@ -90,8 +106,6 @@ def test_exact_totals_invariant_under_micro_batch_slicing(spark, sf_dir, tmp_pat
     no matter how the input is sliced into micro-batches: split events
     into 3 files, stream them one file per trigger, and compare against
     the single-batch run of the same data."""
-    from pyspark.sql.functions import col
-
     from movie_data_transformer_spark.sources.tables import load_events_raw_ns
     from movie_data_transformer_spark.streaming.stateful import (
         running_user_totals_exact,
@@ -118,21 +132,7 @@ def test_exact_totals_invariant_under_micro_batch_slicing(spark, sf_dir, tmp_pat
             .start()
         )
         q.awaitTermination()
-        from pyspark.sql import functions as F
-
-        return {
-            r.user_id: (r.n_events, r.sum_value_cents, r.last_event_type)
-            for r in spark.table(name)
-            .groupBy("user_id")
-            .agg(
-                F.max_by(
-                    F.struct("n_events", "sum_value_cents", "last_event_type"),
-                    col("n_events"),
-                ).alias("s")
-            )
-            .select("user_id", "s.*")
-            .collect()
-        }
+        return _final_totals(spark, name)
 
     sliced, whole = run(1), run(3)
     assert sliced == whole and len(sliced) > 0
@@ -215,13 +215,8 @@ def test_statestore_reader_over_rocksdb_state(spark, sf_dir, tmp_path):
     """The offline state reader (format('statestore')) also decodes state
     committed by the RocksDB provider — the at-scale configuration a
     production debugger would actually hit."""
-    from movie_data_transformer_spark.streaming.stateful import (
-        running_user_totals_exact,
-        use_rocksdb_state_store,
-    )
-
-    prev = spark.conf.get("spark.sql.streaming.stateStore.providerClass", None)
-    use_rocksdb_state_store(spark)
+    prev = spark.conf.get(_PROVIDER_CONF, None)
+    spark.conf.set(_PROVIDER_CONF, _ROCKSDB)
     try:
         ckpt = str(tmp_path / "rdb_ckpt")
         stream = load_events_stream(spark, sf_dir, raw_ns=True, maxFilesPerTrigger="1")
@@ -241,9 +236,9 @@ def test_statestore_reader_over_rocksdb_state(spark, sf_dir, tmp_path):
         assert total == ev.count()
     finally:
         if prev:
-            spark.conf.set("spark.sql.streaming.stateStore.providerClass", prev)
+            spark.conf.set(_PROVIDER_CONF, prev)
         else:
-            spark.conf.unset("spark.sql.streaming.stateStore.providerClass")
+            spark.conf.unset(_PROVIDER_CONF)
 
 
 def test_statestore_reader_time_travel_by_batch(spark, sf_dir, tmp_path):

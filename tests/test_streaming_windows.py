@@ -3,16 +3,13 @@
 from __future__ import annotations
 
 from movie_data_transformer_spark.sources.tables import load_events_stream, load_table
-from movie_data_transformer_spark.streaming.windows import (
-    streaming_tumbling_counts,
-    tumbling_counts,
-)
+from movie_data_transformer_spark.streaming.windows import tumbling_counts
 
 
 def test_streaming_tumbling_equals_batch(spark, sf_dir, tmp_path):
     # version-robust streaming read (nanos parquet) — sources/tables.py
     stream = load_events_stream(spark, sf_dir)
-    agg = streaming_tumbling_counts(stream, "1 hour", watermark="2 hours")
+    agg = tumbling_counts(stream.withWatermark("ts", "2 hours"), "1 hour")
     q = (
         agg.writeStream.format("memory")
         .queryName("tumbling_test")

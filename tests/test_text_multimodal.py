@@ -62,34 +62,6 @@ def test_media_features_deterministic_histogram(spark):
     assert feats.n_bytes == 4
 
 
-def test_pandas_udf_token_count_equals_jvm(spark, sf_dir):
-    from pyspark.sql import functions as F
-
-    from movie_data_transformer_spark.operators.text import token_count_vectorized, tokens
-
-    docs = load_table(spark, sf_dir, "documents")
-    counter = token_count_vectorized()
-    both = docs.select(
-        "doc_id",
-        F.size(tokens(F.col("text"))).cast("long").alias("jvm_count"),
-        counter(F.col("text")).alias("py_count"),
-    )
-    assert both.filter("jvm_count != py_count").count() == 0
-
-
-def test_resize_plan_preserves_aspect(spark, sf_dir):
-    from movie_data_transformer_spark.operators.multimodal import resize_media, synthesize_media
-
-    media = synthesize_media(load_table(spark, sf_dir, "documents"))
-    out = resize_media(media, 224, 224).collect()
-    assert len(out) > 0
-    for r in out:
-        assert max(r.out_w, r.out_h) <= 224
-        # r.scale is rounded to 6dp while out_w used the exact value
-        assert abs(r.out_w - r.width * r.scale) <= 1.01 and abs(r.out_h - r.height * r.scale) <= 1.01
-        assert r.content is not None  # payload flowed through the decode gate
-
-
 def test_frame_sample_only_videos(spark, sf_dir):
     media = synthesize_media(load_table(spark, sf_dir, "documents"))
     frames = frame_sample(media, every_n=10)
