@@ -1,23 +1,25 @@
 """Benchmark harness: headline queries at $SPARK_GRAFT_SF_DIR (default
 /root/testdata/sf0.1) on local[$SPARK_GRAFT_CPUS].
 
-The FINAL stdout line is ONE SLIM JSON line:
+    python bench.py
+
+It waits for the host to settle (1-minute loadavg below 1.0 in two
+samples 15 s apart; SPARK_GRAFT_BENCH_NO_WAIT=1 judges one sample and
+does not wait), starts one Spark session, runs every HEADLINE entry once
+untimed to warm the JVM, then times each entry: one untimed warm run,
+the median of 3 timed runs (of 5 when the 3 spread by more than 25%),
+and one cold run with the cache cleared. The cache is cleared between
+entries. If the settle wait timed out, it waits once more and re-times
+the suite. Each query is fully executed through the noop sink (every
+column computed, no rows collected).
+
+It writes no file and prints two lines. First a "bench_detail" JSON
+line: per-entry spread, cold run and the list of extended entries. The
+LAST line is one slim JSON line, kept under _FINAL_LINE_BUDGET so it
+fits a 2000-char capture of the output's tail:
   {"metric": "...", "value": <total sec>, "unit": "sec",
    "queries": {"q": sec, ...}, "sf": <sf>, "loadavg_1m": {...},
-   "settled": bool, "passes": n}
-
-r11 VERDICT wrong #1: the driver records only a 2000-char stdout TAIL,
-and r11's single ~11KB line (slim fields + the self-adjudication
-payload) overflowed it — BENCH_r11.json recorded `parsed: null` and the
-round's measurement survives only in BENCH_REFERENCE.json. The slim
-final line is therefore budgeted to stay under _FINAL_LINE_BUDGET
-(pinned by tests/test_bench_settle.py with the real HEADLINE list); the
-self-adjudication payload (run_spread / extended_runs / retimed /
-reference_runs) moves to a SEPARATE earlier "bench_detail" stdout line
-AND a checked-in BENCH_DETAIL_r{N}.json.
-
-Each query is fully executed via the noop sink (computes every column,
-no result materialization cost, no driver collect)."""
+   "settled": bool, "passes": n}"""
 
 from __future__ import annotations
 
@@ -168,67 +170,58 @@ def _wait_for_idle() -> bool:
 #: dedup_incremental_minhash spreads ±35% across 3 warm runs even at
 #: idle, making median-of-3 round-over-round comparison weak.
 _SPREAD_EXTEND = 0.25
-#: r10 VERDICT advice #2: a query whose fresh timing exceeds the last
-#: recorded artifact's by this ratio is re-timed once more at the end
-#: of the suite (median-of-5) and BOTH numbers are stamped in the JSON,
-#: so a settled-but-ambient-inflated recording self-documents without a
-#: judge re-run. Capped so a globally-slow machine can't double runtime.
-#: r12 VERDICT next #2 tightened the trigger from 1.5x to 1.3x so the
-#: noisy sub-2s tail (where cold-JVM spread is ±10-20%) self-adjudicates
-#: more often.
-_RETIME_RATIO = 1.3
-_RETIME_MAX = 8
 
 
-def _time_query(spark, qs, name: str, sf_dir: str, base_runs: int = 3):
-    """Warm-up + `base_runs` timed warm runs of one headline query;
-    returns (median, spread) with spread = (max-min)/median. With
-    base_runs=3 the run count self-extends to 5 when the spread
-    exceeds _SPREAD_EXTEND (variance-heavy entries; r10 advice #3).
+def _execute(spark, qs, name: str, sf_dir: str) -> None:
+    qs[name](spark, sf_dir).write.format("noop").mode("overwrite").save()
+
+
+def _timed(spark, qs, name: str, sf_dir: str) -> float:
+    t0 = time.time()
+    _execute(spark, qs, name, sf_dir)
+    return time.time() - t0
+
+
+def _warm_jvm(spark, qs, sf_dir: str) -> None:
+    """Run every headline entry once, untimed, before the first timed
+    pass. Without it the first entries pay the JVM's class loading and
+    JIT warm-up: at sf0.1 on 4 vCPUs, movies_kv and movies_merge_upsert
+    measured 0.742 s and 0.894 s in-suite against 0.314 s and 0.360 s
+    re-timed at the end of the same run."""
+    for name in HEADLINE:
+        spark.catalog.clearCache()
+        _execute(spark, qs, name, sf_dir)
+
+
+def _time_query(spark, qs, name: str, sf_dir: str):
+    """One untimed warm run, then 3 timed warm runs of one headline
+    query, extended to 5 when their spread (max-min)/median exceeds
+    _SPREAD_EXTEND, then one cold run. Returns (median, spread, runs,
+    cold).
 
     clearCache isolates queries from EACH OTHER's persisted
     intermediates: several entries persist() multi-consumer tables and
-    nothing unpersists, so by slot ~40 the accumulated litter evicts
-    the late entries' own caches and the tail measures memory
-    pressure, not the plan (ppjoin measured 1.46s in isolation vs
-    3.9-4.8s at the end of a full run). Clearing only BETWEEN queries
-    keeps the within-query semantics identical to every earlier round:
-    the timed runs still reuse the warmup's caches via the
-    CacheManager's canonical-plan match."""
+    nothing unpersists, so without it the late entries measure the
+    early entries' cached blocks, not their own plans. The timed runs
+    still reuse the warm run's caches via the CacheManager's
+    canonical-plan match."""
     spark.catalog.clearCache()
-    df = qs[name](spark, sf_dir)
-    df.write.format("noop").mode("overwrite").save()  # warm (JIT/IO cache)
-    runs = []
-    for _ in range(base_runs):
-        t0 = time.time()
-        df2 = qs[name](spark, sf_dir)
-        df2.write.format("noop").mode("overwrite").save()
-        runs.append(time.time() - t0)
+    _execute(spark, qs, name, sf_dir)
+    runs = [_timed(spark, qs, name, sf_dir) for _ in range(3)]
 
     def _stats(rs):
         med = sorted(rs)[len(rs) // 2]
         return med, ((max(rs) - min(rs)) / med if med > 0 else 0.0)
 
     med, spread = _stats(runs)
-    if base_runs == 3 and spread > _SPREAD_EXTEND:
-        for _ in range(2):
-            t0 = time.time()
-            df2 = qs[name](spark, sf_dir)
-            df2.write.format("noop").mode("overwrite").save()
-            runs.append(time.time() - t0)
+    if spread > _SPREAD_EXTEND:
+        runs += [_timed(spark, qs, name, sf_dir) for _ in range(2)]
         med, spread = _stats(runs)
-    # r12 VERDICT next #2: the warm median cannot PRICE a persist() —
-    # the warmup run populates every persisted fork point and the timed
-    # runs reuse it via the CacheManager's canonical-plan match. One
-    # extra COLD run (cache cleared immediately before) is timed after
-    # the warm runs and reported per-entry in the DETAIL artifact only
-    # (additions-only: the slim line and the warm methodology are
-    # unchanged, so round-over-round comparability holds).
+    # the warm median cannot price a persist(): the warm run fills every
+    # persisted fork point and the timed runs reuse it. One cold run,
+    # cache cleared just before, prices it (reported in the detail line)
     spark.catalog.clearCache()
-    t0 = time.time()
-    df3 = qs[name](spark, sf_dir)
-    df3.write.format("noop").mode("overwrite").save()
-    cold = time.time() - t0
+    cold = _timed(spark, qs, name, sf_dir)
     return round(med, 3), round(spread, 2), len(runs), round(cold, 3)
 
 
@@ -252,118 +245,6 @@ def _run_suite(spark, qs, sf_dir: str):
     return timings, spreads, extended, colds
 
 
-def _unwrap_tail(tail: str):
-    """Extract the last parseable bench JSON run from a driver tail
-    string. Iterates every '{"metric"' occurrence from the LAST
-    backwards with raw_decode (r11 ADVICE low #1: a single rfind +
-    full-string json.loads gives up on trailing noise and can anchor on
-    a nested object whose first key happens to be "metric"), and only
-    accepts an object that actually carries a "queries" dict — so a
-    mid-JSON fragment of an embedded reference baseline (the r11
-    failure shape) never masquerades as the measurement."""
-    dec = json.JSONDecoder()
-    at = tail.rfind('{"metric"')
-    while at >= 0:
-        try:
-            obj, _ = dec.raw_decode(tail[at:])
-            if isinstance(obj, dict) and isinstance(obj.get("queries"), dict):
-                return obj
-        except ValueError:
-            pass
-        at = tail.rfind('{"metric"', 0, at)
-    return None
-
-
-def _latest_recorded(repo_dir: str, exclude_round: int | None = None):
-    """Newest PARSEABLE driver-recorded BENCH_r{N}.json, iterating
-    newest-first past unparseable artifacts (r11 VERDICT wrong #2: the
-    old single-candidate version returned (None, None) when the newest
-    file was unparseable — BENCH_r11 is permanently so in history —
-    silently disabling the >1.5x retime feature despite a perfectly
-    parseable BENCH_r10 sitting next to it). Rounds >= exclude_round
-    are skipped so a re-run after the driver has already written this
-    round's artifact cannot compare the run against itself (r11 ADVICE
-    low #4; pass the current round via SPARK_GRAFT_BENCH_ROUND).
-
-    The driver wraps bench's printed JSON line inside a "tail" string
-    field (alongside rc/cpus/progress noise), so when the top-level
-    object carries no "queries" the embedded line is unwrapped."""
-    import glob
-    import re
-
-    rounds: list[tuple[int, str]] = []
-    for p in glob.glob(os.path.join(repo_dir, "BENCH_r*.json")):
-        m = re.search(r"BENCH_r(\d+)\.json$", p)
-        if m and (exclude_round is None or int(m.group(1)) < exclude_round):
-            rounds.append((int(m.group(1)), p))
-    for n, path in sorted(rounds, reverse=True):
-        try:
-            with open(path) as f:
-                rec = json.load(f)
-        except (OSError, ValueError):
-            continue
-        if isinstance(rec.get("queries"), dict):
-            return rec, n
-        if isinstance(rec.get("tail"), str):
-            inner = _unwrap_tail(rec["tail"])
-            if inner is not None:
-                inner.setdefault("sf", rec.get("sf"))
-                return inner, n
-    return None, None
-
-
-def _reference_medians(reference_runs):
-    """Per-query medians across the checked-in BENCH_REFERENCE.json
-    runs — the last-resort retime baseline when NO BENCH_r{N}.json is
-    parseable (r11 VERDICT advice #2). Returns a synthetic prior record
-    shaped like a recorded artifact, or None."""
-    runs = (reference_runs or {}).get("runs") or []
-    per_q: dict[str, list[float]] = {}
-    sfs = set()
-    for run in runs:
-        sfs.add(run.get("sf"))
-        for q, t in (run.get("queries") or {}).items():
-            per_q.setdefault(q, []).append(t)
-    if not per_q or len(sfs) != 1:
-        return None
-    return {
-        "sf": next(iter(sfs)),
-        "queries": {q: sorted(ts)[len(ts) // 2] for q, ts in per_q.items()},
-    }
-
-
-def _reference_is_stale(reference_runs, sf: float, cur_round) -> bool:
-    """True when the checked-in BENCH_REFERENCE.json must not be used
-    as the adjudication baseline (r11 ADVICE low #3): any run recorded
-    at a different sf, or — when the caller knows the current round —
-    a reference regenerated neither this round nor last. Pure so the
-    policy is unit-testable."""
-    if not reference_runs:
-        return False
-    return any(
-        r.get("sf") != sf for r in reference_runs.get("runs", [])
-    ) or (
-        cur_round is not None
-        and reference_runs.get("round") not in (cur_round, cur_round - 1)
-    )
-
-
-def _select_retimes(
-    timings: dict[str, float], prior_queries: dict[str, float]
-) -> list[str]:
-    """Queries whose fresh median exceeds the prior recorded artifact's
-    by more than _RETIME_RATIO, worst-delta first (ties break on
-    ascending query name — r11 ADVICE low #2), capped at _RETIME_MAX.
-    Pure so the selection policy is unit-testable."""
-    over = []
-    for name, t in timings.items():
-        p = prior_queries.get(name)
-        if p and p > 0 and t / p > _RETIME_RATIO:
-            over.append((t / p, name))
-    over.sort(key=lambda x: (-x[0], x[1]))
-    return [n for _, n in over[:_RETIME_MAX]]
-
-
 #: hard budget for the FINAL stdout line — the driver captures a
 #: 2000-char tail, so the line (plus its newline) must fit with margin.
 #: BENCH_r10's line was 1,786 chars and parsed; r11's ~11KB did not.
@@ -374,8 +255,8 @@ def _slim_line(timings: dict[str, float], sf: float, load_before: float,
                load_after: float, settled: bool, passes: int) -> str:
     """The driver-facing measurement line, r10-shaped: metric / value /
     unit / queries / sf / loadavg_1m / settled / passes and NOTHING
-    else. Everything bulky lives in the bench_detail line + the
-    BENCH_DETAIL_r{N}.json file. Pure so the length budget is
+    else. Everything bulky lives in the bench_detail line. Pure so the
+    length budget is
     unit-testable against the real HEADLINE list."""
     return json.dumps(
         {
@@ -411,87 +292,22 @@ def main() -> None:
     spark.sparkContext.setLogLevel("ERROR")
     qs = spark_queries()
 
+    _warm_jvm(spark, qs, sf_dir)
     timings, spreads, extended, colds = _run_suite(spark, qs, sf_dir)
     passes = 1
-    # r08 VERDICT advice #2: the recorded artifact must BE settled, not
-    # merely labeled. If the settle-wait TIMED OUT (not merely a high
-    # sample — bench's own startup can bump loadavg), the competing work
-    # (typically a straggler validation sweep) has usually finished
-    # during the ~5-min pass — wait for idle again and re-run the suite
-    # once. The second pass re-times the SAME warm plans, so it is
-    # strictly more comparable, and bench's own loadavg tail decays
-    # e^-t/60s well inside the 15-min wait cap. One retry only: if the
-    # machine is still busy after ~35 min total, record the inflated
-    # pass with settled=false.
+    # If the settle-wait TIMED OUT (not merely a high sample — bench's
+    # own startup can bump loadavg), the competing work has usually
+    # finished during the ~5-min pass: wait for idle again and re-run
+    # the suite once. The second pass re-times the SAME warm plans, and
+    # bench's own loadavg tail decays e^-t/60s well inside the 15-min
+    # wait cap. One retry only: if the machine is still busy, record the
+    # inflated pass with settled=false.
     if not settled and not os.environ.get("SPARK_GRAFT_BENCH_NO_WAIT"):
         if _wait_for_idle():
             settled = True
             load_before = os.getloadavg()[0]
             timings, spreads, extended, colds = _run_suite(spark, qs, sf_dir)
             passes = 2
-
-    repo_dir = os.path.dirname(os.path.abspath(__file__))
-    # current round, when the caller knows it (the builder's in-session
-    # runs set it; the driver does not) — used to name the detail file
-    # and to exclude this round's own artifact from the prior-round
-    # comparison (r11 ADVICE low #4). Best-effort inference when unset:
-    # the driver writes BENCH_r{N}.json only AFTER bench completes, so
-    # max(recorded)+1 is the running round at driver-invocation time.
-    cur_round: int | None = None
-    env_round = os.environ.get("SPARK_GRAFT_BENCH_ROUND")
-    if env_round and env_round.isdigit():
-        cur_round = int(env_round)
-    # filename-only inference (the prior-glob exclusion stays strictly
-    # env-driven — inference cannot distinguish "driver already wrote
-    # this round's artifact" from "new round", exactly the self-compare
-    # trap the env var exists to close)
-    file_round = cur_round
-    if file_round is None:
-        import glob as _glob
-        import re as _re
-
-        recorded = [
-            int(m.group(1))
-            for p in _glob.glob(os.path.join(repo_dir, "BENCH_r*.json"))
-            if (m := _re.search(r"BENCH_r(\d+)\.json$", p))
-        ]
-        file_round = max(recorded) + 1 if recorded else None
-
-    # r10 VERDICT advice #2: self-adjudicate round-over-round outliers.
-    # Any query >1.5x its last recorded number is re-timed once more at
-    # the END of the suite (a different ambient moment, median-of-5) and
-    # both numbers are stamped — the primary `queries` value stays the
-    # honest suite measurement.
-    # r10 VERDICT wrong #1: the builder's in-session settled runs are
-    # checked in as BENCH_REFERENCE.json; they ride in the DETAIL
-    # artifact (not the slim line) and serve as the last-resort retime
-    # baseline when no BENCH_r{N}.json parses.
-    reference_runs = None
-    ref_path = os.path.join(repo_dir, "BENCH_REFERENCE.json")
-    if os.path.exists(ref_path):
-        try:
-            with open(ref_path) as f:
-                reference_runs = json.load(f)
-        except (OSError, ValueError):
-            reference_runs = None
-    # r11 ADVICE low #3: a stale or wrong-sf reference must not be
-    # stamped silently as the adjudication baseline.
-    reference_stale = _reference_is_stale(reference_runs, sf, cur_round)
-
-    prior, prior_round = _latest_recorded(repo_dir, exclude_round=cur_round)
-    if prior is None and reference_runs and not reference_stale:
-        prior, prior_round = _reference_medians(reference_runs), "reference"
-    retimed: dict[str, dict[str, float]] = {}
-    if prior and prior.get("sf") == sf:
-        for name in _select_retimes(timings, prior.get("queries", {})):
-            med5, _, _, _ = _time_query(spark, qs, name, sf_dir, base_runs=5)
-            retimed[name] = {
-                "suite": timings[name],
-                "isolated_median5": med5,
-                "prior": prior["queries"][name],
-            }
-    else:
-        prior_round = None
 
     slim = _slim_line(
         timings, sf, load_before, os.getloadavg()[0], settled, passes
@@ -502,41 +318,17 @@ def main() -> None:
         "sf": sf,
         "settled": settled,
         "passes": passes,
-        "round": file_round,
-        # per-query (max-min)/median across the warm runs used — makes
-        # ambient variance visible in the artifact (r10 advice #3)
+        # per-query (max-min)/median across the warm runs used
         "run_spread": spreads,
         # per-query single COLD run (cache cleared immediately before,
-        # timed after the warm runs) — prices every persist() honestly
-        # (r12 VERDICT next #2); detail-only, the slim line is unchanged
+        # timed after the warm runs): prices every persist()
         "cold": colds,
-        # entries whose 3-run spread exceeded 0.25 -> median-of-5
+        # entries whose 3-run spread exceeded _SPREAD_EXTEND -> median-of-5
         "extended_runs": extended,
-        # end-of-suite median-of-5 re-times of >1.5x round-over-round
-        # outliers vs BENCH_r{prior_round} (r10 advice #2)
-        "retimed": retimed,
-        # the prior artifact the outlier check compared against — always
-        # stamped when a parseable prior at this sf exists, so a dead
-        # fallback is visible even with zero outliers (r11 advice #2)
-        "retimed_vs_round": prior_round,
-        # builder's checked-in in-session settled runs, embedded
-        "reference_runs": reference_runs,
-        "reference_stale": reference_stale,
         "queries": timings,
     }
-    detail_name = (
-        f"BENCH_DETAIL_r{file_round:02d}.json" if file_round is not None
-        else "BENCH_DETAIL.json"
-    )
-    try:
-        with open(os.path.join(repo_dir, detail_name), "w") as f:
-            json.dump(detail, f, indent=1)
-            f.write("\n")
-    except OSError:
-        pass  # detail file is best-effort; the stdout lines still carry it
-
-    # detail FIRST, slim measurement line LAST: the driver's 2000-char
-    # stdout tail must end with the intact slim line (r11 wrong #1)
+    # detail FIRST, slim measurement line LAST: a 2000-char capture of
+    # the output's tail must end with the intact slim line
     print(json.dumps(detail))
     print(slim)
 

@@ -25,7 +25,7 @@ supersteps (cache-worthy on a real cluster).
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, SparkSession, Window
+from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from movie_data_transformer_spark.fixtures import RATINGS_ORACLE_CTE

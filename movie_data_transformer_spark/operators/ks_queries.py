@@ -29,7 +29,6 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
-from pyspark.sql.window import Window
 
 from movie_data_transformer_spark.operators.ordered_stats import attach_order_stats
 from movie_data_transformer_spark.sources.tables import load_table

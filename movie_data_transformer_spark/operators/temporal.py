@@ -18,7 +18,7 @@ AQE; candidate blowup is bounded by bucket occupancy, never n^2.
 
 from __future__ import annotations
 
-from pyspark.sql import Column, DataFrame, Window
+from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
 

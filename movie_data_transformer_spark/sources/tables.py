@@ -62,10 +62,6 @@ def load_events_raw_ns(spark: SparkSession, sf_dir: str) -> DataFrame:
     return df.withColumn("ts", F.unix_micros("ts") * F.lit(1000).cast("long"))
 
 
-def load_tables(spark: SparkSession, sf_dir: str, *names: str) -> dict[str, DataFrame]:
-    return {n: load_table(spark, sf_dir, n) for n in (names or TABLES)}
-
-
 def load_events_stream(
     spark: SparkSession, sf_dir: str, raw_ns: bool = False, **options: str
 ) -> DataFrame:

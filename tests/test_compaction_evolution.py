@@ -4,7 +4,7 @@ the session's new operators."""
 
 from __future__ import annotations
 
-from movie_data_transformer_spark.plans.audit import audit_plan
+from tests.plan_audit import audit_plan
 
 
 def test_merge_schema_read_unions_evolved_schemas(spark, tmp_path):

@@ -104,7 +104,7 @@ def test_dq_constraint_report_clean(spark, sf_dir):
     from movie_data_transformer_spark.operators.profile_queries import (
         q_dq_constraint_report,
     )
-    from movie_data_transformer_spark.plans.audit import audit_plan
+    from tests.plan_audit import audit_plan
 
     df = q_dq_constraint_report(spark, sf_dir)
     rows = {r.check_name: r for r in df.collect()}

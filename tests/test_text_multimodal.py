@@ -452,7 +452,7 @@ def test_c4_line_filters_single_shuffle(spark, sf_dir):
     from movie_data_transformer_spark.operators.text_cleaning_queries import (
         q_text_c4_line_filters,
     )
-    from movie_data_transformer_spark.plans.audit import audit_plan
+    from tests.plan_audit import audit_plan
 
     a = audit_plan(q_text_c4_line_filters(spark, sf_dir))
     assert a.n_exchanges == 1 and not a.has_cartesian

@@ -10,8 +10,8 @@ from movie_data_transformer_spark.operators.timeseries_queries import (
     q_events_value_mad_outliers,
     q_window_trailing_7d,
 )
-from movie_data_transformer_spark.plans.audit import audit_plan
 from movie_data_transformer_spark.sources.tables import load_table
+from tests.plan_audit import audit_plan
 
 
 def test_ewma_matches_python_fold(spark, sf_dir):

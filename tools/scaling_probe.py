@@ -6,15 +6,15 @@ the driver testdata is read-only and untouched) and times a
 scan/agg/join-shaped subset at two core counts so the shuffle/widen
 claims can show a ratio that moves.
 
-Results are merged into BENCH_DETAIL_r{N}.json as a `scaling_probe`
-block — DETAIL-artifact only, the bench harness contract (slim line,
-HEADLINE keys, methodology) is untouched.
+`run` prints the results as one JSON block on stdout and writes no file
+in the checkout; the bench harness (slim line, HEADLINE keys,
+methodology) is untouched.
 
 Usage:
   python tools/scaling_probe.py build   [repl]      # write /tmp tables
   python tools/scaling_probe.py time    [cpus]      # print one JSON line
-  python tools/scaling_probe.py run     [repl]      # build + time 32 & 8
-                                                    # + merge into DETAIL
+  python tools/scaling_probe.py run     [repl]      # build + time 32 & 8,
+                                                    # print the block
 
 Entry selection: aggregate/join-shaped only. Dedup/similarity entries
 are EXCLUDED by design: replicated documents are exact duplicates, so
@@ -151,24 +151,6 @@ def run(repl: int) -> None:
         "ratio_8c_over_32c": ratios,
     }
     print(json.dumps(block, indent=1))
-    repo = os.path.dirname(os.path.dirname(here))
-    import glob
-    import re
-
-    details = sorted(
-        (int(m.group(1)), p)
-        for p in glob.glob(os.path.join(repo, "BENCH_DETAIL_r*.json"))
-        if (m := re.search(r"BENCH_DETAIL_r(\d+)\.json$", p))
-    )
-    if details:
-        path = details[-1][1]
-        with open(path) as f:
-            detail = json.load(f)
-        detail["scaling_probe"] = block
-        with open(path, "w") as f:
-            json.dump(detail, f, indent=1)
-            f.write("\n")
-        print(f"merged scaling_probe into {path}")
 
 
 if __name__ == "__main__":
