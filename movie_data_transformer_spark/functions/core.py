@@ -93,18 +93,17 @@ def deterministic_avg(col: Column | str, scale: int = 4, alias: str | None = Non
     return out.alias(alias) if alias else out
 
 
-def top_k_per_group(
-    df: DataFrame, keys: list[str], order: list[Column], k: int, rank_col: str = "rk"
-) -> DataFrame:
-    """Top-k per group via row_number — one shuffle on the group keys.
+def top_k_per_group(df: DataFrame, keys: list[str], order: list[Column], k: int) -> DataFrame:
+    """Top-k per group via row_number (as column `rk`) — one shuffle on the
+    group keys.
     Callers must make `order` a total order (append a unique tiebreaker)
     or results are nondeterministic. At scale this beats a global sort:
     partial top-k runs map-side inside the window's sort, and only group
     partitions shuffle."""
     w = Window.partitionBy(*keys).orderBy(*order)
     return (
-        df.withColumn(rank_col, F.row_number().over(w))
-        .filter(F.col(rank_col) <= k)
+        df.withColumn("rk", F.row_number().over(w))
+        .filter(F.col("rk") <= k)
     )
 
 
@@ -113,13 +112,12 @@ def running_sum(
     keys: list[str],
     order: list[Column],
     value: Column,
-    alias: str = "running_sum",
 ) -> DataFrame:
-    """Cumulative sum with an explicit rows-frame (deterministic given a
-    total order)."""
+    """Cumulative sum as column `cum_spend`, with an explicit rows-frame
+    (deterministic given a total order)."""
     w = (
         Window.partitionBy(*keys)
         .orderBy(*order)
         .rowsBetween(Window.unboundedPreceding, Window.currentRow)
     )
-    return df.withColumn(alias, F.sum(value).over(w))
+    return df.withColumn("cum_spend", F.sum(value).over(w))

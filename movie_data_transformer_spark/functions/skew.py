@@ -11,16 +11,12 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 
-def salted_join(
-    big: DataFrame, small: DataFrame, key: str, n_salts: int = 16
-) -> DataFrame:
+def salted_join(big: DataFrame, small: DataFrame, key: str) -> DataFrame:
     """Skew-safe equi-join: the big (skewed) side gets a random-ish salt in
-    [0, n_salts); the small side is replicated n_salts times. The join key
-    becomes (key, salt), so one hot key spreads across n_salts partitions.
+    [0, 8); the small side is replicated 8 times. The join key becomes
+    (key, salt), so one hot key spreads across 8 partitions.
     Join RESULT is independent of salt values. Use when the small side is
     too big to broadcast and AQE's split isn't available."""
-    b = big.withColumn("_salt", F.pmod(F.hash(F.monotonically_increasing_id()), F.lit(n_salts)))
-    s = small.withColumn(
-        "_salt", F.explode(F.sequence(F.lit(0), F.lit(n_salts - 1)))
-    )
+    b = big.withColumn("_salt", F.pmod(F.hash(F.monotonically_increasing_id()), F.lit(8)))
+    s = small.withColumn("_salt", F.explode(F.sequence(F.lit(0), F.lit(7))))
     return b.join(s, [key, "_salt"]).drop("_salt")

@@ -77,18 +77,18 @@ WHERE abs(round((e.value - s.sv / s.n)
 """
 
 
-def pagerank(
-    edges: DataFrame,
-    damping: float = 0.85,
-    n_iter: int = 10,
-    src: str = "src",
-    dst: str = "dst",
-    weight: str = "weight",
-    checkpoint_every: int = 5,
-) -> DataFrame:
-    """Weighted PageRank by power iteration on a directed edge list.
-    Returns (node, pr). Dangling nodes (no out-edges) redistribute their
-    mass uniformly — the standard stochastic-matrix completion.
+PAGERANK_DAMPING = 0.85
+#: supersteps between lineage-truncating checkpoints; swept on
+#: graph_pagerank at sf0.1: 3 -> 3.11 s, 5 -> 2.22 s, 10 -> 2.64 s
+#: (OPTIMIZATION_r12.md)
+PAGERANK_CHECKPOINT_EVERY = 5
+
+
+def pagerank(edges: DataFrame, n_iter: int = 10) -> DataFrame:
+    """Weighted PageRank (damping PAGERANK_DAMPING) by power iteration on
+    a directed (src, dst, weight) edge list. Returns (node, pr). Dangling
+    nodes (no out-edges) redistribute their mass uniformly — the standard
+    stochastic-matrix completion.
 
     NO driver action inside the loop (round-3 VERDICT item 4), and ONE
     shuffle per superstep: zero-contribution rows for every node are
@@ -104,18 +104,18 @@ def pagerank(
     2x). FP drift vs the explicit dangling sum is ~1e-15/iteration, far
     under the 1e-6 NumPy pin in tests. Lineage is truncated by
     localCheckpoint every
-    `checkpoint_every` iterations (not every one): the plan grows
+    PAGERANK_CHECKPOINT_EVERY iterations (not every one): the plan grows
     LINEARLY in supersteps (each adds one join + one agg + one window),
     so a 5-superstep chain optimizes fine in one job and the job count
     drops from 2/superstep to 1/checkpoint — each checkpoint job is
     scheduling overhead on a small graph, so fewer, deeper jobs win
-    until plan-optimization time catches up (~10 supersteps). On a real
-    cluster swap localCheckpoint for a reliable checkpoint dir."""
+    until plan-optimization time catches up (see the constant's sweep).
+    On a real cluster swap localCheckpoint for a reliable checkpoint dir."""
     # materialize the input edge list ONCE: nodes / out-weights /
     # normalized edges all derive from it, and without this the upstream
     # lineage (e.g. the co-watch pair generation) would replay in each of
     # their checkpoint jobs
-    edges = edges.select(src, dst, weight).localCheckpoint()
+    edges = edges.select("src", "dst", "weight").localCheckpoint()
     n_edges = edges.count()
     # Size EVERY shuffle of this fixpoint computation by the data, not
     # the session default: the node skeleton, the normalized-edge
@@ -136,19 +136,19 @@ def pagerank(
     sess.conf.set("spark.sql.shuffle.partitions", str(n_parts))
     try:
         nodes = (
-            edges.select(F.col(src).alias("node"))
-            .union(edges.select(F.col(dst).alias("node")))
+            edges.select(F.col("src").alias("node"))
+            .union(edges.select(F.col("dst").alias("node")))
             .distinct()
             .localCheckpoint()  # reused every superstep (rank-table skeleton)
         )
         n = nodes.count()
-        outw = edges.groupBy(src).agg(F.sum(weight).alias("outw"))
+        outw = edges.groupBy("src").agg(F.sum("weight").alias("outw"))
         norm_edges = (
-            edges.join(outw, src)
+            edges.join(outw, "src")
             .select(
-                F.col(src).alias("e_src"),
-                F.col(dst).alias("e_dst"),
-                (F.col(weight) / F.col("outw")).alias("p"),
+                F.col("src").alias("e_src"),
+                F.col("dst").alias("e_dst"),
+                (F.col("weight") / F.col("outw")).alias("p"),
             )
             # hash-partition ON THE JOIN KEY before materializing: every
             # superstep joins ranks (already hash-partitioned by node from
@@ -167,8 +167,8 @@ def pagerank(
         # driver-side plan-construction cost flat (the Column form spent
         # more wall time BUILDING the 10-superstep plan over py4j than
         # executing it on the 5-node test graph).
-        teleport = f"CAST('{(1 - damping) / n!r}' AS DOUBLE)"
-        damp = f"CAST('{damping!r}' AS DOUBLE)"
+        teleport = f"CAST('{(1 - PAGERANK_DAMPING) / n!r}' AS DOUBLE)"
+        damp = f"CAST('{PAGERANK_DAMPING!r}' AS DOUBLE)"
         # r13 measured counter-example, kept on record: replacing this
         # window-over-() with a per-superstep 1-row broadcast crossJoin
         # (scalar agg off the same groupBy) DOUBLED the entry locally
@@ -191,7 +191,7 @@ def pagerank(
                 spread.unionByName(zero_rows).groupBy("node").agg(F.sum("c").alias("contrib"))
             )
             ranks = contribs.selectExpr("node", rank_expr)
-            if (i + 1) % checkpoint_every == 0 and (i + 1) < n_iter:
+            if (i + 1) % PAGERANK_CHECKPOINT_EVERY == 0 and (i + 1) < n_iter:
                 ranks = ranks.localCheckpoint()
         return ranks.localCheckpoint()
     finally:
@@ -211,7 +211,7 @@ def q_graph_pagerank(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.col("movie_b").alias("src"), F.col("movie_a").alias("dst"), F.col("n_co_watchers").alias("weight")
         )
     )
-    pr = pagerank(edges, damping=0.85, n_iter=10)
+    pr = pagerank(edges, n_iter=10)
     return pr.select(F.col("node").alias("movie_id"), F.round("pr", 6).alias("pr"))
 
 

@@ -39,13 +39,13 @@ _PAIRS_EXPR = (
 )
 
 
-def words_as_symbols(docs: DataFrame, text_col: str = "text") -> DataFrame:
+def words_as_symbols(docs: DataFrame) -> DataFrame:
     """(word, freq, s): distinct lowercase whitespace words with
     frequencies; s = ' c h a r s </w> ' (sentinel spaces maintained as
     the loop invariant)."""
     words = (
         docs.select(
-            F.explode(F.split(F.lower(F.trim(F.col(text_col))), r"\s+")).alias("word")
+            F.explode(F.split(F.lower(F.trim(F.col("text"))), r"\s+")).alias("word")
         )
         .filter(F.col("word") != "")
         .groupBy("word")

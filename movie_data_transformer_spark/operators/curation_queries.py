@@ -24,9 +24,9 @@ from movie_data_transformer_spark.sources.tables import load_table
 _HASH = PORTABLE_HASH_SQL  # single source: operators/text.py
 
 
-def hash_bucket(col, n: int = 100):
-    """Deterministic [0, n) bucket from the portable hash of a column."""
-    return portable_hash(col.cast("string")) % n
+def hash_bucket(col):
+    """Deterministic [0, 100) bucket from the portable hash of a column."""
+    return portable_hash(col.cast("string")) % 100
 
 
 def q_sample_hash_20pct(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -279,7 +279,7 @@ def q_pack_sequences(spark: SparkSession, sf_dir: str) -> DataFrame:
     from movie_data_transformer_spark.operators.text import chunk_documents, pack_sequences
 
     docs = load_table(spark, sf_dir, "documents")
-    return pack_sequences(chunk_documents(docs), budget=200, n_buckets=8)
+    return pack_sequences(chunk_documents(docs))
 
 
 def q_training_shards(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -347,6 +347,8 @@ def q_export_training_manifest(spark: SparkSession, sf_dir: str) -> DataFrame:
     import shutil
     import tempfile
 
+    from movie_data_transformer_spark.streaming.harness import register_cleanup_dir
+
     assign = q_training_shards(spark, sf_dir)
     docs = load_table(spark, sf_dir, "documents").select("doc_id", "text")
     export = assign.join(docs, "doc_id").selectExpr(
@@ -392,7 +394,7 @@ def q_export_training_manifest(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
         .withColumn("shard", F.col("shard").cast("bigint"))
     )
-    stable = tempfile.mkdtemp(prefix="mdt_export_manifest_")
+    stable = register_cleanup_dir(tempfile.mkdtemp(prefix="mdt_export_manifest_"))
     manifest.write.mode("overwrite").parquet(stable)
     shutil.rmtree(out, ignore_errors=True)
     return spark.read.parquet(stable)

@@ -109,11 +109,11 @@ corpus AS (
 """
 
 
-def exact_dedup(docs: DataFrame, text_col: str = "text") -> DataFrame:
+def exact_dedup(docs: DataFrame) -> DataFrame:
     """Exact duplicate groups by normalized-content digest: one row per
     distinct content, with the representative (min doc_id) and the count
     of copies. Hash-groupBy — no pairwise comparisons."""
-    digest = F.md5(normalize_text(F.col(text_col))).alias("digest")
+    digest = F.md5(normalize_text(F.col("text"))).alias("digest")
     return (
         docs.select("doc_id", digest)
         .groupBy("digest")
@@ -141,10 +141,10 @@ def word_shingles(text_col: Column, n: int = 3) -> Column:
     return F.array_distinct(acc)
 
 
-def doc_shingles(docs: DataFrame, text_col: str = "text", n: int = 3) -> DataFrame:
+def doc_shingles(docs: DataFrame, n: int = 3) -> DataFrame:
     """(doc_id, shingle) exploded pairs over normalized text."""
     return docs.select(
-        "doc_id", F.explode(word_shingles(normalize_text(F.col(text_col)), n)).alias("shingle")
+        "doc_id", F.explode(word_shingles(normalize_text(F.col("text")), n)).alias("shingle")
     )
 
 
@@ -257,15 +257,10 @@ def jaccard_verify_arrays(
     )
 
 
-def minhash_dedup_pairs(
-    docs: DataFrame,
-    text_col: str = "text",
-    n: int = 3,
-    threshold: float = 0.3,
-    max_bucket_size: int | None = None,
-) -> DataFrame:
-    """Full MinHash+LSH near-dup pipeline: shingle -> sign -> band ->
-    bucket-join candidates -> exact-Jaccard verify (array form).
+def minhash_dedup_pairs(docs: DataFrame, max_bucket_size: int | None = None) -> DataFrame:
+    """Full MinHash+LSH near-dup pipeline: word-trigram shingle -> sign ->
+    band -> bucket-join candidates -> exact-Jaccard verify (array form) at
+    Jaccard >= 0.3.
     max_bucket_size flows to lsh_candidate_pairs — the pathological-bucket
     escape hatch for scale runs (see its docstring).
 
@@ -275,7 +270,7 @@ def minhash_dedup_pairs(
     standard shape for corpus-dedup pipelines (shingling dominates)."""
     sets = (
         widen_for_compute(docs).select(
-            "doc_id", word_shingles(normalize_text(F.col(text_col)), n).alias("shingles")
+            "doc_id", word_shingles(normalize_text(F.col("text")), 3).alias("shingles")
         )
         # hash once per shingle, MATERIALIZED by the persist — the 32
         # signature projections then read cached values
@@ -285,12 +280,12 @@ def minhash_dedup_pairs(
     cands = lsh_candidate_pairs(
         minhash_signatures_from_arrays(sets), max_bucket_size=max_bucket_size
     )
-    return jaccard_verify_arrays(cands, sets.select("doc_id", "shingles"), threshold)
+    return jaccard_verify_arrays(cands, sets.select("doc_id", "shingles"), 0.3)
 
 
-def doc_shingle_sets(docs: DataFrame, text_col: str = "text", n: int = 3) -> DataFrame:
+def doc_shingle_sets(docs: DataFrame) -> DataFrame:
     """(doc_id, shingles, hvals) — the per-doc shingle-index row format:
-    distinct word n-grams plus their portable hashes, materialized once
+    distinct word trigrams plus their portable hashes, materialized once
     per doc. This is the table a corpus PERSISTS across ingests (the
     dedup index); signatures, band rows, and exact verification all
     derive from it with row-local work only."""
@@ -298,7 +293,7 @@ def doc_shingle_sets(docs: DataFrame, text_col: str = "text", n: int = 3) -> Dat
         widen_for_compute(docs)
         .select(
             "doc_id",
-            word_shingles(normalize_text(F.col(text_col)), n).alias("shingles"),
+            word_shingles(normalize_text(F.col("text")), 3).alias("shingles"),
         )
         .withColumn("hvals", F.expr(HVALS_EXPR))
     )
@@ -308,13 +303,12 @@ def incremental_minhash_pairs_from_index(
     stored_sets: DataFrame,
     stored_bands: DataFrame,
     new_sets: DataFrame,
-    threshold: float = 0.3,
     max_bucket_size: int | None = None,
     new_bands: DataFrame | None = None,
 ) -> DataFrame:
-    """Incremental corpus dedup: near-dup pairs linking a NEW ingest
-    batch to the existing corpus (and to itself) WITHOUT ever comparing
-    two existing docs. Every candidate pair has >= 1 new side by
+    """Incremental corpus dedup: near-dup pairs (Jaccard >= 0.3) linking
+    a NEW ingest batch to the existing corpus (and to itself) WITHOUT
+    ever comparing two existing docs. Every candidate pair has >= 1 new side by
     construction, so the result equals the full recompute
     (minhash_dedup_pairs over state+batch) filtered to pairs touching a
     new doc — bucket co-habitation is pairwise.
@@ -423,7 +417,7 @@ def incremental_minhash_pairs_from_index(
         F.broadcast(cand_ids), "doc_id", "left_semi"
     )
     all_sets = stored_needed.unionByName(new_sets.select("doc_id", "shingles"))
-    return jaccard_verify_arrays(cands, all_sets, threshold)
+    return jaccard_verify_arrays(cands, all_sets, 0.3)
 
 
 def _release_local_checkpoint(df: DataFrame) -> None:
@@ -443,9 +437,7 @@ def _release_local_checkpoint(df: DataFrame) -> None:
         pass
 
 
-def exact_substr_runs(
-    corpus: DataFrame, window: int = 15, max_hash_df: int = 100
-) -> DataFrame:
+def exact_substr_runs(corpus: DataFrame, window: int = 15) -> DataFrame:
     """Longest shared token RUN per duplicate-linked pair — the quantity
     the ExactSubstr paper actually removes (Lee et al. cut the shared
     substring itself, so its LENGTH is the decision variable;
@@ -462,8 +454,8 @@ def exact_substr_runs(
     FULL oracle.
 
     Scale: the position join fans out per repeated window (pos_a x pos_b
-    per hash within a pair); corpus-promiscuous window hashes are capped
-    by max_hash_df before the join (boilerplate n-grams — the same skew
+    per hash within a pair); window hashes found in more than 100
+    windows are dropped before the join (boilerplate n-grams — the skew
     guard as containment/contamination; dropped hashes can only shorten
     a reported run, conservative and mirrored in the oracle). The
     islands windows partition by (pair, diagonal) — granular keys, no
@@ -495,7 +487,7 @@ def exact_substr_runs(
     rare = (
         wins.groupBy("wh")
         .agg(F.count("*").alias("_df"))
-        .filter(F.col("_df") <= max_hash_df)
+        .filter(F.col("_df") <= 100)
         .select("wh")
     )
     wins = wins.join(rare, "wh", "left_semi")
@@ -535,7 +527,7 @@ def exact_substr_runs(
     )
 
 
-def connected_components(pairs: DataFrame, max_iter: int = 20) -> DataFrame:
+def connected_components(pairs: DataFrame) -> DataFrame:
     """Cluster the near-dup pair graph: (doc_id, cluster_root) where
     cluster_root is the MIN doc id in the doc's connected component —
     the step a corpus dedup needs after pair generation to pick ONE
@@ -551,7 +543,7 @@ def connected_components(pairs: DataFrame, max_iter: int = 20) -> DataFrame:
     cluster use a reliable checkpoint dir instead.
 
     Singleton docs (no pairs) are not emitted — callers union them back
-    as their own roots if needed. Raises if not converged in max_iter
+    as their own roots if needed. Raises if not converged in 20 rounds
     (never observed <6 rounds on the test corpora)."""
     sess = pairs.sparkSession
     sym = pairs.select(F.col("doc_a").alias("src"), F.col("doc_b").alias("dst")).unionAll(
@@ -583,7 +575,7 @@ def connected_components(pairs: DataFrame, max_iter: int = 20) -> DataFrame:
             .withColumn("label", F.col("doc_id"))
         )
         prev_ckpt: DataFrame | None = None
-        for _ in range(max_iter):
+        for _ in range(20):
             neighbor_min = (
                 edges.join(labels, edges.dst == labels.doc_id)
                 .groupBy("src")
@@ -605,7 +597,7 @@ def connected_components(pairs: DataFrame, max_iter: int = 20) -> DataFrame:
             changed = stepped.filter(F.col("label") != F.col("old_label")).count()
             # stepped (eager checkpoint) is materialized, so the previous
             # round's blocks are dead — release them instead of letting
-            # them pile up for max_iter rounds awaiting GC
+            # them pile up for the remaining rounds awaiting GC
             if prev_ckpt is not None:
                 _release_local_checkpoint(prev_ckpt)
             prev_ckpt = stepped
@@ -614,7 +606,7 @@ def connected_components(pairs: DataFrame, max_iter: int = 20) -> DataFrame:
                 return labels.select("doc_id", F.col("label").alias("cluster_root"))
     finally:
         sess.conf.set("spark.sql.shuffle.partitions", old_sp)
-    raise RuntimeError(f"connected_components did not converge in {max_iter} rounds")
+    raise RuntimeError("connected_components did not converge in 20 rounds")
 
 
 # SimHash parameters: 64-bit fingerprints banded as 4 x 16 bits. The
@@ -630,7 +622,7 @@ SIMHASH_BANDS = 4
 SIMHASH_BAND_BITS = 16
 
 
-def simhash_fingerprints(docs: DataFrame, text_col: str = "text") -> DataFrame:
+def simhash_fingerprints(docs: DataFrame) -> DataFrame:
     """SimHash: per bit position, sum +-1 votes of each distinct token's
     hash bit; the 64-bit fingerprint assembles the sign bits.
 
@@ -649,7 +641,7 @@ def simhash_fingerprints(docs: DataFrame, text_col: str = "text") -> DataFrame:
     (hi - 2^32 if bit63 else hi) * 2^32 + lo, which stays inside int64
     in every addition order (no ANSI overflow) and produces identical
     two's-complement bit patterns in Spark and DuckDB."""
-    t = F.array_distinct(tokens(normalize_text(F.col(text_col))))
+    t = F.array_distinct(tokens(normalize_text(F.col("text"))))
     # One selectExpr for the whole vote-fold (same py4j-construction
     # economics as minhash_signatures_from_arrays — the nested-lambda
     # Column form cost ~0.5s of driver-side plan building per query).
@@ -680,19 +672,14 @@ def simhash_fingerprints(docs: DataFrame, text_col: str = "text") -> DataFrame:
     )
 
 
-def simhash_near_pairs(
-    docs: DataFrame,
-    text_col: str = "text",
-    max_hamming: int = 3,
-    max_bucket_size: int | None = None,
-) -> DataFrame:
+def simhash_near_pairs(docs: DataFrame, max_bucket_size: int | None = None) -> DataFrame:
     """Near-dup pairs by SimHash: block on 16-bit bands (by pigeonhole, a
     pair within Hamming<=3 of 64 bits agrees on at least one of 4 bands),
     verify with bit_count(xor). Pass max_bucket_size at scale to drop
     pathological buckets (same escape hatch as lsh_candidate_pairs — a
     band bucket that large means the docs are near-identical; route them
     to exact_dedup, which is linear)."""
-    fps = simhash_fingerprints(docs, text_col)
+    fps = simhash_fingerprints(docs)
     # shiftright sign-extends (Java semantics) but & 0xFFFF keeps only the
     # low 16 bits of the shifted value, so bands extracted from the SIGNED
     # fingerprint are well-defined — and DuckDB's >> on negative BIGINT is
@@ -729,7 +716,7 @@ def simhash_near_pairs(
             "inline(flatten(transform(ds, (x, i) -> "
             "transform("
             f"filter(slice(ds, i + 2, size(ds)), "
-            f"y -> bit_count(x.simhash ^ y.simhash) <= {int(max_hamming)}), "
+            "y -> bit_count(x.simhash ^ y.simhash) <= 3), "
             "y -> named_struct('doc_a', x.doc_id, 'doc_b', y.doc_id, "
             "'hamming', CAST(bit_count(x.simhash ^ y.simhash) AS INT))))))"
         )
@@ -737,16 +724,14 @@ def simhash_near_pairs(
     )
 
 
-def ngram_jaccard_pairs(
-    docs: DataFrame, text_col: str = "text", n: int = 2, threshold: float = 0.5
-) -> DataFrame:
+def ngram_jaccard_pairs(docs: DataFrame, threshold: float = 0.5) -> DataFrame:
     """Word-bigram Jaccard within (lang, length-bucket) blocks — the
     classic blocked pairwise near-dup check (no LSH, exact within block)."""
     blocked = widen_for_compute(docs).select(
         "doc_id",
         F.col("lang"),
         (F.col("n_chars") / 100).cast("int").alias("len_bucket"),
-        F.explode(word_shingles(normalize_text(F.col(text_col)), n)).alias("shingle"),
+        F.explode(word_shingles(normalize_text(F.col("text")), 2)).alias("shingle"),
     )
     # consumed twice (both sides of the size join below) — doc-grain
     # counts, cheap to cache; each uncached reference re-tokenizes the
@@ -778,12 +763,15 @@ def ngram_jaccard_pairs(
     )
 
 
+#: shingles in more docs of a lang than this are dropped before a
+#: containment or PPJoin self-join
+MAX_SHINGLE_DF = 100
+
+
 def containment_pairs(
     docs: DataFrame,
-    text_col: str = "text",
-    n: int = 2,
     threshold: float = 0.5,
-    max_shingle_df: int = 100,
+    max_shingle_df: int = MAX_SHINGLE_DF,
 ) -> DataFrame:
     """Broder CONTAINMENT near-dup pairs: c = |A∩B| / min(|A|, |B|) over
     word-bigram shingle sets — the asymmetric complement of Jaccard that
@@ -803,7 +791,7 @@ def containment_pairs(
     shingled = widen_for_compute(docs).select(
         "doc_id",
         F.col("lang"),
-        F.explode(word_shingles(normalize_text(F.col(text_col)), n)).alias("shingle"),
+        F.explode(word_shingles(normalize_text(F.col("text")), 2)).alias("shingle"),
     )
     # consumed twice (both sides of the size join below) — the per-doc
     # counts are doc-grain and two columns, cheap to cache, and each
@@ -840,10 +828,10 @@ def containment_pairs(
     )
 
 
-def exact_substr_pairs(corpus: DataFrame, window: int = 15) -> DataFrame:
+def exact_substr_pairs(corpus: DataFrame) -> DataFrame:
     """ExactSubstr-style dedup (Lee et al., "Deduplicating Training Data
     Makes Language Models Better"): two documents are duplicate-linked if
-    they share ANY identical `window`-token run. Exact semantics (no
+    they share ANY identical 15-token run. Exact semantics (no
     sketching), made tractable the same way as the suffix-array original:
     only identical windows join, so the candidate space is |shared
     windows|, never |docs|^2.
@@ -859,13 +847,13 @@ def exact_substr_pairs(corpus: DataFrame, window: int = 15) -> DataFrame:
     # filter BEFORE building the sequence: sequence(1, n) with n < 1
     # would generate a DESCENDING sequence, not an empty one
     wins = (
-        widen_for_compute(corpus).filter(F.size(toks) >= window)
+        widen_for_compute(corpus).filter(F.size(toks) >= 15)
         .select(
             "doc_id",
             F.explode(
                 F.transform(
-                    F.sequence(F.lit(1), F.size(toks) - (window - 1)),
-                    lambda i: F.md5(F.concat_ws(" ", F.slice(toks, i, window))),
+                    F.sequence(F.lit(1), F.size(toks) - 14),
+                    lambda i: F.md5(F.concat_ws(" ", F.slice(toks, i, 15))),
                 )
             ).alias("wh"),
         )
@@ -892,17 +880,11 @@ def exact_substr_pairs(corpus: DataFrame, window: int = 15) -> DataFrame:
     return pairs.groupBy("doc_a", "doc_b").agg(F.count("*").alias("n_shared_windows"))
 
 
-def ppjoin_prefix_pairs(
-    docs: DataFrame,
-    n: int = 2,
-    threshold_num: int = 1,
-    threshold_den: int = 2,
-    max_shingle_df: int = 100,
-) -> DataFrame:
+def ppjoin_prefix_pairs(docs: DataFrame) -> DataFrame:
     """Prefix-filtering set-similarity join (the PPJoin candidate rule,
     Xiao et al. 2008 / Chaudhuri et al. 2006): LOSSLESS near-dup pairing
-    at threshold t = num/den, unlike the probabilistic MinHash/SimHash
-    candidate generators.
+    over word bigrams at Jaccard threshold t = 1/2, unlike the
+    probabilistic MinHash/SimHash candidate generators.
 
     Every doc's shingle set is sorted by a GLOBAL canonical order
     (ascending document frequency, ties by shingle string — rare tokens
@@ -917,7 +899,7 @@ def ppjoin_prefix_pairs(
     losslessness proof, checked by the driver.
 
     Set semantics: distinct word n-gram shingles, promiscuous shingles
-    (per-lang df > max_shingle_df) removed BEFORE sizing (so Jaccard is
+    (per-lang df > MAX_SHINGLE_DF) removed BEFORE sizing (so Jaccard is
     exact over the kept sets — cf. containment_pairs, which keeps raw
     sizes), pairs within a lang only.
 
@@ -928,7 +910,8 @@ def ppjoin_prefix_pairs(
     orders by rarity). The verify step joins candidate pairs (tiny)
     back to the set arrays — broadcast-sized after LSH-scale reduction.
     """
-    t_num, t_den = threshold_num, threshold_den
+    # t as an exact fraction, so the prefix and size bounds stay integer
+    t_num, t_den = 1, 2
     # sh is consumed twice (df pass + kept join) but deliberately NOT
     # persisted: the exploded shingle rows are the largest object in the
     # query and caching them alongside `sets` doubled the storage
@@ -939,10 +922,10 @@ def ppjoin_prefix_pairs(
     sh = widen_for_compute(docs).select(
         "doc_id",
         "lang",
-        F.explode(word_shingles(normalize_text(F.col("text")), n)).alias("shingle"),
+        F.explode(word_shingles(normalize_text(F.col("text")), 2)).alias("shingle"),
     )
     df_tab = sh.groupBy("lang", "shingle").agg(F.count("*").alias("df"))
-    kept = sh.join(df_tab.filter(F.col("df") <= max_shingle_df), ["lang", "shingle"])
+    kept = sh.join(df_tab.filter(F.col("df") <= MAX_SHINGLE_DF), ["lang", "shingle"])
     sets = (
         kept.groupBy("doc_id", "lang")
         .agg(F.array_sort(F.collect_list(F.struct("df", "shingle"))).alias("ordered"))

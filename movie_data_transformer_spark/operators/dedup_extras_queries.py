@@ -10,6 +10,7 @@ from pyspark.sql import functions as F
 
 from movie_data_transformer_spark.operators.dedup import (
     CORPUS_ORACLE_CTE,
+    MAX_SHINGLE_DF,
     augmented_corpus,
     containment_pairs,
     exact_substr_runs,
@@ -17,7 +18,6 @@ from movie_data_transformer_spark.operators.dedup import (
 )
 from movie_data_transformer_spark.sources.tables import load_table
 
-MAX_SHINGLE_DF = 100
 THRESHOLD = 0.5
 RUN_WINDOW = 15
 
@@ -28,7 +28,6 @@ def q_dedup_containment(spark: SparkSession, sf_dir: str) -> DataFrame:
     the shape containment exists for (see containment_pairs)."""
     return containment_pairs(
         augmented_corpus(load_table(spark, sf_dir, "documents")),
-        n=2,
         threshold=THRESHOLD,
         max_shingle_df=MAX_SHINGLE_DF,
     )
@@ -126,8 +125,6 @@ def q_dedup_degree_histogram(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     pairs = minhash_dedup_pairs(
         augmented_corpus(load_table(spark, sf_dir, "documents")),
-        n=3,
-        threshold=0.3,
         max_bucket_size=10_000,
     )
     deg = (
@@ -164,13 +161,7 @@ def q_dedup_ppjoin_prefix(spark: SparkSession, sf_dir: str) -> DataFrame:
     df-ascending prefix into the candidate join; the oracle is the
     un-filtered all-pairs inverted-list join — equality IS the proof the
     prefix filter is lossless (see dedup.ppjoin_prefix_pairs)."""
-    return ppjoin_prefix_pairs(
-        augmented_corpus(load_table(spark, sf_dir, "documents")),
-        n=2,
-        threshold_num=1,
-        threshold_den=2,
-        max_shingle_df=MAX_SHINGLE_DF,
-    )
+    return ppjoin_prefix_pairs(augmented_corpus(load_table(spark, sf_dir, "documents")))
 
 
 # The oracle deliberately does NOT prefix-filter: it joins the full kept

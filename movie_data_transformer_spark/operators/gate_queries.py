@@ -40,7 +40,7 @@ def q_pack_sequences_gate(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     docs = load_table(spark, sf_dir, "documents")
     chunks = chunk_documents(docs)
-    packed = pack_sequences(chunks, budget=200, n_buckets=8)
+    packed = pack_sequences(chunks)
     a = packed.agg(
         F.sum("n_tokens").alias("packed_tokens"), F.count("*").alias("packed_rows")
     )

@@ -91,9 +91,9 @@ def cowatch_user_edges(
     )
 
 
-def kcore_peel(edges: DataFrame, k: int = K_CORE, max_peels: int = MAX_PEELS) -> DataFrame:
-    """Surviving (customerId, core_degree) after the bounded k-core peel.
-    Early-exits when a round removes nothing (== the oracle's fixed
+def kcore_peel(edges: DataFrame, max_peels: int = MAX_PEELS) -> DataFrame:
+    """Surviving (customerId, core_degree) after the bounded K_CORE-core
+    peel. Early-exits when a round removes nothing (== the oracle's fixed
     max_peels rounds, since further rounds are no-ops).
 
     Peels on the ALIVE-NODE set, not the edge set: the edge table is
@@ -123,7 +123,7 @@ def kcore_peel(edges: DataFrame, k: int = K_CORE, max_peels: int = MAX_PEELS) ->
     n_alive = -1
     for _ in range(max_peels):
         deg = degrees(alive)
-        nxt = deg.filter(F.col("deg") >= k).select("node").localCheckpoint()
+        nxt = deg.filter(F.col("deg") >= K_CORE).select("node").localCheckpoint()
         n_nxt = nxt.count()
         if n_nxt == n_alive:  # monotone => equal count = fixpoint
             alive = nxt
@@ -199,9 +199,9 @@ GROUP BY customerId
 MAX_HOPS = 6
 
 
-def bfs_distances(edges: DataFrame, seeds: DataFrame, max_hops: int = MAX_HOPS) -> DataFrame:
+def bfs_distances(edges: DataFrame, seeds: DataFrame) -> DataFrame:
     """(customerId, dist) — unweighted shortest-path levels from the seed
-    set, bounded at max_hops (the oracle's unrolled depth). Frontier
+    set, bounded at MAX_HOPS (the oracle's unrolled depth). Frontier
     iteration keeps O(reached nodes) state per round (the kcore alive-set
     discipline): the edge table is materialized once; each round expands
     the FRONTIER only (not the whole reached set) through one semi-join +
@@ -210,7 +210,7 @@ def bfs_distances(edges: DataFrame, seeds: DataFrame, max_hops: int = MAX_HOPS) 
     both = edges.unionAll(edges.selectExpr("v AS u", "u AS v"))
     reached = seeds.selectExpr("node", "CAST(0 AS INT) AS dist").localCheckpoint()
     frontier = reached.select("node")
-    for hop in range(1, max_hops + 1):
+    for hop in range(1, MAX_HOPS + 1):
         nxt = (
             both.join(frontier.withColumnRenamed("node", "u"), "u", "left_semi")
             .select(F.col("v").alias("node"))

@@ -54,7 +54,7 @@ def concurrency_steps(sessions: DataFrame) -> DataFrame:
 
 def q_session_concurrency_steps(spark: SparkSession, sf_dir: str) -> DataFrame:
     ev = load_table(spark, sf_dir, "events")
-    s = sessionize(ev, key="user_id", ts_col="ts", gap_seconds=GAP_S, seq_col="event_id")
+    s = sessionize(ev, gap_seconds=GAP_S)
     sessions = s.groupBy("user_id", "session_idx").agg(
         F.min("ts_s").alias("session_start_s"),
         F.max("ts_s").alias("session_end_s"),
@@ -108,7 +108,7 @@ def q_session_top_paths(spark: SparkSession, sf_dir: str) -> DataFrame:
     the path string, so the top-k is deterministic. One shuffle to
     session grain, one to path counts, one top-k window."""
     ev = load_table(spark, sf_dir, "events")
-    s = sessionize(ev, key="user_id", ts_col="ts", gap_seconds=GAP_S, seq_col="event_id")
+    s = sessionize(ev, gap_seconds=GAP_S)
     paths = (
         s.groupBy("user_id", "session_idx")
         .agg(

@@ -175,7 +175,7 @@ def q_dedup_impact_report(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
         .selectExpr("'exact' AS method", "n_units", "tokens_saved")
     )
-    pairs = minhash_dedup_pairs(corpus, n=3, threshold=0.3, max_bucket_size=10_000)
+    pairs = minhash_dedup_pairs(corpus, max_bucket_size=10_000)
     near_docs = (
         pairs.selectExpr("doc_a AS doc_id")
         .unionAll(pairs.selectExpr("doc_b AS doc_id"))
@@ -555,9 +555,7 @@ def q_dedup_minhash_recall_report(spark: SparkSession, sf_dir: str) -> DataFrame
         .filter(F.col("jaccard") >= 0.3)
         .select("doc_a", "doc_b")
     )
-    found = minhash_dedup_pairs(
-        corpus, n=3, threshold=0.3, max_bucket_size=10_000
-    ).select("doc_a", "doc_b")
+    found = minhash_dedup_pairs(corpus, max_bucket_size=10_000).select("doc_a", "doc_b")
     t = truth.persist()
     n_true = t.count()
     n_found = found.count()
@@ -1257,8 +1255,6 @@ def q_dedup_jaccard_band_histogram(spark: SparkSession, sf_dir: str) -> DataFram
 
     pairs = minhash_dedup_pairs(
         augmented_corpus(load_table(spark, sf_dir, "documents")),
-        n=3,
-        threshold=0.3,
         max_bucket_size=10_000,
     )
     return (

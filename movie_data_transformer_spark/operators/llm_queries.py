@@ -145,7 +145,7 @@ FROM documents
 
 
 def q_text_top_terms(spark: SparkSession, sf_dir: str) -> DataFrame:
-    return top_terms(load_table(spark, sf_dir, "documents"), k=20)
+    return top_terms(load_table(spark, sf_dir, "documents"))
 
 
 SQL_TEXT_TOP_TERMS = r"""
@@ -308,9 +308,7 @@ def q_dedup_exact_substr(spark: SparkSession, sf_dir: str) -> DataFrame:
     """ExactSubstr dedup pairs: docs sharing any identical 15-token run
     (exact semantics — fully oracle-checked, unlike the sketch-based
     minhash/simhash variants)."""
-    return exact_substr_pairs(
-        augmented_corpus(load_table(spark, sf_dir, "documents")), window=15
-    )
+    return exact_substr_pairs(augmented_corpus(load_table(spark, sf_dir, "documents")))
 
 
 SQL_DEDUP_EXACT_SUBSTR = f"""
@@ -345,8 +343,6 @@ def q_dedup_minhash_lsh(spark: SparkSession, sf_dir: str) -> DataFrame:
     # pinned by the planted-mega-bucket test in tests/test_dedup.py.
     return minhash_dedup_pairs(
         augmented_corpus(load_table(spark, sf_dir, "documents")),
-        n=3,
-        threshold=0.3,
         max_bucket_size=5000,
     )
 
@@ -432,7 +428,7 @@ def _minhash_state_index_dir(spark: SparkSession, sf_dir: str) -> str:
         state = augmented_corpus(load_table(spark, sf_dir, "documents")).filter(
             F.col("doc_id") < 100000
         )
-        sets = doc_shingle_sets(state, n=3)
+        sets = doc_shingle_sets(state)
         sets.write.mode("overwrite").parquet(os.path.join(out, "sets"))
         stored_sets = spark.read.parquet(os.path.join(out, "sets"))
         band_table(minhash_signatures_from_arrays(stored_sets)).write.mode(
@@ -479,13 +475,12 @@ def q_dedup_incremental_minhash(spark: SparkSession, sf_dir: str) -> DataFrame:
     # unpersist both tables after consuming the returned DataFrame (or
     # swap persist() for localCheckpoint()), else cached batch tables
     # accumulate across ingests.
-    new_sets = doc_shingle_sets(batch, n=3).persist()
+    new_sets = doc_shingle_sets(batch).persist()
     new_bands = band_table(minhash_signatures_from_arrays(new_sets)).persist()
     return incremental_minhash_pairs_from_index(
         stored_sets,
         stored_bands,
         new_sets,
-        threshold=0.3,
         max_bucket_size=5000,
         new_bands=new_bands,
     )
@@ -500,9 +495,7 @@ WHERE doc_a >= 100000 OR doc_b >= 100000"""
 def q_dedup_clusters(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Duplicate-cluster representatives: connected components over the
     verified minhash near-dup pairs (min doc id per component)."""
-    pairs = minhash_dedup_pairs(
-        augmented_corpus(load_table(spark, sf_dir, "documents")), n=3, threshold=0.3
-    )
+    pairs = minhash_dedup_pairs(augmented_corpus(load_table(spark, sf_dir, "documents")))
     return connected_components(pairs)
 
 
@@ -535,7 +528,7 @@ def q_dedup_apply_filter(spark: SparkSession, sf_dir: str) -> DataFrame:
     |duplicate docs| rows (broadcastable or a semi-join shuffle on ids —
     never text), and the corpus pass is a single anti-join scan."""
     corpus = augmented_corpus(load_table(spark, sf_dir, "documents"))
-    pairs = minhash_dedup_pairs(corpus, n=3, threshold=0.3, max_bucket_size=5000)
+    pairs = minhash_dedup_pairs(corpus, max_bucket_size=5000)
     clusters = connected_components(pairs)
     drops = clusters.filter(F.col("doc_id") != F.col("cluster_root")).select("doc_id")
     return corpus.join(drops, "doc_id", "left_anti").select("doc_id", "lang", "n_chars")
@@ -606,7 +599,6 @@ def q_dedup_simhash_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     # is tested separately in tests/test_dedup.py.
     return simhash_near_pairs(
         augmented_corpus(load_table(spark, sf_dir, "documents")),
-        max_hamming=3,
         max_bucket_size=5000,
     )
 
@@ -634,7 +626,7 @@ FROM cand WHERE bit_count(xor(sh_a, sh_b)) <= 3
 
 def q_dedup_ngram_jaccard(spark: SparkSession, sf_dir: str) -> DataFrame:
     return ngram_jaccard_pairs(
-        augmented_corpus(load_table(spark, sf_dir, "documents")), n=2, threshold=0.5
+        augmented_corpus(load_table(spark, sf_dir, "documents")), threshold=0.5
     )
 
 
@@ -671,7 +663,7 @@ WHERE CAST(n_inter * 1000000 // (na.n + nb.n - n_inter) AS DOUBLE)
 
 def q_sim_brute_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     emb = load_table(spark, sf_dir, "embeddings")
-    return brute_force_topk(emb, emb.filter(F.col("vec_id") % 50 == 0), k=5)
+    return brute_force_topk(emb, emb.filter(F.col("vec_id") % 50 == 0))
 
 
 SQL_SIM_BRUTE_TOPK = """
@@ -694,18 +686,18 @@ def q_sim_brute_topk_np(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Same semantics as sim_brute_topk, BLAS-vectorized (mapInPandas) —
     checked against the identical SQL oracle."""
     emb = load_table(spark, sf_dir, "embeddings")
-    return brute_force_topk_np(emb, emb.filter(F.col("vec_id") % 50 == 0), k=5)
+    return brute_force_topk_np(emb, emb.filter(F.col("vec_id") % 50 == 0))
 
 
 def q_sim_lsh_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     """LSH-bucketed ANN (rows-only: approximate by construction; bucket
     mechanics + recall-vs-floor pinned in tests)."""
     emb = load_table(spark, sf_dir, "embeddings")
-    return lsh_bucket_topk(emb, emb.filter(F.col("vec_id") % 50 == 0), k=5, n_planes=4)
+    return lsh_bucket_topk(emb, emb.filter(F.col("vec_id") % 50 == 0))
 
 
 def q_sim_near_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
-    return cosine_near_pairs(load_table(spark, sf_dir, "embeddings"), threshold=0.35)
+    return cosine_near_pairs(load_table(spark, sf_dir, "embeddings"))
 
 
 SQL_SIM_NEAR_PAIRS = """
@@ -723,7 +715,7 @@ def q_sim_ivf_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Approximate ANN (IVF coarse-probe): rows-only check; recall vs the
     brute-force baseline is asserted in tests/test_similarity.py."""
     emb = load_table(spark, sf_dir, "embeddings")
-    return ivf_topk(emb, emb.filter(F.col("vec_id") % 50 == 0), k=5, nprobe=2)
+    return ivf_topk(emb, emb.filter(F.col("vec_id") % 50 == 0))
 
 
 def q_sim_pq_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -731,7 +723,7 @@ def q_sim_pq_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     scoring is approximate by construction). Code mechanics + recall vs
     brute force pinned in tests/test_similarity.py."""
     emb = load_table(spark, sf_dir, "embeddings")
-    return pq_topk(emb, emb.filter(F.col("vec_id") % 50 == 0), k=5)
+    return pq_topk(emb, emb.filter(F.col("vec_id") % 50 == 0))
 
 
 # --- multimodal --------------------------------------------------------------
@@ -834,7 +826,7 @@ def q_dedup_embedding_cosine(spark: SparkSession, sf_dir: str) -> DataFrame:
     joined = emb.join(docs, emb.vec_id == docs.doc_id).select(
         "vec_id", "embedding", "label", "lang"
     )
-    pairs = cosine_near_pairs(joined, threshold=0.35)
+    pairs = cosine_near_pairs(joined)
     return pairs.select("doc_a", "doc_b", "cos_sim")
 
 

@@ -75,7 +75,7 @@ def _features(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 def train_lr(
-    spark: SparkSession, sf_dir: str, iters: int = ITERS, lr: float = LEARN_RATE
+    spark: SparkSession, sf_dir: str, iters: int = ITERS
 ) -> tuple[list[float], float, list[float], float]:
     """Run full-batch GD; returns (weights, bias, loss_history, final_acc).
 
@@ -118,8 +118,8 @@ def train_lr(
             losses.append(r.loss / n)
             acc = r.acc
             for i in range(DIM):
-                w[i] -= lr * float(r[f"g{i}"]) / n
-            b -= lr * float(r.gb) / n
+                w[i] -= LEARN_RATE * float(r[f"g{i}"]) / n
+            b -= LEARN_RATE * float(r.gb) / n
         return w, b, losses, acc
     finally:
         spark.conf.set("spark.sql.shuffle.partitions", prev_width)

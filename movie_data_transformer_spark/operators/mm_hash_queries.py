@@ -81,9 +81,7 @@ MAX_HAMMING = 3  # pigeonhole: <=3 differing bits must agree on >=1 of 4 bands
 MAX_BUCKET = 1000
 
 
-def dhash_near_pairs(
-    fps: DataFrame, max_hamming: int = MAX_HAMMING, max_bucket_size: int | None = None
-) -> DataFrame:
+def dhash_near_pairs(fps: DataFrame) -> DataFrame:
     """(doc_a, doc_b, hamming) near-duplicate IMAGE pairs from dHash
     fingerprints: block on the four 16-bit bands of the 64-bit hash
     (pigeonhole guarantees recall at hamming <= 3), bucket-group into a
@@ -105,8 +103,7 @@ def dhash_near_pairs(
         .agg(F.collect_set(F.struct("doc_id", "hash_hi", "hash_lo")).alias("ds"))
         .filter(F.size("ds") >= 2)
     )
-    if max_bucket_size is not None:
-        buckets = buckets.filter(F.size("ds") <= max_bucket_size)
+    buckets = buckets.filter(F.size("ds") <= MAX_BUCKET)
     # hamming cut INSIDE the expansion lambda (the r13 simhash profile:
     # expand-then-filter materialized millions of doomed generator rows;
     # filtering before the struct transform emits survivors only —
@@ -118,7 +115,7 @@ def dhash_near_pairs(
             "transform("
             "filter(slice(ds, i + 2, size(ds)), "
             "y -> bit_count(x.hash_lo ^ y.hash_lo) "
-            f"+ bit_count(x.hash_hi ^ y.hash_hi) <= {int(max_hamming)}), "
+            f"+ bit_count(x.hash_hi ^ y.hash_hi) <= {MAX_HAMMING}), "
             "y -> named_struct('doc_a', x.doc_id, 'doc_b', y.doc_id, "
             "'hamming', CAST(bit_count(x.hash_lo ^ y.hash_lo) "
             "+ bit_count(x.hash_hi ^ y.hash_hi) AS INT))))))"
@@ -142,9 +139,7 @@ def q_mm_dhash_near_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     copies = synthesize_bmp_media(docs.filter(F.col("doc_id") < 50)).select(
         (F.col("doc_id") + 300000).alias("doc_id"), "content"
     )
-    return dhash_near_pairs(
-        dhash_rows(media.unionByName(copies)), max_bucket_size=MAX_BUCKET
-    )
+    return dhash_near_pairs(dhash_rows(media.unionByName(copies)))
 
 
 # shared oracle template: recompute each image's dHash from the BMP
@@ -236,7 +231,7 @@ def q_mm_image_dedup_pipeline(spark: SparkSession, sf_dir: str) -> DataFrame:
     # synthesize + decode, the most expensive stage of the pipeline;
     # the cached rows are five scalars per image
     fps = dhash_rows(media.unionByName(copies)).persist()
-    pairs = dhash_near_pairs(fps, max_bucket_size=MAX_BUCKET)
+    pairs = dhash_near_pairs(fps)
     dropped = pairs.select(F.col("doc_b").alias("doc_id")).distinct()
     kept_flag = fps.join(dropped, "doc_id", "left_anti")
     return (

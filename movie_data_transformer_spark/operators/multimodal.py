@@ -202,9 +202,9 @@ def _decode_with_external_codecs(content: bytes, fmt: str) -> bytes:
     raise NotImplementedError(f"no external codec route for format {fmt!r}")
 
 
-def extract_features(media: DataFrame, fake_decode: bool = True) -> DataFrame:
+def extract_features(media: DataFrame) -> DataFrame:
     """Arrow-batched feature extraction over binary payloads via
-    mapInPandas. The fake feature is a deterministic byte histogram folded
+    mapInPandas, on the fake decode. The fake feature is a deterministic byte histogram folded
     to FEATURE_DIM buckets — stands in for an image/audio embedding while
     exercising identical batch shapes.
 
@@ -218,7 +218,7 @@ def extract_features(media: DataFrame, fake_decode: bool = True) -> DataFrame:
         for pdf in batches:
             feats = []
             for content, fmt in zip(pdf["content"], pdf["format"]):
-                decoded = decode_media(content, fmt, fake=fake_decode)
+                decoded = decode_media(content, fmt, fake=True)
                 buckets = [0] * FEATURE_DIM
                 for byte in decoded:
                     buckets[byte % FEATURE_DIM] += 1
@@ -236,9 +236,10 @@ def extract_features(media: DataFrame, fake_decode: bool = True) -> DataFrame:
     return media.mapInPandas(_extract, schema=FEATURES_SCHEMA)
 
 
-def frame_sample(media: DataFrame, every_n: int = 10) -> DataFrame:
-    """Metadata-planned frame sampling for formats behind the codec stub
-    (the frame plan is real Spark arithmetic; pixels are not decoded).
+def frame_sample(media: DataFrame) -> DataFrame:
+    """Metadata-planned sampling of every 10th frame for formats behind
+    the codec stub (the frame plan is real Spark arithmetic; pixels are
+    not decoded).
     The REAL pixel-decoding form — one row per sampled frame with exact
     per-frame features — is mm_video_queries.q_mm_avi_frame_sample,
     built on avi_decode_frames below."""
@@ -246,7 +247,7 @@ def frame_sample(media: DataFrame, every_n: int = 10) -> DataFrame:
     n_frames = (F.col("n_bytes") / 100 + 1).cast("int")  # fake duration model
     return videos.select(
         "doc_id",
-        F.explode(F.sequence(F.lit(0), n_frames, F.lit(every_n))).alias("frame_idx"),
+        F.explode(F.sequence(F.lit(0), n_frames, F.lit(10))).alias("frame_idx"),
         "width",
         "height",
     )
@@ -654,9 +655,14 @@ def _gif_palette_rgb(idx):
     return idx % 256, (idx * 7) % 256, (idx * 13) % 256
 
 
-def _lzw_encode(indices: bytes, min_code_size: int = 8) -> bytes:
+#: the LZW min code size the synthetic GIFs declare (8-bit palette indices)
+GIF_LZW_MIN_CODE_SIZE = 8
+
+
+def _lzw_encode(indices: bytes) -> bytes:
     """GIF-variant LZW with variable code width (min+1 .. 12 bits,
     LSB-first packing), clear/EOI codes, dict reset at 4096."""
+    min_code_size = GIF_LZW_MIN_CODE_SIZE
     clear, eoi = 1 << min_code_size, (1 << min_code_size) + 1
     next_code, width = eoi + 1, min_code_size + 1
     table = {bytes([i]): i for i in range(1 << min_code_size)}
@@ -766,7 +772,7 @@ def synthesize_gif_media(docs: DataFrame) -> DataFrame:
                     + pal
                     + b"\x2c"
                     + struct_mod.pack("<HHHHB", 0, 0, w, h, 0)  # image descriptor
-                    + bytes([8])  # LZW min code size
+                    + bytes([GIF_LZW_MIN_CODE_SIZE])
                     + sub
                     + b"\x00\x3b"  # block terminator + trailer
                 )

@@ -13,16 +13,16 @@ broken PQ encode, mis-probed IVF lists) breaks the driver hash.
 
 Floors are deliberately loose, per-method: they gate against collapse,
 not parameter noise. The synthetic embeddings are near-uniform, so each
-method's recall sits near its mechanical floor (IVF ~ nprobe/ncells;
-LSH ~ the 2^-n_planes same-bucket fraction; PQ ~ what 8x16 codes resolve
+method's recall sits near its mechanical floor (IVF ~ probed/total
+cells; LSH ~ the 2^-4 same-bucket fraction; PQ ~ what 8x16 codes resolve
 on unclustered data) — measured at all three SFs: ivf 0.255-0.44,
 lsh 0.10-0.17, pq 0.235-0.48. Floors sit halfway between zero (collapse)
 and the worst observed value. The tight recall expectations live in
 tests/test_similarity.py.
 
-Uses the exact same parameterization as the q_sim_* registry entries
-(queries = vec_id % 50 == 0, k=5, n_planes=4, nprobe=2) so the measured
-recall is the recall of the entries the driver actually runs.
+Uses the exact same queries as the q_sim_* registry entries
+(vec_id % 50 == 0), and the operators fix their own settings, so the
+measured recall is the recall of the entries the driver actually runs.
 """
 
 from __future__ import annotations
@@ -72,12 +72,12 @@ def q_sim_ann_recall(spark: SparkSession, sf_dir: str) -> DataFrame:
     # runs the shared scan + exact top-k once instead of per-method
     queries = emb.filter(F.col("vec_id") % 50 == 0).persist()
     base = (
-        brute_force_topk(emb, queries, k=5).select("query_id", "neighbor_id").persist()
+        brute_force_topk(emb, queries).select("query_id", "neighbor_id").persist()
     )
     parts = [
-        _recall_row(ivf_topk(emb, queries, k=5, nprobe=2), base, "ivf"),
-        _recall_row(lsh_bucket_topk(emb, queries, k=5, n_planes=4), base, "lsh"),
-        _recall_row(pq_topk(emb, queries, k=5), base, "pq"),
+        _recall_row(ivf_topk(emb, queries), base, "ivf"),
+        _recall_row(lsh_bucket_topk(emb, queries), base, "lsh"),
+        _recall_row(pq_topk(emb, queries), base, "pq"),
     ]
     out = parts[0]
     for p in parts[1:]:
@@ -204,10 +204,11 @@ def q_stream_ann_ingest(spark: SparkSession, sf_dir: str) -> DataFrame:
     from movie_data_transformer_spark.streaming.ann_stream import (
         run_streaming_ann_ingest,
     )
+    from movie_data_transformer_spark.streaming.harness import register_cleanup_dir
 
     seed = load_table(spark, sf_dir, "embeddings")
     src = _ingest_embeddings_jsonl_dir(spark, sf_dir)
-    work = tempfile.mkdtemp(prefix="mdt_ann_stream_")
+    work = register_cleanup_dir(tempfile.mkdtemp(prefix="mdt_ann_stream_"))
     out = run_streaming_ann_ingest(spark, src, seed, work, max_files_per_trigger=1)
     return spark.read.parquet(out).select("vec_id", "cell", "dist_micro")
 

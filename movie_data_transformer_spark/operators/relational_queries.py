@@ -363,7 +363,6 @@ def q_window_running_sum(spark: SparkSession, sf_dir: str) -> DataFrame:
         ["o_custkey"],
         [F.col("o_orderdate").asc(), F.col("o_orderkey").asc()],
         F.col("o_totalprice").cast("decimal(18,2)"),
-        alias="cum_spend",
     )
     return out.select("o_custkey", "o_orderkey", money_out("cum_spend"))
 
@@ -604,7 +603,7 @@ def q_join_skew_salted(spark: SparkSession, sf_dir: str) -> DataFrame:
     c = _t(spark, sf_dir, "customer").select(
         F.col("c_custkey").alias("custkey"), "c_mktsegment"
     )
-    joined = salted_join(o, c, "custkey", n_salts=8)
+    joined = salted_join(o, c, "custkey")
     return (
         joined.groupBy("c_mktsegment")
         .agg(

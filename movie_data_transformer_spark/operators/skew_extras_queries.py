@@ -25,20 +25,18 @@ from movie_data_transformer_spark.sources.tables import load_table
 N_HOT = 5
 
 
-def hot_cold_join(
-    fact: DataFrame, dim: DataFrame, key: str, n_hot: int = N_HOT
-) -> DataFrame:
-    """Join `fact` to `dim` on `key`, routing the n_hot heaviest fact
+def hot_cold_join(fact: DataFrame, dim: DataFrame, key: str) -> DataFrame:
+    """Join `fact` to `dim` on `key`, routing the N_HOT heaviest fact
     keys through a broadcast of their dim rows (hot path: NO shuffle of
     those rows at all) and everything else through the normal shuffle
-    join. The hot-key table is tiny (n_hot rows) and broadcast into
+    join. The hot-key table is tiny (N_HOT rows) and broadcast into
     both the semi/anti splits and the dim restriction, so the fact
     table is scanned once per path with no extra wide exchange."""
     counts = (
         fact.groupBy(key)
         .agg(F.count("*").alias("_n"))
         .orderBy(F.col("_n").desc(), F.col(key).asc())
-        .limit(n_hot)
+        .limit(N_HOT)
         .select(key)
     )
     hot_keys = F.broadcast(counts.localCheckpoint())  # two consumers
@@ -60,7 +58,7 @@ def q_join_skew_hot_cold(spark: SparkSession, sf_dir: str) -> DataFrame:
     c = load_table(spark, sf_dir, "customer").select(
         F.col("c_custkey").alias("custkey"), "c_mktsegment"
     )
-    joined = hot_cold_join(o, c, "custkey", n_hot=N_HOT)
+    joined = hot_cold_join(o, c, "custkey")
     return (
         joined.groupBy("c_mktsegment")
         .agg(

@@ -41,7 +41,7 @@ TARGET_BIN_BYTES = 16384
 N_HIST_BUCKETS = 8
 
 
-def compaction_plan(files: DataFrame, target_bytes: int = TARGET_BIN_BYTES) -> DataFrame:
+def compaction_plan(files: DataFrame) -> DataFrame:
     """files: (file_id, file_bytes) -> per-bin plan rows. Deterministic
     next-fit-decreasing by running sum over (bytes DESC, id ASC)."""
     # two-pass running sum (ordered_stats): the un-partitioned window was
@@ -56,7 +56,7 @@ def compaction_plan(files: DataFrame, target_bytes: int = TARGET_BIN_BYTES) -> D
     ).selectExpr(
         "file_id",
         "file_bytes",
-        f"CAST((_cum - file_bytes) DIV {target_bytes} AS BIGINT) AS bin_id",
+        f"CAST((_cum - file_bytes) DIV {TARGET_BIN_BYTES} AS BIGINT) AS bin_id",
     )
     return binned.groupBy("bin_id").agg(
         F.count("*").cast("long").alias("n_files"),

@@ -40,7 +40,7 @@ def q_stream_stream_join(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.col("event_type") == "purchase"
     )
     return run_availablenow_to_df(
-        stream_conversions(views, purchases, 600), "append", "mdt_ssj_"
+        stream_conversions(views, purchases), "append", "mdt_ssj_"
     )
 
 

@@ -30,13 +30,12 @@ def asof_join(
     right_ts: str,
     right_payload: list[str],
     prefix: str = "asof_",
-    right_seq: str | None = None,
 ) -> DataFrame:
     """Left as-of join: latest right row with right_ts <= left_ts per key.
     Right payload columns come back prefixed; NULL when no prior row.
-    `right_seq`: a unique right-side column breaking ties among right rows
-    with identical timestamps (required for deterministic output if the
-    right side can have duplicate (key, ts))."""
+    The right side's unique `event_id` breaks ties among right rows with
+    identical timestamps, so the output is deterministic even when the
+    right side has duplicate (key, ts)."""
     lt = left.select(
         F.lit(1).alias("_tag"),
         F.col(key).alias("_k"),
@@ -55,7 +54,7 @@ def asof_join(
             "struct<" + ",".join(f"{c}:{left.schema[c].dataType.simpleString()}" for c in left.columns) + ">"
         ).alias("_left"),
         F.struct(*right_payload).alias("_right"),
-        (F.col(right_seq).cast("long") if right_seq else F.lit(0).cast("long")).alias("_seq"),
+        F.col("event_id").cast("long").alias("_seq"),
     )
     u = lt.unionByName(rt)
     # right rows (tag 0) sort before left rows (tag 1) at equal ts -> the
@@ -79,11 +78,10 @@ def range_join(
     left_ts: str,
     right_ts: str,
     window_seconds: int,
-    strict_after: bool = True,
 ) -> DataFrame:
-    """Pairs (l, r) with same key and r.ts in (l.ts, l.ts + window]
-    (strict_after=False makes the lower bound inclusive). Bucket-join
-    candidates, exact filter after. Timestamps must be TimestampType."""
+    """Pairs (l, r) with same key and r.ts in (l.ts, l.ts + window].
+    Bucket-join candidates, exact filter after. Timestamps must be
+    TimestampType."""
     bucket = lambda c: F.floor(F.unix_timestamp(F.col(c)) / window_seconds)  # noqa: E731
     l_ = left.select(
         F.col(key).alias("_k"),
@@ -99,11 +97,7 @@ def range_join(
             F.array(bucket(right_ts), bucket(right_ts) - 1)
         ).alias("_b"),  # right lands in its own and the previous bucket
     )
-    lower = (
-        (F.col("_rts") > F.col("_lts"))
-        if strict_after
-        else (F.col("_rts") >= F.col("_lts"))
-    )
+    lower = F.col("_rts") > F.col("_lts")
     upper = F.unix_timestamp("_rts") <= F.unix_timestamp("_lts") + window_seconds
     return (
         l_.join(r_, (F.col("_k") == F.col("_rk")) & (l_["_b"] == r_["_b"]))
@@ -112,27 +106,21 @@ def range_join(
     )
 
 
-def sessionize(
-    events: DataFrame,
-    key: str = "user_id",
-    ts_col: str = "ts",
-    gap_seconds: int = 21600,
-    seq_col: str = "event_id",
-) -> DataFrame:
+def sessionize(events: DataFrame, gap_seconds: int = 21600) -> DataFrame:
     """Gap-based sessionization (batch form of the session window): a new
-    session starts when the gap since the user's previous event exceeds
-    gap_seconds. Two window passes over ONE partitioning (key) — lag to
-    flag boundaries, running sum to number sessions — so Spark plans a
-    single shuffle and one sort. Ordering ties broken by seq_col for
-    full determinism; timestamps compared at second grain (matches the
+    session starts when the gap since the user's previous event (`ts`)
+    exceeds gap_seconds. Two window passes over ONE partitioning
+    (user_id) — lag to flag boundaries, running sum to number sessions —
+    so Spark plans a single shuffle and one sort. Ordering ties broken by
+    event_id for full determinism; timestamps compared at second grain (matches the
     DuckDB oracle's floor(epoch(ts)))."""
     from pyspark.sql import Window
 
-    ts_s = F.unix_timestamp(F.col(ts_col))
-    w = Window.partitionBy(key).orderBy(ts_s.asc(), F.col(seq_col).asc())
+    ts_s = F.unix_timestamp(F.col("ts"))
+    w = Window.partitionBy("user_id").orderBy(ts_s.asc(), F.col("event_id").asc())
     prev = F.lag(ts_s).over(w)
     is_new = F.when(prev.isNull() | ((ts_s - prev) > gap_seconds), 1).otherwise(0)
-    running = Window.partitionBy(key).orderBy(ts_s.asc(), F.col(seq_col).asc()).rowsBetween(
+    running = Window.partitionBy("user_id").orderBy(ts_s.asc(), F.col("event_id").asc()).rowsBetween(
         Window.unboundedPreceding, Window.currentRow
     )
     return events.withColumn("ts_s", ts_s).withColumn(

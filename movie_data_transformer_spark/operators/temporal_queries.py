@@ -26,7 +26,6 @@ def q_asof_view_before_purchase(spark: SparkSession, sf_dir: str) -> DataFrame:
         right_ts="ts",
         right_payload=["ts", "value", "event_id"],
         prefix="view_",
-        right_seq="event_id",
     )
     return out.select(
         "event_id",
@@ -96,7 +95,7 @@ def q_sessionize_events(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Gap-based sessions per user (6h inactivity closes a session):
     one row per session with span and activity aggregates."""
     ev = load_table(spark, sf_dir, "events")
-    s = sessionize(ev, key="user_id", ts_col="ts", gap_seconds=21600, seq_col="event_id")
+    s = sessionize(ev, gap_seconds=21600)
     return s.groupBy("user_id", "session_idx").agg(
         F.min("ts_s").alias("session_start_s"),
         F.max("ts_s").alias("session_end_s"),
@@ -143,7 +142,7 @@ def q_scd2_point_in_time_join(spark: SparkSession, sf_dir: str) -> DataFrame:
     version containing ts is exactly the latest version with
     valid_from <= ts, so this is the as-of join (one shuffle,
     union+window). Degenerate same-timestamp versions ([ts, ts) = empty)
-    are skipped by the right_seq tiebreak: the max event_id among
+    are skipped by the event_id tiebreak: the max event_id among
     equal-ts versions is the one whose interval is non-empty.
 
     The ORACLE is deliberately the OTHER formulation — a literal
@@ -166,7 +165,6 @@ def q_scd2_point_in_time_join(spark: SparkSession, sf_dir: str) -> DataFrame:
         right_ts="ts",
         right_payload=["event_id", "value", "ts"],
         prefix="dim_",
-        right_seq="event_id",
     )
     return out.select(
         "event_id",

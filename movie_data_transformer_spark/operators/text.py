@@ -18,6 +18,9 @@ import pandas as pd
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
+#: the document text column every operator here reads
+TEXT_COL = "text"
+
 #: tiny function-word profiles for the language-ID heuristic
 LANG_PROFILES: dict[str, tuple[str, ...]] = {
     "en": ("the", "and", "of", "to", "a"),
@@ -48,13 +51,13 @@ def tokens(col: Column) -> Column:
     return F.split(F.trim(col), r"\s+")
 
 
-def text_stats(docs: DataFrame, text_col: str = "text") -> DataFrame:
+def text_stats(docs: DataFrame) -> DataFrame:
     """Token counting + quality-score features per document. Ratio
     columns are exact integer micro-units (micro_ratio), never
     round(int/int, 6) — the rounding-midpoint class (NOTES.md)."""
     from movie_data_transformer_spark.functions import micro_ratio
 
-    t = tokens(F.col(text_col))
+    t = tokens(F.col(TEXT_COL))
     token_len_sum = F.aggregate(
         F.transform(t, lambda w: F.length(w).cast("long")), F.lit(0).cast("long"), lambda a, x: a + x
     )
@@ -62,9 +65,9 @@ def text_stats(docs: DataFrame, text_col: str = "text") -> DataFrame:
         "doc_id",
         F.size(t).cast("long").alias("n_tokens"),
         F.size(F.array_distinct(t)).cast("long").alias("n_uniq_tokens"),
-        F.length(F.col(text_col)).cast("long").alias("n_chars_raw"),
+        F.length(F.col(TEXT_COL)).cast("long").alias("n_chars_raw"),
         # BPE-ish word/number segmentation as a second count
-        F.size(F.regexp_extract_all(F.col(text_col), F.lit("[a-zA-Z]+|[0-9]+"), F.lit(0)))
+        F.size(F.regexp_extract_all(F.col(TEXT_COL), F.lit("[a-zA-Z]+|[0-9]+"), F.lit(0)))
         .cast("long")
         .alias("n_tokens_re"),
         token_len_sum.alias("_len_sum"),
@@ -81,11 +84,11 @@ def text_stats(docs: DataFrame, text_col: str = "text") -> DataFrame:
     )
 
 
-def language_id(docs: DataFrame, text_col: str = "text") -> DataFrame:
+def language_id(docs: DataFrame) -> DataFrame:
     """N-gram/function-word language ID heuristic: score each language
     profile by marker-token frequency; argmax wins (ties -> lexicographic
     language order for determinism)."""
-    t = tokens(F.lower(F.col(text_col)))
+    t = tokens(F.lower(F.col(TEXT_COL)))
     scores = {
         lang: F.size(F.filter(t, lambda w: w.isin(*markers))).cast("long")
         for lang, markers in LANG_PROFILES.items()
@@ -101,7 +104,7 @@ def language_id(docs: DataFrame, text_col: str = "text") -> DataFrame:
     return docs.select("doc_id", *score_cols, pred.alias("pred_lang"))
 
 
-def quality_scores(docs: DataFrame, text_col: str = "text") -> DataFrame:
+def quality_scores(docs: DataFrame) -> DataFrame:
     """The classic corpus quality signals: punctuation ratio, stopword
     ratio, alpha ratio, mean word length — the filters an LLM data
     pipeline cuts on. All ratios in exact integer micro-units
@@ -109,20 +112,20 @@ def quality_scores(docs: DataFrame, text_col: str = "text") -> DataFrame:
     filter, quality_gate_funnel) can never flip on a rounding midpoint."""
     from movie_data_transformer_spark.functions import micro_ratio
 
-    t = tokens(F.lower(F.col(text_col)))
-    n_chars = F.length(text_col)
+    t = tokens(F.lower(F.col(TEXT_COL)))
+    n_chars = F.length(TEXT_COL)
     stop = F.size(
         F.filter(t, lambda w: w.isin("the", "a", "an", "and", "or", "of", "to", "in", "is"))
     )
     base = docs.select(
         "doc_id",
-        F.size(F.regexp_extract_all(text_col, F.lit(r"[^a-zA-Z0-9\s]"), F.lit(0)))
+        F.size(F.regexp_extract_all(TEXT_COL, F.lit(r"[^a-zA-Z0-9\s]"), F.lit(0)))
         .cast("long")
         .alias("_n_punct"),
         n_chars.cast("long").alias("_n_chars"),
         stop.cast("long").alias("_n_stop"),
         F.size(t).cast("long").alias("_n_toks"),
-        F.size(F.regexp_extract_all(text_col, F.lit("[a-zA-Z]"), F.lit(0)))
+        F.size(F.regexp_extract_all(TEXT_COL, F.lit("[a-zA-Z]"), F.lit(0)))
         .cast("long")
         .alias("_n_alpha"),
         F.aggregate(
@@ -140,32 +143,32 @@ def quality_scores(docs: DataFrame, text_col: str = "text") -> DataFrame:
     )
 
 
-def rolling_hash(col: Column, base: int = 31, mod: int = 2147483647) -> Column:
+def rolling_hash(col: Column) -> Column:
     """Polynomial rolling hash over the characters: fold
-    acc = (acc * base + ascii(char)) % mod. The incremental-update form
+    acc = (acc * 31 + ascii(char)) % 2147483647. The incremental-update form
     (content-defined chunking, substring search) of document
     fingerprinting; reproducible in ANSI SQL via list_reduce."""
     chars = F.split(col, "")
     return F.aggregate(
         F.filter(chars, lambda c: c != ""),
         F.lit(0).cast("long"),
-        lambda acc, c: (acc * base + F.ascii(c)) % mod,
+        lambda acc, c: (acc * 31 + F.ascii(c)) % 2147483647,
     )
 
 
-def top_terms(docs: DataFrame, text_col: str = "text", k: int = 20) -> DataFrame:
-    """Corpus term frequencies, top-k (the canonical wordcount, done as
+def top_terms(docs: DataFrame) -> DataFrame:
+    """Corpus term frequencies, top 20 (the canonical wordcount, done as
     explode -> partial-agg -> final-agg; deterministic tiebreak on term)."""
-    t = F.explode(tokens(F.lower(F.col(text_col)))).alias("term")
+    t = F.explode(tokens(F.lower(F.col(TEXT_COL)))).alias("term")
     counts = docs.select(t).groupBy("term").agg(F.count("*").alias("n"))
-    return counts.orderBy(F.col("n").desc(), F.col("term").asc()).limit(k)
+    return counts.orderBy(F.col("n").desc(), F.col("term").asc()).limit(20)
 
 
-def fingerprint(docs: DataFrame, text_col: str = "text") -> DataFrame:
+def fingerprint(docs: DataFrame) -> DataFrame:
     """Content fingerprint: md5 over whitespace-normalized lowercase text
     plus a cheap 64-bit-ish numeric digest (portable_hash) for
     bucketing/sharding at scale."""
-    norm = F.lower(F.regexp_replace(F.trim(F.col(text_col)), r"\s+", " "))
+    norm = F.lower(F.regexp_replace(F.trim(F.col(TEXT_COL)), r"\s+", " "))
     return docs.select(
         "doc_id",
         F.md5(norm).alias("fp_md5"),
@@ -174,7 +177,7 @@ def fingerprint(docs: DataFrame, text_col: str = "text") -> DataFrame:
     )
 
 
-def chunk_documents(docs: DataFrame, text_col: str = "text", chunk_tokens: int = 64) -> DataFrame:
+def chunk_documents(docs: DataFrame, chunk_tokens: int = 64) -> DataFrame:
     """Fixed-size token chunking — the pretraining/RAG preprocessing step:
     split each doc into consecutive chunk_tokens-token windows,
     emitting (doc_id, chunk_idx, chunk_text, n_tokens) per chunk.
@@ -183,7 +186,7 @@ def chunk_documents(docs: DataFrame, text_col: str = "text", chunk_tokens: int =
     projection, then sequence+slice+array_join build the chunks and
     explode flattens — all JVM-side, no Python in the path. Every doc
     yields >=1 chunk (tokens() of empty text is [''])."""
-    toks = docs.select("doc_id", tokens(F.col(text_col)).alias("toks"))
+    toks = docs.select("doc_id", tokens(F.col(TEXT_COL)).alias("toks"))
     n_chunks = F.ceil(F.size("toks") / F.lit(chunk_tokens)).cast("int")
     chunks = F.transform(
         F.sequence(F.lit(0), n_chunks - 1),
@@ -210,7 +213,7 @@ PII_PHONE = r"\b[0-9]{3}[-.][0-9]{3}[-.][0-9]{4}\b"
 PII_IP = r"\b[0-9]{1,3}\.[0-9]{1,3}\.[0-9]{1,3}\.[0-9]{1,3}\b"
 
 
-def pii_redact(docs: DataFrame, text_col: str = "text") -> DataFrame:
+def pii_redact(docs: DataFrame) -> DataFrame:
     """PII scrubbing — the compliance pass every training-data pipeline
     runs before anything else: mask emails, phone numbers, and IPv4
     addresses with typed placeholders, and count what was masked (the
@@ -221,7 +224,7 @@ def pii_redact(docs: DataFrame, text_col: str = "text") -> DataFrame:
 
     Pure regexp expressions, JVM-side, embarrassingly parallel — no
     shuffle, scales with scan bandwidth."""
-    t = F.col(text_col)
+    t = F.col(TEXT_COL)
     clean = F.regexp_replace(
         F.regexp_replace(
             F.regexp_replace(t, PII_EMAIL, "<EMAIL>"), PII_PHONE, "<PHONE>"
@@ -241,7 +244,7 @@ def pii_redact(docs: DataFrame, text_col: str = "text") -> DataFrame:
     )
 
 
-def repetition_stats(docs: DataFrame, text_col: str = "text") -> DataFrame:
+def repetition_stats(docs: DataFrame) -> DataFrame:
     """Gopher-style repetition signals (Rae et al. 2021 §A1.1 quality
     filters), the standard cut for boilerplate/spam in pretraining data:
 
@@ -260,7 +263,7 @@ def repetition_stats(docs: DataFrame, text_col: str = "text") -> DataFrame:
     repetitive text — exactly the docs this operator exists to catch).
     N-grams via shifted slices of the token array (see word_shingles:
     constant tokenizer evaluations per row)."""
-    t = tokens(F.lower(F.col(text_col)))
+    t = tokens(F.lower(F.col(TEXT_COL)))
     toks = docs.select("doc_id", t.alias("t"))
     n = F.size("t")
     big = F.zip_with(
@@ -338,7 +341,7 @@ def repetition_stats(docs: DataFrame, text_col: str = "text") -> DataFrame:
 
 
 def chunk_documents_sliding(
-    docs: DataFrame, text_col: str = "text", window: int = 64, stride: int = 32
+    docs: DataFrame, window: int = 64, stride: int = 32
 ) -> DataFrame:
     """Overlapping token chunking (RAG-style): windows of `window` tokens
     starting every `stride` tokens, so consecutive chunks share
@@ -347,7 +350,7 @@ def chunk_documents_sliding(
     all JVM-side). Chunk starts cover [0, n) in stride steps, so trailing
     chunks may be shorter than `window` but every token appears in at
     least one chunk."""
-    toks = docs.select("doc_id", tokens(F.col(text_col)).alias("toks"))
+    toks = docs.select("doc_id", tokens(F.col(TEXT_COL)).alias("toks"))
     n_chunks = F.ceil(F.size("toks") / F.lit(stride)).cast("int")
     chunks = F.transform(
         F.sequence(F.lit(0), n_chunks - 1),
@@ -393,16 +396,14 @@ def chunk_text_udtf():
     return ChunkText
 
 
-def pack_sequences(
-    chunks: DataFrame, budget: int = 200, n_buckets: int = 8
-) -> DataFrame:
+def pack_sequences(chunks: DataFrame) -> DataFrame:
     """Sequence packing — assemble variable-length chunks into fixed
-    token-budget training rows (the step between chunking and batching
+    200-token training rows (the step between chunking and batching
     in every pretraining pipeline; unpacked batches waste the budget on
     padding). Greedy first-fit in a DETERMINISTIC order (doc_id,
     chunk_idx) inside each hash bucket, via applyInPandas — packing is
-    inherently sequential, so the parallelism unit is the bucket, not
-    the row. Output: one row per chunk with its (bucket, bin_id)
+    inherently sequential, so the parallelism unit is the bucket (8 of
+    them), not the row. Output: one row per chunk with its (bucket, bin_id)
     assignment; bin_id is dense within bucket.
 
     100 TB note: buckets are hash-partitioned work units — thousands of
@@ -420,7 +421,7 @@ def pack_sequences(
         bins, used = [], 0
         bin_id = -1
         for n in pdf["n_tokens"]:
-            if bin_id < 0 or used + n > budget:
+            if bin_id < 0 or used + n > 200:
                 bin_id += 1
                 used = 0
             bins.append(bin_id)
@@ -432,6 +433,6 @@ def pack_sequences(
         "doc_id",
         "chunk_idx",
         "n_tokens",
-        (portable_hash(F.col("doc_id").cast("string")) % n_buckets).cast("int").alias("bucket"),
+        (portable_hash(F.col("doc_id").cast("string")) % 8).cast("int").alias("bucket"),
     )
     return with_bucket.groupBy("bucket").applyInPandas(_pack, schema)

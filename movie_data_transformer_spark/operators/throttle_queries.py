@@ -35,7 +35,7 @@ from movie_data_transformer_spark.sources.tables import load_table
 TTL_US = 3 * 86_400 * 1_000_000  # 3 days
 
 
-def throttle_ttl(ev: DataFrame, ttl_us: int = TTL_US) -> DataFrame:
+def throttle_ttl(ev: DataFrame) -> DataFrame:
     """ev: (user_id, event_type, ts_us, event_id) -> kept rows.
 
     Pure-JVM greedy walk (guide §4.1 — the r13 sweep caught the old
@@ -43,7 +43,7 @@ def throttle_ttl(ev: DataFrame, ttl_us: int = TTL_US) -> DataFrame:
     was per-GROUP Python-call overhead across ~|users x types| tiny
     groups, not the row loop): collect each entity's (ts_us, event_id)
     structs, array_sort gives the total order, and a higher-order
-    `aggregate` fold keeps an event iff ts >= last kept + ttl — the
+    `aggregate` fold keeps an event iff ts >= last kept + TTL_US — the
     sequential kept-chain semantic, whole-stage-codegen'd, zero Python.
     Group rows stay bounded by the entity's own event count (the same
     contract the pandas form had — its pdf also held the whole group)."""
@@ -55,7 +55,7 @@ def throttle_ttl(ev: DataFrame, ttl_us: int = TTL_US) -> DataFrame:
         "event_type",
         # fold: empty acc of the right struct type via slice(evs, 1, 0)
         "aggregate(_evs, slice(_evs, 1, 0), (acc, x) -> "
-        f"IF(size(acc) = 0 OR x.ts_us >= element_at(acc, -1).ts_us + {int(ttl_us)}, "
+        f"IF(size(acc) = 0 OR x.ts_us >= element_at(acc, -1).ts_us + {TTL_US}, "
         "concat(acc, array(x)), acc)) AS _kept",
     )
     return kept.selectExpr(

@@ -31,14 +31,13 @@ def load_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     # every query loads tables through.
     spark.conf.set("spark.sql.session.timeZone", "UTC")
     if name == "events":
-        # events.ts is parquet TIMESTAMP(NANOS). The read path is Spark-
-        # version-dependent: <=4.0 rejects it unless
-        # spark.sql.legacy.parquet.nanosAsLong reads it as int64 nanos;
-        # 4.1+ reads it natively as timestamp_ntz (truncated to µs) and
-        # IGNORES the legacy conf. Handle both so the engine survives the
-        # runtime being upgraded under it; either way the result is a µs
-        # TimestampType equal to DuckDB's TIMESTAMP_NS downcast (probed
-        # value-identical at the µs boundary).
+        # events.ts is parquet TIMESTAMP(MICROS) in the generated sf*
+        # data but TIMESTAMP(NANOS) in files pandas writes (the planted
+        # test fixtures). Spark 4.1.2 rejects NANOS (PARQUET_TYPE_ILLEGAL)
+        # unless spark.sql.legacy.parquet.nanosAsLong reads it as int64
+        # nanos; MICROS reads as timestamp_ntz whatever the conf. Either
+        # way the result is a µs TimestampType equal to DuckDB's
+        # downcast (probed value-identical at the µs boundary).
         spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
         df = spark.read.parquet(f"{sf_dir}/{name}.parquet")
         ts_type = dict(df.dtypes)["ts"]
@@ -46,7 +45,7 @@ def load_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
             return df.withColumn(
                 "ts", F.timestamp_micros((F.col("ts") / 1000).cast("long"))
             )
-        # timestamp_ntz (4.1+ native): wall clock == UTC instant (session
+        # timestamp_ntz (MICROS): wall clock == UTC instant (session
         # tz pinned above), so a plain cast reinterprets losslessly
         return df.withColumn("ts", F.col("ts").cast("timestamp"))
     return spark.read.parquet(f"{sf_dir}/{name}.parquet")
@@ -54,10 +53,9 @@ def load_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
 
 def load_events_raw_ns(spark: SparkSession, sf_dir: str) -> DataFrame:
     """events with ts as RAW int64 epoch-nanos — the dtype-unambiguous form
-    the pandas-grouped operators consume. Version-robust like load_table
-    (legacy long read, or µs-truncated reconstruction on Spark 4.1+, which
-    is identical for every consumer since all downstream math is >= second
-    granularity)."""
+    the pandas-grouped operators consume. Built on load_table, so it reads
+    either timestamp unit (a µs-truncated reconstruction, identical for
+    every consumer since all downstream math is >= second granularity)."""
     df = load_table(spark, sf_dir, "events")
     return df.withColumn("ts", F.unix_micros("ts") * F.lit(1000).cast("long"))
 
@@ -69,13 +67,12 @@ def load_events_stream(
     (raw_ns=True: int64 epoch-nanos instead, for the pandas-stateful
     operators whose arithmetic wants a dtype-unambiguous integer).
 
-    Version-robust the same way load_table is: the stream schema must be
-    declared up front, and declaring `ts` as the WRONG surface type for the
-    running Spark hangs or mis-decodes the scan (pyspark 4.1.2 reads
-    TIMESTAMP(NANOS) natively as timestamp_ntz and ignores
-    nanosAsLong; <=4.0 needs the legacy long read). So: probe the batch
-    reader's resolved schema (a footer-only read) and declare exactly
-    that, then normalize."""
+    Reads either timestamp unit, as load_table does: the stream schema
+    must be declared up front, and declaring `ts` as the WRONG surface
+    type hangs or mis-decodes the scan (under nanosAsLong a
+    TIMESTAMP(NANOS) column resolves to bigint, a TIMESTAMP(MICROS) one to
+    timestamp_ntz). So: probe the batch reader's resolved schema (a
+    footer-only read) and declare exactly that, then normalize."""
     spark.conf.set("spark.sql.session.timeZone", "UTC")
     spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
     resolved = spark.read.parquet(f"{sf_dir}/events.parquet").schema

@@ -193,14 +193,13 @@ def run_streaming_incremental_dedup(
     seed_docs: DataFrame,
     work_dir: str,
     max_files_per_trigger: int = 1,
-    n: int = 3,
-    threshold: float = 0.3,
     max_bucket_size: int | None = None,
     compact_after: int | None = None,
 ) -> str:
     """Stream JSONL doc files from input_dir in micro-batches, link each
     against the growing corpus index seeded from seed_docs, and return
-    the path of the appended (doc_a, doc_b, jaccard) pairs log.
+    the path of the appended (doc_a, doc_b, jaccard) pairs log: word
+    trigram shingles, MinHash pairs verified at Jaccard >= 0.3.
 
     Processes all currently available files then stops (availableNow),
     restartable via the checkpoint — same contract as
@@ -211,7 +210,7 @@ def run_streaming_incremental_dedup(
     ckpt_dir = os.path.join(work_dir, "ckpt")
 
     if "seed" not in sets_store.ingest_ids():  # restart keeps the seed rows
-        seed_sets = doc_shingle_sets(seed_docs, n=n).persist()
+        seed_sets = doc_shingle_sets(seed_docs).persist()
         # bands FIRST, sets LAST: the sets subdir is the seed COMMIT
         # MARKER (this guard checks it), so a crash between the two
         # appends leaves the marker absent and a restart redoes both
@@ -239,14 +238,13 @@ def run_streaming_incremental_dedup(
             # exclude its own previous partial output)
             for store in (sets_store, bands_store, pairs_store):
                 store.compact(max_ingests=compact_after, exclude=ingest_id)
-        new_sets = doc_shingle_sets(batch_docs, n=n).persist()
+        new_sets = doc_shingle_sets(batch_docs).persist()
         new_bands = band_table(minhash_signatures_from_arrays(new_sets)).persist()
         try:
             pairs = incremental_minhash_pairs_from_index(
                 sets_store.read(exclude=ingest_id),
                 bands_store.read(exclude=ingest_id),
                 new_sets,
-                threshold=threshold,
                 max_bucket_size=max_bucket_size,
                 new_bands=new_bands,
             )

@@ -13,29 +13,24 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 
-def stream_conversions(
-    views: DataFrame,
-    purchases: DataFrame,
-    window_seconds: int = 600,
-    watermark: str = "20 minutes",
-) -> DataFrame:
+def stream_conversions(views: DataFrame, purchases: DataFrame) -> DataFrame:
     """Inner stream-stream join: purchase strictly after the view, within
-    window_seconds, same user. Both inputs are streaming DataFrames with
-    event-time column `ts`."""
+    600 seconds, same user. Both inputs are streaming DataFrames with
+    event-time column `ts`, watermarked 20 minutes behind."""
     v = views.select(
         F.col("event_id").alias("view_id"),
         F.col("user_id").alias("v_user"),
         F.col("ts").alias("v_ts"),
-    ).withWatermark("v_ts", watermark)
+    ).withWatermark("v_ts", "20 minutes")
     p = purchases.select(
         F.col("event_id").alias("purchase_id"),
         F.col("user_id").alias("p_user"),
         F.col("ts").alias("p_ts"),
-    ).withWatermark("p_ts", watermark)
+    ).withWatermark("p_ts", "20 minutes")
     cond = (
         (F.col("v_user") == F.col("p_user"))
         & (F.col("p_ts") > F.col("v_ts"))
-        & (F.unix_timestamp("p_ts") <= F.unix_timestamp("v_ts") + window_seconds)
+        & (F.unix_timestamp("p_ts") <= F.unix_timestamp("v_ts") + 600)
     )
     return v.join(p, cond).select(
         "view_id",

@@ -23,7 +23,7 @@ from movie_data_transformer_spark.streaming.windows import (
 
 
 def q_stream_tumbling(spark: SparkSession, sf_dir: str) -> DataFrame:
-    return tumbling_counts(load_table(spark, sf_dir, "events"), "1 hour")
+    return tumbling_counts(load_table(spark, sf_dir, "events"))
 
 
 SQL_STREAM_TUMBLING = """
@@ -36,7 +36,7 @@ FROM events GROUP BY 1, 2
 
 
 def q_stream_sliding(spark: SparkSession, sf_dir: str) -> DataFrame:
-    return sliding_counts(load_table(spark, sf_dir, "events"), "1 hour", "30 minutes")
+    return sliding_counts(load_table(spark, sf_dir, "events"))
 
 
 # each event belongs to the two slide-aligned windows covering it:
@@ -55,7 +55,7 @@ FROM assigned GROUP BY 1, 2
 
 
 def q_stream_session(spark: SparkSession, sf_dir: str) -> DataFrame:
-    return session_windows(load_table(spark, sf_dir, "events"), "30 minutes")
+    return session_windows(load_table(spark, sf_dir, "events"))
 
 
 # gaps-and-islands: a new session starts when the gap to the previous
@@ -138,21 +138,20 @@ def q_stream_incremental_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
     from movie_data_transformer_spark.streaming.dedup_stream import (
         run_streaming_incremental_dedup,
     )
+    from movie_data_transformer_spark.streaming.harness import register_cleanup_dir
 
     corpus = augmented_corpus(load_table(spark, sf_dir, "documents"))
     seed = corpus.filter(F.col("doc_id") < 100000)
     src = _ingest_jsonl_dir(spark, sf_dir)
-    # unique per-invocation work dir, left on disk for the lazy read
-    # (same contract as movies_incremental_merge)
-    work = tempfile.mkdtemp(prefix="mdt_dedup_stream_")
+    # unique per-invocation work dir, left on disk for the lazy read and
+    # removed at process exit
+    work = register_cleanup_dir(tempfile.mkdtemp(prefix="mdt_dedup_stream_"))
     pairs_dir = run_streaming_incremental_dedup(
         spark,
         src,
         seed,
         work,
         max_files_per_trigger=1,
-        n=3,
-        threshold=0.3,
         max_bucket_size=5000,
     )
     return spark.read.parquet(pairs_dir).select("doc_a", "doc_b", "jaccard")

@@ -24,13 +24,13 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 
-def tumbling_counts(events: DataFrame, width: str = "1 hour") -> DataFrame:
-    """Per event_type tumbling-window counts + exact value sums. On a
+def tumbling_counts(events: DataFrame) -> DataFrame:
+    """Per event_type 1-hour tumbling-window counts + exact value sums. On a
     stream, call it on `events.withWatermark("ts", ...)`: the watermark
     bounds state and drops events older than it (the event-time upgrade
     of the reference's LWW late-data policy)."""
     return (
-        events.groupBy(F.window("ts", width).alias("w"), "event_type")
+        events.groupBy(F.window("ts", "1 hour").alias("w"), "event_type")
         .agg(
             F.count("*").alias("n_events"),
             F.sum(F.col("value").cast("decimal(18,2)")).alias("sum_value"),
@@ -47,10 +47,11 @@ def tumbling_counts(events: DataFrame, width: str = "1 hour") -> DataFrame:
     )
 
 
-def sliding_counts(events: DataFrame, width: str = "1 hour", slide: str = "30 minutes") -> DataFrame:
-    """Sliding windows: each event lands in width/slide overlapping buckets."""
+def sliding_counts(events: DataFrame) -> DataFrame:
+    """1-hour windows sliding every 30 minutes: each event lands in 2
+    overlapping buckets."""
     return (
-        events.groupBy(F.window("ts", width, slide).alias("w"), "event_type")
+        events.groupBy(F.window("ts", "1 hour", "30 minutes").alias("w"), "event_type")
         .agg(F.count("*").alias("n_events"))
         .select(
             F.unix_timestamp(F.col("w.start")).alias("bucket_start"),
@@ -60,10 +61,10 @@ def sliding_counts(events: DataFrame, width: str = "1 hour", slide: str = "30 mi
     )
 
 
-def session_windows(events: DataFrame, gap: str = "30 minutes") -> DataFrame:
-    """Per-user sessionization with a fixed inactivity gap."""
+def session_windows(events: DataFrame) -> DataFrame:
+    """Per-user sessionization with a 30-minute inactivity gap."""
     return (
-        events.groupBy(F.session_window("ts", gap).alias("w"), "user_id")
+        events.groupBy(F.session_window("ts", "30 minutes").alias("w"), "user_id")
         .agg(F.count("*").alias("n_events"))
         .select(
             "user_id",

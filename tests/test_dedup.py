@@ -27,10 +27,10 @@ def _incremental_pairs(state_docs, new_docs):
     """Batch-form incremental dedup on the path the registry entry and
     the streaming dedup run: the state's shingle index and band rows,
     then incremental_minhash_pairs_from_index."""
-    state_sets = doc_shingle_sets(state_docs, n=3)
+    state_sets = doc_shingle_sets(state_docs)
     state_bands = band_table(minhash_signatures_from_arrays(state_sets))
     return incremental_minhash_pairs_from_index(
-        state_sets, state_bands, doc_shingle_sets(new_docs, n=3), threshold=0.3
+        state_sets, state_bands, doc_shingle_sets(new_docs)
     )
 
 
@@ -46,13 +46,13 @@ def test_minhash_lsh_recall_vs_exact_jaccard(spark, sf_dir):
     corpus = _corpus(spark, sf_dir)
     found = {
         (r.doc_a, r.doc_b)
-        for r in minhash_dedup_pairs(corpus, n=3, threshold=0.3).collect()
+        for r in minhash_dedup_pairs(corpus).collect()
     }
     # exact ground truth for the planted near-dup pairs (no LSH):
     planted = spark.createDataFrame(
         [(i, i + 100000) for i in range(50)], "doc_a long, doc_b long"
     )
-    sets = doc_shingle_sets(corpus, n=3)
+    sets = doc_shingle_sets(corpus)
     truth = {
         (r.doc_a, r.doc_b)
         for r in jaccard_verify_arrays(planted, sets, 0.3).collect()
@@ -174,9 +174,9 @@ def test_simhash_mega_bucket_cap_routes_to_exact_dedup(spark):
     rows += [(100 + i, f"unique filler document number {i} with words {i * 7}") for i in range(5)]
     docs = spark.createDataFrame(rows, "doc_id long, text string")
 
-    uncapped = simhash_near_pairs(docs, max_hamming=3).count()
+    uncapped = simhash_near_pairs(docs).count()
     assert uncapped >= n_copies * (n_copies - 1) // 2  # quadratic blowup is real
-    capped = simhash_near_pairs(docs, max_hamming=3, max_bucket_size=n_copies - 1)
+    capped = simhash_near_pairs(docs, max_bucket_size=n_copies - 1)
     assert capped.count() < uncapped
     # the identical docs the cap dropped are exactly what exact_dedup
     # recovers linearly: one group, all 12 copies, min-id representative
@@ -196,9 +196,9 @@ def test_minhash_mega_bucket_cap_is_wired(spark):
     ]
     rows += [(100 + i, f"totally different filler text number {i} okay") for i in range(4)]
     docs = spark.createDataFrame(rows, "doc_id long, text string")
-    uncapped = minhash_dedup_pairs(docs, n=3, threshold=0.3).count()
+    uncapped = minhash_dedup_pairs(docs).count()
     assert uncapped >= n_copies * (n_copies - 1) // 2
-    capped = minhash_dedup_pairs(docs, n=3, threshold=0.3, max_bucket_size=n_copies - 1)
+    capped = minhash_dedup_pairs(docs, max_bucket_size=n_copies - 1)
     assert capped.count() < uncapped
 
 
@@ -240,13 +240,11 @@ def test_incremental_minhash_links_batch_without_state_pairs(spark, sf_dir):
         assert got.get((i, i + 200000)) == 1.0, f"exact copy {i} not linked"
 
 
-def test_streaming_incremental_dedup_matches_batch_any_slicing(spark, sf_dir):
+def test_streaming_incremental_dedup_matches_batch_any_slicing(spark, sf_dir, tmp_path):
     """The streaming pairs log equals the batch-form incremental result
     as a SET for a different micro-batch slicing (2 files per trigger vs
     the registry entry's 1): each pair is emitted exactly once, by the
     micro-batch of its later-ingested doc, so slicing must not matter."""
-    import tempfile
-
     from movie_data_transformer_spark.streaming.dedup_stream import (
         run_streaming_incremental_dedup,
     )
@@ -262,9 +260,9 @@ def test_streaming_incremental_dedup_matches_batch_any_slicing(spark, sf_dir):
         for r in _incremental_pairs(seed, batch).collect()
     }
     src = _ingest_jsonl_dir(spark, sf_dir)
-    work = tempfile.mkdtemp(prefix="mdt_dedup_stream_test_")
+    work = str(tmp_path)
     pairs_dir = run_streaming_incremental_dedup(
-        spark, src, seed, work, max_files_per_trigger=2, n=3, threshold=0.3
+        spark, src, seed, work, max_files_per_trigger=2
     )
     got = {
         (r.doc_a, r.doc_b, r.jaccard)
@@ -321,7 +319,7 @@ def test_exact_substr_finds_planted_copies(spark, sf_dir):
     from movie_data_transformer_spark.sources.tables import load_table
 
     corpus = augmented_corpus(load_table(spark, sf_dir, "documents"))
-    pairs = exact_substr_pairs(corpus, window=15)
+    pairs = exact_substr_pairs(corpus)
     got = {(r.doc_a, r.doc_b): r.n_shared_windows for r in pairs.collect()}
 
     # every planted EXACT copy (doc 50-99 -> +200000) long enough to have
@@ -368,7 +366,7 @@ def test_incremental_index_mega_bucket_dropped_batch_cannot_resurrect(spark):
     new_sets = doc_shingle_sets(batch_docs)
 
     capped = incremental_minhash_pairs_from_index(
-        stored_sets, stored_bands, new_sets, threshold=0.3, max_bucket_size=5
+        stored_sets, stored_bands, new_sets, max_bucket_size=5
     )
     got = {(r.doc_a, r.doc_b) for r in capped.collect()}
     # mega bucket (10 stored + 1 batch = 11 > 5) produced NOTHING for doc
@@ -376,20 +374,19 @@ def test_incremental_index_mega_bucket_dropped_batch_cannot_resurrect(spark):
     assert got == {(20, 101)}
 
     uncapped = incremental_minhash_pairs_from_index(
-        stored_sets, stored_bands, new_sets, threshold=0.3
+        stored_sets, stored_bands, new_sets
     )
     got_all = {(r.doc_a, r.doc_b) for r in uncapped.collect()}
     assert {(i, 100) for i in range(1, 11)} | {(20, 101)} <= got_all
     stored_sets.unpersist(blocking=False)
 
 
-def test_streaming_dedup_commits_are_batch_sized(spark, sf_dir):
+def test_streaming_dedup_commits_are_batch_sized(spark, sf_dir, tmp_path):
     """The r4 scale-weak fix: per-trigger committed state is O(|batch|) —
     each ingest appends exactly its own docs' shingle rows (and 16 band
     rows per doc) in its own `ingest=<id>` subdir; no subdir ever holds a
     corpus-sized rewrite, and every doc is committed exactly once."""
     import os
-    import tempfile
 
     from movie_data_transformer_spark.operators.dedup import N_BANDS
     from movie_data_transformer_spark.streaming.dedup_stream import (
@@ -405,9 +402,9 @@ def test_streaming_dedup_commits_are_batch_sized(spark, sf_dir):
     n_batch_total = corpus.count() - n_seed
     src = _ingest_jsonl_dir(spark, sf_dir)
     n_files = len([f for f in os.listdir(src) if f.endswith(".json")])
-    work = tempfile.mkdtemp(prefix="mdt_dedup_stream_commit_")
+    work = str(tmp_path)
     run_streaming_incremental_dedup(
-        spark, src, seed, work, max_files_per_trigger=1, n=3, threshold=0.3
+        spark, src, seed, work, max_files_per_trigger=1
     )
 
     sets_root = os.path.join(work, "index_sets")
@@ -428,7 +425,7 @@ def test_streaming_dedup_commits_are_batch_sized(spark, sf_dir):
     assert max(batch_sizes) < n_seed  # a corpus rewrite would exceed this
 
 
-def test_streaming_dedup_restart_processes_only_new_files(spark, sf_dir):
+def test_streaming_dedup_restart_processes_only_new_files(spark, sf_dir, tmp_path):
     """Continuous ingest across RESTARTS: run the stream over half the
     files, then drop the rest into the source dir and run again with the
     same work dir + checkpoint. The second run must process ONLY the new
@@ -437,7 +434,6 @@ def test_streaming_dedup_restart_processes_only_new_files(spark, sf_dir):
     over everything — the restart contract of a daily crawl pipeline."""
     import os
     import shutil
-    import tempfile
 
     from movie_data_transformer_spark.streaming.dedup_stream import (
         run_streaming_incremental_dedup,
@@ -457,19 +453,20 @@ def test_streaming_dedup_restart_processes_only_new_files(spark, sf_dir):
     fixture = _ingest_jsonl_dir(spark, sf_dir)
     files = sorted(f for f in os.listdir(fixture) if f.endswith(".json"))
     assert len(files) >= 2
-    src = tempfile.mkdtemp(prefix="mdt_dedup_restart_src_")
-    work = tempfile.mkdtemp(prefix="mdt_dedup_restart_work_")
+    src, work = str(tmp_path / "src"), str(tmp_path / "work")
+    os.mkdir(src)
+    os.mkdir(work)
     for f in files[: len(files) // 2]:
         shutil.copy(os.path.join(fixture, f), os.path.join(src, f))
     pairs_dir = run_streaming_incremental_dedup(
-        spark, src, seed, work, max_files_per_trigger=1, n=3, threshold=0.3
+        spark, src, seed, work, max_files_per_trigger=1
     )
     ingests_first = set(os.listdir(os.path.join(work, "index_sets")))
 
     for f in files[len(files) // 2 :]:
         shutil.copy(os.path.join(fixture, f), os.path.join(src, f))
     run_streaming_incremental_dedup(
-        spark, src, seed, work, max_files_per_trigger=1, n=3, threshold=0.3
+        spark, src, seed, work, max_files_per_trigger=1
     )
     ingests_second = set(os.listdir(os.path.join(work, "index_sets")))
 
@@ -482,7 +479,7 @@ def test_streaming_dedup_restart_processes_only_new_files(spark, sf_dir):
     assert got == want
 
 
-def test_streaming_dedup_compaction_bounds_file_count(spark, sf_dir):
+def test_streaming_dedup_compaction_bounds_file_count(spark, sf_dir, tmp_path):
     """r5 VERDICT design note #1: AppendOnlyStore.compact() folds the
     one-dir-per-trigger state into a single compact ingest once the live
     count passes the threshold, so file count stays bounded across
@@ -492,7 +489,6 @@ def test_streaming_dedup_compaction_bounds_file_count(spark, sf_dir):
     (layout_queries.small_files_inventory, the same report grain as the
     small_files_report operator) watches the store's layout health."""
     import os
-    import tempfile
 
     from movie_data_transformer_spark.operators.layout_queries import (
         small_files_inventory,
@@ -515,15 +511,13 @@ def test_streaming_dedup_compaction_bounds_file_count(spark, sf_dir):
     src = _ingest_jsonl_dir(spark, sf_dir)
     n_files = len([f for f in os.listdir(src) if f.endswith(".json")])
     assert n_files >= 4  # enough triggers for at least one compaction
-    work = tempfile.mkdtemp(prefix="mdt_dedup_compact_")
+    work = str(tmp_path)
     pairs_dir = run_streaming_incremental_dedup(
         spark,
         src,
         seed,
         work,
         max_files_per_trigger=1,
-        n=3,
-        threshold=0.3,
         compact_after=2,
     )
 
@@ -585,14 +579,12 @@ def test_containment_catches_jaccard_blind_embedding(spark):
     )
     got = {
         (r.doc_a, r.doc_b): r.containment
-        for r in containment_pairs(docs, n=2, threshold=0.5).collect()
+        for r in containment_pairs(docs, threshold=0.5).collect()
     }
     assert (1, 2) in got
     assert got[(1, 2)] >= 0.99  # every bigram of the short doc is inside
     # jaccard on the same pair is diluted by the long doc's union
-    jac = ngram_jaccard_pairs(
-        docs.withColumn("n_chars", F.lit(100)), n=2, threshold=0.0
-    ).collect()
+    jac = ngram_jaccard_pairs(docs.withColumn("n_chars", F.lit(100)), threshold=0.0).collect()
     jac_pairs = {(r.doc_a, r.doc_b): r.jaccard for r in jac}
     assert jac_pairs.get((1, 2), 0.0) < 0.1
 
@@ -607,9 +599,9 @@ def test_containment_df_cap_is_conservative(spark):
         [(1, "a b c d", "en", 7), (2, "a b c d e f", "en", 11)],
         "doc_id long, text string, lang string, n_chars long",
     )
-    high = containment_pairs(docs, n=2, threshold=0.5, max_shingle_df=100).collect()
+    high = containment_pairs(docs, threshold=0.5, max_shingle_df=100).collect()
     assert [(r.doc_a, r.doc_b, r.containment) for r in high] == [(1, 2, 1.0)]
-    low = containment_pairs(docs, n=2, threshold=0.01, max_shingle_df=1).collect()
+    low = containment_pairs(docs, threshold=0.01, max_shingle_df=1).collect()
     assert low == []
 
 
@@ -681,7 +673,7 @@ def test_ppjoin_finds_planted_exact_copies(spark, sf_dir):
     kept-shingle inverted list (the efficiency claim)."""
     from movie_data_transformer_spark.operators.dedup import ppjoin_prefix_pairs
 
-    pairs = ppjoin_prefix_pairs(_corpus(spark, sf_dir), n=2).collect()
+    pairs = ppjoin_prefix_pairs(_corpus(spark, sf_dir)).collect()
     got = {(r.doc_a, r.doc_b): r.jaccard for r in pairs}
     exact = [(i, i + 200000) for i in range(50, 100)]
     missing = [p for p in exact if p not in got]

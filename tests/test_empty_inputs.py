@@ -76,12 +76,12 @@ def test_incremental_dedup_empty_batch_and_empty_state(spark):
     e_bands = band_table(minhash_signatures_from_arrays(e_sets))
     # empty batch vs populated index
     assert (
-        incremental_minhash_pairs_from_index(sets, bands, e_sets, threshold=0.3).count()
+        incremental_minhash_pairs_from_index(sets, bands, e_sets).count()
         == 0
     )
     # populated batch vs empty index: no state, no self-pairs suppressed
     # beyond the index contract (batch docs still pair among themselves)
-    got = incremental_minhash_pairs_from_index(e_sets, e_bands, sets, threshold=0.3)
+    got = incremental_minhash_pairs_from_index(e_sets, e_bands, sets)
     assert got.count() == 0  # the two docs share no shingles
 
 

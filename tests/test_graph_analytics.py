@@ -24,7 +24,7 @@ def test_pagerank_matches_numpy_power_iteration(spark):
         (2, 4, 1.0),
     ]
     edges = spark.createDataFrame(rows, "src long, dst long, weight double")
-    got = {r.node: r.pr for r in pagerank(edges, damping=0.85, n_iter=20).collect()}
+    got = {r.node: r.pr for r in pagerank(edges, n_iter=20).collect()}
 
     nodes = sorted({r[0] for r in rows} | {r[1] for r in rows})
     idx = {v: i for i, v in enumerate(nodes)}
@@ -200,7 +200,7 @@ def test_connected_components_releases_round_checkpoints(spark):
     pairs = spark.createDataFrame(
         [(i, i + 1) for i in range(16)], "doc_a long, doc_b long"
     )
-    out = connected_components(pairs, max_iter=20)
+    out = connected_components(pairs)
     rows = {(r.doc_id, r.cluster_root) for r in out.collect()}
     assert rows == {(i, 0) for i in range(17)}
     live = len(sc._jsc.sc().getRDDStorageInfo())

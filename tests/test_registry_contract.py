@@ -68,29 +68,42 @@ def _names(tree: ast.AST) -> Counter:
     return out
 
 
+PKG = REPO / "movie_data_transformer_spark"
+
+
+def _package_modules() -> dict[str, ast.Module]:
+    """Every package module, parsed, by dotted name below the package."""
+    return {
+        ".".join(p.relative_to(PKG).with_suffix("").parts): ast.parse(p.read_text())
+        for p in sorted(PKG.rglob("*.py"))
+    }
+
+
+def _outside_package() -> list[ast.Module]:
+    """The code outside the package that is not a test: tools/,
+    perfbench/ (not perfbench/tests), bench.py and __spark_entry__.py."""
+    paths = list((REPO / "tools").rglob("*.py"))
+    paths += [
+        p for p in (REPO / "perfbench").rglob("*.py")
+        if "tests" not in p.relative_to(REPO / "perfbench").parts
+    ]
+    paths += [REPO / "bench.py", REPO / "__spark_entry__.py"]
+    return [ast.parse(p.read_text()) for p in paths]
+
+
 def test_package_code_is_reached_outside_tests():
     """Every top-level function or class of the package is referenced by
     code that is not a test: the package outside the definition's own
     body, tools/, perfbench/ (not perfbench/tests), bench.py or
     __spark_entry__.py. Code only tests reach is deleted or wired in;
     the few kept on purpose are named in KEPT_UNREACHED."""
-    pkg = REPO / "movie_data_transformer_spark"
-    outside = list((REPO / "tools").rglob("*.py"))
-    outside += [
-        p for p in (REPO / "perfbench").rglob("*.py")
-        if "tests" not in p.relative_to(REPO / "perfbench").parts
-    ]
-    outside += [REPO / "bench.py", REPO / "__spark_entry__.py"]
+    modules = _package_modules()
     reached: Counter = Counter()
-    for p in outside:
-        reached.update(_names(ast.parse(p.read_text())))
-    modules = {p: ast.parse(p.read_text()) for p in pkg.rglob("*.py")}
-    for tree in modules.values():
+    for tree in [*modules.values(), *_outside_package()]:
         reached.update(_names(tree))
 
     unreached = set()
-    for p, tree in modules.items():
-        mod = ".".join(p.relative_to(pkg).with_suffix("").parts)
+    for mod, tree in modules.items():
         for d in tree.body:
             if not isinstance(d, (ast.FunctionDef, ast.AsyncFunctionDef, ast.ClassDef)):
                 continue
@@ -130,6 +143,167 @@ def test_package_modules_have_no_unused_imports():
                     if not used[bound]:
                         unused.append(f"{p.relative_to(REPO)}:{node.lineno} {bound}")
     assert not unused, unused
+
+
+#: Defaulted package parameters that every caller outside the tests
+#: passes one value, kept because the named test sets another one.
+KEPT_TEST_KNOBS = {
+    "operators.analytics_queries.pagerank(n_iter)":
+        "test_graph_analytics.py::test_pagerank_matches_numpy_power_iteration",
+    "operators.bpe.learn_bpe_merges(n_merges)": "test_bpe.py::test_bpe_classic_golden",
+    "operators.dedup.containment_pairs(max_shingle_df)":
+        "test_dedup.py::test_containment_df_cap_is_conservative",
+    "operators.dedup.containment_pairs(threshold)":
+        "test_dedup.py::test_containment_df_cap_is_conservative",
+    "operators.dedup.exact_substr_runs(window)":
+        "test_dedup.py::test_exact_substr_runs_golden_islands",
+    "operators.dedup.ngram_jaccard_pairs(threshold)":
+        "test_dedup.py::test_containment_catches_jaccard_blind_embedding",
+    "operators.dedup.simhash_near_pairs(max_bucket_size)":
+        "test_dedup.py::test_simhash_mega_bucket_cap_routes_to_exact_dedup",
+    "operators.graph_extras_queries.cowatch_user_edges(max_watchers)":
+        "test_graph_analytics.py::test_blockbuster_cap_excludes_hub_title_from_edges",
+    "operators.graph_extras_queries.kcore_peel(max_peels)":
+        "test_recsys_mixing.py::test_kcore_converges_within_bound_and_peels_the_chain",
+    "operators.layout_queries.small_files_inventory(glob)":
+        "test_dedup.py::test_streaming_dedup_compaction_bounds_file_count",
+    "operators.layout_queries.small_files_inventory(recursive)":
+        "test_dedup.py::test_streaming_dedup_compaction_bounds_file_count",
+    "operators.linkpred_queries.predicted_links(max_degree)":
+        "test_r8_properties.py::test_link_prediction_nonadjacent_and_hub_cap",
+    "operators.ml_queries.train_lr(iters)":
+        "test_graph_analytics.py::test_lr_trainer_learns_the_label_bucket",
+    "operators.multimodal.decode_media(fake)":
+        "test_text_multimodal.py::test_decode_stub_raises_without_fake",
+    "operators.ordered_stats.attach_order_stats(n_buckets)":
+        "test_r13_opt_plans.py::test_ordered_stats_descending_and_small_n",
+    "operators.recsys_queries.item_similarities(max_watchlist)":
+        "test_recsys_mixing.py::test_whale_cap_excludes_mega_watcher_from_model",
+    "operators.similarity.semdedup_pairs(k)":
+        "test_similarity.py::test_semdedup_finds_planted_pairs",
+    "operators.similarity.semdedup_pairs(n_iter)":
+        "test_similarity.py::test_semdedup_finds_planted_pairs",
+    "operators.similarity.semdedup_pairs(threshold)":
+        "test_similarity.py::test_semdedup_finds_planted_pairs",
+    "operators.text.chunk_documents(chunk_tokens)":
+        "test_text_multimodal.py::test_chunk_udtf_matches_expression_form",
+    "operators.text.chunk_documents_sliding(stride)":
+        "test_text_multimodal.py::test_sliding_chunks_cover_and_overlap",
+    "operators.text.chunk_documents_sliding(window)":
+        "test_text_multimodal.py::test_sliding_chunks_cover_and_overlap",
+    "streaming.ann_stream.run_streaming_ann_ingest(max_files_per_trigger)":
+        "test_similarity.py::test_streaming_ann_ingest_slicing_invariant_and_batch_sized",
+    "streaming.dedup_stream.run_streaming_incremental_dedup(compact_after)":
+        "test_dedup.py::test_streaming_dedup_compaction_bounds_file_count",
+    "streaming.dedup_stream.run_streaming_incremental_dedup(max_bucket_size)":
+        "test_dedup.py::test_streaming_incremental_dedup_matches_batch_any_slicing",
+    "streaming.dedup_stream.run_streaming_incremental_dedup(max_files_per_trigger)":
+        "test_dedup.py::test_streaming_incremental_dedup_matches_batch_any_slicing",
+}
+
+
+def _called_name(call: ast.Call) -> str | None:
+    f = call.func
+    return f.id if isinstance(f, ast.Name) else getattr(f, "attr", None)
+
+
+def _passed(call: ast.Call, name: str, index: int | None) -> ast.expr | None:
+    """What `call` passes for parameter `name` (positional `index`): the
+    argument, or None when it is omitted. A `*args` or `**kwargs` that
+    could supply it is returned as the call itself."""
+    for k in call.keywords:
+        if k.arg == name:
+            return k.value
+    for i, a in enumerate(call.args):
+        if isinstance(a, ast.Starred):
+            return call
+        if i == index:
+            return a
+    if any(k.arg is None for k in call.keywords):
+        return call
+    return None
+
+
+def _literal_text(expr: ast.expr) -> str | None:
+    """The source text of a literal or an UPPER_CASE name, else None."""
+    if isinstance(expr, ast.Name) and expr.id.isupper():
+        return expr.id
+    try:
+        ast.literal_eval(expr)
+    except ValueError:
+        return None
+    return ast.unparse(expr)
+
+
+def test_package_parameters_take_a_second_value():
+    """A setting with one value in use is a constant. Every defaulted
+    parameter of a top-level package function receives at least two
+    distinct values across its calls in the reach guard's scan set
+    (tests are not callers). An omitted argument counts as the default;
+    a literal or an UPPER_CASE name counts as its source text; any other
+    expression (a variable, a call) holds whatever its caller computes,
+    so a parameter that receives one passes. Functions with no call site
+    (the reach guard's job) and names the package defines twice are
+    skipped. The parameters a test sets to another value are named in
+    KEPT_TEST_KNOBS with that test."""
+    defs: dict[str, list] = {}
+    for mod, tree in _package_modules().items():
+        for d in tree.body:
+            if isinstance(d, (ast.FunctionDef, ast.AsyncFunctionDef)):
+                defs.setdefault(d.name, []).append((mod, d))
+    calls: dict[str, list] = {}
+    for tree in [*_package_modules().values(), *_outside_package()]:
+        for c in ast.walk(tree):
+            if isinstance(c, ast.Call) and _called_name(c) in defs:
+                calls.setdefault(_called_name(c), []).append(c)
+
+    single = set()
+    for name, found in defs.items():
+        if len(found) > 1 or name not in calls:
+            continue
+        mod, d = found[0]
+        a = d.args
+        pos = a.posonlyargs + a.args
+        params = list(zip(pos[len(pos) - len(a.defaults):], a.defaults))
+        params += [(p, v) for p, v in zip(a.kwonlyargs, a.kw_defaults) if v is not None]
+        for p, default in params:
+            index = pos.index(p) if p in pos else None
+            values = set()
+            for c in calls[name]:
+                v = _passed(c, p.arg, index)
+                values.add(_literal_text(default if v is None else v))
+            if None not in values and len(values) < 2:
+                single.add(f"{mod}.{name}({p.arg})")
+    assert single == set(KEPT_TEST_KNOBS), {
+        "one value in use": sorted(single - set(KEPT_TEST_KNOBS)),
+        "allowlisted but set twice": sorted(set(KEPT_TEST_KNOBS) - single),
+    }
+    for knob, test in KEPT_TEST_KNOBS.items():
+        path, _, test_name = test.partition("::")
+        fn = knob.split("(")[0].rsplit(".", 1)[1]
+        tree = ast.parse((REPO / "tests" / path).read_text())
+        tests = [d for d in tree.body if getattr(d, "name", None) == test_name]
+        assert any(
+            isinstance(c, ast.Call) and _called_name(c) == fn
+            for t in tests
+            for c in ast.walk(t)
+        ), (knob, test)
+
+
+def test_capture_plans_writes_only_to_its_out_dir(spark, sf_dir, tmp_path, monkeypatch):
+    """tools/capture_plans.py writes each plan it captures into the
+    directory its first argument names, and leaves the checked-in
+    plans/ evidence as it is."""
+    import sys
+
+    from tools import capture_plans
+
+    plans = {p: p.stat().st_mtime_ns for p in (REPO / "plans").rglob("*")}
+    monkeypatch.setenv("SPARK_GRAFT_SF_DIR", sf_dir)
+    monkeypatch.setattr(sys, "argv", ["capture_plans.py", str(tmp_path), "before", "movies_kv"])
+    assert capture_plans.main() == 0
+    assert {p: p.stat().st_mtime_ns for p in (REPO / "plans").rglob("*")} == plans
+    assert (tmp_path / "movies_kv_before.txt").read_text().startswith("== movies_kv (before")
 
 
 #: sf0.001 row-count floors for every rows-only registry entry (round-3

@@ -24,7 +24,7 @@ def test_brute_force_topk_matches_numpy(spark, sf_dir):
     emb = _emb(spark, sf_dir)
     rows = emb.collect()
     vecs = {r.vec_id: np.array(r.embedding, dtype=np.float64) for r in rows}
-    got = brute_force_topk(emb, emb.filter(F.col("vec_id") == 0), k=5).collect()
+    got = brute_force_topk(emb, emb.filter(F.col("vec_id") == 0)).collect()
     q = vecs[0]
     sims = {
         vid: float(np.dot(q, v) / (np.linalg.norm(q) * np.linalg.norm(v)))
@@ -40,8 +40,8 @@ def test_brute_force_topk_matches_numpy(spark, sf_dir):
 def test_ivf_recall_vs_brute_force(spark, sf_dir):
     emb = _emb(spark, sf_dir)
     queries = emb.filter(F.col("vec_id") % 50 == 0)
-    brute = {(r.query_id, r.neighbor_id) for r in brute_force_topk(emb, queries, k=5).collect()}
-    approx = {(r.query_id, r.neighbor_id) for r in ivf_topk(emb, queries, k=5, nprobe=2).collect()}
+    brute = {(r.query_id, r.neighbor_id) for r in brute_force_topk(emb, queries).collect()}
+    approx = {(r.query_id, r.neighbor_id) for r in ivf_topk(emb, queries).collect()}
     recall = len(brute & approx) / len(brute)
     # The synthetic vectors are uniform random — there IS no cluster
     # structure, so any ANN's recall floor is ~nprobe/ncells (0.2 here).
@@ -60,8 +60,8 @@ def test_numpy_topk_equals_hof_topk(spark, sf_dir):
 
     emb = _emb(spark, sf_dir)
     queries = emb.filter(F.col("vec_id") % 100 == 0)
-    hof = {(r.query_id, r.rk): (r.neighbor_id, r.cos_sim) for r in brute_force_topk(emb, queries, k=5).collect()}
-    np_ = {(r.query_id, r.rk): (r.neighbor_id, r.cos_sim) for r in brute_force_topk_np(emb, queries, k=5).collect()}
+    hof = {(r.query_id, r.rk): (r.neighbor_id, r.cos_sim) for r in brute_force_topk(emb, queries).collect()}
+    np_ = {(r.query_id, r.rk): (r.neighbor_id, r.cos_sim) for r in brute_force_topk_np(emb, queries).collect()}
     assert hof == np_
 
 
@@ -75,26 +75,26 @@ def test_lsh_bucket_topk_mechanics(spark, sf_dir):
 
     emb = _emb(spark, sf_dir)
     queries = emb.filter(F.col("vec_id") % 100 == 0)
-    got = lsh_bucket_topk(emb, queries, k=5, n_planes=4).collect()
+    got = lsh_bucket_topk(emb, queries).collect()
     assert len(got) > 0
     # every returned neighbor shares the query's signature bucket
     sigs = {
         r.vec_id: r.s
         for r in emb.select(
-            "vec_id", hyperplane_signature(F.col("embedding"), 4).alias("s")
+            "vec_id", hyperplane_signature(F.col("embedding")).alias("s")
         ).collect()
     }
     for r in got:
         assert sigs[r.query_id] == sigs[r.neighbor_id]
     # recall floor: same-bucket fraction ~2^-n_planes of uniform data;
     # any overlap with true top-k beats random-k selection
-    brute = {(r.query_id, r.neighbor_id) for r in brute_force_topk(emb, queries, k=5).collect()}
+    brute = {(r.query_id, r.neighbor_id) for r in brute_force_topk(emb, queries).collect()}
     approx = {(r.query_id, r.neighbor_id) for r in got}
     assert len(brute & approx) > 0
 
 
 def test_near_pairs_symmetric_and_thresholded(spark, sf_dir):
-    pairs = cosine_near_pairs(_emb(spark, sf_dir), threshold=0.35).collect()
+    pairs = cosine_near_pairs(_emb(spark, sf_dir)).collect()
     assert all(r.doc_a < r.doc_b for r in pairs)
     assert all(r.cos_sim >= 0.35 for r in pairs)
 
@@ -162,20 +162,20 @@ def test_pq_codes_and_recall_vs_brute_force(spark, sf_dir):
 
     emb = _emb(spark, sf_dir)
     n = emb.count()
-    codebooks = pq_train_codebooks(emb, m=8, ks=16)
+    codebooks = pq_train_codebooks(emb)
     # 8 subspaces x 16 centroids, each an 8-dim mean vector
     cb = codebooks.collect()
     assert len(cb) == 8 * 16
     assert all(len(r.centroid) == 8 for r in cb)
 
-    codes = pq_encode(emb, codebooks, m=8)
+    codes = pq_encode(emb, codebooks)
     # every vector gets exactly one code per subspace, codes in range
     assert codes.count() == n * 8
     assert codes.filter((F.col("cid") < 0) | (F.col("cid") >= 16)).count() == 0
 
     queries = emb.filter(F.col("vec_id") % 50 == 0)
-    brute = {(r.query_id, r.neighbor_id) for r in brute_force_topk(emb, queries, k=5).collect()}
-    approx_rows = pq_topk(emb, queries, k=5).collect()
+    brute = {(r.query_id, r.neighbor_id) for r in brute_force_topk(emb, queries).collect()}
+    approx_rows = pq_topk(emb, queries).collect()
     approx = {(r.query_id, r.neighbor_id) for r in approx_rows}
     assert len(approx) == len(brute)  # full result sets for every query
     recall = len(brute & approx) / len(brute)
@@ -240,12 +240,11 @@ def test_ivf_incremental_assign_matches_numpy_exact_integers(spark, sf_dir):
     assert got == want
 
 
-def test_streaming_ann_ingest_slicing_invariant_and_batch_sized(spark, sf_dir):
+def test_streaming_ann_ingest_slicing_invariant_and_batch_sized(spark, sf_dir, tmp_path):
     """The streamed assignment log equals the batch-form result under a
     different slicing (2 files per trigger vs the registry entry's 1),
     and each micro-batch commits exactly its own rows (no rewrite)."""
     import os
-    import tempfile
 
     from movie_data_transformer_spark.operators.recall_queries import (
         _ingest_embeddings_jsonl_dir,
@@ -262,7 +261,7 @@ def test_streaming_ann_ingest_slicing_invariant_and_batch_sized(spark, sf_dir):
     }
     seed = load_table(spark, sf_dir, "embeddings")
     src = _ingest_embeddings_jsonl_dir(spark, sf_dir)
-    work = tempfile.mkdtemp(prefix="mdt_ann_stream_test_")
+    work = str(tmp_path)
     out = run_streaming_ann_ingest(spark, src, seed, work, max_files_per_trigger=2)
     got = {
         (r.vec_id, r.cell, r.dist_micro) for r in spark.read.parquet(out).collect()

@@ -16,7 +16,7 @@ def test_salted_join_equals_plain_join(spark, sf_dir):
         F.col("c_custkey").alias("custkey"), "c_name"
     )
     got = sorted(
-        (r.o_orderkey, r.c_name) for r in salted_join(o, c, "custkey", n_salts=8).collect()
+        (r.o_orderkey, r.c_name) for r in salted_join(o, c, "custkey").collect()
     )
     want = sorted((r.o_orderkey, r.c_name) for r in o.join(c, "custkey").collect())
     assert got == want

@@ -9,7 +9,7 @@ from movie_data_transformer_spark.streaming.windows import sliding_counts
 def test_streaming_sliding_equals_batch(spark, sf_dir, tmp_path):
     stream = load_events_stream(spark, sf_dir).withWatermark("ts", "2 hours")
     q = (
-        sliding_counts(stream, "1 hour", "30 minutes")
+        sliding_counts(stream)
         .writeStream.format("memory")
         .queryName("sliding_test")
         .outputMode("complete")
@@ -24,6 +24,6 @@ def test_streaming_sliding_equals_batch(spark, sf_dir, tmp_path):
     }
     want = {
         (r.bucket_start, r.event_type): r.n_events
-        for r in sliding_counts(load_table(spark, sf_dir, "events"), "1 hour", "30 minutes").collect()
+        for r in sliding_counts(load_table(spark, sf_dir, "events")).collect()
     }
     assert got == want and len(got) > 0

@@ -6,8 +6,6 @@ merge checked together under arbitrary workloads."""
 
 from __future__ import annotations
 
-import tempfile
-
 from hypothesis import HealthCheck, given, settings
 from hypothesis import strategies as st
 
@@ -28,10 +26,11 @@ batch_strategy = st.lists(
     suppress_health_check=[HealthCheck.function_scoped_fixture],
 )
 @given(st.lists(batch_strategy, min_size=1, max_size=3))
-def test_snapshot_store_matches_dict_model(spark, batches):
+def test_snapshot_store_matches_dict_model(spark, tmp_path_factory, batches):
     from movie_data_transformer_spark.sinks.snapshot import SnapshotTable
 
-    root = tempfile.mkdtemp(prefix="snapmodel_")
+    # a fresh dir per example: every example commits from version 1
+    root = str(tmp_path_factory.mktemp("snapmodel"))
     stt = SnapshotTable(spark, root, n_buckets=4)
 
     def to_df(batch):

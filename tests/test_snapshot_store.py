@@ -5,8 +5,6 @@ commit), and additive merge correctness for new and existing keys."""
 
 from __future__ import annotations
 
-import tempfile
-
 from pyspark.sql import functions as F
 
 from movie_data_transformer_spark.sinks.snapshot import SnapshotTable
@@ -16,8 +14,8 @@ def _state(spark, rows):
     return spark.createDataFrame(rows, "user_id long, total long, n long")
 
 
-def test_cow_sharing_and_snapshot_isolation(spark):
-    root = tempfile.mkdtemp(prefix="snapstore_test_")
+def test_cow_sharing_and_snapshot_isolation(spark, tmp_path):
+    root = str(tmp_path)
     st = SnapshotTable(spark, root, n_buckets=8)
     # users 0..15 -> every bucket 0..7 holds exactly two users
     st.commit_full(_state(spark, [(u, 10 * u, 1) for u in range(16)]), "user_id", 1)
@@ -51,8 +49,8 @@ def test_cow_sharing_and_snapshot_isolation(spark):
     assert len(v2) == 17
 
 
-def test_versions_listing_and_read_paths(spark):
-    root = tempfile.mkdtemp(prefix="snapstore_test2_")
+def test_versions_listing_and_read_paths(spark, tmp_path):
+    root = str(tmp_path)
     st = SnapshotTable(spark, root, n_buckets=4)
     st.commit_full(_state(spark, [(u, u, 1) for u in range(8)]), "user_id", 1)
     st.merge_additive(
@@ -64,11 +62,10 @@ def test_versions_listing_and_read_paths(spark):
     assert st.read(2).filter(F.col("user_id") == 0).collect()[0].total == 1
 
 
-def test_vacuum_retention(spark):
+def test_vacuum_retention(spark, tmp_path):
     import os
-    import tempfile
 
-    root = tempfile.mkdtemp(prefix="snapstore_vac_")
+    root = str(tmp_path)
     st = SnapshotTable(spark, root, n_buckets=4)
     st.commit_full(_state(spark, [(u, u, 1) for u in range(8)]), "user_id", 1)
     st.merge_additive(_state(spark, [(0, 1, 1)]), "user_id", ["total", "n"], 1, 2)
@@ -86,20 +83,18 @@ def test_vacuum_retention(spark):
     assert os.path.exists(os.path.join(root, "files/c1/pb=2"))
 
 
-def test_stream_snapshot_versions_accumulate(spark, sf_dir):
+def test_stream_snapshot_versions_accumulate(spark, sf_dir, tmp_path):
     """The streaming form commits one version per micro-batch (4 input
     files -> 4 versions) and every intermediate version stays readable
     with internally-consistent totals (time travel across the batch
     history: row mass is non-decreasing in version)."""
-    import tempfile
-
     from movie_data_transformer_spark.operators.snapshot_queries import (
         _purchase_jsonl_dir,
         run_stream_snapshot_merge,
     )
 
     input_dir = _purchase_jsonl_dir(spark, sf_dir)
-    root = tempfile.mkdtemp(prefix="snapstream_test_")
+    root = str(tmp_path)
     st = run_stream_snapshot_merge(spark, input_dir, root)
     assert st.versions() == [1, 2, 3, 4]
     masses = []
@@ -110,18 +105,16 @@ def test_stream_snapshot_versions_accumulate(spark, sf_dir):
     assert masses == sorted(masses) and masses[-1] > masses[0]
 
 
-def test_partial_bucket_merge_keeps_stored_decimal_schema(spark):
+def test_partial_bucket_merge_keeps_stored_decimal_schema(spark, tmp_path):
     """Regression (found by review): sum() widens decimal types, so a
     merge touching only SOME buckets used to give rewritten buckets a
     parquet schema the carried-forward buckets don't share — read() of
     the merged version crashed with a column-type mismatch. The merged
     values must be cast back to the stored types."""
-    import tempfile
-
     from pyspark.sql import Window
     from pyspark.sql import functions as F
 
-    root = tempfile.mkdtemp(prefix="snapstore_dec_")
+    root = str(tmp_path)
     st = SnapshotTable(spark, root, n_buckets=8)
     state = spark.createDataFrame(
         [(u, float(u)) for u in range(16)], "user_id long, v double"
@@ -140,16 +133,14 @@ def test_partial_bucket_merge_keeps_stored_decimal_schema(spark):
     assert got[3] == 4.5 and got[0] == 0.0 and len(got) == 16
 
 
-def test_new_bucket_merge_adopts_stored_types(spark):
+def test_new_bucket_merge_adopts_stored_types(spark, tmp_path):
     """Review follow-up: a batch introducing a bucket ABSENT from the
     prior manifest must still write the STORE's value types (taken from
     any stored directory), not its own wider ones — otherwise the mixed
     parquet-schema crash returns through the new-bucket path."""
-    import tempfile
-
     from pyspark.sql import functions as F
 
-    root = tempfile.mkdtemp(prefix="snapstore_newb_")
+    root = str(tmp_path)
     st = SnapshotTable(spark, root, n_buckets=8)
     # v1 only has buckets 0..3 (users 0..3), values decimal(18,4)
     v1 = spark.createDataFrame(
@@ -168,14 +159,13 @@ def test_new_bucket_merge_adopts_stored_types(spark):
     assert types["total"] == "decimal(18,4)"
 
 
-def test_vacuum_pre_commit_and_empty_commit_dirs(spark):
+def test_vacuum_pre_commit_and_empty_commit_dirs(spark, tmp_path):
     """r6 ADVICE: vacuum on a store with no commits is a no-op (no
     FileNotFoundError), and a vacuum that empties a files/c<version>
     directory removes the husk instead of leaving it behind."""
     import os
-    import tempfile
 
-    root = tempfile.mkdtemp(prefix="snapstore_vac_edge_")
+    root = str(tmp_path)
     st = SnapshotTable(spark, root, n_buckets=4)
     assert st.vacuum(keep_versions=[]) == []  # pre-first-commit: no-op
 

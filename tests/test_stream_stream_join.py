@@ -16,7 +16,7 @@ def test_stream_conversions_equals_batch_range_join(spark, sf_dir, tmp_path):
     views = _stream().filter(F.col("event_type") == "view")
     purchases = _stream().filter(F.col("event_type") == "purchase")
     q = (
-        stream_conversions(views, purchases, 600)
+        stream_conversions(views, purchases)
         .writeStream.format("memory")
         .queryName("conversions")
         .outputMode("append")

@@ -2,6 +2,10 @@
 
 from __future__ import annotations
 
+import glob
+import os
+import tempfile
+
 from pyspark.sql import functions as F
 
 from movie_data_transformer_spark.sources.tables import load_events_stream, load_table
@@ -115,20 +119,18 @@ def test_late_file_rows_are_all_dropped_by_watermark(spark, sf_dir, tmp_path):
     assert dropped.get(2) == n_late
 
 
-def test_harness_zero_microbatches_returns_empty(spark):
+def test_harness_zero_microbatches_returns_empty(spark, tmp_path):
     """r6 ADVICE: an availableNow stream whose source yields NO files
     runs zero micro-batches, so foreachBatch never writes the emissions
     dir — the harness must return an empty DataFrame with the stream's
     schema, not crash on the missing parquet path."""
-    import tempfile
-
     from pyspark.sql.types import LongType, StructField, StructType
 
     from movie_data_transformer_spark.streaming.harness import (
         run_availablenow_to_df,
     )
 
-    src = tempfile.mkdtemp(prefix="mdt_empty_stream_src_")
+    src = str(tmp_path)
     schema = StructType(
         [StructField("user_id", LongType()), StructField("value", LongType())]
     )
@@ -138,3 +140,25 @@ def test_harness_zero_microbatches_returns_empty(spark):
     out = run_availablenow_to_df(stream, "append", "mdt_empty_stream_")
     assert out.columns == ["user_id", "value"]
     assert out.count() == 0
+
+
+def test_stream_and_export_entries_register_their_dirs(spark, sf_dir):
+    """The dir each of these entries leaves on disk for its lazy read is
+    registered for removal at process exit. The first pass builds the
+    entries' shared input fixtures; every mdt_* dir the second pass
+    leaves behind must be one the process owns."""
+    import __spark_entry__ as e
+
+    from movie_data_transformer_spark.streaming import harness
+
+    names = ("stream_incremental_dedup", "stream_ann_ingest", "export_training_manifest")
+    qs = e.queries()
+    pattern = os.path.join(tempfile.gettempdir(), "mdt_*")
+    for name in names:
+        qs[name](spark, sf_dir).collect()
+    before = set(glob.glob(pattern))
+    for name in names:
+        qs[name](spark, sf_dir).collect()
+    left = set(glob.glob(pattern)) - before
+    assert len(left) == len(names)
+    assert left <= set(harness._OWNED_STABLE_DIRS), sorted(left)

@@ -9,7 +9,7 @@ from movie_data_transformer_spark.streaming.windows import tumbling_counts
 def test_streaming_tumbling_equals_batch(spark, sf_dir, tmp_path):
     # version-robust streaming read (nanos parquet) — sources/tables.py
     stream = load_events_stream(spark, sf_dir)
-    agg = tumbling_counts(stream.withWatermark("ts", "2 hours"), "1 hour")
+    agg = tumbling_counts(stream.withWatermark("ts", "2 hours"))
     q = (
         agg.writeStream.format("memory")
         .queryName("tumbling_test")
@@ -25,6 +25,6 @@ def test_streaming_tumbling_equals_batch(spark, sf_dir, tmp_path):
     }
     want = {
         (r.bucket_start, r.event_type): (r.n_events, r.sum_value)
-        for r in tumbling_counts(load_table(spark, sf_dir, "events"), "1 hour").collect()
+        for r in tumbling_counts(load_table(spark, sf_dir, "events")).collect()
     }
     assert got == want and len(got) > 0

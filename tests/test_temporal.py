@@ -20,7 +20,7 @@ def test_asof_inclusive_at_equal_ts_and_null_when_no_prior(spark):
     out = {
         r.event_id: (r.asof_event_id, r.asof_value)
         for r in asof_join(
-            purchases, views, "user_id", "ts", "ts", ["event_id", "value"], right_seq="event_id"
+            purchases, views, "user_id", "ts", "ts", ["event_id", "value"]
         ).collect()
     }
     assert out[1] == (10, 5.5)  # equal ts -> inclusive match
@@ -34,7 +34,7 @@ def test_asof_tie_break_is_latest_seq(spark):
         [(10, 7, TS(2024, 1, 1, 11, 0, 0), 1.0), (11, 7, TS(2024, 1, 1, 11, 0, 0), 2.0)],
     )
     out = asof_join(
-        purchases, views, "user_id", "ts", "ts", ["event_id", "value"], right_seq="event_id"
+        purchases, views, "user_id", "ts", "ts", ["event_id", "value"]
     ).collect()[0]
     assert out.asof_event_id == 11  # highest seq among equal timestamps
 

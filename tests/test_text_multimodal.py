@@ -55,7 +55,7 @@ def test_decode_stub_raises_without_fake():
 
 def test_media_features_deterministic_histogram(spark):
     media = synthesize_media(_docs(spark, ["abab"]))  # bytes 97,98,97,98
-    feats = extract_features(media, fake_decode=True).collect()[0]
+    feats = extract_features(media).collect()[0]
     # 97%8=1, 98%8=2 -> buckets 1 and 2 get 0.5 each
     expect = [0.0, 0.5, 0.5, 0.0, 0.0, 0.0, 0.0, 0.0]
     assert [round(x, 6) for x in feats.features] == expect
@@ -64,7 +64,7 @@ def test_media_features_deterministic_histogram(spark):
 
 def test_frame_sample_only_videos(spark, sf_dir):
     media = synthesize_media(load_table(spark, sf_dir, "documents"))
-    frames = frame_sample(media, every_n=10)
+    frames = frame_sample(media)
     ids = {r.doc_id for r in frames.select("doc_id").distinct().collect()}
     assert ids and all(i % 3 == 2 for i in ids)
 
@@ -172,7 +172,7 @@ def test_pack_sequences_budget_and_determinism(spark, sf_dir):
     from movie_data_transformer_spark.sources.tables import load_table
 
     chunks = chunk_documents(load_table(spark, sf_dir, "documents"))
-    packed = pack_sequences(chunks, budget=200, n_buckets=8)
+    packed = pack_sequences(chunks)
     rows = packed.collect()
     assert len(rows) == chunks.count()  # every chunk assigned exactly once
 
@@ -188,7 +188,7 @@ def test_pack_sequences_budget_and_determinism(spark, sf_dir):
     assert sum(fill.values()) / len(fill) > 140
 
     # deterministic under a different input partitioning
-    again = pack_sequences(chunks.repartition(17), budget=200, n_buckets=8)
+    again = pack_sequences(chunks.repartition(17))
     a = {(r.doc_id, r.chunk_idx): (r.bucket, r.bin_id) for r in rows}
     b = {(r.doc_id, r.chunk_idx): (r.bucket, r.bin_id) for r in again.collect()}
     assert a == b

@@ -1,16 +1,17 @@
 """Capture `.explain("formatted")` output for registry queries.
 
-Writes plans/r{ROUND}/<query>_<suffix>.txt for each requested query —
-the optimization-round evidence files the judge checks plan claims
-against (the judge cannot run Spark). Plans are built, not executed,
-so this is cheap and safe to run anytime.
+Writes <out_dir>/<query>_<suffix>.txt for each requested query, so two
+captures of the same entries (before and after a change) can be diffed.
+Most plans are built without running a query; entries that run a stream
+or write an export while their DataFrame is built (stream_*,
+export_training_manifest) do that work here too, so a full 390-entry
+capture at sf0.01 takes minutes.
 
 Usage:
-    python tools/capture_plans.py <suffix> [query ...]
-suffix: before | after.  With no query names, captures the full
-bench.py HEADLINE list.  SPARK_GRAFT_SF_DIR picks the data dir
+    python tools/capture_plans.py <out_dir> [suffix] [query ...]
+suffix: before | after (default before).  With no query names, captures
+the full bench.py HEADLINE list.  SPARK_GRAFT_SF_DIR picks the data dir
 (default sf0.1 — same as bench, so the plans match the measured runs).
-Round defaults to 12; override with SPARK_GRAFT_BENCH_ROUND.
 """
 
 from __future__ import annotations
@@ -26,15 +27,13 @@ def main() -> int:
     from movie_data_transformer_spark import registry
     from movie_data_transformer_spark.session import get_spark
 
-    suffix = sys.argv[1] if len(sys.argv) > 1 else "before"
-    names = sys.argv[2:] or HEADLINE
+    if len(sys.argv) < 2:
+        print(__doc__)
+        return 2
+    out_dir = sys.argv[1]
+    suffix = sys.argv[2] if len(sys.argv) > 2 else "before"
+    names = sys.argv[3:] or HEADLINE
     sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    rnd = int(os.environ.get("SPARK_GRAFT_BENCH_ROUND", "12"))
-    out_dir = os.path.join(
-        os.path.dirname(os.path.dirname(os.path.abspath(__file__))),
-        "plans",
-        f"r{rnd}",
-    )
     os.makedirs(out_dir, exist_ok=True)
 
     spark = get_spark("capture-plans")
