@@ -14,10 +14,11 @@ Layout:
     sources/       JSONL/parquet readers (scan + path-filter + permissive)
     fixtures.py    deterministic derivation of the nested `movies` table
     operators/     the operator library (movie pipeline, merge, relational,
-                   dedup, similarity, text)
+                   dedup, similarity, text, multimodal; multimodal.py
+                   decodes containers only: WAV/BMP/PNG/GIF/JPEG/AVI
+                   parsed in Python, no external codec)
     streaming/     Structured Streaming forms (micro-batch, event-time)
     sinks/         KV sink (foreachPartition writer)
-    plans/         plan-inspection helpers (explain audits)
 """
 
 __version__ = "0.1.0"

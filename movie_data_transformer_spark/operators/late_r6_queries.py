@@ -6,13 +6,12 @@ else — full DuckDB oracles, exact integer math, validated at 3 SFs.
 
 from __future__ import annotations
 
-from collections.abc import Iterator
-
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql.types import LongType, StructField, StructType
 
 from movie_data_transformer_spark.operators.multimodal import (
     bmp_decode_pixels,
+    map_media_rows,
     synthesize_bmp_media,
 )
 from movie_data_transformer_spark.sources.tables import load_table
@@ -42,46 +41,34 @@ def q_mm_histogram_equalize(spark: SparkSession, sf_dir: str) -> DataFrame:
     so the denominator never hits 0. One mapInPandas projection, no
     shuffle; the oracle recomputes the mapping from the pixel formula
     with a per-level cumulative window."""
-    import pandas as pd
-
     docs = load_table(spark, sf_dir, "documents")
     media = synthesize_bmp_media(docs)
 
-    def eq(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
+    def eq(row) -> list[tuple]:
         import numpy as np
 
-        for pdf in batches:
-            out = []
-            for doc_id, blob in zip(pdf["doc_id"], pdf["content"]):
-                img = bmp_decode_pixels(bytes(blob)).astype(np.int64)
-                r = img[:, :, 0].ravel()
-                n = r.size
-                levels, counts = np.unique(r, return_counts=True)
-                cdf = np.cumsum(counts)
-                cdf_min = int(cdf[0])
-                mapped = (cdf - cdf_min) * 255 // (n - cdf_min)
-                lut = dict(zip(levels.tolist(), mapped.tolist()))
-                eqv = np.array([lut[v] for v in r.tolist()], dtype=np.int64)
-                out.append(
-                    (
-                        int(doc_id),
-                        int(n),
-                        int(levels.size),
-                        int(np.unique(eqv).size),
-                        int(eqv.sum()),
-                        int(eqv.min()),
-                        int(eqv.max()),
-                    )
-                )
-            yield pd.DataFrame(
-                out,
-                columns=[
-                    "doc_id", "n_px", "levels_before", "levels_after",
-                    "eq_sum", "eq_min", "eq_max",
-                ],
+        img = bmp_decode_pixels(bytes(row.content)).astype(np.int64)
+        r = img[:, :, 0].ravel()
+        n = r.size
+        levels, counts = np.unique(r, return_counts=True)
+        cdf = np.cumsum(counts)
+        cdf_min = int(cdf[0])
+        mapped = (cdf - cdf_min) * 255 // (n - cdf_min)
+        lut = dict(zip(levels.tolist(), mapped.tolist()))
+        eqv = np.array([lut[v] for v in r.tolist()], dtype=np.int64)
+        return [
+            (
+                int(row.doc_id),
+                int(n),
+                int(levels.size),
+                int(np.unique(eqv).size),
+                int(eqv.sum()),
+                int(eqv.min()),
+                int(eqv.max()),
             )
+        ]
 
-    return media.mapInPandas(eq, HISTEQ_SCHEMA)
+    return map_media_rows(media, eq, HISTEQ_SCHEMA)
 
 
 SQL_MM_HISTOGRAM_EQUALIZE = """

@@ -731,9 +731,10 @@ def q_sim_pq_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 def q_mm_media_features(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Binary-column plumbing: synthesize media table, extract features via
-    Arrow-batched mapInPandas (fake decoder). FULLY ORACLE-CHECKED since
-    r4: the fake feature is an integer-exact byte histogram (micro-unit
-    normalization, no float rounding — multimodal.extract_features), the
+    Arrow-batched mapInPandas (raw payload bytes, no decode). FULLY
+    ORACLE-CHECKED since r4: the feature is an integer-exact byte
+    histogram (micro-unit normalization, no float rounding —
+    multimodal.extract_features), the
     corpus is pure ASCII so DuckDB reproduces the byte values via
     ascii(), and each element is formatted through DECIMAL(9,6) on both
     sides (fixed-point string, never scientific notation). The float32

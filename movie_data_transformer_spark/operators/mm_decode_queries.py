@@ -9,8 +9,8 @@ exact-integer-features loop distributed (mapInPandas both ways) and is
 held to a DuckDB oracle that recomputes the features from the integer
 generative formulas alone, so a header mis-parse, a padding bug, an
 endianness slip, a channel-order swap, or an entropy-decode slip breaks
-the driver value hash. Only VIDEO (mp4) remains the documented stub in
-multimodal.decode_media.
+the driver value hash. Video is the AVI tier of mm_video_queries;
+compressed video codecs (H.264/mp4) are not decoded.
 """
 
 from __future__ import annotations

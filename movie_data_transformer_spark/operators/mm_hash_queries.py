@@ -21,13 +21,13 @@ shuffle; the result is 3 bigints per image.
 
 from __future__ import annotations
 
-from collections.abc import Iterator
-
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
+from pyspark.sql.types import LongType, StructField, StructType
 
 from movie_data_transformer_spark.operators.multimodal import (
     bmp_decode_pixels,
+    map_media_rows,
     synthesize_bmp_media,
 )
 from movie_data_transformer_spark.sources.tables import load_table
@@ -35,42 +35,39 @@ from movie_data_transformer_spark.sources.tables import load_table
 DH_W = 8  # 8 comparison bits per row -> 9 sampled columns
 DH_H = 8
 
+DHASH_SCHEMA = StructType(
+    [
+        StructField(c, LongType())
+        for c in ("doc_id", "src_w", "src_h", "hash_hi", "hash_lo")
+    ]
+)
+
 
 def dhash_rows(media: DataFrame) -> DataFrame:
     """(doc_id, src_w, src_h, hash_hi, hash_lo): 64-bit dHash split into
     two unsigned 32-bit halves (bit k of the hash = row-major comparison
     ty * DH_W + tx; k in [32, 64) lands in hash_hi at k - 32)."""
-    import pandas as pd
 
-    def _hash(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
+    def _hash(row) -> list[tuple]:
         import numpy as np
 
-        for pdf in batches:
-            out = []
-            for doc_id, blob in zip(pdf["doc_id"], pdf["content"]):
-                img = bmp_decode_pixels(bytes(blob)).astype(np.int64)
-                h, w = img.shape[:2]
-                sx = (np.arange(DH_W + 1) * w) // (DH_W + 1)
-                sy = (np.arange(DH_H) * h) // DH_H
-                cell = img[np.ix_(sy, sx)]
-                gray = (
-                    299 * cell[:, :, 0] + 587 * cell[:, :, 1] + 114 * cell[:, :, 2]
-                ) // 1000
-                bits = (gray[:, :-1] < gray[:, 1:]).astype(np.int64)  # (DH_H, DH_W)
-                k = np.arange(DH_H * DH_W, dtype=np.int64).reshape(DH_H, DH_W)
-                w_lo = np.where(k < 32, np.int64(1) << np.minimum(k, 31), 0)
-                w_hi = np.where(k >= 32, np.int64(1) << np.maximum(k - 32, 0), 0)
-                lo = int((bits * w_lo).sum())
-                hi = int((bits * w_hi).sum())
-                out.append((int(doc_id), int(w), int(h), hi, lo))
-            yield pd.DataFrame(
-                out, columns=["doc_id", "src_w", "src_h", "hash_hi", "hash_lo"]
-            )
+        img = bmp_decode_pixels(bytes(row.content)).astype(np.int64)
+        h, w = img.shape[:2]
+        sx = (np.arange(DH_W + 1) * w) // (DH_W + 1)
+        sy = (np.arange(DH_H) * h) // DH_H
+        cell = img[np.ix_(sy, sx)]
+        gray = (
+            299 * cell[:, :, 0] + 587 * cell[:, :, 1] + 114 * cell[:, :, 2]
+        ) // 1000
+        bits = (gray[:, :-1] < gray[:, 1:]).astype(np.int64)  # (DH_H, DH_W)
+        k = np.arange(DH_H * DH_W, dtype=np.int64).reshape(DH_H, DH_W)
+        w_lo = np.where(k < 32, np.int64(1) << np.minimum(k, 31), 0)
+        w_hi = np.where(k >= 32, np.int64(1) << np.maximum(k - 32, 0), 0)
+        lo = int((bits * w_lo).sum())
+        hi = int((bits * w_hi).sum())
+        return [(int(row.doc_id), int(w), int(h), hi, lo)]
 
-    return media.mapInPandas(
-        _hash,
-        schema="doc_id long, src_w long, src_h long, hash_hi long, hash_lo long",
-    )
+    return map_media_rows(media, _hash, DHASH_SCHEMA)
 
 
 def q_mm_image_dhash(spark: SparkSession, sf_dir: str) -> DataFrame:

@@ -15,65 +15,44 @@ shuffle; constant-size output per blob.
 
 from __future__ import annotations
 
-from collections.abc import Iterator
-
 from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql.types import LongType, StructField, StructType
 
 from movie_data_transformer_spark.operators.multimodal import (
+    map_media_rows,
+    pcm_stats,
     synthesize_wav_media,
+    wav_decode_samples,
 )
 from movie_data_transformer_spark.sources.tables import load_table
 
 
-def q_mm_audio_resample_nearest(spark: SparkSession, sf_dir: str) -> DataFrame:
-    import pandas as pd
+RESAMPLE_SCHEMA = StructType(
+    [
+        StructField(c, LongType())
+        for c in (
+            "doc_id", "n_samples", "m_samples", "peak_abs",
+            "zero_crossings", "energy",
+        )
+    ]
+)
 
+
+def q_mm_audio_resample_nearest(spark: SparkSession, sf_dir: str) -> DataFrame:
     docs = load_table(spark, sf_dir, "documents")
     media = synthesize_wav_media(docs)
 
-    def resample(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        import io
-        import wave as wave_mod
-
+    def resample(row) -> list[tuple]:
         import numpy as np
 
-        for pdf in batches:
-            out = []
-            for doc_id, blob in zip(pdf["doc_id"], pdf["content"]):
-                with wave_mod.open(io.BytesIO(bytes(blob)), "rb") as wf:
-                    n = wf.getnframes()
-                    raw = wf.readframes(n)
-                x = np.frombuffer(raw, dtype="<i2").astype(np.int64)
-                m = n // 2
-                si = (np.arange(m, dtype=np.int64) * n) // m
-                y = x[si]
-                prev, cur = y[:-1], y[1:]
-                zc = int(((prev < 0) != (cur < 0)).sum())
-                out.append(
-                    (
-                        int(doc_id),
-                        int(n),
-                        int(m),
-                        int(np.abs(y).max()) if m else 0,
-                        zc,
-                        int((y * y).sum()),
-                    )
-                )
-            yield pd.DataFrame(
-                out,
-                columns=[
-                    "doc_id", "n_samples", "m_samples", "peak_abs",
-                    "zero_crossings", "energy",
-                ],
-            )
+        _rate, x = wav_decode_samples(row.content)
+        n = len(x)
+        m = n // 2
+        si = (np.arange(m, dtype=np.int64) * n) // m
+        y = x[si]
+        return [(int(row.doc_id), n, m) + pcm_stats(y)]
 
-    return media.mapInPandas(
-        resample,
-        schema=(
-            "doc_id long, n_samples long, m_samples long, peak_abs long,"
-            " zero_crossings long, energy long"
-        ),
-    )
+    return map_media_rows(media, resample, RESAMPLE_SCHEMA)
 
 
 SQL_MM_AUDIO_RESAMPLE_NEAREST = """

@@ -14,14 +14,16 @@ a thumbnail/embedding preprocessing stage wants at 100 TB.
 
 from __future__ import annotations
 
-from collections.abc import Iterator
-
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql.types import LongType, StructField, StructType
 
 from movie_data_transformer_spark.operators.multimodal import (
     bmp_decode_pixels,
+    map_media_rows,
+    pcm_stats,
     synthesize_bmp_media,
+    synthesize_wav_media,
+    wav_decode_samples,
 )
 from movie_data_transformer_spark.sources.tables import load_table
 
@@ -43,43 +45,31 @@ RESIZE_SCHEMA = StructType(
 
 
 def q_mm_resize_nearest(spark: SparkSession, sf_dir: str) -> DataFrame:
-    import pandas as pd
-
     docs = load_table(spark, sf_dir, "documents")
     media = synthesize_bmp_media(docs)
 
-    def resize(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
+    def resize(row) -> list[tuple]:
         import numpy as np
 
-        for pdf in batches:
-            out = []
-            for doc_id, blob in zip(pdf["doc_id"], pdf["content"]):
-                img = bmp_decode_pixels(bytes(blob))
-                h, w = img.shape[:2]
-                sx = (np.arange(TARGET_W) * w) // TARGET_W
-                sy = (np.arange(TARGET_H) * h) // TARGET_H
-                small = img[np.ix_(sy, sx)]
-                out.append(
-                    (
-                        int(doc_id),
-                        int(w),
-                        int(h),
-                        TARGET_W,
-                        TARGET_H,
-                        int(small[:, :, 0].sum()),
-                        int(small[:, :, 1].sum()),
-                        int(small[:, :, 2].sum()),
-                    )
-                )
-            yield pd.DataFrame(
-                out,
-                columns=[
-                    "doc_id", "src_w", "src_h", "out_w", "out_h",
-                    "sum_r", "sum_g", "sum_b",
-                ],
+        img = bmp_decode_pixels(bytes(row.content))
+        h, w = img.shape[:2]
+        sx = (np.arange(TARGET_W) * w) // TARGET_W
+        sy = (np.arange(TARGET_H) * h) // TARGET_H
+        small = img[np.ix_(sy, sx)]
+        return [
+            (
+                int(row.doc_id),
+                int(w),
+                int(h),
+                TARGET_W,
+                TARGET_H,
+                int(small[:, :, 0].sum()),
+                int(small[:, :, 1].sum()),
+                int(small[:, :, 2].sum()),
             )
+        ]
 
-    return media.mapInPandas(resize, RESIZE_SCHEMA)
+    return map_media_rows(media, resize, RESIZE_SCHEMA)
 
 
 SQL_MM_RESIZE_NEAREST = """
@@ -132,33 +122,21 @@ def q_mm_brightness_normalize(spark: SparkSession, sf_dir: str) -> DataFrame:
     per-channel max (e.g. computed over the whole image instead of the
     channel) or a round-instead-of-floor breaks the hash. One
     mapInPandas projection, no shuffle."""
-    import pandas as pd
-
     docs = load_table(spark, sf_dir, "documents")
     media = synthesize_bmp_media(docs)
 
-    def norm(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
+    def norm(media_row) -> list[tuple]:
         import numpy as np
 
-        for pdf in batches:
-            out = []
-            for doc_id, blob in zip(pdf["doc_id"], pdf["content"]):
-                img = bmp_decode_pixels(bytes(blob)).astype(np.int64)
-                maxes = img.reshape(-1, 3).max(axis=0)
-                row = [int(doc_id)]
-                row += [int(m) for m in maxes]
-                for ch in range(3):
-                    row.append(int((img[:, :, ch] * 255 // maxes[ch]).sum()))
-                out.append(tuple(row))
-            yield pd.DataFrame(
-                out,
-                columns=[
-                    "doc_id", "max_r", "max_g", "max_b",
-                    "norm_sum_r", "norm_sum_g", "norm_sum_b",
-                ],
-            )
+        img = bmp_decode_pixels(bytes(media_row.content)).astype(np.int64)
+        maxes = img.reshape(-1, 3).max(axis=0)
+        row = [int(media_row.doc_id)]
+        row += [int(m) for m in maxes]
+        for ch in range(3):
+            row.append(int((img[:, :, ch] * 255 // maxes[ch]).sum()))
+        return [tuple(row)]
 
-    return media.mapInPandas(norm, NORM_SCHEMA)
+    return map_media_rows(media, norm, NORM_SCHEMA)
 
 
 SQL_MM_BRIGHTNESS_NORMALIZE = """
@@ -214,50 +192,19 @@ def q_mm_audio_window_energy(spark: SparkSession, sf_dir: str) -> DataFrame:
     Scale: one mapInPandas fan-out (decode + numpy reshape per blob,
     ~n/128 rows out per clip), no shuffle — the VAD/segmentation
     pre-processing shape for audio corpora at 100 TB."""
-    import pandas as pd
-
-    from movie_data_transformer_spark.operators.multimodal import (
-        synthesize_wav_media,
-    )
-
     docs = load_table(spark, sf_dir, "documents")
     media = synthesize_wav_media(docs)
 
-    def windows(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        import io
-        import wave as wave_mod
+    def windows(row) -> list[tuple]:
+        out = []
+        _rate, s = wav_decode_samples(row.content)
+        n = len(s)
+        for wi in range(0, (n + AUDIO_WINDOW - 1) // AUDIO_WINDOW):
+            seg = s[wi * AUDIO_WINDOW : (wi + 1) * AUDIO_WINDOW]
+            out.append((int(row.doc_id), wi, len(seg)) + pcm_stats(seg))
+        return out
 
-        import numpy as np
-
-        for pdf in batches:
-            out = []
-            for doc_id, blob in zip(pdf["doc_id"], pdf["content"]):
-                with wave_mod.open(io.BytesIO(bytes(blob)), "rb") as w:
-                    n = w.getnframes()
-                    raw = w.readframes(n)
-                s = np.frombuffer(raw, dtype="<i2").astype(np.int64)
-                for wi in range(0, (n + AUDIO_WINDOW - 1) // AUDIO_WINDOW):
-                    seg = s[wi * AUDIO_WINDOW : (wi + 1) * AUDIO_WINDOW]
-                    neg = seg < 0
-                    out.append(
-                        (
-                            int(doc_id),
-                            wi,
-                            len(seg),
-                            int(np.abs(seg).max()) if len(seg) else 0,
-                            int((neg[1:] != neg[:-1]).sum()) if len(seg) > 1 else 0,
-                            int((seg * seg).sum()),
-                        )
-                    )
-            yield pd.DataFrame(
-                out,
-                columns=[
-                    "doc_id", "window_idx", "n_samples",
-                    "peak_abs", "zero_crossings", "energy",
-                ],
-            )
-
-    return media.mapInPandas(windows, AUDIO_WINDOW_SCHEMA)
+    return map_media_rows(media, windows, AUDIO_WINDOW_SCHEMA)
 
 
 SQL_MM_AUDIO_WINDOW_ENERGY = """

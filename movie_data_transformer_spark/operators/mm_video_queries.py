@@ -9,8 +9,8 @@ per-frame '00db' payloads unpacked exactly like bottom-up padded BGR
 BMP rows. Features aggregate over EVERY decoded frame (never the
 header alone); the oracle recomputes them from the integer per-frame
 pixel formula, so a chunk-size slip, a missed pad byte, a frame-order
-bug, or a channel swap breaks the driver hash. After this, the
-decode_media stub covers only COMPRESSED video codecs (H.264/mp4).
+bug, or a channel swap breaks the driver hash. Compressed video codecs
+(H.264/mp4) are not decoded anywhere in the package.
 
 Scale: one mapInPandas pass; frames decode executor-side from Arrow
 binary columns. This module registers BEHIND the import-verified r06
@@ -23,7 +23,10 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 
 from movie_data_transformer_spark.operators.multimodal import (
+    FRAME_SAMPLE_SCHEMA,
+    avi_decode_frames,
     avi_features,
+    map_media_rows,
     synthesize_avi_media,
 )
 from movie_data_transformer_spark.sources.tables import load_table
@@ -60,43 +63,30 @@ GROUP BY doc_id, w, h, nf
 
 def q_mm_avi_frame_sample(spark: SparkSession, sf_dir: str) -> DataFrame:
     """REAL frame sampling (the operator llm_queries' mm_frame_sample
-    plans with the fake decoder): decode the AVI, keep every 2nd frame,
+    plans from metadata alone): decode the AVI, keep every 2nd frame,
     and emit ONE ROW PER SAMPLED FRAME with exact per-frame channel
     sums — the mapInPandas fan-out (rows out > rows in) over decoded
     video that a caption/embedding pipeline feeds from."""
-    from collections.abc import Iterator
-
-    import pandas as pd
-
-    from movie_data_transformer_spark.operators.multimodal import (
-        FRAME_SAMPLE_SCHEMA,
-        avi_decode_frames,
-    )
-
     docs = load_table(spark, sf_dir, "documents")
     media = synthesize_avi_media(docs)
 
-    def sample(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            out = []
-            for doc_id, blob in zip(pdf["doc_id"], pdf["content"]):
-                _w, _h, frames = avi_decode_frames(bytes(blob))
-                for f in range(0, len(frames), 2):
-                    fr = frames[f]
-                    out.append(
-                        (
-                            int(doc_id),
-                            f,
-                            int(fr[:, :, 0].sum()),
-                            int(fr[:, :, 1].sum()),
-                            int(fr[:, :, 2].sum()),
-                        )
-                    )
-            yield pd.DataFrame(
-                out, columns=["doc_id", "frame_idx", "sum_r", "sum_g", "sum_b"]
+    def sample(row) -> list[tuple]:
+        out = []
+        _w, _h, frames = avi_decode_frames(bytes(row.content))
+        for f in range(0, len(frames), 2):
+            fr = frames[f]
+            out.append(
+                (
+                    int(row.doc_id),
+                    f,
+                    int(fr[:, :, 0].sum()),
+                    int(fr[:, :, 1].sum()),
+                    int(fr[:, :, 2].sum()),
+                )
             )
+        return out
 
-    return media.mapInPandas(sample, FRAME_SAMPLE_SCHEMA)
+    return map_media_rows(media, sample, FRAME_SAMPLE_SCHEMA)
 
 
 SQL_MM_AVI_FRAME_SAMPLE = """

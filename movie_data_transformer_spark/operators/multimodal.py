@@ -2,21 +2,21 @@
 opaque `binary` columns with typed metadata, processed by Arrow-batched
 Pandas UDFs.
 
-The container has no codec libraries, so COMPRESSED VIDEO (H.264/mp4)
-decode is stubbed (raises NotImplementedError unless `fake=True` uses
-the deterministic fake decoder) — but everything Spark-side is real and
-tested: the schema contract, the mapInPandas batch shape, partition
-sizing, and the feature pipeline. Swapping the stub for ffmpeg changes
-one function. Every media TYPE is otherwise decoded for REAL at the
-bottom of this module, each held to a full DuckDB oracle
-(operators/mm_decode_queries.py, mm_video_queries.py): audio — 16-bit
-PCM WAV (stdlib wave); images — 24-bit BMP (struct + numpy),
-compressed PNG (stdlib zlib, all five scanline filters), GIF87a
-(hand-rolled variable-width LZW), baseline JFIF JPEG (hand-rolled
-T.81: canonical DHT, entropy decode, dequant, de-zigzag, float IDCT —
-the lossy tier, made oracle-exact by piecewise-flat fixtures with an
+Every media type is decoded for REAL in this module, each held to a
+full DuckDB oracle (operators/mm_decode_queries.py, mm_video_queries.py):
+audio — 16-bit PCM WAV (stdlib wave); images — 24-bit BMP (struct +
+numpy), compressed PNG (stdlib zlib, all five scanline filters), GIF87a
+(hand-rolled variable-width LZW), baseline JFIF JPEG (hand-rolled T.81:
+canonical DHT, entropy decode, dequant, de-zigzag, float IDCT — the
+lossy tier, made oracle-exact by piecewise-flat fixtures with an
 all-ones quant table); video — AVI with raw DIB frames (real RIFF
-container machinery, no codec required).
+container machinery). The decoders parse containers only: there is no
+external codec (libjpeg, ffmpeg) and no compressed-video decode.
+`extract_features` histograms the raw payload bytes.
+
+Every per-row pass crosses into the Python worker through one helper,
+`map_media_rows`. Decoders reject malformed input with ValueError,
+never `assert`, so the checks hold under `python -O`.
 
 Scale notes: binary payloads ride in parquet binary columns; decode/
 feature-extract run as mapInPandas over Arrow record batches, so Python
@@ -27,8 +27,6 @@ task holds ~100 x 1MB blobs; never collect() media to the driver.
 
 from __future__ import annotations
 
-import functools as _functools
-import os
 from collections.abc import Iterator
 
 import pandas as pd
@@ -70,18 +68,40 @@ FEATURES_SCHEMA = StructType(
 )
 
 
-def _doc_ids_for_synthesis(docs: DataFrame) -> DataFrame:
-    """The (doc_id)-only frame every container synthesizer maps over,
-    WIDENED to core parallelism when the upstream scan is narrower (r12
-    opt round): the generative mapInPandas work (numpy waveform / pixel
-    synthesis + container packing) is the expensive part and otherwise
-    runs at the one-row-group testdata scan's single-task width. The
-    widen shuffles ONLY the 8-byte ids — the cheapest possible proxy
-    exchange (guide §8: move decisions on small rows, heavy bytes once)
-    — and is a no-op on an already-wide cluster scan."""
+def map_media_rows(df: DataFrame, per_row, schema: StructType) -> DataFrame:
+    """The one crossing into the Python worker for per-row media work:
+    a single mapInPandas pass over Arrow batches. `per_row(row)` gets
+    one input row (a namedtuple of `df`'s columns) and returns a list of
+    output tuples in `schema` order — one for a decode or feature row,
+    several for a fan-out (scene cuts, frame samples, audio windows).
+    Output column names come from `schema`."""
+    cols = schema.fieldNames()
+
+    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
+        for pdf in batches:
+            out = [t for row in pdf.itertuples(index=False) for t in per_row(row)]
+            yield pd.DataFrame(out, columns=cols)
+
+    return df.mapInPandas(run, schema)
+
+
+def _synthesize_blobs(docs: DataFrame, to_bytes) -> DataFrame:
+    """(doc_id, content) with content = to_bytes(doc_id), mapped over the
+    (doc_id)-only frame WIDENED to core parallelism when the upstream
+    scan is narrower (r12 opt round): the generative work (numpy
+    waveform / pixel synthesis + container packing) is the expensive
+    part and otherwise runs at the one-row-group testdata scan's
+    single-task width. The widen shuffles ONLY the 8-byte ids — the
+    cheapest possible proxy exchange (guide §8: move decisions on small
+    rows, heavy bytes once) — and is a no-op on an already-wide cluster
+    scan."""
     from movie_data_transformer_spark.operators.sizing import widen_for_compute
 
-    return widen_for_compute(docs.select("doc_id"))
+    return map_media_rows(
+        widen_for_compute(docs.select("doc_id")),
+        lambda row: [(int(row.doc_id), to_bytes(int(row.doc_id)))],
+        MEDIA_BLOB_SCHEMA,
+    )
 
 
 def synthesize_media(docs: DataFrame) -> DataFrame:
@@ -100,113 +120,12 @@ def synthesize_media(docs: DataFrame) -> DataFrame:
     )
 
 
-def decode_media(content: bytes, fmt: str, fake: bool = False) -> bytes:
-    """Codec boundary for COMPRESSED formats (the container tiers WAV/
-    BMP/PNG/GIF/baseline-JPEG/AVI are decoded for real by the hand-rolled
-    parsers in this module — see mm_decode_queries). fake=True returns a
-    deterministic pseudo-decode (the identity) so the downstream plumbing
-    is testable in codec-less environments.
-
-    External codecs — Pillow for images, stdlib wave for audio, ffmpeg
-    for video — are used automatically when the PROBE finds them
-    (`codec_available`, r6 VERDICT advice #5: an environment upgrade
-    lights up compressed-tier decode with no code change). NOTE: wav is
-    ALWAYS decoded for real (stdlib wave exists everywhere), so with
-    fake=False there is no stub path for it — malformed bytes raise a
-    named ValueError after the RIFF/WAVE magic check rather than this
-    function's generic NotImplementedError.
-    SPARK_GRAFT_REAL_CODECS=1 (r5 advice #8) additionally FORCES the
-    external route, turning a missing dependency into a loud, named
-    failure instead of this stub's generic one — set it on clusters that
-    are SUPPOSED to have codecs so misconfiguration can't hide. Env +
-    probe both evaluate per-call executor-side inside mapInPandas (local
-    mode shares the driver env; a cluster sets spark.executorEnv)."""
-    if fake:
-        return content
-    if os.environ.get("SPARK_GRAFT_REAL_CODECS") == "1" or codec_available(fmt):
-        return _decode_with_external_codecs(content, fmt)
-    raise NotImplementedError(
-        "media codecs are not available in this environment; "
-        "pass fake=True (tests), set SPARK_GRAFT_REAL_CODECS=1 where "
-        "Pillow/ffmpeg exist, or plug a real decoder"
-    )
-
-
-@_functools.lru_cache(maxsize=None)
-def codec_available(fmt: str) -> bool:
-    """Probe (once per process) whether an external codec for `fmt`
-    exists here: Pillow for compressed images, stdlib wave for wav
-    (always true), ffmpeg-on-PATH for compressed video."""
-    if fmt in ("png", "jpg", "jpeg", "bmp", "gif", "webp"):
-        try:
-            import PIL  # noqa: F401
-
-            return True
-        except ImportError:
-            return False
-    if fmt == "wav":
-        return True
-    if fmt in ("mp4", "mkv", "avi", "webm"):
-        import shutil as _shutil
-
-        return _shutil.which("ffmpeg") is not None
-    return False
-
-
-def _decode_with_external_codecs(content: bytes, fmt: str) -> bytes:
-    """Decode via whatever external codec the environment provides;
-    raises NotImplementedError naming the missing dependency so a
-    misconfigured cluster fails loudly, not with a silent fake."""
-    import io
-
-    if fmt in ("png", "jpg", "jpeg", "bmp", "gif", "webp"):
-        try:
-            from PIL import Image
-        except ImportError as exc:
-            raise NotImplementedError(
-                "SPARK_GRAFT_REAL_CODECS=1 but Pillow is not installed"
-            ) from exc
-        with Image.open(io.BytesIO(content)) as img:
-            return img.convert("RGB").tobytes()
-    if fmt == "wav":
-        import wave
-
-        # wav is the one format whose codec (stdlib wave) ALWAYS exists,
-        # so this path is unconditionally live (r7 ADVICE #1): validate
-        # the RIFF/WAVE container up front and fail with a named error
-        # instead of an opaque wave.Error deep in chunk parsing.
-        if len(content) < 12 or content[:4] != b"RIFF" or content[8:12] != b"WAVE":
-            raise ValueError(
-                "decode_media(fmt='wav'): payload is not a RIFF/WAVE "
-                "container (bad magic); pass fake=True for stand-in "
-                "payloads or fix the upstream format column"
-            )
-        with wave.open(io.BytesIO(content), "rb") as wf:
-            return wf.readframes(wf.getnframes())
-    if fmt in ("mp4", "mkv", "avi", "webm"):
-        import shutil as _shutil
-        import subprocess
-
-        if _shutil.which("ffmpeg") is None:
-            raise NotImplementedError(
-                "SPARK_GRAFT_REAL_CODECS=1 but ffmpeg is not on PATH"
-            )
-        proc = subprocess.run(
-            ["ffmpeg", "-loglevel", "error", "-i", "pipe:0", "-f", "rawvideo",
-             "-pix_fmt", "rgb24", "pipe:1"],
-            input=content,
-            capture_output=True,
-            check=True,
-        )
-        return proc.stdout
-    raise NotImplementedError(f"no external codec route for format {fmt!r}")
-
-
 def extract_features(media: DataFrame) -> DataFrame:
     """Arrow-batched feature extraction over binary payloads via
-    mapInPandas, on the fake decode. The fake feature is a deterministic byte histogram folded
-    to FEATURE_DIM buckets — stands in for an image/audio embedding while
-    exercising identical batch shapes.
+    mapInPandas, on the raw payload bytes. The feature is a
+    deterministic byte histogram folded to FEATURE_DIM buckets — stands
+    in for an image/audio embedding while exercising identical batch
+    shapes.
 
     Normalization is EXACT INTEGER micro-units ((count * 10^6) // total,
     then one IEEE division by 10^6): no float rounding call anywhere, so
@@ -214,32 +133,21 @@ def extract_features(media: DataFrame) -> DataFrame:
     carries a full DuckDB oracle instead of a rows-only check (cf. the
     round(double, n) midpoint pitfall in NOTES.md)."""
 
-    def _extract(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            feats = []
-            for content, fmt in zip(pdf["content"], pdf["format"]):
-                decoded = decode_media(content, fmt, fake=True)
-                buckets = [0] * FEATURE_DIM
-                for byte in decoded:
-                    buckets[byte % FEATURE_DIM] += 1
-                total = max(len(decoded), 1)
-                feats.append([(b * 1000000) // total / 1e6 for b in buckets])
-            yield pd.DataFrame(
-                {
-                    "doc_id": pdf["doc_id"],
-                    "media_type": pdf["media_type"],
-                    "n_bytes": pdf["n_bytes"],
-                    "features": feats,
-                }
-            )
+    def _extract(row) -> list[tuple]:
+        buckets = [0] * FEATURE_DIM
+        for byte in row.content:
+            buckets[byte % FEATURE_DIM] += 1
+        total = max(len(row.content), 1)
+        feats = [(b * 1000000) // total / 1e6 for b in buckets]
+        return [(row.doc_id, row.media_type, row.n_bytes, feats)]
 
-    return media.mapInPandas(_extract, schema=FEATURES_SCHEMA)
+    return map_media_rows(media, _extract, FEATURES_SCHEMA)
 
 
 def frame_sample(media: DataFrame) -> DataFrame:
-    """Metadata-planned sampling of every 10th frame for formats behind
-    the codec stub (the frame plan is real Spark arithmetic; pixels are
-    not decoded).
+    """Metadata-planned sampling of every 10th frame of the stand-in
+    video rows (the frame plan is real Spark arithmetic; pixels are not
+    decoded).
     The REAL pixel-decoding form — one row per sampled frame with exact
     per-frame features — is mm_video_queries.q_mm_avi_frame_sample,
     built on avi_decode_frames below."""
@@ -255,10 +163,9 @@ def frame_sample(media: DataFrame) -> DataFrame:
 
 # --- REAL container decode (no codec libraries needed) ---------------------
 #
-# The codec stub above is an environment boundary for COMPRESSED formats
-# (jpeg/mp4 need libjpeg/ffmpeg). Uncompressed containers need no codec:
-# WAV is a 44-byte RIFF header + raw PCM (stdlib `wave`), BMP is a
-# 54-byte header + raw BGR rows (struct + numpy). These pipelines
+# Uncompressed containers need no codec library: WAV is a 44-byte RIFF
+# header + raw PCM (stdlib `wave`), BMP is a 54-byte header + raw BGR
+# rows (struct + numpy). These pipelines
 # synthesize REAL container bytes from integer generative formulas,
 # decode them back by PARSING THE CONTAINER (not by trusting the
 # metadata), and emit exact-integer features — so the full
@@ -268,9 +175,9 @@ def frame_sample(media: DataFrame) -> DataFrame:
 
 WAV_RATE = 8000
 
-#: shared blob-row contract for BOTH container pipelines (WAV + BMP):
-#: extending one format's metadata means giving it its OWN schema, not
-#: widening this one.
+#: shared blob-row contract of every container synthesizer: extending
+#: one format's metadata means giving it its OWN schema, not widening
+#: this one.
 MEDIA_BLOB_SCHEMA = StructType(
     [
         StructField("doc_id", LongType()),
@@ -298,32 +205,58 @@ def _wav_params(doc_id: int) -> tuple[int, int]:
     return 400 + doc_id % 400, 64 + doc_id % 1000
 
 
-def synthesize_wav_media(docs: DataFrame) -> DataFrame:
-    """REAL 16-bit mono PCM WAV blobs (stdlib wave writer), one per doc,
-    waveform generated from _wav_params. mapInPandas: blobs are built
-    executor-side from Arrow batches, never on the driver."""
+def _wav_bytes(doc_id: int) -> bytes:
+    """A REAL 16-bit mono PCM WAV blob (stdlib wave writer), waveform
+    generated from _wav_params."""
     import io
     import wave as wave_mod
 
     import numpy as np
 
-    def gen(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            out = []
-            for doc_id in pdf["doc_id"]:
-                n, step = _wav_params(int(doc_id))
-                i = np.arange(n, dtype=np.int64)
-                samples = ((i * step) % 65536 - 32768).astype("<i2")
-                buf = io.BytesIO()
-                with wave_mod.open(buf, "wb") as w:
-                    w.setnchannels(1)
-                    w.setsampwidth(2)
-                    w.setframerate(WAV_RATE)
-                    w.writeframes(samples.tobytes())
-                out.append((int(doc_id), buf.getvalue()))
-            yield pd.DataFrame(out, columns=["doc_id", "content"])
+    n, step = _wav_params(doc_id)
+    i = np.arange(n, dtype=np.int64)
+    samples = ((i * step) % 65536 - 32768).astype("<i2")
+    buf = io.BytesIO()
+    with wave_mod.open(buf, "wb") as w:
+        w.setnchannels(1)
+        w.setsampwidth(2)
+        w.setframerate(WAV_RATE)
+        w.writeframes(samples.tobytes())
+    return buf.getvalue()
 
-    return _doc_ids_for_synthesis(docs).mapInPandas(gen, MEDIA_BLOB_SCHEMA)
+
+def synthesize_wav_media(docs: DataFrame) -> DataFrame:
+    """REAL 16-bit mono PCM WAV blobs (_wav_bytes), one per doc.
+    mapInPandas: blobs are built executor-side from Arrow batches, never
+    on the driver."""
+    return _synthesize_blobs(docs, _wav_bytes)
+
+
+def wav_decode_samples(blob: bytes):
+    """Parse a 16-bit mono PCM WAV: (sample rate from the RIFF header,
+    int64 samples from the PCM payload)."""
+    import io
+    import wave
+
+    import numpy as np
+
+    with wave.open(io.BytesIO(bytes(blob)), "rb") as w:
+        rate = w.getframerate()
+        raw = w.readframes(w.getnframes())
+    return rate, np.frombuffer(raw, dtype="<i2").astype(np.int64)
+
+
+def pcm_stats(s) -> tuple[int, int, int]:
+    """(peak |amplitude|, strict sign-change zero crossings, energy =
+    sum of squares) of int64 samples — exact integers."""
+    import numpy as np
+
+    neg = s < 0
+    return (
+        int(np.abs(s).max()) if len(s) else 0,
+        int((neg[1:] != neg[:-1]).sum()),
+        int((s * s).sum()),
+    )
 
 
 def wav_features(media: DataFrame, passthrough: tuple[str, ...] = ()) -> DataFrame:
@@ -338,43 +271,19 @@ def wav_features(media: DataFrame, passthrough: tuple[str, ...] = ()) -> DataFra
     `passthrough` names extra BIGINT columns of `media` to carry through
     unchanged (e.g. a source's file-size metadata) so callers don't need
     a second scan + self-join just to keep sibling columns."""
-    import io
-    import wave as wave_mod
 
-    import numpy as np
+    def dec(row) -> list[tuple]:
+        rate, s = wav_decode_samples(row.content)
+        return [
+            (int(row.doc_id), len(s), rate)
+            + pcm_stats(s)
+            + tuple(int(getattr(row, c)) for c in passthrough)
+        ]
 
-    cols = ["doc_id", "n_samples", "sample_rate", "peak_abs", "zero_crossings", "energy"]
-
-    def dec(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            out = []
-            for i, (doc_id, blob) in enumerate(zip(pdf["doc_id"], pdf["content"])):
-                with wave_mod.open(io.BytesIO(bytes(blob)), "rb") as w:
-                    rate = w.getframerate()
-                    n = w.getnframes()
-                    raw = w.readframes(n)
-                s = np.frombuffer(raw, dtype="<i2").astype(np.int64)
-                neg = s < 0
-                out.append(
-                    (
-                        int(doc_id),
-                        int(n),
-                        int(rate),
-                        int(np.abs(s).max()) if n else 0,
-                        int((neg[1:] != neg[:-1]).sum()) if n > 1 else 0,
-                        int((s * s).sum()),
-                    )
-                    + tuple(int(pdf[c].iloc[i]) for c in passthrough)
-                )
-            yield pd.DataFrame(out, columns=cols + list(passthrough))
-
-    schema = WAV_FEATURES_SCHEMA
-    if passthrough:
-        schema = StructType(
-            WAV_FEATURES_SCHEMA.fields
-            + [StructField(c, LongType()) for c in passthrough]
-        )
-    return media.mapInPandas(dec, schema)
+    schema = StructType(
+        WAV_FEATURES_SCHEMA.fields + [StructField(c, LongType()) for c in passthrough]
+    )
+    return map_media_rows(media, dec, schema)
 
 
 BMP_FEATURES_SCHEMA = StructType(
@@ -419,61 +328,67 @@ def bmp_container(pixel_data: bytes, w: int, h: int) -> bytes:
     return header + dib + pixel_data
 
 
-def synthesize_bmp_media(docs: DataFrame) -> DataFrame:
-    """REAL 24-bit uncompressed BMP blobs (bmp_container layout), pixels
-    from _bmp_pixel. Executor-side via mapInPandas."""
+def _dib_rows(r, g, b) -> bytes:
+    """(h, w) r/g/b planes -> bottom-up BGR rows padded to 4 bytes: the
+    DIB pixel-array layout of BMP files and AVI '00db' frames (the
+    inverse of _unpack_dib_rows)."""
     import numpy as np
 
-    def gen(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            out = []
-            for doc_id in pdf["doc_id"]:
-                d = int(doc_id)
-                w, h = _bmp_params(d)
-                x = np.arange(w, dtype=np.int64)[None, :]
-                y = np.arange(h, dtype=np.int64)[:, None]
-                r, g, b = _bmp_pixel(d, x, y)
-                row_len = w * 3
-                pad = (-row_len) % 4
-                # bottom-up storage: row y=h-1 first
-                rows = []
-                for yy in range(h - 1, -1, -1):
-                    px = np.empty((w, 3), dtype=np.uint8)
-                    px[:, 0] = b[yy]  # BGR order
-                    px[:, 1] = g[yy]
-                    px[:, 2] = r[yy]
-                    rows.append(px.tobytes() + b"\x00" * pad)
-                out.append((d, bmp_container(b"".join(rows), w, h)))
-            yield pd.DataFrame(out, columns=["doc_id", "content"])
+    h, w = r.shape
+    pad = (-(w * 3)) % 4
+    # bottom-up storage: row y=h-1 first
+    rows = []
+    for yy in range(h - 1, -1, -1):
+        px = np.empty((w, 3), dtype=np.uint8)
+        px[:, 0] = b[yy]  # BGR order
+        px[:, 1] = g[yy]
+        px[:, 2] = r[yy]
+        rows.append(px.tobytes() + b"\x00" * pad)
+    return b"".join(rows)
 
-    return _doc_ids_for_synthesis(docs).mapInPandas(gen, MEDIA_BLOB_SCHEMA)
+
+def _bmp_bytes(d: int) -> bytes:
+    """A REAL 24-bit uncompressed BMP blob (bmp_container layout), pixels
+    from _bmp_pixel."""
+    import numpy as np
+
+    w, h = _bmp_params(d)
+    x = np.arange(w, dtype=np.int64)[None, :]
+    y = np.arange(h, dtype=np.int64)[:, None]
+    return bmp_container(_dib_rows(*_bmp_pixel(d, x, y)), w, h)
+
+
+def synthesize_bmp_media(docs: DataFrame) -> DataFrame:
+    """REAL 24-bit uncompressed BMP blobs (_bmp_bytes), one per doc.
+    Executor-side via mapInPandas."""
+    return _synthesize_blobs(docs, _bmp_bytes)
+
+
+def _rgb_sums(decode):
+    """The per-row body shared by the image decoders that return an
+    (h, w, 3) RGB array: (doc_id, width, height, sum_r, sum_g, sum_b)."""
+
+    def dec(row) -> list[tuple]:
+        img = decode(bytes(row.content))
+        return [
+            (
+                int(row.doc_id),
+                int(img.shape[1]),
+                int(img.shape[0]),
+                int(img[:, :, 0].sum()),
+                int(img[:, :, 1].sum()),
+                int(img[:, :, 2].sum()),
+            )
+        ]
+
+    return dec
 
 
 def bmp_features(media: DataFrame) -> DataFrame:
     """Decode REAL BMP bytes (bmp_decode_pixels: header parse + the
     shared DIB row unpack) and emit exact-integer channel sums —
     oracle-recomputable from _bmp_pixel."""
-
-    def dec(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            out = []
-            for doc_id, blob in zip(pdf["doc_id"], pdf["content"]):
-                img = bmp_decode_pixels(bytes(blob))
-                out.append(
-                    (
-                        int(doc_id),
-                        int(img.shape[1]),
-                        int(img.shape[0]),
-                        int(img[:, :, 0].sum()),
-                        int(img[:, :, 1].sum()),
-                        int(img[:, :, 2].sum()),
-                    )
-                )
-            yield pd.DataFrame(
-                out, columns=["doc_id", "width", "height", "sum_r", "sum_g", "sum_b"]
-            )
-
-    return media.mapInPandas(dec, BMP_FEATURES_SCHEMA)
+    return map_media_rows(media, _rgb_sums(bmp_decode_pixels), BMP_FEATURES_SCHEMA)
 
 
 # --- PNG: a real COMPRESSED container, decoded with stdlib zlib only ----------
@@ -495,151 +410,147 @@ def _paeth(a: int, b: int, c: int) -> int:
     return c
 
 
-def synthesize_png_media(docs: DataFrame) -> DataFrame:
-    """REAL 8-bit truecolor PNG blobs: signature + IHDR + one
+def _png_chunk(tag: bytes, payload: bytes) -> bytes:
+    import struct as struct_mod
+    import zlib
+
+    return (
+        struct_mod.pack(">I", len(payload))
+        + tag
+        + payload
+        + struct_mod.pack(">I", zlib.crc32(tag + payload) & 0xFFFFFFFF)
+    )
+
+
+def _png_bytes(d: int) -> bytes:
+    """A REAL 8-bit truecolor PNG blob: signature + IHDR + one
     zlib-deflated IDAT + IEND, CRC32 on every chunk. Pixels come from the
     same integer formula as the BMPs (_bmp_pixel, with _png_params dims);
     the scanline FILTER TYPE CYCLES y % 5 through None/Sub/Up/Average/
     Paeth, so a decoder that mis-implements any of the five unfilters
-    produces wrong channel sums and breaks the oracle hash. Executor-side
-    via mapInPandas — PNG is the compressed-container tier of the decode
-    story (WAV/BMP are raw; jpeg/mp4 stay stubbed, no codec libs)."""
+    produces wrong channel sums and breaks the oracle hash."""
     import struct as struct_mod
     import zlib
 
     import numpy as np
 
-    def chunk(tag: bytes, payload: bytes) -> bytes:
-        return (
-            struct_mod.pack(">I", len(payload))
-            + tag
-            + payload
-            + struct_mod.pack(">I", zlib.crc32(tag + payload) & 0xFFFFFFFF)
+    w, h = _png_params(d)
+    x = np.arange(w, dtype=np.int64)[None, :]
+    y = np.arange(h, dtype=np.int64)[:, None]
+    r, g, b = _bmp_pixel(d, x, y)
+    raw_rows = []
+    for yy in range(h):
+        px = np.empty((w, 3), dtype=np.uint8)
+        px[:, 0] = r[yy]
+        px[:, 1] = g[yy]
+        px[:, 2] = b[yy]
+        raw_rows.append(px.reshape(-1).astype(np.int64))
+    scanlines = []
+    zeros = np.zeros(w * 3, dtype=np.int64)
+    for yy in range(h):
+        cur, prior = raw_rows[yy], raw_rows[yy - 1] if yy else zeros
+        left = np.concatenate([np.zeros(3, dtype=np.int64), cur[:-3]])
+        ul = np.concatenate([np.zeros(3, dtype=np.int64), prior[:-3]])
+        ft = yy % 5
+        if ft == 0:
+            filt = cur
+        elif ft == 1:
+            filt = cur - left
+        elif ft == 2:
+            filt = cur - prior
+        elif ft == 3:
+            filt = cur - (left + prior) // 2
+        else:
+            pred = np.array(
+                [_paeth(int(a), int(bb), int(c))
+                 for a, bb, c in zip(left, prior, ul)],
+                dtype=np.int64,
+            )
+            filt = cur - pred
+        scanlines.append(
+            bytes([ft]) + (filt % 256).astype(np.uint8).tobytes()
         )
+    ihdr = struct_mod.pack(">IIBBBBB", w, h, 8, 2, 0, 0, 0)
+    return (
+        b"\x89PNG\r\n\x1a\n"
+        + _png_chunk(b"IHDR", ihdr)
+        + _png_chunk(b"IDAT", zlib.compress(b"".join(scanlines)))
+        + _png_chunk(b"IEND", b"")
+    )
 
-    def gen(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            out = []
-            for doc_id in pdf["doc_id"]:
-                d = int(doc_id)
-                w, h = _png_params(d)
-                x = np.arange(w, dtype=np.int64)[None, :]
-                y = np.arange(h, dtype=np.int64)[:, None]
-                r, g, b = _bmp_pixel(d, x, y)
-                raw_rows = []
-                for yy in range(h):
-                    px = np.empty((w, 3), dtype=np.uint8)
-                    px[:, 0] = r[yy]
-                    px[:, 1] = g[yy]
-                    px[:, 2] = b[yy]
-                    raw_rows.append(px.reshape(-1).astype(np.int64))
-                scanlines = []
-                zeros = np.zeros(w * 3, dtype=np.int64)
-                for yy in range(h):
-                    cur, prior = raw_rows[yy], raw_rows[yy - 1] if yy else zeros
-                    left = np.concatenate([np.zeros(3, dtype=np.int64), cur[:-3]])
-                    ul = np.concatenate([np.zeros(3, dtype=np.int64), prior[:-3]])
-                    ft = yy % 5
-                    if ft == 0:
-                        filt = cur
-                    elif ft == 1:
-                        filt = cur - left
-                    elif ft == 2:
-                        filt = cur - prior
-                    elif ft == 3:
-                        filt = cur - (left + prior) // 2
-                    else:
-                        pred = np.array(
-                            [_paeth(int(a), int(bb), int(c))
-                             for a, bb, c in zip(left, prior, ul)],
-                            dtype=np.int64,
-                        )
-                        filt = cur - pred
-                    scanlines.append(
-                        bytes([ft]) + (filt % 256).astype(np.uint8).tobytes()
-                    )
-                ihdr = struct_mod.pack(">IIBBBBB", w, h, 8, 2, 0, 0, 0)
-                blob = (
-                    b"\x89PNG\r\n\x1a\n"
-                    + chunk(b"IHDR", ihdr)
-                    + chunk(b"IDAT", zlib.compress(b"".join(scanlines)))
-                    + chunk(b"IEND", b"")
-                )
-                out.append((d, blob))
-            yield pd.DataFrame(out, columns=["doc_id", "content"])
 
-    return _doc_ids_for_synthesis(docs).mapInPandas(gen, MEDIA_BLOB_SCHEMA)
+def synthesize_png_media(docs: DataFrame) -> DataFrame:
+    """REAL PNG blobs (_png_bytes), one per doc. Executor-side via
+    mapInPandas — PNG is the compressed-container tier of the decode
+    story (WAV/BMP are raw)."""
+    return _synthesize_blobs(docs, _png_bytes)
+
+
+def png_decode_pixels(data: bytes):
+    """Decode an 8-bit truecolor PNG into (h, w, 3) RGB int64: verify
+    signature + per-chunk CRC32, parse IHDR, zlib-inflate the
+    concatenated IDAT stream, reverse all five scanline filters
+    (None/Sub/Up/Average/Paeth)."""
+    import struct as struct_mod
+    import zlib
+
+    import numpy as np
+
+    if data[:8] != b"\x89PNG\r\n\x1a\n":
+        raise ValueError("bad PNG signature")
+    pos, w = 8, None
+    idat = b""
+    while pos < len(data):
+        (ln,) = struct_mod.unpack_from(">I", data, pos)
+        tag = data[pos + 4 : pos + 8]
+        payload = data[pos + 8 : pos + 8 + ln]
+        (crc,) = struct_mod.unpack_from(">I", data, pos + 8 + ln)
+        if crc != (zlib.crc32(tag + payload) & 0xFFFFFFFF):
+            raise ValueError("CRC")
+        if tag == b"IHDR":
+            w, h, depth, ctype = struct_mod.unpack_from(">IIBB", payload)
+            if not (depth == 8 and ctype == 2):
+                raise ValueError("unsupported PNG")
+        elif tag == b"IDAT":
+            idat += payload
+        elif tag == b"IEND":
+            break
+        pos += 12 + ln
+    raw = zlib.decompress(idat)
+    stride = w * 3
+    prior = np.zeros(stride, dtype=np.int64)
+    rows = []
+    for yy in range(h):
+        off = yy * (stride + 1)
+        ft = raw[off]
+        filt = np.frombuffer(
+            raw, dtype=np.uint8, count=stride, offset=off + 1
+        ).astype(np.int64)
+        if ft == 0:
+            cur = filt
+        elif ft == 1:  # Sub: per-channel prefix sum
+            cur = filt.reshape(-1, 3).cumsum(axis=0).reshape(-1) % 256
+        elif ft == 2:
+            cur = (filt + prior) % 256
+        else:  # Average / Paeth: sequential left dependency
+            cur = np.empty(stride, dtype=np.int64)
+            for i in range(stride):
+                left = cur[i - 3] if i >= 3 else 0
+                up = int(prior[i])
+                ul = int(prior[i - 3]) if i >= 3 else 0
+                if ft == 3:
+                    cur[i] = (filt[i] + (left + up) // 2) % 256
+                else:
+                    cur[i] = (filt[i] + _paeth(int(left), up, ul)) % 256
+        rows.append(cur.reshape(-1, 3))
+        prior = cur
+    return np.stack(rows)
 
 
 def png_features(media: DataFrame) -> DataFrame:
-    """Decode REAL PNG bytes: verify signature + per-chunk CRC32, parse
-    IHDR, zlib-inflate the concatenated IDAT stream, reverse all five
-    scanline filters (None/Sub/Up/Average/Paeth), and emit exact-integer
+    """Decode REAL PNG bytes (png_decode_pixels) and emit exact-integer
     channel sums — oracle-recomputable from the pixel formula alone."""
-    import struct as struct_mod
-    import zlib
-
-    import numpy as np
-
-    def dec(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            out = []
-            for doc_id, blob in zip(pdf["doc_id"], pdf["content"]):
-                data = bytes(blob)
-                assert data[:8] == b"\x89PNG\r\n\x1a\n", "bad PNG signature"
-                pos, w = 8, None
-                idat = b""
-                while pos < len(data):
-                    (ln,) = struct_mod.unpack_from(">I", data, pos)
-                    tag = data[pos + 4 : pos + 8]
-                    payload = data[pos + 8 : pos + 8 + ln]
-                    (crc,) = struct_mod.unpack_from(">I", data, pos + 8 + ln)
-                    assert crc == (zlib.crc32(tag + payload) & 0xFFFFFFFF), "CRC"
-                    if tag == b"IHDR":
-                        w, h, depth, ctype = struct_mod.unpack_from(">IIBB", payload)
-                        assert depth == 8 and ctype == 2, "unsupported PNG"
-                    elif tag == b"IDAT":
-                        idat += payload
-                    elif tag == b"IEND":
-                        break
-                    pos += 12 + ln
-                raw = zlib.decompress(idat)
-                stride = w * 3
-                prior = np.zeros(stride, dtype=np.int64)
-                sr = sg = sb = 0
-                for yy in range(h):
-                    off = yy * (stride + 1)
-                    ft = raw[off]
-                    filt = np.frombuffer(
-                        raw, dtype=np.uint8, count=stride, offset=off + 1
-                    ).astype(np.int64)
-                    if ft == 0:
-                        cur = filt
-                    elif ft == 1:  # Sub: per-channel prefix sum
-                        cur = filt.reshape(-1, 3).cumsum(axis=0).reshape(-1) % 256
-                    elif ft == 2:
-                        cur = (filt + prior) % 256
-                    else:  # Average / Paeth: sequential left dependency
-                        cur = np.empty(stride, dtype=np.int64)
-                        for i in range(stride):
-                            left = cur[i - 3] if i >= 3 else 0
-                            up = int(prior[i])
-                            ul = int(prior[i - 3]) if i >= 3 else 0
-                            if ft == 3:
-                                cur[i] = (filt[i] + (left + up) // 2) % 256
-                            else:
-                                cur[i] = (filt[i] + _paeth(int(left), up, ul)) % 256
-                    px = cur.reshape(-1, 3)
-                    sr += int(px[:, 0].sum())
-                    sg += int(px[:, 1].sum())
-                    sb += int(px[:, 2].sum())
-                    prior = cur
-                out.append((int(doc_id), int(w), int(h), sr, sg, sb))
-            yield pd.DataFrame(
-                out, columns=["doc_id", "width", "height", "sum_r", "sum_g", "sum_b"]
-            )
-
-    return media.mapInPandas(dec, BMP_FEATURES_SCHEMA)
+    return map_media_rows(media, _rgb_sums(png_decode_pixels), BMP_FEATURES_SCHEMA)
 
 
 # --- GIF: LZW-compressed container (variable-width codes, hand-rolled) --------
@@ -653,6 +564,10 @@ def _gif_palette_rgb(idx):
     """256-entry palette formula (numpy-broadcastable): r=i, g=(i*7)%256,
     b=(i*13)%256 — mirrored verbatim by the DuckDB oracle."""
     return idx % 256, (idx * 7) % 256, (idx * 13) % 256
+
+
+#: the 256-color global palette every synthetic GIF carries
+_GIF_PALETTE = bytes(v for i in range(256) for v in _gif_palette_rgb(i))
 
 
 #: the LZW min code size the synthetic GIFs declare (8-bit palette indices)
@@ -736,106 +651,89 @@ def _lzw_decode(data: bytes, min_code_size: int = 8) -> bytes:
     raise ValueError("missing EOI")
 
 
-def synthesize_gif_media(docs: DataFrame) -> DataFrame:
-    """REAL GIF87a blobs: header + logical screen descriptor + 256-color
+def _gif_bytes(d: int) -> bytes:
+    """A REAL GIF87a blob: header + logical screen descriptor + 256-color
     global palette (_gif_palette_rgb) + image descriptor + hand-rolled
     LZW-compressed pixel indices in <=255-byte sub-blocks + trailer.
     Pixel index formula (doc_id*5 + x*11 + y*17) % 256. The LZW variant
     (variable width, clear/EOI, 4096 reset) is round-trip-fuzzed in
-    tests. Executor-side via mapInPandas."""
+    tests."""
     import struct as struct_mod
 
     import numpy as np
 
-    def gen(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        pal = bytearray()
-        for i in range(256):
-            r, g, b = _gif_palette_rgb(i)
-            pal += bytes([r, g, b])
-        pal = bytes(pal)
-        for pdf in batches:
-            out = []
-            for doc_id in pdf["doc_id"]:
-                d = int(doc_id)
-                w, h = _gif_params(d)
-                x = np.arange(w, dtype=np.int64)[None, :]
-                y = np.arange(h, dtype=np.int64)[:, None]
-                idx = ((d * 5 + x * 11 + y * 17) % 256).astype(np.uint8)
-                lzw = _lzw_encode(idx.tobytes())
-                sub = b"".join(
-                    bytes([len(lzw[i : i + 255])]) + lzw[i : i + 255]
-                    for i in range(0, len(lzw), 255)
-                )
-                blob = (
-                    b"GIF87a"
-                    + struct_mod.pack("<HHBBB", w, h, 0xF7, 0, 0)  # GCT, 256 colors
-                    + pal
-                    + b"\x2c"
-                    + struct_mod.pack("<HHHHB", 0, 0, w, h, 0)  # image descriptor
-                    + bytes([GIF_LZW_MIN_CODE_SIZE])
-                    + sub
-                    + b"\x00\x3b"  # block terminator + trailer
-                )
-                out.append((d, blob))
-            yield pd.DataFrame(out, columns=["doc_id", "content"])
+    w, h = _gif_params(d)
+    x = np.arange(w, dtype=np.int64)[None, :]
+    y = np.arange(h, dtype=np.int64)[:, None]
+    idx = ((d * 5 + x * 11 + y * 17) % 256).astype(np.uint8)
+    lzw = _lzw_encode(idx.tobytes())
+    sub = b"".join(
+        bytes([len(lzw[i : i + 255])]) + lzw[i : i + 255]
+        for i in range(0, len(lzw), 255)
+    )
+    return (
+        b"GIF87a"
+        + struct_mod.pack("<HHBBB", w, h, 0xF7, 0, 0)  # GCT, 256 colors
+        + _GIF_PALETTE
+        + b"\x2c"
+        + struct_mod.pack("<HHHHB", 0, 0, w, h, 0)  # image descriptor
+        + bytes([GIF_LZW_MIN_CODE_SIZE])
+        + sub
+        + b"\x00\x3b"  # block terminator + trailer
+    )
 
-    return _doc_ids_for_synthesis(docs).mapInPandas(gen, MEDIA_BLOB_SCHEMA)
+
+def synthesize_gif_media(docs: DataFrame) -> DataFrame:
+    """REAL GIF87a blobs (_gif_bytes), one per doc. Executor-side via
+    mapInPandas."""
+    return _synthesize_blobs(docs, _gif_bytes)
+
+
+def gif_decode_pixels(data: bytes):
+    """Decode a GIF into (h, w, 3) RGB int64: parse header/screen
+    descriptor, read the global color table, parse the image descriptor,
+    reassemble the LZW sub-blocks, decompress, map indices through the
+    palette."""
+    import struct as struct_mod
+
+    import numpy as np
+
+    if data[:6] not in (b"GIF87a", b"GIF89a"):
+        raise ValueError("bad GIF signature")
+    sw, sh, flags, _bg, _ar = struct_mod.unpack_from("<HHBBB", data, 6)
+    if not flags & 0x80:
+        raise ValueError("no global color table")
+    gct_len = 2 << (flags & 0x07)
+    pos = 13
+    pal = np.frombuffer(
+        data, dtype=np.uint8, count=gct_len * 3, offset=pos
+    ).reshape(gct_len, 3).astype(np.int64)
+    pos += gct_len * 3
+    if data[pos] != 0x2C:
+        raise ValueError("expected image descriptor")
+    _l, _t, w, h, iflags = struct_mod.unpack_from("<HHHHB", data, pos + 1)
+    if iflags & 0x40:
+        raise ValueError("interlace unsupported")
+    pos += 10
+    mcs = data[pos]
+    pos += 1
+    lzw = bytearray()
+    while data[pos] != 0:
+        ln = data[pos]
+        lzw += data[pos + 1 : pos + 1 + ln]
+        pos += 1 + ln
+    idx = np.frombuffer(
+        _lzw_decode(bytes(lzw), mcs), dtype=np.uint8
+    ).astype(np.int64)
+    if idx.size != w * h:
+        raise ValueError("pixel count mismatch")
+    return pal[idx].reshape(h, w, 3)
 
 
 def gif_features(media: DataFrame) -> DataFrame:
-    """Decode REAL GIF bytes: parse header/screen descriptor, read the
-    global color table, parse the image descriptor, reassemble the LZW
-    sub-blocks, decompress, map indices through the palette, and emit
-    exact-integer channel sums."""
-    import struct as struct_mod
-
-    import numpy as np
-
-    def dec(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            out = []
-            for doc_id, blob in zip(pdf["doc_id"], pdf["content"]):
-                data = bytes(blob)
-                assert data[:6] in (b"GIF87a", b"GIF89a"), "bad GIF signature"
-                sw, sh, flags, _bg, _ar = struct_mod.unpack_from("<HHBBB", data, 6)
-                assert flags & 0x80, "no global color table"
-                gct_len = 2 << (flags & 0x07)
-                pos = 13
-                pal = np.frombuffer(
-                    data, dtype=np.uint8, count=gct_len * 3, offset=pos
-                ).reshape(gct_len, 3).astype(np.int64)
-                pos += gct_len * 3
-                assert data[pos] == 0x2C, "expected image descriptor"
-                _l, _t, w, h, iflags = struct_mod.unpack_from("<HHHHB", data, pos + 1)
-                assert not (iflags & 0x40), "interlace unsupported"
-                pos += 10
-                mcs = data[pos]
-                pos += 1
-                lzw = bytearray()
-                while data[pos] != 0:
-                    ln = data[pos]
-                    lzw += data[pos + 1 : pos + 1 + ln]
-                    pos += 1 + ln
-                idx = np.frombuffer(
-                    _lzw_decode(bytes(lzw), mcs), dtype=np.uint8
-                ).astype(np.int64)
-                assert idx.size == w * h, "pixel count mismatch"
-                px = pal[idx]
-                out.append(
-                    (
-                        int(doc_id),
-                        int(w),
-                        int(h),
-                        int(px[:, 0].sum()),
-                        int(px[:, 1].sum()),
-                        int(px[:, 2].sum()),
-                    )
-                )
-            yield pd.DataFrame(
-                out, columns=["doc_id", "width", "height", "sum_r", "sum_g", "sum_b"]
-            )
-
-    return media.mapInPandas(dec, BMP_FEATURES_SCHEMA)
+    """Decode REAL GIF bytes (gif_decode_pixels) and emit exact-integer
+    channel sums."""
+    return map_media_rows(media, _rgb_sums(gif_decode_pixels), BMP_FEATURES_SCHEMA)
 
 
 # ---- JPEG (baseline JFIF, grayscale) — the LOSSY-codec tier -------------
@@ -849,7 +747,6 @@ def gif_features(media: DataFrame) -> DataFrame:
 # with error ~1e-14, far inside the rounding radius). The ENTROPY layer is
 # general (arbitrary sparse coefficients incl. >15 zero runs) and is
 # fuzz-tested at the coefficient level in tests/test_text_multimodal.py.
-# Only VIDEO (mp4) remains the documented decode_media stub.
 
 
 def _jpeg_zigzag() -> list[int]:
@@ -1087,18 +984,21 @@ def jpeg_decode_gray(blob: bytes):
     w = h = None
     scan = None
     while i < len(blob):
-        assert blob[i] == 0xFF, "marker expected"
+        if blob[i] != 0xFF:
+            raise ValueError("marker expected")
         marker = blob[i + 1]
         if marker == 0xD9:  # EOI
             break
         ln = struct_mod.unpack(">H", blob[i + 2 : i + 4])[0]
         seg = blob[i + 4 : i + 2 + ln]
         if marker == 0xDB:
-            assert seg[0] == 0x00, "only 8-bit quant table 0 supported"
+            if seg[0] != 0x00:
+                raise ValueError("only 8-bit quant table 0 supported")
             qt = list(seg[1:65])
         elif marker == 0xC0:
             h, w = struct_mod.unpack(">HH", seg[1:5])
-            assert seg[5] == 1, "grayscale only"
+            if seg[5] != 1:
+                raise ValueError("grayscale only")
         elif marker == 0xC4:
             cls = seg[0]
             bits = list(seg[1:17])
@@ -1154,39 +1054,27 @@ JPEG_FEATURES_SCHEMA = StructType(
 def synthesize_jpeg_media(docs: DataFrame) -> DataFrame:
     """REAL baseline JFIF blobs, one per doc, executor-side."""
 
-    def gen(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            out = [(int(d), _jpeg_bytes(int(d))) for d in pdf["doc_id"]]
-            yield pd.DataFrame(out, columns=["doc_id", "content"])
-
-    return _doc_ids_for_synthesis(docs).mapInPandas(gen, MEDIA_BLOB_SCHEMA)
+    return _synthesize_blobs(docs, _jpeg_bytes)
 
 
 def jpeg_features(media: DataFrame) -> DataFrame:
     """Full-decode features from the pixel array (never the header
     alone): exact integer sum/max/min over decoded pixels."""
 
-    def dec(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            out = []
-            for doc_id, blob in zip(pdf["doc_id"], pdf["content"]):
-                img = jpeg_decode_gray(bytes(blob))
-                out.append(
-                    (
-                        int(doc_id),
-                        int(img.shape[1]),
-                        int(img.shape[0]),
-                        int(img.sum()),
-                        int(img.max()),
-                        int(img.min()),
-                    )
-                )
-            yield pd.DataFrame(
-                out,
-                columns=["doc_id", "width", "height", "sum_px", "max_px", "min_px"],
+    def dec(row) -> list[tuple]:
+        img = jpeg_decode_gray(bytes(row.content))
+        return [
+            (
+                int(row.doc_id),
+                int(img.shape[1]),
+                int(img.shape[0]),
+                int(img.sum()),
+                int(img.max()),
+                int(img.min()),
             )
+        ]
 
-    return media.mapInPandas(dec, JPEG_FEATURES_SCHEMA)
+    return map_media_rows(media, dec, JPEG_FEATURES_SCHEMA)
 
 
 # ---- AVI (RIFF video container, raw DIB frames) — the VIDEO tier --------
@@ -1194,8 +1082,7 @@ def jpeg_features(media: DataFrame) -> DataFrame:
 # Video needs no CODEC when frames are stored uncompressed ('DIB '
 # stream, BI_RGB): the work is honest CONTAINER parsing — RIFF chunk
 # walk, LIST nesting (hdrl/strl/movi), word alignment, per-frame '00db'
-# payloads unpacked exactly like bottom-up padded BGR BMP rows. After
-# this, the decode_media stub covers only COMPRESSED video codecs.
+# payloads unpacked exactly like bottom-up padded BGR BMP rows.
 
 
 def _avi_params(doc_id: int) -> tuple[int, int, int]:
@@ -1213,21 +1100,12 @@ def _avi_pixel(doc_id: int, f: int, x, y):
 
 
 def _dib_frame(doc_id: int, f: int, w: int, h: int) -> bytes:
-    """Bottom-up BGR rows padded to 4 bytes (the BMP pixel-array layout)."""
+    """Frame f of the synthetic clip as DIB rows (_dib_rows)."""
     import numpy as np
 
     x = np.arange(w, dtype=np.int64)[None, :]
     y = np.arange(h, dtype=np.int64)[:, None]
-    r, g, b = _avi_pixel(doc_id, f, x, y)
-    pad = (-(w * 3)) % 4
-    rows = []
-    for yy in range(h - 1, -1, -1):
-        px = np.empty((w, 3), dtype=np.uint8)
-        px[:, 0] = b[yy]
-        px[:, 1] = g[yy]
-        px[:, 2] = r[yy]
-        rows.append(px.tobytes() + b"\x00" * pad)
-    return b"".join(rows)
+    return _dib_rows(*_avi_pixel(doc_id, f, x, y))
 
 
 def _chunk(fcc: bytes, payload: bytes) -> bytes:
@@ -1347,43 +1225,28 @@ AVI_FEATURES_SCHEMA = StructType(
 def synthesize_avi_media(docs: DataFrame) -> DataFrame:
     """REAL AVI blobs (raw-DIB video stream), one per doc, executor-side."""
 
-    def gen(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            out = [(int(d), _avi_bytes(int(d))) for d in pdf["doc_id"]]
-            yield pd.DataFrame(out, columns=["doc_id", "content"])
-
-    return _doc_ids_for_synthesis(docs).mapInPandas(gen, MEDIA_BLOB_SCHEMA)
+    return _synthesize_blobs(docs, _avi_bytes)
 
 
 def avi_features(media: DataFrame) -> DataFrame:
     """Decode ALL frames and emit exact integer per-channel sums across
     the whole clip plus container metadata."""
 
-    def dec(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            out = []
-            for doc_id, blob in zip(pdf["doc_id"], pdf["content"]):
-                w, h, frames = avi_decode_frames(bytes(blob))
-                out.append(
-                    (
-                        int(doc_id),
-                        int(w),
-                        int(h),
-                        len(frames),
-                        int(sum(f[:, :, 0].sum() for f in frames)),
-                        int(sum(f[:, :, 1].sum() for f in frames)),
-                        int(sum(f[:, :, 2].sum() for f in frames)),
-                    )
-                )
-            yield pd.DataFrame(
-                out,
-                columns=[
-                    "doc_id", "width", "height", "n_frames",
-                    "sum_r", "sum_g", "sum_b",
-                ],
+    def dec(row) -> list[tuple]:
+        w, h, frames = avi_decode_frames(bytes(row.content))
+        return [
+            (
+                int(row.doc_id),
+                int(w),
+                int(h),
+                len(frames),
+                int(sum(f[:, :, 0].sum() for f in frames)),
+                int(sum(f[:, :, 1].sum() for f in frames)),
+                int(sum(f[:, :, 2].sum() for f in frames)),
             )
+        ]
 
-    return media.mapInPandas(dec, AVI_FEATURES_SCHEMA)
+    return map_media_rows(media, dec, AVI_FEATURES_SCHEMA)
 
 
 FRAME_SAMPLE_SCHEMA = StructType(
@@ -1449,35 +1312,27 @@ def avi_scene_cuts(media: DataFrame, thresh_milli: int) -> DataFrame:
     cut flag (mean >= thresh_milli). One mapInPandas pass; frames stay
     executor-side (media bytes never shuffle)."""
 
-    def dec(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
+    def dec(row) -> list[tuple]:
         import numpy as np
 
-        for pdf in batches:
-            out = []
-            for doc_id, blob in zip(pdf["doc_id"], pdf["content"]):
-                w, h, frames = avi_decode_frames(bytes(blob))
-                cells = w * h * 3
-                for i in range(1, len(frames)):
-                    delta = int(np.abs(frames[i] - frames[i - 1]).sum())
-                    mean_milli = delta * 1000 // cells
-                    out.append(
-                        (
-                            int(doc_id),
-                            i,
-                            delta,
-                            mean_milli,
-                            int(mean_milli >= thresh_milli),
-                        )
-                    )
-            yield pd.DataFrame(
-                out,
-                columns=[
-                    "doc_id", "frame_idx", "delta_sum",
-                    "mean_delta_milli", "is_cut",
-                ],
+        out = []
+        w, h, frames = avi_decode_frames(bytes(row.content))
+        cells = w * h * 3
+        for i in range(1, len(frames)):
+            delta = int(np.abs(frames[i] - frames[i - 1]).sum())
+            mean_milli = delta * 1000 // cells
+            out.append(
+                (
+                    int(row.doc_id),
+                    i,
+                    delta,
+                    mean_milli,
+                    int(mean_milli >= thresh_milli),
+                )
             )
+        return out
 
-    return media.mapInPandas(dec, SCENE_CUT_SCHEMA)
+    return map_media_rows(media, dec, SCENE_CUT_SCHEMA)
 
 
 CONTRAST_SCHEMA = StructType(
@@ -1499,40 +1354,30 @@ def bmp_contrast_stats(media: DataFrame, var_milli_thresh: int) -> DataFrame:
     (var_num * 1000 < thresh * n^2 cross-multiplied — no division, no
     doubles). One mapInPandas decode pass; media never shuffles."""
 
-    def dec(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
+    def dec(row) -> list[tuple]:
         import numpy as np
 
-        for pdf in batches:
-            out = []
-            for doc_id, blob in zip(pdf["doc_id"], pdf["content"]):
-                px = bmp_decode_pixels(bytes(blob))
-                luma = (
-                    2 * px[:, :, 0].astype(np.int64)
-                    + 5 * px[:, :, 1]
-                    + px[:, :, 2]
-                ).ravel()
-                n = int(luma.size)
-                s = int(luma.sum())
-                s2 = int((luma * luma).sum())
-                var_num = n * s2 - s * s
-                out.append(
-                    (
-                        int(doc_id),
-                        n,
-                        s,
-                        var_num,
-                        int(var_num * 1000 < var_milli_thresh * n * n),
-                    )
-                )
-            yield pd.DataFrame(
-                out,
-                columns=[
-                    "doc_id", "n_px", "sum_luma", "var_num",
-                    "is_low_contrast",
-                ],
+        px = bmp_decode_pixels(bytes(row.content))
+        luma = (
+            2 * px[:, :, 0].astype(np.int64)
+            + 5 * px[:, :, 1]
+            + px[:, :, 2]
+        ).ravel()
+        n = int(luma.size)
+        s = int(luma.sum())
+        s2 = int((luma * luma).sum())
+        var_num = n * s2 - s * s
+        return [
+            (
+                int(row.doc_id),
+                n,
+                s,
+                var_num,
+                int(var_num * 1000 < var_milli_thresh * n * n),
             )
+        ]
 
-    return media.mapInPandas(dec, CONTRAST_SCHEMA)
+    return map_media_rows(media, dec, CONTRAST_SCHEMA)
 
 
 #: 8-point DCT-II cosine basis in micro units: COS8_MICRO[k][x] =
@@ -1570,48 +1415,43 @@ def bmp_phash_dct(media: DataFrame) -> DataFrame:
     (median = mean of the 8th/9th order statistics of those 15 — exact
     under integer-sum-of-two DIV 2). One mapInPandas pass."""
 
-    def dec(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        import numpy as np
+    import numpy as np
 
-        cos = np.array(COS8_MICRO, dtype=np.int64)
-        for pdf in batches:
-            out = []
-            for doc_id, blob in zip(pdf["doc_id"], pdf["content"]):
-                px = bmp_decode_pixels(bytes(blob))
-                h, w = px.shape[0], px.shape[1]
-                sy = (np.arange(8) * h) // 8
-                sx = (np.arange(8) * w) // 8
-                small = px[np.ix_(sy, sx)]
-                luma = (
-                    2 * small[:, :, 0].astype(np.int64)
-                    + 5 * small[:, :, 1]
-                    + small[:, :, 2]
-                )
-                # D[k,l] = sum_{y,x} luma[y,x] * cos[k,y] * cos[l,x]
-                d = cos @ luma @ cos.T
-                ac = [
-                    int(d[k, l])
-                    for k in range(4)
-                    for l in range(4)
-                    if not (k == 0 and l == 0)
-                ]
-                s = sorted(ac)
-                median2 = s[7] + s[8]  # 15 values: median = 8th (idx 7);
-                # use the mean of idx 7 and 8 to match an even-split rule
-                # shared with the oracle (sum DIV 2, exact both engines)
-                median = median2 // 2 if median2 >= 0 else -((-median2) // 2)
-                bits = 0
-                pos = 0
-                for k in range(4):
-                    for l in range(4):
-                        if k == 0 and l == 0:
-                            continue
-                        if int(d[k, l]) > median:
-                            bits |= 1 << pos
-                        pos += 1
-                out.append((int(doc_id), bits, int(d[0, 0]), median))
-            yield pd.DataFrame(
-                out, columns=["doc_id", "phash", "dc_coeff", "median_coeff"]
-            )
+    cos = np.array(COS8_MICRO, dtype=np.int64)
 
-    return media.mapInPandas(dec, PHASH_SCHEMA)
+    def dec(row) -> list[tuple]:
+        px = bmp_decode_pixels(bytes(row.content))
+        h, w = px.shape[0], px.shape[1]
+        sy = (np.arange(8) * h) // 8
+        sx = (np.arange(8) * w) // 8
+        small = px[np.ix_(sy, sx)]
+        luma = (
+            2 * small[:, :, 0].astype(np.int64)
+            + 5 * small[:, :, 1]
+            + small[:, :, 2]
+        )
+        # D[k,l] = sum_{y,x} luma[y,x] * cos[k,y] * cos[l,x]
+        d = cos @ luma @ cos.T
+        ac = [
+            int(d[k, l])
+            for k in range(4)
+            for l in range(4)
+            if not (k == 0 and l == 0)
+        ]
+        s = sorted(ac)
+        median2 = s[7] + s[8]  # 15 values: median = 8th (idx 7);
+        # use the mean of idx 7 and 8 to match an even-split rule
+        # shared with the oracle (sum DIV 2, exact both engines)
+        median = median2 // 2 if median2 >= 0 else -((-median2) // 2)
+        bits = 0
+        pos = 0
+        for k in range(4):
+            for l in range(4):
+                if k == 0 and l == 0:
+                    continue
+                if int(d[k, l]) > median:
+                    bits |= 1 << pos
+                pos += 1
+        return [(int(row.doc_id), bits, int(d[0, 0]), median)]
+
+    return map_media_rows(media, dec, PHASH_SCHEMA)

@@ -3,6 +3,9 @@
 
 from __future__ import annotations
 
+import pytest
+
+from movie_data_transformer_spark.operators import multimodal as mm
 from movie_data_transformer_spark.operators.merge import merge_flat
 from movie_data_transformer_spark.operators.movie_pipeline import (
     dedup_latest,
@@ -104,3 +107,35 @@ def test_ivf_assign_empty_batch(spark):
     )
     row = ivf_assign_from_centroids(cents, one).collect()[0]
     assert (row.vec_id, row.cell) == (10, 1)
+
+
+@pytest.mark.parametrize(
+    ("build", "schema"),
+    [
+        pytest.param(lambda d: mm.wav_features(mm.synthesize_wav_media(d)),
+                     mm.WAV_FEATURES_SCHEMA, id="wav"),
+        pytest.param(lambda d: mm.bmp_features(mm.synthesize_bmp_media(d)),
+                     mm.BMP_FEATURES_SCHEMA, id="bmp"),
+        pytest.param(lambda d: mm.png_features(mm.synthesize_png_media(d)),
+                     mm.BMP_FEATURES_SCHEMA, id="png"),
+        pytest.param(lambda d: mm.gif_features(mm.synthesize_gif_media(d)),
+                     mm.BMP_FEATURES_SCHEMA, id="gif"),
+        pytest.param(lambda d: mm.jpeg_features(mm.synthesize_jpeg_media(d)),
+                     mm.JPEG_FEATURES_SCHEMA, id="jpeg"),
+        pytest.param(lambda d: mm.avi_features(mm.synthesize_avi_media(d)),
+                     mm.AVI_FEATURES_SCHEMA, id="avi"),
+        pytest.param(lambda d: mm.avi_scene_cuts(mm.synthesize_avi_media(d), 100),
+                     mm.SCENE_CUT_SCHEMA, id="avi_scene_cuts"),
+        pytest.param(lambda d: mm.bmp_contrast_stats(mm.synthesize_bmp_media(d), 100),
+                     mm.CONTRAST_SCHEMA, id="bmp_contrast_stats"),
+        pytest.param(lambda d: mm.bmp_phash_dct(mm.synthesize_bmp_media(d)),
+                     mm.PHASH_SCHEMA, id="bmp_phash_dct"),
+    ],
+)
+def test_media_operators_on_empty_input(spark, build, schema):
+    """Zero documents in: zero rows out, with exactly the declared
+    schema. Every media operator crosses into the Python worker through
+    multimodal.map_media_rows, so one defect there shows in all."""
+    out = build(spark.createDataFrame([], "doc_id long"))
+    assert out.schema == schema
+    assert out.collect() == []

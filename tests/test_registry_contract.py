@@ -173,8 +173,6 @@ KEPT_TEST_KNOBS = {
         "test_r8_properties.py::test_link_prediction_nonadjacent_and_hub_cap",
     "operators.ml_queries.train_lr(iters)":
         "test_graph_analytics.py::test_lr_trainer_learns_the_label_bucket",
-    "operators.multimodal.decode_media(fake)":
-        "test_text_multimodal.py::test_decode_stub_raises_without_fake",
     "operators.ordered_stats.attach_order_stats(n_buckets)":
         "test_r13_opt_plans.py::test_ordered_stats_descending_and_small_n",
     "operators.recsys_queries.item_similarities(max_watchlist)":
@@ -288,6 +286,43 @@ def test_package_parameters_take_a_second_value():
             for t in tests
             for c in ast.walk(t)
         ), (knob, test)
+
+
+#: The environment variables the package may read: deployment settings
+#: of the session, not switches of an operator.
+DEPLOYMENT_ENV_VARS = {"SPARK_GRAFT_CPUS", "SPARK_DRIVER_MEM"}
+
+
+def _is_environ(e: ast.expr) -> bool:
+    return (isinstance(e, ast.Name) and e.id == "environ") or (
+        isinstance(e, ast.Attribute) and e.attr == "environ"
+    )
+
+
+def test_package_reads_only_deployment_env_vars():
+    """An environment variable is a setting no caller sees. The package
+    reads (os.environ[...], os.environ.get, os.getenv, `in os.environ`)
+    only the deployment settings in DEPLOYMENT_ENV_VARS; a key that is
+    not a string literal fails the check too."""
+    read = set()
+    for mod, tree in _package_modules().items():
+        for node in ast.walk(tree):
+            key = None
+            if isinstance(node, ast.Subscript) and _is_environ(node.value):
+                key = node.slice
+            elif isinstance(node, ast.Compare) and _is_environ(node.comparators[-1]):
+                key = node.left
+            elif isinstance(node, ast.Call) and node.args and (
+                _called_name(node) == "getenv"
+                or (_called_name(node) == "get" and _is_environ(node.func.value))
+            ):
+                key = node.args[0]
+            if key is not None:
+                name = key.value if isinstance(key, ast.Constant) else ast.unparse(key)
+                read.add((name, mod))
+    assert {n for n, _ in read} <= DEPLOYMENT_ENV_VARS, sorted(
+        r for r in read if r[0] not in DEPLOYMENT_ENV_VARS
+    )
 
 
 def test_capture_plans_writes_only_to_its_out_dir(spark, sf_dir, tmp_path, monkeypatch):

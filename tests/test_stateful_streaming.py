@@ -299,10 +299,9 @@ def _protobuf_available() -> bool:
 def test_transform_with_state_totals_env_gated(spark, sf_dir, tmp_path):
     """The Spark 4 next-gen arbitrary-state API (transformWithStateInPandas
     + RocksDB provider) expressing the SAME running-totals operator as
-    applyInPandasWithState — env-gated the way the compressed-codec tier
-    is (multimodal.codec_available): the sandbox lacks python-protobuf,
-    which the TwS runner hard-requires, so this SKIPS here and runs for
-    real wherever protobuf exists. The skip message names the missing
+    applyInPandasWithState — env-gated on an import probe: the sandbox
+    lacks python-protobuf, which the TwS runner hard-requires, so this
+    SKIPS here and runs for real wherever protobuf exists. The skip message names the missing
     dependency so a misconfigured cluster can't hide."""
     import pytest
 
