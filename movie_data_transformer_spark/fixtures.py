@@ -15,9 +15,19 @@ no engine-specific hash functions:
     date         = strftime(ts, '%Y-%m-%d')
 
 One `watchedBy` element per event row; `movies` groups these per movie.
+
+Derived fixtures are cached on disk under one naming scheme
+(`fixture_cache_dir`), built atomically (`publish_fixture_dir`), and the
+JSONL feeds the streaming entries consume are written by one writer
+(`write_jsonl_feed`).
 """
 
 from __future__ import annotations
+
+import glob as globmod
+import os
+import shutil
+import tempfile
 
 from pyspark import StorageLevel
 from pyspark.sql import DataFrame, SparkSession
@@ -25,6 +35,84 @@ from pyspark.sql import functions as F
 
 from movie_data_transformer_spark.schemas import MOVIE_INPUT
 from movie_data_transformer_spark.sources.tables import load_table
+
+#: mtime of a JSONL feed's first file; file i gets this + i
+_FEED_MTIME = 1_700_000_000
+
+
+def source_fingerprint(sf_dir: str) -> str:
+    """Cheap content fingerprint of the testdata the movie fixtures derive
+    from (events.parquet size+mtime) — baked into fixture-cache dir names
+    so a regenerated testdata tree invalidates stale cached fixtures
+    instead of silently diverging from the freshly computed oracle
+    (ADVICE r3). No Spark job: pure file metadata."""
+    st = os.stat(os.path.join(sf_dir, "events.parquet"))
+    return f"{st.st_size}_{int(st.st_mtime)}"
+
+
+def fixture_cache_dir(prefix: str, sf_dir: str) -> str:
+    """The canonical cache-dir name for a derived fixture:
+    /tmp/<prefix>_<sf tag>_<source fingerprint>. The prefix carries its
+    own version tag, e.g. 'mdt_snapstore_v2'."""
+    tag = os.path.basename(sf_dir.rstrip("/"))
+    return os.path.join(
+        tempfile.gettempdir(), f"{prefix}_{tag}_{source_fingerprint(sf_dir)}"
+    )
+
+
+def publish_fixture_dir(build_fn, d: str) -> str:
+    """Build a cached fixture directory ATOMICALLY: build_fn(tmp) fills a
+    unique sibling dir, which is then rename()d into place. Concurrent
+    builders (the driver harness and pytest share /tmp fixtures) race
+    benignly — the first rename wins, losers discard their build — and a
+    reader can never observe a half-written fixture, because the cache
+    key (the `_DONE` marker inside `d`) only exists in fully-built dirs."""
+    done = os.path.join(d, "_DONE")
+    if os.path.exists(done):
+        return d
+    tmp = tempfile.mkdtemp(
+        prefix=os.path.basename(d) + ".build", dir=os.path.dirname(d) or None
+    )
+    try:
+        build_fn(tmp)
+        with open(os.path.join(tmp, "_DONE"), "w") as f:
+            f.write("ok")
+        try:
+            os.rename(tmp, d)
+        except OSError:
+            if os.path.exists(done):
+                shutil.rmtree(tmp, ignore_errors=True)  # another builder won
+            else:
+                # stale partial dir from a crashed run: replace it
+                shutil.rmtree(d, ignore_errors=True)
+                os.rename(tmp, d)
+    except Exception:
+        shutil.rmtree(tmp, ignore_errors=True)
+        raise
+    return d
+
+
+def write_jsonl_feed(parts: DataFrame, out: str, stem: str) -> None:
+    """Write `parts` under `out` as a JSONL feed: one `{stem}_{i}.json`
+    per partition, in partition order, one JSON object per row.
+
+    The write is a distributed text write: no row reaches the driver,
+    which only renames the part files. File i gets mtime
+    `_FEED_MTIME + i`; a file stream takes new files in mtime order, so
+    its micro-batches follow the partitions (`repartitionByRange` makes
+    that an event-time order)."""
+    stage = out + "_stage"
+    (
+        parts.select(F.to_json(F.struct(*parts.columns)).alias("value"))
+        .write.mode("overwrite")
+        .text(stage)
+    )
+    for i, p in enumerate(sorted(globmod.glob(os.path.join(stage, "part-*")))):
+        dst = os.path.join(out, f"{stem}_{i}.json")
+        shutil.move(p, dst)
+        os.utime(dst, (_FEED_MTIME + i, _FEED_MTIME + i))
+    shutil.rmtree(stage, ignore_errors=True)
+
 
 #: DuckDB CTE producing the flat (exploded-equivalent) ratings table.
 #: Mirror of derive_ratings() below — keep the two in lockstep.

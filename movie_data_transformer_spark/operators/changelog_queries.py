@@ -24,7 +24,14 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from movie_data_transformer_spark.fixtures import (
+    fixture_cache_dir,
+    publish_fixture_dir,
+    write_jsonl_feed,
+)
+from movie_data_transformer_spark.sources.jsonl import stream_jsonl
 from movie_data_transformer_spark.sources.tables import load_table
+from movie_data_transformer_spark.streaming.harness import fold_batch_versions
 
 
 def q_cdc_apply_tombstones(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -78,15 +85,6 @@ def _cdc_jsonl_dir(spark: SparkSession, sf_dir: str) -> str:
     """Publish (once per sf + source fingerprint) the I/U/D changelog as
     4 JSONL files so availableNow slices it into micro-batches. ts rides
     as epoch micros (JSON round-trips longs exactly; timestamps don't)."""
-    import glob as globmod
-    import os
-    import shutil
-
-    from movie_data_transformer_spark.operators.jsonl_queries import (
-        fixture_cache_dir,
-        publish_fixture_dir,
-    )
-
     d = fixture_cache_dir("mdt_cdcstream_v1", sf_dir)
 
     def _build(out: str) -> None:
@@ -98,16 +96,7 @@ def _cdc_jsonl_dir(spark: SparkSession, sf_dir: str) -> str:
             "unix_micros(CAST(ts AS TIMESTAMP)) AS ts_us",
             "event_id",
         ).filter("op IS NOT NULL")
-        stage = out + "_stage"
-        (
-            ops.repartition(4)
-            .select(F.to_json(F.struct(*ops.columns)).alias("value"))
-            .write.mode("overwrite")
-            .text(stage)
-        )
-        for i, p in enumerate(sorted(globmod.glob(os.path.join(stage, "part-*")))):
-            shutil.move(p, os.path.join(out, f"ops_{i}.json"))
-        shutil.rmtree(stage, ignore_errors=True)
+        write_jsonl_feed(ops.repartition(4), out, "ops")
 
     return publish_fixture_dir(_build, d)
 
@@ -126,79 +115,25 @@ def _fold_ops(df: DataFrame) -> DataFrame:
 
 def q_stream_cdc_apply(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Streaming twin of cdc_apply_tombstones: the changelog arrives as 4
-    micro-batches (availableNow); foreachBatch folds each batch into a
-    versioned keyed state (state_{i+1} = fold(state_i ∪ fold(batch)) —
-    the fold is ASSOCIATIVE, so any micro-batch slicing yields the same
-    final state and the entry carries the SAME full oracle as the batch
-    form. Tombstones are RETAINED in state (a later batch may carry an
-    older op that must still lose the LWW race) and filtered only at
-    read. State versions are keyed by batch_id and written
-    mode=overwrite, so a foreachBatch replay rewrites its own version
-    idempotently (the stream_snapshot_merge contract).
+    micro-batches (availableNow), and `fold_batch_versions` folds each
+    into a versioned keyed state. The fold is ASSOCIATIVE, so any
+    micro-batch slicing yields the same final state and the entry
+    carries the SAME full oracle as the batch form. Tombstones are
+    RETAINED in state (a later batch may carry an older op that must
+    still lose the LWW race) and filtered only at read.
 
     Scale: per-trigger work is O(batch + touched state) — one fold agg;
     at 100 TB the state union becomes a keyed MERGE into the table,
     same algebra."""
-    import os
-
-    from movie_data_transformer_spark.operators.jsonl_queries import (
-        fixture_cache_dir,
-        publish_fixture_dir,
-    )
-
-    input_dir = _cdc_jsonl_dir(spark, sf_dir)
-    root = fixture_cache_dir("mdt_cdcstate_v1", sf_dir)
-
-    def _build(out: str) -> None:
-        stream = (
-            spark.readStream.schema(
-                "user_id long, op string, cents long, ts_us long, event_id long"
-            )
-            .option("maxFilesPerTrigger", "1")
-            .option("pathGlobFilter", "*.json")
-            .json(input_dir)
-        )
-
-        def _apply(batch: DataFrame, batch_id: int) -> None:
-            folded = _fold_ops(batch.withColumn("n_ops", F.lit(1).cast("long")))
-            prev = os.path.join(out, f"state_{batch_id}")
-            if os.path.exists(prev):
-                folded = _fold_ops(
-                    spark.read.parquet(prev).unionByName(folded)
-                )
-            folded.write.mode("overwrite").parquet(
-                os.path.join(out, f"state_{batch_id + 1}")
-            )
-
-        q = (
-            stream.writeStream.foreachBatch(_apply)
-            .option("checkpointLocation", os.path.join(out, "ckpt"))
-            .trigger(availableNow=True)
-            .start()
-        )
-        q.awaitTermination()
-
-    publish_fixture_dir(_build, root)
-    import glob as globmod
-
-    states = globmod.glob(os.path.join(root, "state_*"))
-    if not states:
-        # r7 ADVICE #2: a zero-micro-batch stream (empty/missing feed)
-        # would otherwise surface as max()'s opaque ValueError; name the
-        # failure the way AppendOnlyStore.read names "no committed
-        # ingests" so the fixture dir is diagnosable.
-        raise RuntimeError(
-            f"stream_cdc_apply fixture at {root} produced no state_* "
-            "snapshots (the availableNow stream saw zero micro-batches); "
-            "delete the dir to rebuild, and check the changelog feed"
-        )
-    final = max(states, key=lambda p: int(p.rsplit("_", 1)[1]))
-    return (
-        spark.read.parquet(final)
-        .filter("op = 'U'")
-        .selectExpr(
-            "user_id", "cents AS last_cents", "event_id AS last_op_seq", "n_ops"
-        )
+    ops = stream_jsonl(
+        spark,
+        "user_id long, op string, cents long, ts_us long, event_id long",
+        _cdc_jsonl_dir(spark, sf_dir),
+        1,
+    ).withColumn("n_ops", F.lit(1).cast("long"))
+    final = fold_batch_versions(ops, _fold_ops, fixture_cache_dir("mdt_cdcstate_v1", sf_dir))
+    return final.filter("op = 'U'").selectExpr(
+        "user_id", "cents AS last_cents", "event_id AS last_op_seq", "n_ops"
     )
 
 

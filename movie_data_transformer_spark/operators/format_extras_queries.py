@@ -19,16 +19,13 @@ the contract, inference at 100 TB is a full extra scan).
 
 from __future__ import annotations
 
-import glob as globmod
-import os
-import shutil
-
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from movie_data_transformer_spark.operators.jsonl_queries import (
+from movie_data_transformer_spark.fixtures import (
     fixture_cache_dir,
     publish_fixture_dir,
+    write_jsonl_feed,
 )
 from movie_data_transformer_spark.sources.tables import load_table
 
@@ -48,13 +45,7 @@ def evolution_fixture_dir(spark: SparkSession, sf_dir: str) -> str:
             ),
         ]
         for tag, df in gens:
-            stage = os.path.join(out, f"_stage_{tag}")
-            df.repartition(2).write.mode("overwrite").json(stage)
-            for i, p in enumerate(
-                sorted(globmod.glob(os.path.join(stage, "part-*.json")))
-            ):
-                shutil.move(p, os.path.join(out, f"docs_{tag}_{i}.json"))
-            shutil.rmtree(stage, ignore_errors=True)
+            write_jsonl_feed(df.repartition(2), out, f"docs_{tag}")
 
     return publish_fixture_dir(_build, d)
 

@@ -43,10 +43,7 @@ import shutil
 
 from pyspark.sql import DataFrame, SparkSession
 
-from movie_data_transformer_spark.operators.jsonl_queries import (
-    fixture_cache_dir,
-    publish_fixture_dir,
-)
+from movie_data_transformer_spark.fixtures import fixture_cache_dir, publish_fixture_dir
 from movie_data_transformer_spark.sources.tables import load_table
 
 #: the projection shipped through both formats — exact (integer cents)

@@ -8,75 +8,24 @@ the decoy file or the bad line breaks the row hash."""
 
 from __future__ import annotations
 
-import glob as globmod
 import json
 import os
 import shutil
 import tempfile
 
 from pyspark.sql import DataFrame, SparkSession
-from pyspark.sql import functions as F
 
-from movie_data_transformer_spark.fixtures import derive_movies
+from movie_data_transformer_spark.fixtures import (
+    derive_movies,
+    fixture_cache_dir,
+    publish_fixture_dir,
+    write_jsonl_feed,
+)
 from movie_data_transformer_spark.operators.movie_pipeline import explode_watched
 from movie_data_transformer_spark.operators.movie_queries import SQL_MOVIES_EXPLODE
 from movie_data_transformer_spark.sources.jsonl import read_movies_jsonl
-
-
-def source_fingerprint(sf_dir: str) -> str:
-    """Cheap content fingerprint of the testdata the movie fixtures derive
-    from (events.parquet size+mtime) — baked into fixture-cache dir names
-    so a regenerated testdata tree invalidates stale cached fixtures
-    instead of silently diverging from the freshly computed oracle
-    (ADVICE r3). No Spark job: pure file metadata."""
-    st = os.stat(os.path.join(sf_dir, "events.parquet"))
-    return f"{st.st_size}_{int(st.st_mtime)}"
-
-
-def fixture_cache_dir(prefix: str, sf_dir: str) -> str:
-    """The canonical cache-dir name for a derived fixture:
-    /tmp/<prefix>_<sf tag>_<source fingerprint>. One place for the
-    naming scheme (prefix carries its own version tag, e.g.
-    'mdt_snapstore_v2') instead of re-assembling the tag/tempdir/
-    fingerprint triple at every call site."""
-    import tempfile
-
-    tag = os.path.basename(sf_dir.rstrip("/"))
-    return os.path.join(
-        tempfile.gettempdir(), f"{prefix}_{tag}_{source_fingerprint(sf_dir)}"
-    )
-
-
-def publish_fixture_dir(build_fn, d: str) -> str:
-    """Build a cached fixture directory ATOMICALLY: build_fn(tmp) fills a
-    unique sibling dir, which is then rename()d into place. Concurrent
-    builders (the driver harness and pytest share /tmp fixtures) race
-    benignly — the first rename wins, losers discard their build — and a
-    reader can never observe a half-written fixture, because the cache
-    key (the `_DONE` marker inside `d`) only exists in fully-built dirs."""
-    done = os.path.join(d, "_DONE")
-    if os.path.exists(done):
-        return d
-    tmp = tempfile.mkdtemp(
-        prefix=os.path.basename(d) + ".build", dir=os.path.dirname(d) or None
-    )
-    try:
-        build_fn(tmp)
-        with open(os.path.join(tmp, "_DONE"), "w") as f:
-            f.write("ok")
-        try:
-            os.rename(tmp, d)
-        except OSError:
-            if os.path.exists(done):
-                shutil.rmtree(tmp, ignore_errors=True)  # another builder won
-            else:
-                # stale partial dir from a crashed run: replace it
-                shutil.rmtree(d, ignore_errors=True)
-                os.rename(tmp, d)
-    except Exception:
-        shutil.rmtree(tmp, ignore_errors=True)
-        raise
-    return d
+from movie_data_transformer_spark.streaming import run_incremental_merge
+from movie_data_transformer_spark.streaming.harness import register_cleanup_dir
 
 
 def _jsonl_dir(spark: SparkSession, sf_dir: str) -> str:
@@ -94,20 +43,8 @@ def _jsonl_dir(spark: SparkSession, sf_dir: str) -> str:
     d = fixture_cache_dir("mdt_jsonl_v1", sf_dir)
 
     def _build(out: str) -> None:
-        nested = derive_movies(spark, sf_dir)
-        stage = out + "_stage"
-        (
-            nested.repartition(4)
-            .select(F.to_json(F.struct(*nested.columns)).alias("value"))
-            .write.mode("overwrite")
-            .text(stage)
-        )
-        # stable names like the reference's S3 objects; listing order is
-        # the sorted part-file order, so batch composition is reproducible
-        parts = sorted(globmod.glob(os.path.join(stage, "part-*")))
-        for i, p in enumerate(parts):
-            shutil.move(p, os.path.join(out, f"movies_{i}.json"))
-        shutil.rmtree(stage, ignore_errors=True)
+        # stable names like the reference's S3 objects
+        write_jsonl_feed(derive_movies(spark, sf_dir).repartition(4), out, "movies")
         with open(os.path.join(out, "movies_0.json"), "a") as f:
             f.write("THIS LINE IS NOT JSON {{{\n")  # op 15 target
         with open(os.path.join(out, "README.txt"), "w") as f:
@@ -130,9 +67,6 @@ def q_movies_incremental_merge(spark: SparkSession, sf_dir: str) -> DataFrame:
     state, return the final state. Rows-only: the batch-order-dependent
     tie policy (existing wins) is inherently sequential, not ANSI-SQL
     (the batch-form merge IS oracle-checked as movies_merge_upsert)."""
-    from movie_data_transformer_spark.streaming import run_incremental_merge
-    from movie_data_transformer_spark.streaming.harness import register_cleanup_dir
-
     src = _jsonl_dir(spark, sf_dir)
     tag = os.path.basename(sf_dir.rstrip("/"))
     # final state outlives the per-run work dir via a distributed parquet

@@ -9,6 +9,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from movie_data_transformer_spark.fixtures import fixture_cache_dir, publish_fixture_dir
 from movie_data_transformer_spark.operators.dedup import (
     CORPUS_ORACLE_CTE,
     MINHASH_COEFFS,
@@ -410,10 +411,6 @@ def _minhash_state_index_dir(spark: SparkSession, sf_dir: str) -> str:
         band_table,
         doc_shingle_sets,
         minhash_signatures_from_arrays,
-    )
-    from movie_data_transformer_spark.operators.jsonl_queries import (
-        fixture_cache_dir,
-        publish_fixture_dir,
     )
 
     # cache key includes an index-format version: unlike the raw-docs

@@ -490,7 +490,8 @@ def png_decode_pixels(data: bytes):
     """Decode an 8-bit truecolor PNG into (h, w, 3) RGB int64: verify
     signature + per-chunk CRC32, parse IHDR, zlib-inflate the
     concatenated IDAT stream, reverse all five scanline filters
-    (None/Sub/Up/Average/Paeth)."""
+    (None/Sub/Up/Average/Paeth). Malformed or truncated input raises
+    ValueError."""
     import struct as struct_mod
     import zlib
 
@@ -501,7 +502,11 @@ def png_decode_pixels(data: bytes):
     pos, w = 8, None
     idat = b""
     while pos < len(data):
+        if pos + 12 > len(data):
+            raise ValueError("truncated PNG chunk")
         (ln,) = struct_mod.unpack_from(">I", data, pos)
+        if pos + 12 + ln > len(data):
+            raise ValueError("truncated PNG chunk")
         tag = data[pos + 4 : pos + 8]
         payload = data[pos + 8 : pos + 8 + ln]
         (crc,) = struct_mod.unpack_from(">I", data, pos + 8 + ln)
@@ -516,8 +521,15 @@ def png_decode_pixels(data: bytes):
         elif tag == b"IEND":
             break
         pos += 12 + ln
-    raw = zlib.decompress(idat)
+    if w is None:
+        raise ValueError("missing IHDR")
+    try:
+        raw = zlib.decompress(idat)
+    except zlib.error as e:
+        raise ValueError(f"bad IDAT stream: {e}") from e
     stride = w * 3
+    if len(raw) != h * (stride + 1):
+        raise ValueError("IDAT size mismatch")
     prior = np.zeros(stride, dtype=np.int64)
     rows = []
     for yy in range(h):
@@ -625,6 +637,8 @@ def _lzw_decode(data: bytes, min_code_size: int = 8) -> bytes:
     prev = None
     while True:
         while nbits < width:
+            if pos == len(data):
+                raise ValueError("missing EOI")
             acc |= data[pos] << nbits
             pos += 1
             nbits += 8
@@ -648,7 +662,6 @@ def _lzw_decode(data: bytes, min_code_size: int = 8) -> bytes:
             if len(table) == (1 << width) and width < 12:
                 width += 1
         prev = entry
-    raise ValueError("missing EOI")
 
 
 def _gif_bytes(d: int) -> bytes:
@@ -693,13 +706,15 @@ def gif_decode_pixels(data: bytes):
     """Decode a GIF into (h, w, 3) RGB int64: parse header/screen
     descriptor, read the global color table, parse the image descriptor,
     reassemble the LZW sub-blocks, decompress, map indices through the
-    palette."""
+    palette. Malformed or truncated input raises ValueError."""
     import struct as struct_mod
 
     import numpy as np
 
     if data[:6] not in (b"GIF87a", b"GIF89a"):
         raise ValueError("bad GIF signature")
+    if len(data) < 13:
+        raise ValueError("truncated GIF")
     sw, sh, flags, _bg, _ar = struct_mod.unpack_from("<HHBBB", data, 6)
     if not flags & 0x80:
         raise ValueError("no global color table")
@@ -709,8 +724,10 @@ def gif_decode_pixels(data: bytes):
         data, dtype=np.uint8, count=gct_len * 3, offset=pos
     ).reshape(gct_len, 3).astype(np.int64)
     pos += gct_len * 3
-    if data[pos] != 0x2C:
+    if data[pos : pos + 1] != b"\x2c":
         raise ValueError("expected image descriptor")
+    if pos + 11 > len(data):
+        raise ValueError("truncated GIF")
     _l, _t, w, h, iflags = struct_mod.unpack_from("<HHHHB", data, pos + 1)
     if iflags & 0x40:
         raise ValueError("interlace unsupported")
@@ -718,10 +735,12 @@ def gif_decode_pixels(data: bytes):
     mcs = data[pos]
     pos += 1
     lzw = bytearray()
-    while data[pos] != 0:
+    while pos < len(data) and data[pos] != 0:
         ln = data[pos]
         lzw += data[pos + 1 : pos + 1 + ln]
         pos += 1 + ln
+    if pos >= len(data):
+        raise ValueError("truncated GIF")
     idx = np.frombuffer(
         _lzw_decode(bytes(lzw), mcs), dtype=np.uint8
     ).astype(np.int64)
@@ -971,7 +990,8 @@ def _jpeg_bytes(doc_id: int) -> bytes:
 def jpeg_decode_gray(blob: bytes):
     """Parse a baseline grayscale JFIF file and return the decoded pixel
     array (h, w) uint8 — real marker walk, DHT/DQT from the FILE, entropy
-    decode, dequant, de-zigzag, float IDCT, level shift."""
+    decode, dequant, de-zigzag, float IDCT, level shift. Malformed or
+    truncated input raises ValueError."""
     import struct as struct_mod
 
     import numpy as np
@@ -984,13 +1004,17 @@ def jpeg_decode_gray(blob: bytes):
     w = h = None
     scan = None
     while i < len(blob):
-        if blob[i] != 0xFF:
+        if blob[i] != 0xFF or i + 1 == len(blob):
             raise ValueError("marker expected")
         marker = blob[i + 1]
         if marker == 0xD9:  # EOI
             break
+        if i + 4 > len(blob):
+            raise ValueError("truncated JPEG segment")
         ln = struct_mod.unpack(">H", blob[i + 2 : i + 4])[0]
         seg = blob[i + 4 : i + 2 + ln]
+        if len(seg) != ln - 2:
+            raise ValueError("truncated JPEG segment")
         if marker == 0xDB:
             if seg[0] != 0x00:
                 raise ValueError("only 8-bit quant table 0 supported")
@@ -1015,8 +1039,10 @@ def jpeg_decode_gray(blob: bytes):
             # entropy data runs to the next real marker (EOI here)
             j = i + 2 + ln
             k = j
-            while not (blob[k] == 0xFF and blob[k + 1] not in (0x00,)):
+            while k + 1 < len(blob) and not (blob[k] == 0xFF and blob[k + 1] != 0x00):
                 k += 1
+            if k + 1 >= len(blob):
+                raise ValueError("truncated JPEG scan")
             scan = blob[j:k]
             i = k
             continue

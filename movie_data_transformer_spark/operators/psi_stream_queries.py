@@ -11,40 +11,36 @@ Feed: events serialized once per (sf, fingerprint) as 4 JSONL slices
 ref/cur flag are computed BEFORE serialization — JSON round-trips the
 strings/ints exactly, and the stream then never touches doubles.
 
-State: state_{i+1} = foldCounts(state_i ∪ counts(batch_i)), written
-mode=overwrite keyed by batch_id — idempotent under foreachBatch replay
-(the stream_snapshot_merge contract). Per-trigger work is O(batch) +
-an 8-row state union; at 100 TB the state is still 8 rows per monitored
-score — this is the cheapest possible stateful stream.
+State: `harness.fold_batch_versions` with the count fold, so
+state_{i+1} = foldCounts(state_i ∪ counts(batch_i)). Per-trigger work is
+O(batch) + an 8-row state union; at 100 TB the state is still 8 rows
+per monitored score — this is the cheapest possible stateful stream.
 
 Entry `stream_psi_monitor` (FULL oracle = SQL_SCORE_PSI_BINS).
 """
 
 from __future__ import annotations
 
-import os
-
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from movie_data_transformer_spark.fixtures import (
+    fixture_cache_dir,
+    publish_fixture_dir,
+    write_jsonl_feed,
+)
 from movie_data_transformer_spark.operators.psi_queries import (
     _N_BINS,
     SPLIT,
     SQL_SCORE_PSI_BINS,
     _bin_expr,
 )
+from movie_data_transformer_spark.sources.jsonl import stream_jsonl
 from movie_data_transformer_spark.sources.tables import load_table
+from movie_data_transformer_spark.streaming.harness import fold_batch_versions
 
 
 def _psi_jsonl_dir(spark: SparkSession, sf_dir: str) -> str:
-    import glob as globmod
-    import shutil
-
-    from movie_data_transformer_spark.operators.jsonl_queries import (
-        fixture_cache_dir,
-        publish_fixture_dir,
-    )
-
     d = fixture_cache_dir("mdt_psistream_v1", sf_dir)
 
     def _build(out: str) -> None:
@@ -52,16 +48,7 @@ def _psi_jsonl_dir(spark: SparkSession, sf_dir: str) -> str:
             f"{_bin_expr()} AS bin",
             f"CAST(ts < TIMESTAMP '{SPLIT}' AS INT) AS is_ref",
         )
-        stage = out + "_stage"
-        (
-            rows.repartition(4)
-            .select(F.to_json(F.struct(*rows.columns)).alias("value"))
-            .write.mode("overwrite")
-            .text(stage)
-        )
-        for i, p in enumerate(sorted(globmod.glob(os.path.join(stage, "part-*")))):
-            shutil.move(p, os.path.join(out, f"scored_{i}.json"))
-        shutil.rmtree(stage, ignore_errors=True)
+        write_jsonl_feed(rows.repartition(4), out, "scored")
 
     return publish_fixture_dir(_build, d)
 
@@ -74,59 +61,14 @@ def _fold_counts(df: DataFrame) -> DataFrame:
 
 
 def q_stream_psi_monitor(spark: SparkSession, sf_dir: str) -> DataFrame:
-    import glob as globmod
-
-    from movie_data_transformer_spark.operators.jsonl_queries import (
-        fixture_cache_dir,
-        publish_fixture_dir,
+    scored = stream_jsonl(spark, "bin string, is_ref int", _psi_jsonl_dir(spark, sf_dir), 1)
+    counts = fold_batch_versions(
+        scored.selectExpr(
+            "bin", "CAST(is_ref AS LONG) AS ref_n", "CAST(1 - is_ref AS LONG) AS cur_n"
+        ),
+        _fold_counts,
+        fixture_cache_dir("mdt_psistate_v1", sf_dir),
     )
-
-    input_dir = _psi_jsonl_dir(spark, sf_dir)
-    root = fixture_cache_dir("mdt_psistate_v1", sf_dir)
-
-    def _build(out: str) -> None:
-        stream = (
-            spark.readStream.schema("bin string, is_ref int")
-            .option("maxFilesPerTrigger", "1")
-            .option("pathGlobFilter", "*.json")
-            .json(input_dir)
-        )
-
-        def _apply(batch: DataFrame, batch_id: int) -> None:
-            counts = _fold_counts(
-                batch.selectExpr(
-                    "bin",
-                    "CAST(is_ref AS LONG) AS ref_n",
-                    "CAST(1 - is_ref AS LONG) AS cur_n",
-                )
-            )
-            prev = os.path.join(out, f"state_{batch_id}")
-            if os.path.exists(prev):
-                counts = _fold_counts(
-                    spark.read.parquet(prev).unionByName(counts)
-                )
-            counts.write.mode("overwrite").parquet(
-                os.path.join(out, f"state_{batch_id + 1}")
-            )
-
-        q = (
-            stream.writeStream.foreachBatch(_apply)
-            .option("checkpointLocation", os.path.join(out, "ckpt"))
-            .trigger(availableNow=True)
-            .start()
-        )
-        q.awaitTermination()
-
-    publish_fixture_dir(_build, root)
-    states = globmod.glob(os.path.join(root, "state_*"))
-    if not states:
-        raise RuntimeError(
-            f"stream_psi_monitor fixture at {root} produced no state_* "
-            "snapshots (the availableNow stream saw zero micro-batches); "
-            "delete the dir to rebuild, and check the scored feed"
-        )
-    final = max(states, key=lambda p: int(p.rsplit("_", 1)[1]))
-    counts = spark.read.parquet(final)
     totals = counts.agg(
         F.sum("ref_n").cast("bigint").alias("ref_tot"),
         F.sum("cur_n").cast("bigint").alias("cur_tot"),

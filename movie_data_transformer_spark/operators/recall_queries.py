@@ -30,8 +30,15 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from movie_data_transformer_spark.fixtures import (
+    fixture_cache_dir,
+    publish_fixture_dir,
+    write_jsonl_feed,
+)
 from movie_data_transformer_spark.operators.similarity import (
+    augmented_embeddings,
     brute_force_topk,
+    ivf_assign_incremental,
     ivf_topk,
     lsh_bucket_topk,
     pq_topk,
@@ -99,12 +106,6 @@ def q_ann_ivf_incremental_assign(spark: SparkSession, sf_dir: str) -> DataFrame:
     maintenance dataflow carries a full DuckDB oracle (the approximate
     query path stays rows-only + recall-gated). See
     similarity.ivf_assign_incremental."""
-    from movie_data_transformer_spark.operators.similarity import (
-        augmented_embeddings,
-        ivf_assign_incremental,
-    )
-    from movie_data_transformer_spark.sources.tables import load_table
-
     emb = load_table(spark, sf_dir, "embeddings")
     batch = augmented_embeddings(emb).filter(F.col("vec_id") >= 100000)
     return ivf_assign_incremental(emb, batch)
@@ -152,19 +153,6 @@ def _ingest_embeddings_jsonl_dir(spark: SparkSession, sf_dir: str) -> str:
     batch — the planted +100000 vectors, with the augmentation arithmetic
     applied so values are doubles (JSON round-trips shortest-repr doubles
     exactly) — as 4 JSONL files under /tmp, distributed write."""
-    import glob as globmod
-    import os
-    import shutil
-
-    from movie_data_transformer_spark.operators.jsonl_queries import (
-        fixture_cache_dir,
-        publish_fixture_dir,
-    )
-    from movie_data_transformer_spark.operators.similarity import (
-        augmented_embeddings,
-    )
-    from movie_data_transformer_spark.sources.tables import load_table
-
     d = fixture_cache_dir("mdt_emb_ingest", sf_dir)
 
     def _build(out: str) -> None:
@@ -177,16 +165,7 @@ def _ingest_embeddings_jsonl_dir(spark: SparkSession, sf_dir: str) -> str:
                 "CAST(label AS INT) AS label",
             )
         )
-        stage = out + "_stage"
-        (
-            batch.repartition(4)
-            .select(F.to_json(F.struct(*batch.columns)).alias("value"))
-            .write.mode("overwrite")
-            .text(stage)
-        )
-        for i, pth in enumerate(sorted(globmod.glob(os.path.join(stage, "part-*")))):
-            shutil.move(pth, os.path.join(out, f"emb_{i}.json"))
-        shutil.rmtree(stage, ignore_errors=True)
+        write_jsonl_feed(batch.repartition(4), out, "emb")
 
     return publish_fixture_dir(_build, d)
 
@@ -200,7 +179,6 @@ def q_stream_ann_ingest(spark: SparkSession, sf_dir: str) -> DataFrame:
     oracle checks both entries."""
     import tempfile
 
-    from movie_data_transformer_spark.sources.tables import load_table
     from movie_data_transformer_spark.streaming.ann_stream import (
         run_streaming_ann_ingest,
     )

@@ -24,7 +24,12 @@ import os
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from movie_data_transformer_spark.fixtures import RATINGS_ORACLE_CTE, derive_movies
+from movie_data_transformer_spark.fixtures import (
+    RATINGS_ORACLE_CTE,
+    derive_movies,
+    fixture_cache_dir,
+    publish_fixture_dir,
+)
 from movie_data_transformer_spark.operators.merge_queries import _day_parity
 from movie_data_transformer_spark.operators.metrics import (
     merge_flat_with_metrics,
@@ -55,11 +60,6 @@ def _skip_dir(spark: SparkSession, sf_dir: str) -> str:
     fixtures rebuild instead of silently diverging (ADVICE r3)."""
     import glob as globmod
     import shutil
-
-    from movie_data_transformer_spark.operators.jsonl_queries import (
-        fixture_cache_dir,
-        publish_fixture_dir,
-    )
 
     d = fixture_cache_dir(f"mdt_jsonl_skip_b{BAD_FILE}_n{N_FILES}", sf_dir)
 

@@ -19,12 +19,20 @@ pinned at file level in tests/test_snapshot_store.py.
 
 from __future__ import annotations
 
+import os
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from movie_data_transformer_spark.fixtures import (
+    fixture_cache_dir,
+    publish_fixture_dir,
+    write_jsonl_feed,
+)
 from movie_data_transformer_spark.sinks.snapshot import SnapshotTable
+from movie_data_transformer_spark.sources.jsonl import stream_jsonl
 from movie_data_transformer_spark.sources.tables import load_table
+from movie_data_transformer_spark.streaming.harness import run_available_now
 
 _CUT = "2024-01-20"
 _END = "2024-02-01"
@@ -48,11 +56,6 @@ def _snapshot_store_dir(spark: SparkSession, sf_dir: str) -> str:
     later invocations measure the time-travel READ path, which is what
     production does (the dedup_incremental_minhash precedent). Manifest
     paths are root-relative, so the publish-then-rename is safe."""
-    from movie_data_transformer_spark.operators.jsonl_queries import (
-        fixture_cache_dir,
-        publish_fixture_dir,
-    )
-
     d = fixture_cache_dir("mdt_snapstore_v3", sf_dir)
 
     def _build(out: str) -> None:
@@ -107,15 +110,6 @@ SELECT * FROM v1 UNION ALL SELECT * FROM v2
 def _purchase_jsonl_dir(spark: SparkSession, sf_dir: str) -> str:
     """Publish (once per sf + source fingerprint) the purchase events as
     4 JSONL files so availableNow slices them into micro-batches."""
-    import glob as globmod
-    import os
-    import shutil
-
-    from movie_data_transformer_spark.operators.jsonl_queries import (
-        fixture_cache_dir,
-        publish_fixture_dir,
-    )
-
     d = fixture_cache_dir("mdt_snapstream_v1", sf_dir)
 
     def _build(out: str) -> None:
@@ -125,16 +119,7 @@ def _purchase_jsonl_dir(spark: SparkSession, sf_dir: str) -> str:
             F.expr("CAST(CAST(value AS DECIMAL(18,2)) * 100 AS BIGINT)").alias("cents"),
             "event_id",
         )
-        stage = out + "_stage"
-        (
-            rows.repartition(4)
-            .select(F.to_json(F.struct(*rows.columns)).alias("value"))
-            .write.mode("overwrite")
-            .text(stage)
-        )
-        for i, p in enumerate(sorted(globmod.glob(os.path.join(stage, "part-*")))):
-            shutil.move(p, os.path.join(out, f"purchases_{i}.json"))
-        shutil.rmtree(stage, ignore_errors=True)
+        write_jsonl_feed(rows.repartition(4), out, "purchases")
 
     return publish_fixture_dir(_build, d)
 
@@ -148,16 +133,10 @@ def run_stream_snapshot_merge(
     (mode=overwrite data, atomically re-published manifest derived from
     manifest(batch_id)) instead of double-counting — the idempotency
     contract AppendOnlyStore gets from ingest ids, expressed in
-    manifest arithmetic."""
-    import os
-
+    manifest arithmetic. The feed is decoded by `stream_jsonl`, so a
+    line that is not JSON is dropped, not merged as a null-key row."""
     st = SnapshotTable(spark, root, n_buckets=8)
-    stream = (
-        spark.readStream.schema("user_id long, cents long, event_id long")
-        .option("maxFilesPerTrigger", "1")
-        .option("pathGlobFilter", "*.json")
-        .json(input_dir)
-    )
+    stream = stream_jsonl(spark, "user_id long, cents long, event_id long", input_dir, 1)
 
     def _merge_batch(batch: DataFrame, batch_id: int) -> None:
         agg = batch.groupBy("user_id").agg(
@@ -175,13 +154,7 @@ def run_stream_snapshot_merge(
                 new_version=batch_id + 1,
             )
 
-    q = (
-        stream.writeStream.foreachBatch(_merge_batch)
-        .option("checkpointLocation", os.path.join(root, "ckpt"))
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
+    run_available_now(stream, _merge_batch, os.path.join(root, "ckpt"), "append")
     return st
 
 
@@ -193,11 +166,6 @@ def q_stream_snapshot_merge(spark: SparkSession, sf_dir: str) -> DataFrame:
     stream==batch contract as stream_incremental_dedup. Intermediate
     versions (time travel across batch history) are pinned in
     tests/test_snapshot_store.py."""
-    from movie_data_transformer_spark.operators.jsonl_queries import (
-        fixture_cache_dir,
-        publish_fixture_dir,
-    )
-
     d = fixture_cache_dir("mdt_snapstream_store_v3", sf_dir)
 
     def _build(out: str) -> None:

@@ -26,6 +26,7 @@ import shutil
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from movie_data_transformer_spark.fixtures import fixture_cache_dir, publish_fixture_dir
 from movie_data_transformer_spark.operators.temporal_queries import (
     SQL_RANGE_JOIN_CONVERSIONS,
 )
@@ -65,10 +66,6 @@ def late_fixture_dir(spark: SparkSession, sf_dir: str) -> str:
     import glob as globmod
     import time
 
-    from movie_data_transformer_spark.operators.jsonl_queries import (
-        fixture_cache_dir,
-        publish_fixture_dir,
-    )
     from movie_data_transformer_spark.sources.tables import load_table
 
     d = fixture_cache_dir("mdt_late_v2", sf_dir)

@@ -30,7 +30,14 @@ import pandas as pd
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from movie_data_transformer_spark.fixtures import (
+    fixture_cache_dir,
+    publish_fixture_dir,
+    write_jsonl_feed,
+)
+from movie_data_transformer_spark.sources.jsonl import stream_jsonl
 from movie_data_transformer_spark.sources.tables import load_table
+from movie_data_transformer_spark.streaming.harness import run_availablenow_to_df
 
 TTL_US = 3 * 86_400 * 1_000_000  # 3 days
 
@@ -102,22 +109,14 @@ SELECT user_id, event_type, kept_ts_us, kept_event_id FROM walk
 
 def _throttle_jsonl_dir(spark: SparkSession, sf_dir: str) -> str:
     """Publish (once per sf + source fingerprint) the event feed as 4
-    JSONL files sliced by TIME RANGE with ascending mtimes: greedy
-    throttling is order-sensitive, so the stream twin's contract is
-    in-order arrival (the log-shipping reality — files land in time
-    order). FileStreamSource schedules by (mtime, path), so explicit
-    ascending utimes make the 4 micro-batches deterministic."""
-    import glob as globmod
-    import os
-    import shutil
-
-    from movie_data_transformer_spark.operators.jsonl_queries import (
-        fixture_cache_dir,
-        publish_fixture_dir,
-    )
-
-    d = fixture_cache_dir("mdt_throttle_feed_v1", sf_dir)
-    cuts = ["2024-01-09", "2024-01-17", "2024-01-25"]
+    JSONL files sliced by TIME RANGE (`repartitionByRange` on ts_us, so
+    file i holds only events earlier than every event of file i+1):
+    greedy throttling is order-sensitive, so the stream twin's contract
+    is in-order arrival (the log-shipping reality — files land in time
+    order). The feed writer stamps ascending mtimes, and FileStreamSource
+    takes files in mtime order, so the 4 micro-batches are deterministic."""
+    # v2: slices are ts_us range partitions (v1 cut at three dates)
+    d = fixture_cache_dir("mdt_throttle_feed_v2", sf_dir)
 
     def _build(out: str) -> None:
         ev = load_table(spark, sf_dir, "events").selectExpr(
@@ -125,28 +124,8 @@ def _throttle_jsonl_dir(spark: SparkSession, sf_dir: str) -> str:
             "event_type",
             "unix_micros(CAST(ts AS TIMESTAMP)) AS ts_us",
             "event_id",
-            "CAST(ts AS DATE) AS d",
         )
-        bounds = [(None, cuts[0]), (cuts[0], cuts[1]), (cuts[1], cuts[2]), (cuts[2], None)]
-        for i, (lo, hi) in enumerate(bounds):
-            part = ev
-            if lo is not None:
-                part = part.filter(f"d >= DATE'{lo}'")
-            if hi is not None:
-                part = part.filter(f"d < DATE'{hi}'")
-            stage = os.path.join(out, f"_stage{i}")
-            (
-                part.drop("d")
-                .coalesce(1)
-                .selectExpr("to_json(struct(user_id, event_type, ts_us, event_id)) AS value")
-                .write.mode("overwrite")
-                .text(stage)
-            )
-            src = sorted(globmod.glob(os.path.join(stage, "part-*")))[0]
-            dst = os.path.join(out, f"feed_{i}.json")
-            shutil.move(src, dst)
-            shutil.rmtree(stage, ignore_errors=True)
-            os.utime(dst, (1700000000 + i, 1700000000 + i))
+        write_jsonl_feed(ev.repartitionByRange(4, "ts_us"), out, "feed")
 
     return publish_fixture_dir(_build, d)
 
@@ -162,18 +141,11 @@ def q_stream_throttle_ttl(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     Scale: O(batch keys) state touches per trigger; state is one bigint
     per entity (RocksDB-spillable); emissions append distributed."""
-    from movie_data_transformer_spark.streaming.harness import (
-        run_availablenow_to_df,
-    )
-
-    input_dir = _throttle_jsonl_dir(spark, sf_dir)
-    stream = (
-        spark.readStream.schema(
-            "user_id long, event_type string, ts_us long, event_id long"
-        )
-        .option("maxFilesPerTrigger", "1")
-        .option("pathGlobFilter", "*.json")
-        .json(input_dir)
+    stream = stream_jsonl(
+        spark,
+        "user_id long, event_type string, ts_us long, event_id long",
+        _throttle_jsonl_dir(spark, sf_dir),
+        1,
     )
 
     def _update(key, pdfs, state):

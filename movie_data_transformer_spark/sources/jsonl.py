@@ -1,4 +1,6 @@
-"""JSONL movie-file source: scan + listing filters + typed decode.
+"""JSONL file source: scan + listing filters + typed decode, as a batch
+read (`read_movies_jsonl`) or a file stream (`stream_jsonl`, which every
+JSONL stream of the engine reads through; op 12's file slices).
 
 Covers reference ops 1-3 and 15 (SURVEY.md §2.1):
   - op 1  object-store listing with prefix pushdown
@@ -42,16 +44,16 @@ _MOVIE_INPUT_WITH_CORRUPT = StructType(
 )
 
 
-def _movie_reader(reader):
-    """The one MovieInput decode, for `spark.read` and `spark.readStream`:
-    fixed schema, the `.json` listing filter, and
-    DROPMALFORMED — "parse what you can, drop bad lines", the reference's
-    net effect (it fails+retries+skips the whole file,
+def _jsonl_reader(reader, schema):
+    """The one JSONL decode, for `spark.read` and `spark.readStream`:
+    the caller's fixed schema (never inferred), the `.json` listing
+    filter, and DROPMALFORMED — "parse what you can, drop bad lines", the
+    reference's net effect (it fails+retries+skips the whole file,
     DataTransformationService.java:124-126; we drop only the bad LINE).
     Dropping scan-side also avoids Spark's restriction on queries that
     reference only the corrupt-record column."""
     return (
-        reader.schema(MOVIE_INPUT)
+        reader.schema(schema)
         .option("mode", "DROPMALFORMED")
         .option("pathGlobFilter", _JSON_GLOB)
     )
@@ -63,15 +65,19 @@ def read_movies_jsonl(spark: SparkSession, path: str) -> DataFrame:
     `path` plays the role of the reference's bucket+prefix
     (application.properties:8, prefix `movies/`).
     """
-    return _movie_reader(spark.read).json(path)
+    return _jsonl_reader(spark.read, MOVIE_INPUT).json(path)
 
 
-def stream_movies_jsonl(spark: SparkSession, path: str, max_files_per_trigger: int) -> DataFrame:
-    """`read_movies_jsonl` as a file stream: each micro-batch decodes at
-    most `max_files_per_trigger` new files (the reference's BATCH_SIZE
-    slices, DataTransformationService.java:60-68)."""
+def stream_jsonl(
+    spark: SparkSession, schema: StructType | str, path: str, max_files_per_trigger: int
+) -> DataFrame:
+    """The JSONL files under `path` as a file stream with the batch
+    reader's decode: each micro-batch decodes at most
+    `max_files_per_trigger` new files (the reference's BATCH_SIZE slices,
+    DataTransformationService.java:60-68). Every JSONL stream of the
+    engine reads through here."""
     reader = spark.readStream.option("maxFilesPerTrigger", max_files_per_trigger)
-    return _movie_reader(reader).json(path)
+    return _jsonl_reader(reader, schema).json(path)
 
 
 def _parse_lines(spark: SparkSession, path: str) -> DataFrame:

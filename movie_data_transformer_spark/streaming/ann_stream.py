@@ -44,7 +44,9 @@ from movie_data_transformer_spark.operators.similarity import (
     frozen_centroids_micro,
     ivf_assign_from_centroids,
 )
+from movie_data_transformer_spark.sources.jsonl import stream_jsonl
 from movie_data_transformer_spark.streaming.dedup_stream import AppendOnlyStore
+from movie_data_transformer_spark.streaming.harness import run_available_now
 
 #: JSONL schema of ingested embedding rows (doubles: the augmentation
 #: arithmetic promotes the parquet floats, and JSON round-trips the
@@ -68,20 +70,14 @@ def run_streaming_ann_ingest(
     """Stream JSONL embedding files from input_dir in micro-batches,
     assign each batch against the frozen seed centroids, append the
     cell index, and return the path of the assignment log
-    (vec_id, cell, dist_micro). availableNow + checkpoint, same
-    restart contract as the other streams."""
+    (vec_id, cell, dist_micro). Read by `sources.jsonl.stream_jsonl`
+    and run by `harness.run_available_now`, with the checkpoint under
+    `work_dir`, like every other stream."""
     cents = frozen_centroids_micro(seed_embeddings).localCheckpoint()
     assign_store = AppendOnlyStore(spark, os.path.join(work_dir, "assignments"))
     index_store = AppendOnlyStore(spark, os.path.join(work_dir, "index"))
-    ckpt_dir = os.path.join(work_dir, "ckpt")
 
-    stream = (
-        spark.readStream.schema(EMB_INPUT)
-        .option("maxFilesPerTrigger", max_files_per_trigger)
-        .option("pathGlobFilter", "*.json")
-        .option("mode", "DROPMALFORMED")
-        .json(input_dir)
-    )
+    stream = stream_jsonl(spark, EMB_INPUT, input_dir, max_files_per_trigger)
 
     def _ingest(batch: DataFrame, batch_id: int) -> None:
         ingest_id = str(batch_id)
@@ -93,11 +89,5 @@ def run_streaming_ann_ingest(
         finally:
             assigned.unpersist(blocking=False)
 
-    q = (
-        stream.writeStream.foreachBatch(_ingest)
-        .option("checkpointLocation", ckpt_dir)
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
+    run_available_now(stream, _ingest, os.path.join(work_dir, "ckpt"), "append")
     return assign_store.root

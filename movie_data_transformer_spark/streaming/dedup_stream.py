@@ -55,6 +55,8 @@ from movie_data_transformer_spark.operators.dedup import (
     incremental_minhash_pairs_from_index,
     minhash_signatures_from_arrays,
 )
+from movie_data_transformer_spark.sources.jsonl import stream_jsonl
+from movie_data_transformer_spark.streaming.harness import run_available_now
 
 #: JSONL schema of ingested documents (matches the documents table).
 DOC_INPUT = StructType(
@@ -201,13 +203,13 @@ def run_streaming_incremental_dedup(
     the path of the appended (doc_a, doc_b, jaccard) pairs log: word
     trigram shingles, MinHash pairs verified at Jaccard >= 0.3.
 
-    Processes all currently available files then stops (availableNow),
-    restartable via the checkpoint — same contract as
-    run_incremental_merge."""
+    The files are read by `sources.jsonl.stream_jsonl` and run by
+    `harness.run_available_now`: everything available now is processed,
+    then the call returns; the checkpoint under `work_dir` makes it
+    restartable."""
     sets_store = AppendOnlyStore(spark, os.path.join(work_dir, "index_sets"))
     bands_store = AppendOnlyStore(spark, os.path.join(work_dir, "index_bands"))
     pairs_store = AppendOnlyStore(spark, os.path.join(work_dir, "pairs"))
-    ckpt_dir = os.path.join(work_dir, "ckpt")
 
     if "seed" not in sets_store.ingest_ids():  # restart keeps the seed rows
         seed_sets = doc_shingle_sets(seed_docs).persist()
@@ -222,13 +224,7 @@ def run_streaming_incremental_dedup(
         sets_store.append(seed_sets, "seed")
         seed_sets.unpersist(blocking=False)
 
-    stream = (
-        spark.readStream.schema(DOC_INPUT)
-        .option("maxFilesPerTrigger", max_files_per_trigger)
-        .option("pathGlobFilter", "*.json")
-        .option("mode", "DROPMALFORMED")
-        .json(input_dir)
-    )
+    stream = stream_jsonl(spark, DOC_INPUT, input_dir, max_files_per_trigger)
 
     def _link_batch(batch_docs: DataFrame, batch_id: int) -> None:
         ingest_id = str(batch_id)
@@ -256,11 +252,5 @@ def run_streaming_incremental_dedup(
             new_sets.unpersist(blocking=False)
             new_bands.unpersist(blocking=False)
 
-    q = (
-        stream.writeStream.foreachBatch(_link_batch)
-        .option("checkpointLocation", ckpt_dir)
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
+    run_available_now(stream, _link_batch, os.path.join(work_dir, "ckpt"), "append")
     return pairs_store.root

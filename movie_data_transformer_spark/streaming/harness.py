@@ -1,8 +1,13 @@
-"""Shared run-a-real-stream-and-return-a-DataFrame harness for registry
-entries: availableNow trigger, update/append emissions appended to
-parquet via foreachBatch (a distributed write — no memory-sink driver
-collect), optional finalize step over the emissions log, result staged
-to a stable dir that outlives the work-dir cleanup.
+"""The one place a stream is started. `run_available_now` runs a stream
+to completion under an availableNow trigger with a foreachBatch
+callback; every streaming entry goes through it. On top of it:
+
+  - `run_availablenow_to_df`: update/append emissions appended to
+    parquet (a distributed write — no memory-sink driver collect),
+    optional finalize step over the emissions log, result staged to a
+    stable dir that outlives the work-dir cleanup;
+  - `fold_batch_versions`: an associative fold of each micro-batch into
+    batch-versioned state (`state_{n}`), cached as a fixture.
 
 Stable dirs are per-invocation (mkdtemp) so concurrent harness/pytest
 runs never collide; stale ones from previous runs are swept on the next
@@ -21,6 +26,8 @@ import time
 from collections.abc import Callable
 
 from pyspark.sql import DataFrame
+
+from movie_data_transformer_spark.fixtures import publish_fixture_dir
 
 #: a stable dir older than this is fair game for the sweeper — far past
 #: any realistic gap between `return spark.read.parquet(stable)` and the
@@ -58,6 +65,26 @@ def _sweep_stale(prefix: str) -> None:
             pass  # concurrently removed
 
 
+def run_available_now(
+    stream: DataFrame,
+    per_batch: Callable[[DataFrame, int], None],
+    checkpoint_dir: str,
+    output_mode: str,
+) -> None:
+    """Run `stream` until everything available now is consumed, calling
+    `per_batch(batch_df, batch_id)` once per micro-batch, then return.
+    The checkpoint makes a rerun resume after the last committed batch
+    (a failed batch is replayed with its batch id)."""
+    q = (
+        stream.writeStream.outputMode(output_mode)
+        .option("checkpointLocation", checkpoint_dir)
+        .trigger(availableNow=True)
+        .foreachBatch(per_batch)
+        .start()
+    )
+    q.awaitTermination()
+
+
 def run_availablenow_to_df(
     stream_df: DataFrame,
     output_mode: str,
@@ -85,14 +112,7 @@ def run_availablenow_to_df(
     def _sink(batch_df: DataFrame, _batch_id: int) -> None:
         batch_df.write.mode("append").parquet(out)
 
-    q = (
-        stream_df.writeStream.outputMode(output_mode)
-        .option("checkpointLocation", os.path.join(work, "ckpt"))
-        .trigger(availableNow=True)
-        .foreachBatch(_sink)
-        .start()
-    )
-    q.awaitTermination()
+    run_available_now(stream_df, _sink, os.path.join(work, "ckpt"), output_mode)
     if result_from_ckpt is not None:
         result = result_from_ckpt(os.path.join(work, "ckpt"))
     else:
@@ -109,3 +129,38 @@ def run_availablenow_to_df(
     result.write.mode("overwrite").parquet(stable)
     shutil.rmtree(work, ignore_errors=True)
     return spark.read.parquet(stable)
+
+
+def fold_batch_versions(
+    stream: DataFrame, fold: Callable[[DataFrame], DataFrame], root: str
+) -> DataFrame:
+    """Fold `stream` into batch-versioned state under the fixture dir
+    `root` (built once, then reused) and return the last version.
+
+    Micro-batch n writes `state_{n+1}` = fold(state_n ∪ fold(batch)),
+    mode=overwrite, so a foreachBatch replay rewrites its own version
+    idempotently. `fold` maps rows of the stream's schema to rows of the
+    same schema and must be associative: then any slicing of the feed
+    into micro-batches gives the same last version."""
+    spark = stream.sparkSession
+
+    def _build(out: str) -> None:
+        def _apply(batch: DataFrame, batch_id: int) -> None:
+            folded = fold(batch)
+            prev = os.path.join(out, f"state_{batch_id}")
+            if os.path.exists(prev):
+                folded = fold(spark.read.parquet(prev).unionByName(folded))
+            folded.write.mode("overwrite").parquet(os.path.join(out, f"state_{batch_id + 1}"))
+
+        run_available_now(stream, _apply, os.path.join(out, "ckpt"), "append")
+
+    publish_fixture_dir(_build, root)
+    states = globmod.glob(os.path.join(root, "state_*"))
+    if not states:
+        # a zero-micro-batch stream (empty or missing feed) would
+        # otherwise surface as max()'s opaque ValueError
+        raise RuntimeError(
+            f"{root} holds no state_* snapshots (the availableNow stream "
+            "saw zero micro-batches); delete the dir to rebuild, and check the feed"
+        )
+    return spark.read.parquet(max(states, key=lambda p: int(p.rsplit("_", 1)[1])))

@@ -3,9 +3,10 @@ Streaming (SURVEY.md §2.1 ops 12, 9, 14; §7 M2).
 
 Reference: files are processed in slices of BATCH_SIZE=10
 (DataTransformationService.java:32, :60-68) and each slice is flushed into
-Redis by read-modify-write (:169-204). Spark form: file streaming source
-with maxFilesPerTrigger=10 + foreachBatch running the same merge_flat the
-batch path uses — ONE code path for batch and streaming.
+Redis by read-modify-write (:169-204). Spark form: the JSONL file stream
+(`sources.jsonl.stream_jsonl`, maxFilesPerTrigger=10) run by
+`harness.run_available_now`, whose per-batch callback runs the same
+merge_flat the batch path uses — ONE code path for batch and streaming.
 
 Like the reference's per-customer GET/merge/SET, a batch costs in
 proportion to the keys it touches, not to the whole state: the state is
@@ -38,9 +39,10 @@ from movie_data_transformer_spark.operators.movie_pipeline import (
     group_watched,
     kv_serialize,
 )
-from movie_data_transformer_spark.schemas import RATING_FLAT
+from movie_data_transformer_spark.schemas import MOVIE_INPUT, RATING_FLAT
 from movie_data_transformer_spark.sinks import kv
-from movie_data_transformer_spark.sources.jsonl import stream_movies_jsonl
+from movie_data_transformer_spark.sources.jsonl import stream_jsonl
+from movie_data_transformer_spark.streaming.harness import run_available_now
 
 _KEYS = ["customerId", "movieId"]
 #: marker file inside a version directory that holds a full base
@@ -177,7 +179,7 @@ def run_incremental_merge(
     the reference (DataTransformationService.java:169-204), minus the
     serial driver round-trips."""
     store = ParquetStateStore(spark, state_root)
-    stream = stream_movies_jsonl(spark, input_dir, max_files_per_trigger)
+    stream = stream_jsonl(spark, MOVIE_INPUT, input_dir, max_files_per_trigger)
 
     def _merge_batch(batch_movies: DataFrame, batch_id: int) -> None:
         # a watcher without a customer-id (or a movie without an id) has no
@@ -199,11 +201,5 @@ def run_incremental_merge(
             # looked up at call time, so a wrapped kv.write_kv sees the publish
             kv.write_kv(kv_serialize(group_watched(changed)), kv_client_factory)
 
-    q = (
-        stream.writeStream.foreachBatch(_merge_batch)
-        .option("checkpointLocation", checkpoint_dir)
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
+    run_available_now(stream, _merge_batch, checkpoint_dir, "append")
     return store

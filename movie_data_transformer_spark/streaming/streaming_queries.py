@@ -5,14 +5,17 @@ accumulated pairs log is held to the batch-form oracle."""
 
 from __future__ import annotations
 
-import glob as globmod
-import os
-import shutil
 import tempfile
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from movie_data_transformer_spark.fixtures import (
+    fixture_cache_dir,
+    publish_fixture_dir,
+    write_jsonl_feed,
+)
+from movie_data_transformer_spark.operators.dedup import augmented_corpus
 from movie_data_transformer_spark.sources.tables import load_table
 from movie_data_transformer_spark.streaming.windows import (
     dedup_events,
@@ -98,12 +101,6 @@ def _ingest_jsonl_dir(spark: SparkSession, sf_dir: str) -> str:
     JSONL files under /tmp, distributed (to_json text write, no driver
     collect), split across 4 files so availableNow slices them into
     multiple micro-batches."""
-    from movie_data_transformer_spark.operators.dedup import augmented_corpus
-    from movie_data_transformer_spark.operators.jsonl_queries import (
-        fixture_cache_dir,
-        publish_fixture_dir,
-    )
-
     # v1: bump when augmented_corpus/file-splitting changes (derived state)
     d = fixture_cache_dir("mdt_ingest_v1", sf_dir)
 
@@ -111,16 +108,7 @@ def _ingest_jsonl_dir(spark: SparkSession, sf_dir: str) -> str:
         batch = augmented_corpus(load_table(spark, sf_dir, "documents")).filter(
             F.col("doc_id") >= 100000
         )
-        stage = out + "_stage"
-        (
-            batch.repartition(4)
-            .select(F.to_json(F.struct(*batch.columns)).alias("value"))
-            .write.mode("overwrite")
-            .text(stage)
-        )
-        for i, p in enumerate(sorted(globmod.glob(os.path.join(stage, "part-*")))):
-            shutil.move(p, os.path.join(out, f"docs_{i}.json"))
-        shutil.rmtree(stage, ignore_errors=True)
+        write_jsonl_feed(batch.repartition(4), out, "docs")
 
     return publish_fixture_dir(_build, d)
 
@@ -134,7 +122,6 @@ def q_stream_incremental_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
     an ingested doc) — pair-set equality holds regardless of micro-batch
     slicing because each pair is emitted exactly once, by the micro-batch
     of its later-ingested doc."""
-    from movie_data_transformer_spark.operators.dedup import augmented_corpus
     from movie_data_transformer_spark.streaming.dedup_stream import (
         run_streaming_incremental_dedup,
     )

@@ -52,9 +52,7 @@ def test_stream_psi_state_versions_monotone(spark, sf_dir):
     import glob
     import os
 
-    from movie_data_transformer_spark.operators.jsonl_queries import (
-        fixture_cache_dir,
-    )
+    from movie_data_transformer_spark.fixtures import fixture_cache_dir
 
     # materialize (or reuse) the fixture, then inspect its versions
     q_stream_psi_monitor(spark, sf_dir).collect()

@@ -6,6 +6,7 @@ import ast
 from collections import Counter
 from pathlib import Path
 
+import pytest
 from pyspark.sql import functions as F
 
 from tools.scan_audit import plan_nodes, subtree_end
@@ -325,6 +326,39 @@ def test_package_reads_only_deployment_env_vars():
     )
 
 
+#: The one module that starts a stream, and the one that decodes JSONL
+#: as a stream.
+STREAM_RUNNER = "streaming.harness"
+JSONL_STREAM_READER = "sources.jsonl"
+
+
+def test_streams_start_and_read_jsonl_in_one_place():
+    """Every stream of the package runs through
+    `streaming/harness.run_available_now`: `.trigger(` and
+    `awaitTermination` appear only in that module. Every JSON file
+    stream reads through `sources/jsonl.stream_jsonl`: a function that
+    names `readStream` and calls `.json(` appears only in that module."""
+    starts, json_streams = set(), set()
+    for mod, tree in _package_modules().items():
+        for node in ast.walk(tree):
+            if (isinstance(node, ast.Call) and _called_name(node) == "trigger") or (
+                isinstance(node, ast.Attribute) and node.attr == "awaitTermination"
+            ):
+                starts.add(mod)
+            if isinstance(node, (ast.FunctionDef, ast.AsyncFunctionDef)):
+                names = _names(node)
+                if names["readStream"] and any(
+                    isinstance(c, ast.Call) and _called_name(c) == "json"
+                    for c in ast.walk(node)
+                ):
+                    json_streams.add(mod)
+    stray = {
+        "starts a stream": sorted(starts - {STREAM_RUNNER}),
+        "reads JSON as a stream": sorted(json_streams - {JSONL_STREAM_READER}),
+    }
+    assert stray == {"starts a stream": [], "reads JSON as a stream": []}, stray
+
+
 def test_capture_plans_writes_only_to_its_out_dir(spark, sf_dir, tmp_path, monkeypatch):
     """tools/capture_plans.py writes each plan it captures into the
     directory its first argument names, and leaves the checked-in
@@ -594,17 +628,44 @@ def test_plan_shapes_hold(spark, sf_dir):
     assert "CartesianProduct" not in p, "movies_item_item_topk"
 
 
-def test_all_queries_have_lowercase_unique_columns(spark, sf_dir):
-    """Column-name discipline: the driver sorts by name before hashing —
-    duplicated or case-colliding names would corrupt the comparison."""
+@pytest.fixture(scope="module")
+def registry_failures(spark, sf_dir):
+    """Build every registry entry's DataFrame ONCE and collect the
+    failures of the three registry-wide contracts below (column names,
+    container columns, plan shapes); each test asserts its own list.
+    One pass instead of three: building an entry runs its fixtures and
+    streams, so each extra pass cost minutes."""
+    import re
+
+    from pyspark.sql.types import ArrayType, MapType, StructType
+
     import __spark_entry__ as e
 
+    scalar_batch_eval = re.compile(r"BatchEvalPython(?!UDTF)")
+    out = {"columns": [], "containers": [], "cartesian": [], "row_udf": []}
     for name, fn in e.queries().items():
-        cols = fn(spark, sf_dir).columns
-        assert len(cols) == len({c.lower() for c in cols}), f"{name}: {cols}"
+        df = fn(spark, sf_dir)
+        cols = df.columns
+        if len(cols) != len({c.lower() for c in cols}):
+            out["columns"].append(f"{name}: {cols}")
+        for f in df.schema.fields:
+            if isinstance(f.dataType, (ArrayType, MapType, StructType)):
+                out["containers"].append(f"{name}.{f.name}: {f.dataType.simpleString()}")
+        plan = df._jdf.queryExecution().executedPlan().toString()
+        if "CartesianProduct" in plan:
+            out["cartesian"].append(name)
+        if scalar_batch_eval.search(plan):
+            out["row_udf"].append(name)
+    return out
 
 
-def test_no_registered_query_returns_container_columns(spark, sf_dir):
+def test_all_queries_have_lowercase_unique_columns(registry_failures):
+    """Column-name discipline: the driver sorts by name before hashing —
+    duplicated or case-colliding names would corrupt the comparison."""
+    assert registry_failures["columns"] == []
+
+
+def test_no_registered_query_returns_container_columns(registry_failures):
     """Driver-canon schema contract (r06 VERDICT item 1): the driver
     canonicalizes results with pandas `sort_values`, which raises
     `TypeError: unhashable type: 'list'` on list/dict cells — proven
@@ -612,20 +673,11 @@ def test_no_registered_query_returns_container_columns(spark, sf_dir):
     registered query may expose a top-level ArrayType/MapType/StructType
     column: serialize containers (array_join / to_json) at the registry
     surface and keep typed arrays on the library functions."""
-    from pyspark.sql.types import ArrayType, MapType, StructType
-
-    import __spark_entry__ as e
-
-    bad = []
-    for name, fn in e.queries().items():
-        for f in fn(spark, sf_dir).schema.fields:
-            if isinstance(f.dataType, (ArrayType, MapType, StructType)):
-                bad.append(f"{name}.{f.name}: {f.dataType.simpleString()}")
-    assert not bad, bad
+    assert registry_failures["containers"] == []
 
 
-def test_no_query_plans_a_cartesian_product(spark, sf_dir):
-    """Registry-WIDE scale guarantees, one compile pass (~3.5 min):
+def test_no_query_plans_a_cartesian_product(registry_failures):
+    """Registry-WIDE scale guarantees over each entry's executed plan:
 
     1. No entry's physical plan may contain CartesianProduct — the one
        join shape that cannot survive a 100x scale-up
@@ -645,17 +697,5 @@ def test_no_query_plans_a_cartesian_product(spark, sf_dir):
        demos (text_chunks_udtf, udtf_table_partitioned,
        udtf_polymorphic_columns), not hot-path operators.
     """
-    import re
-
-    import __spark_entry__ as e
-
-    scalar_batch_eval = re.compile(r"BatchEvalPython(?!UDTF)")
-    cartesian, row_udf = [], []
-    for name, fn in e.queries().items():
-        plan = fn(spark, sf_dir)._jdf.queryExecution().executedPlan().toString()
-        if "CartesianProduct" in plan:
-            cartesian.append(name)
-        if scalar_batch_eval.search(plan):
-            row_udf.append(name)
-    assert cartesian == []
-    assert row_udf == []
+    assert registry_failures["cartesian"] == []
+    assert registry_failures["row_udf"] == []

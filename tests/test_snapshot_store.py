@@ -5,6 +5,9 @@ commit), and additive merge correctness for new and existing keys."""
 
 from __future__ import annotations
 
+import os
+import shutil
+
 from pyspark.sql import functions as F
 
 from movie_data_transformer_spark.sinks.snapshot import SnapshotTable
@@ -63,8 +66,6 @@ def test_versions_listing_and_read_paths(spark, tmp_path):
 
 
 def test_vacuum_retention(spark, tmp_path):
-    import os
-
     root = str(tmp_path)
     st = SnapshotTable(spark, root, n_buckets=4)
     st.commit_full(_state(spark, [(u, u, 1) for u in range(8)]), "user_id", 1)
@@ -103,6 +104,28 @@ def test_stream_snapshot_versions_accumulate(spark, sf_dir, tmp_path):
         assert all(r.n >= 1 for r in rows)
         masses.append(sum(r.n for r in rows))
     assert masses == sorted(masses) and masses[-1] > masses[0]
+
+
+def test_stream_snapshot_merge_drops_malformed_lines(spark, sf_dir, tmp_path):
+    """The purchase stream decodes like every JSONL source: a line that
+    is not JSON is dropped, not merged as an all-null row, so the final
+    version of a feed with one bad line equals the clean feed's."""
+    from movie_data_transformer_spark.operators.snapshot_queries import (
+        _purchase_jsonl_dir,
+        run_stream_snapshot_merge,
+    )
+
+    clean = _purchase_jsonl_dir(spark, sf_dir)
+    dirty = str(tmp_path / "feed")
+    shutil.copytree(clean, dirty)
+    with open(os.path.join(dirty, "purchases_1.json"), "a") as f:
+        f.write("THIS LINE IS NOT JSON {{{\n")
+
+    def final_rows(input_dir: str, root: str) -> list:
+        st = run_stream_snapshot_merge(spark, input_dir, str(tmp_path / root))
+        return sorted(st.read(st.versions()[-1]).collect())
+
+    assert final_rows(dirty, "dirty") == final_rows(clean, "clean")
 
 
 def test_partial_bucket_merge_keeps_stored_decimal_schema(spark, tmp_path):
@@ -163,8 +186,6 @@ def test_vacuum_pre_commit_and_empty_commit_dirs(spark, tmp_path):
     """r6 ADVICE: vacuum on a store with no commits is a no-op (no
     FileNotFoundError), and a vacuum that empties a files/c<version>
     directory removes the husk instead of leaving it behind."""
-    import os
-
     root = str(tmp_path)
     st = SnapshotTable(spark, root, n_buckets=4)
     assert st.vacuum(keep_versions=[]) == []  # pre-first-commit: no-op

@@ -9,11 +9,11 @@ import shutil
 
 import pytest
 
-from movie_data_transformer_spark.schemas import RATING_FLAT
+from movie_data_transformer_spark.schemas import MOVIE_INPUT, RATING_FLAT
 from movie_data_transformer_spark.sources.jsonl import (
     corrupt_records,
     read_movies_jsonl,
-    stream_movies_jsonl,
+    stream_jsonl,
 )
 from movie_data_transformer_spark.streaming.merge_stream import _MAX_DELTAS, ParquetStateStore
 
@@ -34,7 +34,7 @@ def test_corrupt_records_extraction(spark, tmp_path):
     assert sorted(r.movieId for r in batch) == ["m1", "m2"]
     streamed = []
     q = (
-        stream_movies_jsonl(spark, str(d), max_files_per_trigger=10)
+        stream_jsonl(spark, MOVIE_INPUT, str(d), max_files_per_trigger=10)
         .writeStream.foreachBatch(lambda df, _: streamed.extend(df.collect()))
         .option("checkpointLocation", str(tmp_path / "ckpt"))
         .trigger(availableNow=True)

@@ -350,6 +350,31 @@ for decode, blob in ((png_decode_pixels, bytes(png)), (gif_decode_pixels, gif)):
     assert out == ["ValueError: CRC", "ValueError: bad GIF signature"], out
 
 
+def test_decoders_reject_truncated_input_with_value_error():
+    """Every prefix of a PNG, GIF and JPEG blob either decodes to the
+    full image (only cuts after the last needed byte can) or raises
+    ValueError: no IndexError, struct.error or zlib.error escapes. An
+    LZW stream that ends without its EOI code says so."""
+    from movie_data_transformer_spark.operators import multimodal as m
+
+    for synth, decode in (
+        (m._png_bytes, m.png_decode_pixels),
+        (m._gif_bytes, m.gif_decode_pixels),
+        (m._jpeg_bytes, m.jpeg_decode_gray),
+    ):
+        blob = synth(7)
+        full = decode(blob)
+        for n in range(len(blob)):
+            try:
+                got = decode(blob[:n])
+            except ValueError:
+                continue
+            assert got.shape == full.shape and (got == full).all(), (decode.__name__, n)
+    # a clear code (256), then 7 of the next code's 9 bits
+    with pytest.raises(ValueError, match="missing EOI"):
+        m._lzw_decode(b"\x00\x01")
+
+
 def test_lzw_codec_fuzz_round_trip():
     """The hand-rolled GIF LZW: fuzz round trip incl. the dict-growth,
     4096-reset, and KwKwK paths."""
