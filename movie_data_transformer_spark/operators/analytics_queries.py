@@ -30,8 +30,11 @@ from pyspark.sql import functions as F
 
 from movie_data_transformer_spark.fixtures import RATINGS_ORACLE_CTE
 from movie_data_transformer_spark.functions import micro_ratio
-from movie_data_transformer_spark.operators.movie_queries import q_movies_cooccurrence
+from movie_data_transformer_spark.operators.graph_extras_queries import cowatch_user_edges
+from movie_data_transformer_spark.operators.movie_pipeline import dedup_latest
+from movie_data_transformer_spark.operators.movie_queries import _exploded, q_movies_cooccurrence
 from movie_data_transformer_spark.operators.ordered_stats import attach_order_stats
+from movie_data_transformer_spark.operators.pairs import shared_key_pairs
 from movie_data_transformer_spark.sources.tables import load_table
 
 
@@ -344,25 +347,14 @@ FROM a
 
 def cowatch_triangles(spark, sf_dir):
     """Shared co-watch graph construction: returns (edges, deg, tri) —
-    undirected edges (u < v, >= 2 shared movies), per-node degrees, and
-    the once-per-triangle (a, b, c) enumeration via the degree-oriented
+    undirected edges (u < v, >= 2 shared movies; the uncapped
+    graph_extras_queries.cowatch_user_edges), per-node degrees, and the
+    once-per-triangle (a, b, c) enumeration via the degree-oriented
     wedge join (see q_graph_triangle_counts docstring for why the
     orientation bounds wedge count by sum(outdeg^2))."""
-    from movie_data_transformer_spark.operators.movie_pipeline import dedup_latest
-    from movie_data_transformer_spark.operators.movie_queries import _exploded
-
     watched = dedup_latest(_exploded(spark, sf_dir)).select("customerId", "movieId")
-    a = watched.select(F.col("customerId").alias("u"), "movieId")
-    b = watched.select(F.col("customerId").alias("v"), "movieId")
-    edges = (
-        a.join(b, "movieId")
-        .filter(F.col("u") < F.col("v"))
-        .groupBy("u", "v")
-        .agg(F.count("*").alias("shared"))
-        .filter(F.col("shared") >= 2)
-        .select("u", "v")
-        .localCheckpoint()  # edges feed 3 branches — materialize once
-    )
+    # edges feed 3 branches — materialize once
+    edges = cowatch_user_edges(watched, max_watchers=None).localCheckpoint()
     deg = (
         edges.select(F.col("u").alias("node"))
         .union(edges.select(F.col("v").alias("node")))
@@ -379,16 +371,11 @@ def cowatch_triangles(spark, sf_dir):
         F.when(lower_first, F.col("u")).otherwise(F.col("v")).alias("src"),
         F.when(lower_first, F.col("v")).otherwise(F.col("u")).alias("dst"),
         F.when(lower_first, F.col("deg_v")).otherwise(F.col("deg_u")).alias("deg_dst"),
-    ).localCheckpoint()  # reused as e1, e2, and the closing-edge side
-    e1 = oriented.select(
-        F.col("src"), F.col("dst").alias("w1"), F.col("deg_dst").alias("d1")
-    )
-    e2 = oriented.select(
-        F.col("src"), F.col("dst").alias("w2"), F.col("deg_dst").alias("d2")
-    )
-    wedges = e1.join(e2, "src").filter(
-        (F.col("d1") < F.col("d2"))
-        | ((F.col("d1") == F.col("d2")) & (F.col("w1") < F.col("w2")))
+    ).localCheckpoint()  # reused by both wedge sides and the closing-edge side
+    # a wedge is two out-edges of one src, ordered by (deg_dst, dst)
+    ends = oriented.select("src", F.struct("deg_dst", "dst").alias("end"))
+    wedges = shared_key_pairs(ends, "src", "end").select(
+        "src", F.col("end_a.dst").alias("w1"), F.col("end_b.dst").alias("w2")
     )
     closing = oriented.select(
         F.col("src").alias("w1"), F.col("dst").alias("w2")
@@ -602,12 +589,9 @@ def q_assoc_rules_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     # self-join sides, the item counts, and the basket total — uncached,
     # each consumer re-scans lineitem and re-runs the distinct shuffle
     baskets = li.select("l_orderkey", "l_partkey").distinct().persist()
-    a = baskets.selectExpr("l_orderkey", "l_partkey AS p1")
-    b = baskets.selectExpr("l_orderkey", "l_partkey AS p2")
     c12 = (
-        a.join(b, "l_orderkey")
-        .filter(F.col("p1") < F.col("p2"))
-        .groupBy("p1", "p2")
+        shared_key_pairs(baskets.selectExpr("l_orderkey", "l_partkey AS p"), "l_orderkey", "p")
+        .groupBy(F.col("p_a").alias("p1"), F.col("p_b").alias("p2"))
         .agg(F.count("*").cast("bigint").alias("c12"))
         .filter(F.col("c12") >= 3)
     )

@@ -10,9 +10,11 @@ Scale design:
   - exact dedup: hash-groupBy on the normalized-content digest — one
     shuffle keyed by digest, no comparisons.
   - MinHash+LSH: shingle -> 32 minhashes (16 bands x 2 rows) -> explode
-    bands -> self-join on (band, signature). Candidate generation is a
-    bucket join (shuffle on band signature), NEVER an all-pairs cross
-    join; verification joins only candidate pairs' shingle sets.
+    bands -> (band, signature) buckets. Candidate generation is a
+    bucket grouping (one shuffle on band signature), NEVER an all-pairs
+    cross join; verification joins only candidate pairs' shingle sets.
+    Every pair generator here (bucket or shingle self-join, hub cap,
+    integer Jaccard) is operators/pairs.py's.
   - SimHash: 64-bit fingerprint per doc from signed bit votes of token
     hashes; candidate pairs via 16-bit band blocking (4 x 65,536 bucket
     keys; pigeonhole-complete for Hamming<=3), verified by
@@ -37,6 +39,12 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
+from movie_data_transformer_spark.operators.pairs import (
+    bucket_pairs,
+    jaccard_micro,
+    jaccard_pairs,
+    shared_key_pairs,
+)
 from movie_data_transformer_spark.operators.sizing import widen_for_compute
 from movie_data_transformer_spark.operators.text import tokens
 
@@ -190,46 +198,15 @@ def band_table(signatures: DataFrame) -> DataFrame:
 
 
 def lsh_candidate_pairs(signatures: DataFrame, max_bucket_size: int | None = None) -> DataFrame:
-    """Docs sharing any band signature become candidates.
-
-    Buckets are formed by ONE shuffle — groupBy (band, sig) +
-    collect_set, then row-local pair expansion — instead of a
-    two-sided self-join on the exploded band table (which shuffles the
-    same data twice and hash-probes it again). Pair expansion per
-    bucket is inherently quadratic in bucket size for ANY LSH scheme;
-    at 100 TB pass max_bucket_size to drop pathological buckets (a
-    bucket that large means the docs are all near-identical — route
-    them to exact_dedup instead, which is linear)."""
-    exploded = band_table(signatures)
-    buckets = (
-        exploded.groupBy("band", "sig")
-        .agg(F.collect_set("doc_id").alias("docs"))
-        .filter(F.size("docs") >= 2)
-    )
-    if max_bucket_size is not None:
-        buckets = buckets.filter(F.size("docs") <= max_bucket_size)
-    return (
-        buckets.selectExpr("array_sort(docs) AS docs")
-        .selectExpr(
-            "inline(flatten(transform(docs, (x, i) -> "
-            "transform(slice(docs, i + 2, size(docs)), y -> "
-            "named_struct('doc_a', x, 'doc_b', y)))))"
-        )
-        .distinct()
-    )
-
-
-# Jaccard is emitted in EXACT integer micro-units throughout this module:
-# (n_inter * 10^6) div union, then one IEEE division by 10^6. round() on
-# the raw ratio is the cross-engine midpoint landmine — an exact integer
-# ratio like odd/128 lands exactly on a 1e-6 midpoint where Spark
-# (exact-BigDecimal HALF_UP) and DuckDB (FP-scaled) round apart (the
-# tpch_q2 bug class, NOTES.md pitfalls). Integer truncation is identical
-# in both engines, so the value AND the threshold-filter membership agree
-# everywhere.
-JACCARD_MICRO_EXPR = (
-    "CAST(n_inter * 1000000 div (n_a + n_b - n_inter) AS DOUBLE) / 1000000"
-)
+    """Docs sharing any band signature become candidates: the (band,
+    sig) buckets of pairs.bucket_pairs — one shuffle, row-local pair
+    expansion. Pair expansion per bucket is inherently quadratic in
+    bucket size for ANY LSH scheme; at 100 TB pass max_bucket_size to
+    drop pathological buckets (a bucket that large means the docs are
+    all near-identical — route them to exact_dedup instead, which is
+    linear)."""
+    bands = band_table(signatures).select("band", "sig", F.col("doc_id").alias("doc"))
+    return bucket_pairs(bands, ["band", "sig"], "doc", max_bucket_size)
 
 
 def jaccard_verify_arrays(
@@ -248,11 +225,13 @@ def jaccard_verify_arrays(
         .select(
             "doc_a",
             "doc_b",
-            F.size(F.array_intersect("_sa", "_sb")).cast("long").alias("n_inter"),
-            F.size("_sa").cast("long").alias("n_a"),
-            F.size("_sb").cast("long").alias("n_b"),
+            F.size(F.array_intersect("_sa", "_sb")).alias("n_inter"),
+            F.size("_sa").alias("n_a"),
+            F.size("_sb").alias("n_b"),
         )
-        .select("doc_a", "doc_b", F.expr(JACCARD_MICRO_EXPR).alias("jaccard"))
+        .select(
+            "doc_a", "doc_b", (jaccard_micro("n_inter", "n_a", "n_b") / 1_000_000).alias("jaccard")
+        )
         .filter(F.col("jaccard") >= threshold)
     )
 
@@ -455,9 +434,9 @@ def exact_substr_runs(corpus: DataFrame, window: int = 15) -> DataFrame:
 
     Scale: the position join fans out per repeated window (pos_a x pos_b
     per hash within a pair); window hashes found in more than 100
-    windows are dropped before the join (boilerplate n-grams — the skew
-    guard as containment/contamination; dropped hashes can only shorten
-    a reported run, conservative and mirrored in the oracle). The
+    windows are dropped before the join (the pairs hub cap: boilerplate
+    n-grams; dropped hashes can only shorten a reported run,
+    conservative and mirrored in the oracle). The
     islands windows partition by (pair, diagonal) — granular keys, no
     global sort."""
     toks = F.split(F.col("text"), " ")
@@ -476,26 +455,15 @@ def exact_substr_runs(corpus: DataFrame, window: int = 15) -> DataFrame:
                 )
             ).alias("w"),
         )
-        .select("doc_id", "w.pos", "w.wh")
-        # persisted: consumed four ways (df pass, semi-join input, both
-        # position-join sides) and each uncached reference re-runs the
-        # window explode + an md5 per window — the dominant map cost.
-        # Unlike ppjoin's text shingles, the cached rows are two ints
-        # and a fixed-width digest, not raw token text
+        .select(F.col("doc_id").alias("doc"), "w.pos", "w.wh")
+        # persisted: both position-join sides read it, and each uncached
+        # reference re-runs the window explode + an md5 per window — the
+        # dominant map cost. Unlike ppjoin's text shingles, the cached
+        # rows are two ints and a fixed-width digest, not raw token text
         .persist()
     )
-    rare = (
-        wins.groupBy("wh")
-        .agg(F.count("*").alias("_df"))
-        .filter(F.col("_df") <= 100)
-        .select("wh")
-    )
-    wins = wins.join(rare, "wh", "left_semi")
-    a = wins.select(F.col("doc_id").alias("doc_a"), F.col("pos").alias("pos_a"), "wh")
-    b = wins.select(F.col("doc_id").alias("doc_b"), F.col("pos").alias("pos_b"), "wh")
     matches = (
-        a.join(b, "wh")
-        .filter(F.col("doc_a") < F.col("doc_b"))
+        shared_key_pairs(wins, "wh", "doc", max_per_key=100)
         .select("doc_a", "doc_b", "pos_a", "pos_b")
         .distinct()
     )
@@ -675,10 +643,10 @@ def simhash_fingerprints(docs: DataFrame) -> DataFrame:
 def simhash_near_pairs(docs: DataFrame, max_bucket_size: int | None = None) -> DataFrame:
     """Near-dup pairs by SimHash: block on 16-bit bands (by pigeonhole, a
     pair within Hamming<=3 of 64 bits agrees on at least one of 4 bands),
-    verify with bit_count(xor). Pass max_bucket_size at scale to drop
-    pathological buckets (same escape hatch as lsh_candidate_pairs — a
-    band bucket that large means the docs are near-identical; route them
-    to exact_dedup, which is linear)."""
+    verify with bit_count(xor) inside pairs.bucket_pairs' expansion. Pass
+    max_bucket_size at scale to drop pathological buckets (a band bucket
+    that large means the docs are near-identical; route them to
+    exact_dedup, which is linear)."""
     fps = simhash_fingerprints(docs)
     # shiftright sign-extends (Java semantics) but & 0xFFFF keeps only the
     # low 16 bits of the shifted value, so bands extracted from the SIGNED
@@ -690,37 +658,11 @@ def simhash_near_pairs(docs: DataFrame, max_bucket_size: int | None = None) -> D
         f"'nib', shiftright(simhash, {SIMHASH_BAND_BITS * bi}) & {mask})"
         for bi in range(SIMHASH_BANDS)
     )
-    exploded = fps.selectExpr(
-        "doc_id", "simhash", f"inline(array({band_structs}))"
+    bands = fps.selectExpr(
+        "doc_id AS doc", "simhash", f"inline(array({band_structs}))"
     )
-    # Same single-shuffle bucket-group shape as lsh_candidate_pairs; the
-    # hamming verify runs ROW-LOCAL inside the pair expansion, so the
-    # final distinct only shuffles pairs that already passed it (the
-    # self-join form deduplicated every candidate first, verified after).
-    buckets = (
-        exploded.groupBy("band", "nib")
-        .agg(F.collect_set(F.struct("doc_id", "simhash")).alias("ds"))
-        .filter(F.size("ds") >= 2)
-    )
-    if max_bucket_size is not None:
-        buckets = buckets.filter(F.size("ds") <= max_bucket_size)
-    # the hamming cut sits INSIDE the expansion lambda (filter before the
-    # struct transform): the r13 stage profile showed the old
-    # expand-then-filter form materializing 2.59M generator rows at
-    # sf0.1 of which only 375k survived — ~2.2M doomed struct builds +
-    # row conversions, ~0.7s of the entry's 2.1s. bit_count(xor) is
-    # re-evaluated for survivors only; the emitted pair set is identical.
-    return (
-        buckets.selectExpr("array_sort(ds) AS ds")
-        .selectExpr(
-            "inline(flatten(transform(ds, (x, i) -> "
-            "transform("
-            f"filter(slice(ds, i + 2, size(ds)), "
-            "y -> bit_count(x.simhash ^ y.simhash) <= 3), "
-            "y -> named_struct('doc_a', x.doc_id, 'doc_b', y.doc_id, "
-            "'hamming', CAST(bit_count(x.simhash ^ y.simhash) AS INT))))))"
-        )
-        .distinct()
+    return bucket_pairs(
+        bands, ["band", "nib"], "doc", max_bucket_size, hamming="bit_count(x.simhash ^ y.simhash)"
     )
 
 
@@ -728,37 +670,14 @@ def ngram_jaccard_pairs(docs: DataFrame, threshold: float = 0.5) -> DataFrame:
     """Word-bigram Jaccard within (lang, length-bucket) blocks — the
     classic blocked pairwise near-dup check (no LSH, exact within block)."""
     blocked = widen_for_compute(docs).select(
-        "doc_id",
+        F.col("doc_id").alias("doc"),
         F.col("lang"),
         (F.col("n_chars") / 100).cast("int").alias("len_bucket"),
         F.explode(word_shingles(normalize_text(F.col("text")), 2)).alias("shingle"),
     )
-    # consumed twice (both sides of the size join below) — doc-grain
-    # counts, cheap to cache; each uncached reference re-tokenizes the
-    # corpus (the containment lesson)
-    sizes = blocked.groupBy("doc_id").agg(F.count("*").alias("n_sh")).persist()
-    a = blocked.select(
-        F.col("doc_id").alias("doc_a"), "lang", "len_bucket", "shingle"
-    )
-    b = blocked.select(
-        F.col("doc_id").alias("doc_b"), "lang", "len_bucket", "shingle"
-    )
-    inter = (
-        a.join(b, ["lang", "len_bucket", "shingle"])
-        .filter(F.col("doc_a") < F.col("doc_b"))
-        .groupBy("doc_a", "doc_b")
-        .agg(F.count("*").alias("n_inter"))
-    )
-    za = sizes.select(F.col("doc_id").alias("doc_a"), F.col("n_sh").alias("n_a"))
-    zb = sizes.select(F.col("doc_id").alias("doc_b"), F.col("n_sh").alias("n_b"))
     return (
-        inter.join(za, "doc_a")
-        .join(zb, "doc_b")
-        .select(
-            "doc_a",
-            "doc_b",
-            F.expr(JACCARD_MICRO_EXPR).alias("jaccard"),
-        )
+        jaccard_pairs(blocked, ["lang", "len_bucket", "shingle"], "doc")
+        .select("doc_a", "doc_b", (F.col("jaccard_micro") / 1_000_000).alias("jaccard"))
         .filter(F.col("jaccard") >= threshold)
     )
 
@@ -782,38 +701,28 @@ def containment_pairs(
     No length-bucket blocking (unequal lengths are the point); the pair
     space is bounded instead by a PROMISCUOUS-SHINGLE guard: shingles
     appearing in more than max_shingle_df docs of a lang are dropped
-    before the self-join (each surviving shingle fans out <= df^2
-    pairs), the same skew cap contamination_ngram_overlap uses. Sizes
+    before the self-join (the pairs hub cap: each surviving shingle fans
+    out <= df^2 pairs). Sizes
     |A|, |B| count ALL shingles, so a pair relying only on dropped
     common shingles scores lower, never spuriously higher — documented
     conservative semantics, reproduced exactly by the oracle. Exact
     integer micro-units end to end (full oracle)."""
     shingled = widen_for_compute(docs).select(
-        "doc_id",
+        F.col("doc_id").alias("doc"),
         F.col("lang"),
         F.explode(word_shingles(normalize_text(F.col("text")), 2)).alias("shingle"),
     )
     # consumed twice (both sides of the size join below) — the per-doc
     # counts are doc-grain and two columns, cheap to cache, and each
     # uncached reference would re-tokenize the whole corpus
-    sizes = shingled.groupBy("doc_id").agg(F.count("*").alias("n_sh")).persist()
-    rare = (
-        shingled.groupBy("lang", "shingle")
-        .agg(F.count("*").alias("_df"))
-        .filter(F.col("_df") <= max_shingle_df)
-        .select("lang", "shingle")
-    )
-    kept = shingled.join(rare, ["lang", "shingle"], "left_semi")
-    a = kept.select(F.col("doc_id").alias("doc_a"), "lang", "shingle")
-    b = kept.select(F.col("doc_id").alias("doc_b"), "lang", "shingle")
+    sizes = shingled.groupBy("doc").agg(F.count("*").alias("n_sh")).persist()
     inter = (
-        a.join(b, ["lang", "shingle"])
-        .filter(F.col("doc_a") < F.col("doc_b"))
+        shared_key_pairs(shingled, ["lang", "shingle"], "doc", max_shingle_df)
         .groupBy("doc_a", "doc_b")
         .agg(F.count("*").alias("n_inter"))
     )
-    za = sizes.select(F.col("doc_id").alias("doc_a"), F.col("n_sh").alias("n_a"))
-    zb = sizes.select(F.col("doc_id").alias("doc_b"), F.col("n_sh").alias("n_b"))
+    za = sizes.select(F.col("doc").alias("doc_a"), F.col("n_sh").alias("n_a"))
+    zb = sizes.select(F.col("doc").alias("doc_b"), F.col("n_sh").alias("n_b"))
     return (
         inter.join(za, "doc_a")
         .join(zb, "doc_b")
@@ -838,9 +747,8 @@ def exact_substr_pairs(corpus: DataFrame) -> DataFrame:
 
     Dataflow: sliding token windows from SHIFTED SLICES of the token
     array (never element_at — see word_shingles), md5 each window,
-    distinct (doc, hash), then SINGLE-SHUFFLE bucket-grouping (collect
-    per-hash doc lists, emit intra-bucket pairs) — the same
-    candidate-pair shape as minhash/simhash above. Returns
+    distinct (doc, hash), then the pairs that share a window hash
+    (pairs.shared_key_pairs) counted per pair. Returns
     (doc_a, doc_b, n_shared_windows).
     """
     toks = F.split(F.col("text"), " ")
@@ -849,7 +757,7 @@ def exact_substr_pairs(corpus: DataFrame) -> DataFrame:
     wins = (
         widen_for_compute(corpus).filter(F.size(toks) >= 15)
         .select(
-            "doc_id",
+            F.col("doc_id").alias("doc"),
             F.explode(
                 F.transform(
                     F.sequence(F.lit(1), F.size(toks) - 14),
@@ -859,25 +767,11 @@ def exact_substr_pairs(corpus: DataFrame) -> DataFrame:
         )
         .distinct()
     )
-    buckets = (
-        wins.groupBy("wh")
-        .agg(F.sort_array(F.collect_list("doc_id")).alias("ds"))
-        .filter(F.size("ds") > 1)
+    return (
+        shared_key_pairs(wins, "wh", "doc")
+        .groupBy("doc_a", "doc_b")
+        .agg(F.count("*").alias("n_shared_windows"))
     )
-    pairs = buckets.select(
-        F.explode(
-            F.filter(
-                F.flatten(
-                    F.transform(
-                        "ds",
-                        lambda a: F.transform("ds", lambda b: F.struct(a.alias("doc_a"), b.alias("doc_b"))),
-                    )
-                ),
-                lambda p: p["doc_a"] < p["doc_b"],
-            )
-        ).alias("p")
-    ).select("p.doc_a", "p.doc_b")
-    return pairs.groupBy("doc_a", "doc_b").agg(F.count("*").alias("n_shared_windows"))
 
 
 def ppjoin_prefix_pairs(docs: DataFrame) -> DataFrame:
@@ -947,44 +841,31 @@ def ppjoin_prefix_pairs(docs: DataFrame) -> DataFrame:
         + F.lit(1)
     )
     prefix = sets.select(
-        "doc_id", "lang", "m", F.explode(F.slice("sh_set", 1, p_len)).alias("shingle")
-    )
-    a = prefix.select(
-        F.col("doc_id").alias("doc_a"), "lang", F.col("m").alias("m_a"), "shingle"
-    )
-    b = prefix.select(
-        F.col("doc_id").alias("doc_b"), "lang", F.col("m").alias("m_b"), "shingle"
+        F.col("doc_id").alias("doc"),
+        "lang",
+        "m",
+        F.explode(F.slice("sh_set", 1, p_len)).alias("shingle"),
     )
     cands = (
-        a.join(b, ["lang", "shingle"])
-        .filter(
-            (F.col("doc_a") < F.col("doc_b"))
-            # size pruning: J >= t needs t*max <= min (exact integers)
-            & (F.least("m_a", "m_b") * t_den >= F.greatest("m_a", "m_b") * t_num)
-        )
+        shared_key_pairs(prefix, ["lang", "shingle"], "doc")
+        # size pruning: J >= t needs t*max <= min (exact integers)
+        .filter(F.least("m_a", "m_b") * t_den >= F.greatest("m_a", "m_b") * t_num)
         .select("doc_a", "doc_b")
         .distinct()
     )
-    # BIGINT sizes: F.size is IntegerType and n_inter * 1000000 wraps
-    # int32 at n_inter >= 2148 — inside the long-document domain
     sa = sets.select(
-        F.col("doc_id").alias("doc_a"),
-        F.col("sh_set").alias("set_a"),
-        F.col("m").cast("bigint").alias("n_a"),
+        F.col("doc_id").alias("doc_a"), F.col("sh_set").alias("set_a"), F.col("m").alias("n_a")
     )
     sb = sets.select(
-        F.col("doc_id").alias("doc_b"),
-        F.col("sh_set").alias("set_b"),
-        F.col("m").cast("bigint").alias("n_b"),
+        F.col("doc_id").alias("doc_b"), F.col("sh_set").alias("set_b"), F.col("m").alias("n_b")
     )
     verified = (
         cands.join(sa, "doc_a")
         .join(sb, "doc_b")
-        .withColumn(
-            "n_inter",
-            F.size(F.array_intersect("set_a", "set_b")).cast("bigint"),
+        .withColumn("n_inter", F.size(F.array_intersect("set_a", "set_b")))
+        .select(
+            "doc_a", "doc_b", (jaccard_micro("n_inter", "n_a", "n_b") / 1_000_000).alias("jaccard")
         )
-        .select("doc_a", "doc_b", F.expr(JACCARD_MICRO_EXPR).alias("jaccard"))
     )
     return verified.filter(
         F.col("jaccard") >= float(t_num) / float(t_den)

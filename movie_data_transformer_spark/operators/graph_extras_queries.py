@@ -23,7 +23,8 @@ users). Edge generation is pairs-within-movie-group; a promiscuous
 blockbuster title IS df-capped (`max_watchers` on
 `cowatch_user_edges`, default DEFAULT_MAX_WATCHERS): a title watched
 by w users contributes w^2 candidate edges, so titles over the cap are
-excluded from edge generation BEFORE the self-join — a
+excluded from edge generation BEFORE the self-join (the pairs hub cap,
+operators/pairs.py) — a
 watched-by-everyone blockbuster carries no community signal anyway
 (it connects everyone to everyone). Mirrored in both DuckDB oracles'
 `prs` CTEs and pinned by a planted-blockbuster pytest
@@ -48,6 +49,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from movie_data_transformer_spark.operators.pairs import shared_key_pairs
 from movie_data_transformer_spark.operators.recsys_queries import (
     INTERACTIONS_CTE,
     interactions,
@@ -65,26 +67,17 @@ DEFAULT_MAX_WATCHERS = 10_000
 
 
 def cowatch_user_edges(
-    watched: DataFrame, max_watchers: int = DEFAULT_MAX_WATCHERS
+    watched: DataFrame, max_watchers: int | None = DEFAULT_MAX_WATCHERS
 ) -> DataFrame:
-    """Undirected (u < v) user edges: >= 2 shared titles. Titles with
-    more than `max_watchers` distinct watchers are excluded before the
-    self-join (the dedup max_bucket_size pattern), bounding per-title
-    pair cost at max_watchers^2."""
-    watched = watched.join(
-        watched.groupBy("movieId")
-        .agg(F.count("*").alias("_w"))
-        .filter(F.col("_w") <= max_watchers)
-        .select("movieId"),
-        "movieId",
-        "left_semi",
-    )
-    a = watched.select(F.col("customerId").alias("u"), "movieId")
-    b = watched.select(F.col("customerId").alias("v"), "movieId")
+    """Undirected (u < v) user edges: >= 2 shared titles, over distinct
+    (customerId, movieId) rows. Titles with more than `max_watchers`
+    distinct watchers (None: no cap) are excluded before the self-join
+    (the pairs hub cap), bounding per-title pair cost at
+    max_watchers^2."""
+    users = watched.select(F.col("customerId").alias("user"), "movieId")
     return (
-        a.join(b, "movieId")
-        .filter(F.col("u") < F.col("v"))
-        .groupBy("u", "v")
+        shared_key_pairs(users, "movieId", "user", max_watchers)
+        .groupBy(F.col("user_a").alias("u"), F.col("user_b").alias("v"))
         .agg(F.count("*").alias("shared"))
         .filter(F.col("shared") >= 2)
         .select("u", "v")

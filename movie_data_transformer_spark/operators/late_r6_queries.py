@@ -516,50 +516,24 @@ def q_dedup_minhash_recall_report(spark: SparkSession, sf_dir: str) -> DataFrame
     from pyspark.sql import functions as F
 
     from movie_data_transformer_spark.operators.dedup import (
-        JACCARD_MICRO_EXPR,
         augmented_corpus,
         doc_shingles,
         minhash_dedup_pairs,
     )
+    from movie_data_transformer_spark.operators.pairs import jaccard_pairs, pair_recall
 
     corpus = augmented_corpus(load_table(spark, sf_dir, "documents"))
     # doc_shingles is per-doc distinct by construction (array_distinct
-    # inside word_shingles) — no extra corpus-wide shuffle needed
-    sh = doc_shingles(corpus, n=3).persist()
-    sizes = sh.groupBy("doc_id").agg(F.count("*").alias("n"))
-    a = sh.selectExpr("doc_id AS doc_a", "shingle")
-    b = sh.selectExpr("doc_id AS doc_b", "shingle")
-    inter = (
-        a.join(b, "shingle")
-        .filter(F.col("doc_a") < F.col("doc_b"))
-        .groupBy("doc_a", "doc_b")
-        .agg(F.count("*").alias("n_inter"))
-    )
+    # inside word_shingles) — no extra corpus-wide shuffle needed;
+    # persisted: the sizes and both self-join sides read it
+    sh = doc_shingles(corpus, n=3).selectExpr("doc_id AS doc", "shingle").persist()
     truth = (
-        inter.join(sizes.selectExpr("doc_id AS doc_a", "n AS n_a"), "doc_a")
-        .join(sizes.selectExpr("doc_id AS doc_b", "n AS n_b"), "doc_b")
-        .select("doc_a", "doc_b", F.expr(JACCARD_MICRO_EXPR).alias("jaccard"))
-        .filter(F.col("jaccard") >= 0.3)
+        jaccard_pairs(sh, "shingle", "doc")
+        .filter(F.col("jaccard_micro") / 1_000_000 >= 0.3)
         .select("doc_a", "doc_b")
     )
-    found = minhash_dedup_pairs(corpus, max_bucket_size=10_000).select("doc_a", "doc_b")
-    t = truth.persist()
-    n_true = t.count()
-    n_found = found.count()
-    n_missed = t.join(found, ["doc_a", "doc_b"], "left_anti").count()
-    t.unpersist(blocking=False)
-    sh.unpersist(blocking=False)
-    return spark.createDataFrame(
-        [
-            (
-                n_true,
-                n_found,
-                n_missed,
-                float(n_found * 1_000_000 // n_true) / 1_000_000 if n_true else 1.0,
-            )
-        ],
-        "n_true_pairs long, n_found long, n_missed long, recall double",
-    )
+    found = minhash_dedup_pairs(corpus, max_bucket_size=10_000)
+    return pair_recall(truth, found)
 
 
 def _minhash_recall_sql() -> str:
@@ -794,12 +768,13 @@ def q_dedup_winnowing_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     leads, window min over a ROWS frame on the packed key), distinct
     selected hashes, one df cap, one bucket self-join — every stage a
     keyed shuffle."""
-    from pyspark.sql import functions as F  # noqa: F401
+    from pyspark.sql import functions as F
 
     from movie_data_transformer_spark.operators.dedup import (
         augmented_corpus,
         normalize_text,
     )
+    from movie_data_transformer_spark.operators.pairs import shared_key_pairs
 
     docs = augmented_corpus(load_table(spark, sf_dir, "documents"))
     docs.select(
@@ -807,11 +782,10 @@ def q_dedup_winnowing_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     ).createOrReplaceTempView("_win_toks")
     leads = ", ".join(f"lead(tok, {j}) OVER w AS t{j}" for j in range(1, WIN_K))
     gram = ", ".join(["tok"] + [f"t{j}" for j in range(1, WIN_K)])
-    # the fingerprint table is computed as its own persisted DataFrame:
-    # SQL CTEs are inlined, so leaving fps inside the WITH re-ran the
-    # posexplode + both per-doc window passes FOUR times (the df pass
-    # plus both self-join sides through kept) — cached rows are two
-    # integers per selected fingerprint
+    # the fingerprint table is persisted: both self-join sides read it,
+    # and each uncached reference re-runs the posexplode + both per-doc
+    # window passes — cached rows are two integers per selected
+    # fingerprint
     fps = spark.sql(
         f"""
         WITH posed AS (
@@ -848,23 +822,11 @@ def q_dedup_winnowing_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
         FROM winmin WHERE wpos >= {WIN_W}
         """
     ).persist()
-    fps.createOrReplaceTempView("_win_fps")
-    # nested subqueries, NOT a WITH: on Spark 4.1 a persisted temp view
-    # referenced from inside a CTE definition is NOT substituted with
-    # its InMemoryRelation (probed: plain/self-join refs substitute,
-    # any CTE-wrapped ref silently recomputes the full lineage)
-    kept = """(SELECT f.* FROM _win_fps f
-               JOIN (SELECT h FROM _win_fps
-                     GROUP BY h HAVING count(*) <= 100) r USING (h))"""
-    return spark.sql(
-        f"""
-        SELECT a.doc_id AS doc_a, b.doc_id AS doc_b,
-               CAST(count(*) AS BIGINT) AS n_shared_fps
-        FROM {kept} a JOIN {kept} b
-          ON a.h = b.h AND a.doc_id < b.doc_id
-        GROUP BY 1, 2
-        HAVING count(*) >= 2
-        """
+    return (
+        shared_key_pairs(fps.selectExpr("doc_id AS doc", "h"), "h", "doc", max_per_key=100)
+        .groupBy("doc_a", "doc_b")
+        .agg(F.count("*").cast("bigint").alias("n_shared_fps"))
+        .filter(F.col("n_shared_fps") >= 2)
     )
 
 

@@ -22,9 +22,9 @@ Scale design:
   shared neighbor z ("pairs through z"), so cost is sum(deg(z)^2) —
   and a hub node IS capped (`max_degree`, default DEFAULT_MAX_DEGREE):
   nodes with more than max_degree neighbors are excluded from the
-  through-z role BEFORE the self-join (mirrored in the oracle; a
-  connects-to-everything hub carries no link signal — the
-  graph_extras max_watchers rationale, same pattern). Fixture degrees
+  through-z role BEFORE the self-join (the pairs hub cap, mirrored in
+  the oracle; a connects-to-everything hub carries no link signal —
+  the graph_extras max_watchers rationale). Fixture degrees
   are <= 34 (a 35-title catalog), so the default never binds.
 - The union size comes from degrees (deg_a + deg_b - n_common), NOT a
   union materialization; the existing-edge exclusion is one anti-join.
@@ -35,6 +35,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from movie_data_transformer_spark.operators.pairs import jaccard_micro, shared_key_pairs
 from movie_data_transformer_spark.operators.recsys_queries import (
     INTERACTIONS_CTE,
     _SIMS_ORACLE_CTE,
@@ -58,13 +59,8 @@ def predicted_links(
     adjacency (both directions present, no self-loops)."""
     deg = edges.groupBy("src").agg(F.count("*").alias("deg"))
     # through-z generation, hub-capped on z's degree
-    z_ok = deg.filter(F.col("deg") <= max_degree).select("src")
-    thru = edges.join(z_ok, "src", "left_semi")
-    a = thru.selectExpr("src AS z", "dst AS title_a")
-    b = thru.selectExpr("src AS z", "dst AS title_b")
     common = (
-        a.join(b, "z")
-        .filter(F.col("title_a") < F.col("title_b"))
+        shared_key_pairs(edges.selectExpr("src AS z", "dst AS title"), "z", "title", max_degree)
         .groupBy("title_a", "title_b")
         .agg(F.count("*").alias("n_common"))
     )
@@ -76,12 +72,11 @@ def predicted_links(
     return (
         non_adj.join(deg.selectExpr("src AS title_a", "deg AS deg_a"), "title_a")
         .join(deg.selectExpr("src AS title_b", "deg AS deg_b"), "title_b")
-        .selectExpr(
+        .select(
             "title_a",
             "title_b",
-            "CAST(n_common AS BIGINT) AS n_common",
-            "CAST(n_common * 1000000 div (deg_a + deg_b - n_common) AS BIGINT)"
-            " AS nbr_jaccard_micro",
+            "n_common",
+            jaccard_micro("n_common", "deg_a", "deg_b").alias("nbr_jaccard_micro"),
         )
     )
 

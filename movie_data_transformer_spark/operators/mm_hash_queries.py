@@ -30,6 +30,7 @@ from movie_data_transformer_spark.operators.multimodal import (
     map_media_rows,
     synthesize_bmp_media,
 )
+from movie_data_transformer_spark.operators.pairs import MAX_HAMMING, bucket_pairs
 from movie_data_transformer_spark.sources.tables import load_table
 
 DH_W = 8  # 8 comparison bits per row -> 9 sampled columns
@@ -74,50 +75,32 @@ def q_mm_image_dhash(spark: SparkSession, sf_dir: str) -> DataFrame:
     return dhash_rows(synthesize_bmp_media(load_table(spark, sf_dir, "documents")))
 
 
-MAX_HAMMING = 3  # pigeonhole: <=3 differing bits must agree on >=1 of 4 bands
 MAX_BUCKET = 1000
 
 
 def dhash_near_pairs(fps: DataFrame) -> DataFrame:
     """(doc_a, doc_b, hamming) near-duplicate IMAGE pairs from dHash
     fingerprints: block on the four 16-bit bands of the 64-bit hash
-    (pigeonhole guarantees recall at hamming <= 3), bucket-group into a
-    single shuffle, verify with exact bit_count(xor) per half — the same
-    candidate machinery as the text SimHash path (dedup.simhash_near_pairs),
-    operating on (hash_hi, hash_lo) halves so every value stays an
-    unsigned 32-bit quantity inside a bigint (portable, no sign games)."""
+    (pigeonhole guarantees recall at hamming <= 3), then
+    pairs.bucket_pairs verifies exact bit_count(xor) per half inside its
+    expansion. The hash is kept as (hash_hi, hash_lo) halves so every
+    value stays an unsigned 32-bit quantity inside a bigint (portable, no
+    sign games)."""
     band_structs = ", ".join(
         f"named_struct('band', {bi}, 'nib', shiftright({half}, {sh}) & 65535)"
         for bi, (half, sh) in enumerate(
             [("hash_lo", 0), ("hash_lo", 16), ("hash_hi", 0), ("hash_hi", 16)]
         )
     )
-    exploded = fps.selectExpr(
-        "doc_id", "hash_hi", "hash_lo", f"inline(array({band_structs}))"
+    bands = fps.selectExpr(
+        "doc_id AS doc", "hash_hi", "hash_lo", f"inline(array({band_structs}))"
     )
-    buckets = (
-        exploded.groupBy("band", "nib")
-        .agg(F.collect_set(F.struct("doc_id", "hash_hi", "hash_lo")).alias("ds"))
-        .filter(F.size("ds") >= 2)
-    )
-    buckets = buckets.filter(F.size("ds") <= MAX_BUCKET)
-    # hamming cut INSIDE the expansion lambda (the r13 simhash profile:
-    # expand-then-filter materialized millions of doomed generator rows;
-    # filtering before the struct transform emits survivors only —
-    # identical pair set, the popcounts re-evaluated just for survivors)
-    return (
-        buckets.selectExpr("array_sort(ds) AS ds")
-        .selectExpr(
-            "inline(flatten(transform(ds, (x, i) -> "
-            "transform("
-            "filter(slice(ds, i + 2, size(ds)), "
-            "y -> bit_count(x.hash_lo ^ y.hash_lo) "
-            f"+ bit_count(x.hash_hi ^ y.hash_hi) <= {MAX_HAMMING}), "
-            "y -> named_struct('doc_a', x.doc_id, 'doc_b', y.doc_id, "
-            "'hamming', CAST(bit_count(x.hash_lo ^ y.hash_lo) "
-            "+ bit_count(x.hash_hi ^ y.hash_hi) AS INT))))))"
-        )
-        .distinct()
+    return bucket_pairs(
+        bands,
+        ["band", "nib"],
+        "doc",
+        MAX_BUCKET,
+        hamming="bit_count(x.hash_lo ^ y.hash_lo) + bit_count(x.hash_hi ^ y.hash_hi)",
     )
 
 

@@ -18,6 +18,7 @@ from movie_data_transformer_spark.operators.movie_pipeline import (
     group_watched,
     kv_serialize,
 )
+from movie_data_transformer_spark.operators.pairs import jaccard_pairs, shared_key_pairs
 
 
 def _exploded(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -176,12 +177,11 @@ def q_movies_cooccurrence(spark: SparkSession, sf_dir: str) -> DataFrame:
     customers watched both. Self-join per customer on the deduped
     watch table; at scale this is the classic 'pairs within group' —
     bounded by per-customer watch-list length, never |movies|^2."""
-    watched = dedup_latest(_exploded(spark, sf_dir)).select("customerId", "movieId")
-    a = watched.select("customerId", F.col("movieId").alias("movie_a"))
-    b = watched.select("customerId", F.col("movieId").alias("movie_b"))
+    watched = dedup_latest(_exploded(spark, sf_dir)).select(
+        "customerId", F.col("movieId").alias("movie")
+    )
     return (
-        a.join(b, "customerId")
-        .filter(F.col("movie_a") < F.col("movie_b"))
+        shared_key_pairs(watched, "customerId", "movie")
         .groupBy("movie_a", "movie_b")
         .agg(F.count("*").alias("n_co_watchers"))
     )
@@ -202,31 +202,11 @@ GROUP BY 1, 2
 def q_movies_similarity_jaccard(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Movie-movie similarity by viewer-set Jaccard (co-watchers over
     union of watchers) — item similarity for the recommender."""
-    watched = dedup_latest(_exploded(spark, sf_dir)).select("customerId", "movieId")
-    sizes = watched.groupBy("movieId").agg(F.count("*").alias("n"))
-    a = watched.select("customerId", F.col("movieId").alias("movie_a"))
-    b = watched.select("customerId", F.col("movieId").alias("movie_b"))
-    co = (
-        a.join(b, "customerId")
-        .filter(F.col("movie_a") < F.col("movie_b"))
-        .groupBy("movie_a", "movie_b")
-        .agg(F.count("*").alias("n_co"))
+    watched = dedup_latest(_exploded(spark, sf_dir)).select(
+        "customerId", F.col("movieId").alias("movie")
     )
-    za = sizes.select(F.col("movieId").alias("movie_a"), F.col("n").alias("n_a"))
-    zb = sizes.select(F.col("movieId").alias("movie_b"), F.col("n").alias("n_b"))
-    return (
-        co.join(za, "movie_a")
-        .join(zb, "movie_b")
-        .select(
-            "movie_a",
-            "movie_b",
-            # integer micro-units, not round(): an exact ratio like
-            # odd/128 is a 1e-6 midpoint where the engines round apart
-            # (tpch_q2 bug class, NOTES.md pitfalls)
-            F.expr(
-                "CAST(n_co * 1000000 div (n_a + n_b - n_co) AS DOUBLE) / 1000000"
-            ).alias("viewer_jaccard"),
-        )
+    return jaccard_pairs(watched, "customerId", "movie").select(
+        "movie_a", "movie_b", (F.col("jaccard_micro") / 1_000_000).alias("viewer_jaccard")
     )
 
 

@@ -33,8 +33,8 @@ Scale design (the 100 TB story):
   default DEFAULT_MAX_WATCHLIST): customers whose distinct watchlist
   exceeds the cap are excluded from MODEL building entirely (sizes,
   co-counts and Jaccard are all computed on the capped universe, so
-  the capped model is self-consistent), exactly the dedup
-  max_bucket_size pattern. Whales still RECEIVE recommendations —
+  the capped model is self-consistent): the pairs hub cap
+  (operators/pairs.py). Whales still RECEIVE recommendations —
   the serving join scores the full watch table against the capped
   model. The cap is mirrored in every DuckDB oracle CTE and pinned
   by a planted-whale pytest (tests/test_recsys_mixing.py). The
@@ -53,6 +53,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from movie_data_transformer_spark.operators.pairs import cap_per_key, jaccard_pairs
 from movie_data_transformer_spark.sources.tables import load_table
 
 
@@ -96,46 +97,18 @@ def item_similarities(
     over `max_watchlist` distinct titles are dropped BEFORE the
     self-join, and sizes/Jaccard are computed on the same capped
     universe so the model is internally consistent."""
-    # window-count cap, not agg+semi-join: one shuffle on customerId that
-    # the pair self-join below reuses (same partitioning), and no second
-    # traversal of the watch-table subtree (bench: 2.6s -> 1.8s at sf0.1)
-    from pyspark.sql.window import Window as _W
-
     # persisted: consumed three ways below (sizes + both self-join
     # sides), and every reference would otherwise re-scan events and
     # re-run the distinct + cap window — the compact (customer, title)
     # pair table is exactly the thing to cache, not its lineage
     watched = (
-        watched.withColumn(
-            "_w", F.count("*").over(_W.partitionBy("customerId"))
-        )
-        .filter(F.col("_w") <= max_watchlist)
-        .drop("_w")
+        cap_per_key(watched, "customerId", max_watchlist)
+        .select("customerId", F.col("movieId").alias("movie"))
         .persist()
     )
-    sizes = watched.groupBy("movieId").agg(F.count("*").alias("n"))
-    a = watched.select("customerId", F.col("movieId").alias("movie_a"))
-    b = watched.select("customerId", F.col("movieId").alias("movie_b"))
-    co = (
-        a.join(b, "customerId")
-        .filter(F.col("movie_a") < F.col("movie_b"))
-        .groupBy("movie_a", "movie_b")
-        .agg(F.count("*").alias("n_co"))
-    )
     pairs = (
-        co.join(
-            sizes.select(F.col("movieId").alias("movie_a"), F.col("n").alias("n_a")),
-            "movie_a",
-        )
-        .join(
-            sizes.select(F.col("movieId").alias("movie_b"), F.col("n").alias("n_b")),
-            "movie_b",
-        )
-        .selectExpr(
-            "movie_a",
-            "movie_b",
-            "CAST(n_co * 1000000 div (n_a + n_b - n_co) AS BIGINT) AS jaccard_micro",
-        )
+        jaccard_pairs(watched, "customerId", "movie")
+        .select("movie_a", "movie_b", "jaccard_micro")
         # persisted: the direction-union below reads pairs twice, and the
         # co-watch self-join + size joins above are the expensive stages
         # of the whole model build — the undirected model table is tiny

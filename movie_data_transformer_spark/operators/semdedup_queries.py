@@ -49,6 +49,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from movie_data_transformer_spark.operators.pairs import pair_recall
 from movie_data_transformer_spark.sources.tables import load_table
 
 #: (threshold, micro form) — 0.9 catches the planted semantic copies,
@@ -60,34 +61,6 @@ THRESHOLDS = [(0.9, 900000), (0.35, 350000)]
 #: broadcast sample fits one executor; 8 keeps the tier non-trivial at
 #: every test SF.
 SAMPLE_MOD = 8
-
-
-def _pair_report(
-    spark: SparkSession,
-    truth: DataFrame,
-    found: DataFrame,
-    scope: str,
-    thresh_micro: int,
-) -> DataFrame:
-    t = truth.persist()
-    n_true = t.count()
-    n_found = found.count()
-    n_missed = t.join(found, ["vec_a", "vec_b"], "left_anti").count()
-    t.unpersist(blocking=False)
-    return spark.createDataFrame(
-        [
-            (
-                scope,
-                thresh_micro,
-                n_true,
-                n_found,
-                n_missed,
-                float(n_found * 1_000_000 // n_true) / 1_000_000 if n_true else 1.0,
-            )
-        ],
-        "scope string, thresh_micro long, n_true_pairs long, n_found long,"
-        " n_missed long, recall double",
-    )
 
 
 def q_semdedup_ann_recall(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -161,17 +134,13 @@ def q_semdedup_ann_recall(spark: SparkSession, sf_dir: str) -> DataFrame:
             ("full", allp, cand),
             ("sample_mod8", allp_s, cand.filter(F.col("vec_a") % SAMPLE_MOD == 0)),
         ):
-            rep = _pair_report(
-                spark,
+            rep = pair_recall(
                 truth_df.filter(F.col("cs") >= thresh).select("vec_a", "vec_b"),
-                found_df.filter(F.col("cs") >= thresh).select("vec_a", "vec_b"),
-                scope,
-                micro,
+                found_df.filter(F.col("cs") >= thresh),
+            ).select(
+                F.lit(scope).alias("scope"), F.lit(micro).cast("long").alias("thresh_micro"), "*"
             )
             out = rep if out is None else out.unionAll(rep)
-    cand.unpersist(blocking=False)
-    allp.unpersist(blocking=False)
-    allp_s.unpersist(blocking=False)
     return out
 
 

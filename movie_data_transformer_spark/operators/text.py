@@ -180,28 +180,11 @@ def fingerprint(docs: DataFrame) -> DataFrame:
 def chunk_documents(docs: DataFrame, chunk_tokens: int = 64) -> DataFrame:
     """Fixed-size token chunking — the pretraining/RAG preprocessing step:
     split each doc into consecutive chunk_tokens-token windows,
-    emitting (doc_id, chunk_idx, chunk_text, n_tokens) per chunk.
-
-    Pure built-in expressions: tokens materialized ONCE in a first
-    projection, then sequence+slice+array_join build the chunks and
-    explode flattens — all JVM-side, no Python in the path. Every doc
-    yields >=1 chunk (tokens() of empty text is [''])."""
-    toks = docs.select("doc_id", tokens(F.col(TEXT_COL)).alias("toks"))
-    n_chunks = F.ceil(F.size("toks") / F.lit(chunk_tokens)).cast("int")
-    chunks = F.transform(
-        F.sequence(F.lit(0), n_chunks - 1),
-        lambda i: F.struct(
-            i.cast("int").alias("chunk_idx"),
-            F.array_join(
-                F.slice(F.col("toks"), i * chunk_tokens + 1, F.lit(chunk_tokens)), " "
-            ).alias("chunk_text"),
-            F.size(
-                F.slice(F.col("toks"), i * chunk_tokens + 1, F.lit(chunk_tokens))
-            ).cast("int").alias("n_tokens"),
-        ),
-    )
-    return toks.select("doc_id", F.explode(chunks).alias("c")).select(
-        "doc_id", "c.chunk_idx", "c.chunk_text", "c.n_tokens"
+    emitting (doc_id, chunk_idx, chunk_text, n_tokens) per chunk: the
+    sliding chunker with window = stride. Every doc yields >=1 chunk
+    (tokens() of empty text is [''])."""
+    return chunk_documents_sliding(docs, window=chunk_tokens, stride=chunk_tokens).drop(
+        "start_tok"
     )
 
 
@@ -345,9 +328,10 @@ def chunk_documents_sliding(
 ) -> DataFrame:
     """Overlapping token chunking (RAG-style): windows of `window` tokens
     starting every `stride` tokens, so consecutive chunks share
-    window - stride tokens of context. Same expression-only shape as
-    chunk_documents (tokens materialized once, sequence+slice+explode,
-    all JVM-side). Chunk starts cover [0, n) in stride steps, so trailing
+    window - stride tokens of context. Pure built-in expressions: tokens
+    materialized ONCE in a first projection, then sequence+slice+
+    array_join build the chunks and explode flattens — all JVM-side, no
+    Python in the path. Chunk starts cover [0, n) in stride steps, so trailing
     chunks may be shorter than `window` but every token appears in at
     least one chunk."""
     toks = docs.select("doc_id", tokens(F.col(TEXT_COL)).alias("toks"))

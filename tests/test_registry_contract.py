@@ -162,8 +162,6 @@ KEPT_TEST_KNOBS = {
         "test_dedup.py::test_containment_catches_jaccard_blind_embedding",
     "operators.dedup.simhash_near_pairs(max_bucket_size)":
         "test_dedup.py::test_simhash_mega_bucket_cap_routes_to_exact_dedup",
-    "operators.graph_extras_queries.cowatch_user_edges(max_watchers)":
-        "test_graph_analytics.py::test_blockbuster_cap_excludes_hub_title_from_edges",
     "operators.graph_extras_queries.kcore_peel(max_peels)":
         "test_recsys_mixing.py::test_kcore_converges_within_bound_and_peels_the_chain",
     "operators.layout_queries.small_files_inventory(glob)":
@@ -186,10 +184,6 @@ KEPT_TEST_KNOBS = {
         "test_similarity.py::test_semdedup_finds_planted_pairs",
     "operators.text.chunk_documents(chunk_tokens)":
         "test_text_multimodal.py::test_chunk_udtf_matches_expression_form",
-    "operators.text.chunk_documents_sliding(stride)":
-        "test_text_multimodal.py::test_sliding_chunks_cover_and_overlap",
-    "operators.text.chunk_documents_sliding(window)":
-        "test_text_multimodal.py::test_sliding_chunks_cover_and_overlap",
     "streaming.ann_stream.run_streaming_ann_ingest(max_files_per_trigger)":
         "test_similarity.py::test_streaming_ann_ingest_slicing_invariant_and_batch_sized",
     "streaming.dedup_stream.run_streaming_incremental_dedup(compact_after)":
@@ -357,6 +351,60 @@ def test_streams_start_and_read_jsonl_in_one_place():
         "reads JSON as a stream": sorted(json_streams - {JSONL_STREAM_READER}),
     }
     assert stray == {"starts a stream": [], "reads JSON as a stream": []}, stray
+
+
+PAIR_GENERATOR = "operators.pairs"
+
+
+def _is_col(e: ast.expr) -> bool:
+    return isinstance(e, ast.Call) and _called_name(e) == "col"
+
+
+def test_pairs_of_rows_that_share_a_key_are_made_in_one_place():
+    """Every pair of rows that share a key is generated by
+    `operators/pairs.py`. Outside it, no `.join(…)` whose right side is
+    not `F.broadcast(…)` is followed by `.filter(F.col(a) < F.col(b) …)`
+    (the self-join form), and no pair expansion flattens a transform (the
+    SQL `inline(flatten(transform(` or the Column `F.flatten(F.transform(`
+    form)."""
+    stray = []
+    for mod, tree in _package_modules().items():
+        if mod == PAIR_GENERATOR:
+            continue
+        for node in ast.walk(tree):
+            if isinstance(node, ast.Call) and _called_name(node) == "filter" and node.args:
+                join = getattr(node.func, "value", None)
+                ordered = any(
+                    isinstance(c, ast.Compare)
+                    and isinstance(c.ops[0], ast.Lt)
+                    and _is_col(c.left)
+                    and _is_col(c.comparators[0])
+                    for c in ast.walk(node.args[0])
+                )
+                if (
+                    isinstance(join, ast.Call)
+                    and _called_name(join) == "join"
+                    and join.args
+                    and not (
+                        isinstance(join.args[0], ast.Call)
+                        and _called_name(join.args[0]) == "broadcast"
+                    )
+                    and ordered
+                ):
+                    stray.append(f"{mod}:{node.lineno} self-join")
+            if (
+                isinstance(node, ast.Constant)
+                and isinstance(node.value, str)
+                and "inline(flatten(transform(" in node.value
+            ) or (
+                isinstance(node, ast.Call)
+                and _called_name(node) == "flatten"
+                and node.args
+                and isinstance(node.args[0], ast.Call)
+                and _called_name(node.args[0]) == "transform"
+            ):
+                stray.append(f"{mod}:{node.lineno} pair expansion")
+    assert not stray, sorted(stray)
 
 
 def test_capture_plans_writes_only_to_its_out_dir(spark, sf_dir, tmp_path, monkeypatch):

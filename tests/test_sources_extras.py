@@ -199,3 +199,32 @@ def test_corrupt_parquet_file_skipped_with_ignore_corrupt(spark, tmp_path):
         assert survivors.selectExpr("max(v - id * 2)").collect()[0][0] == 0
     finally:
         spark.conf.set("spark.sql.files.ignoreCorruptFiles", prev)
+
+
+def test_movies_jsonl_feed_is_byte_identical_across_builds(spark, sf_dir, tmp_path, monkeypatch):
+    """The movies JSONL feed (`movies_jsonl_scan`, `movies_incremental_merge`)
+    is the same files on every build: two builds into empty dirs, with
+    the nest-groupBy under it re-run at two shuffle widths, write
+    byte-identical files."""
+    import tempfile
+    from pathlib import Path
+
+    from movie_data_transformer_spark.operators.jsonl_queries import _jsonl_dir
+
+    old = spark.conf.get("spark.sql.shuffle.partitions")
+    builds = []
+    try:
+        for n in (3, 7):
+            d = tmp_path / f"build{n}"
+            d.mkdir()
+            monkeypatch.setattr(tempfile, "tempdir", str(d))
+            spark.conf.set("spark.sql.shuffle.partitions", str(n))
+            spark.catalog.clearCache()
+            out = _jsonl_dir(spark, sf_dir)
+            assert out.startswith(str(d))
+            builds.append({f: Path(out, f).read_bytes() for f in os.listdir(out)})
+    finally:
+        spark.conf.set("spark.sql.shuffle.partitions", old)
+        spark.catalog.clearCache()
+    assert len([f for f in builds[0] if f.endswith(".json")]) >= 2
+    assert builds[0] == builds[1]
