@@ -11,10 +11,10 @@ order differs per engine and partitioning.
 `graph_pagerank` is weighted PageRank over the movie co-watch graph
 (the item-graph centrality step of a recommender, on the reference's own
 domain). Iterative dataflow — joins + aggregations per superstep with
-localCheckpoint to cut the growing lineage — the same shape GraphX /
-GraphFrames lower to. Not SQL-expressible (a fixpoint), so the registry
-entry is rows-only; the result is pinned against a NumPy power iteration
-in tests.
+localCheckpoint to cut the growing lineage (operators/fixpoint.py) —
+the same shape GraphX / GraphFrames lower to. Not SQL-expressible (a
+fixpoint), so the registry entry is rows-only; the result is pinned
+against a NumPy power iteration in tests.
 
 Scale notes (100 TB): the z-score stats table is |event_type| rows —
 broadcast back to the fact table, no second shuffle of the facts. Each
@@ -30,6 +30,7 @@ from pyspark.sql import functions as F
 
 from movie_data_transformer_spark.fixtures import RATINGS_ORACLE_CTE
 from movie_data_transformer_spark.functions import micro_ratio
+from movie_data_transformer_spark.operators.fixpoint import Fixpoint, rows
 from movie_data_transformer_spark.operators.graph_extras_queries import cowatch_user_edges
 from movie_data_transformer_spark.operators.movie_pipeline import dedup_latest
 from movie_data_transformer_spark.operators.movie_queries import _exploded, q_movies_cooccurrence
@@ -81,17 +82,15 @@ WHERE abs(round((e.value - s.sv / s.n)
 
 
 PAGERANK_DAMPING = 0.85
-#: supersteps between lineage-truncating checkpoints; swept on
-#: graph_pagerank at sf0.1: 3 -> 3.11 s, 5 -> 2.22 s, 10 -> 2.64 s
-#: (OPTIMIZATION_r12.md)
-PAGERANK_CHECKPOINT_EVERY = 5
+PAGERANK_ITERS = 10
 
 
-def pagerank(edges: DataFrame, n_iter: int = 10) -> DataFrame:
-    """Weighted PageRank (damping PAGERANK_DAMPING) by power iteration on
-    a directed (src, dst, weight) edge list. Returns (node, pr). Dangling
-    nodes (no out-edges) redistribute their mass uniformly — the standard
-    stochastic-matrix completion.
+def pagerank(edges: DataFrame) -> DataFrame:
+    """Weighted PageRank (damping PAGERANK_DAMPING) by PAGERANK_ITERS
+    rounds of power iteration on a directed (src, dst, weight) edge list.
+    Returns (node, pr). Dangling nodes (no out-edges) redistribute their
+    mass uniformly — the standard stochastic-matrix completion. Width
+    and checkpoints are operators/fixpoint.py's.
 
     NO driver action inside the loop (round-3 VERDICT item 4), and ONE
     shuffle per superstep: zero-contribution rows for every node are
@@ -105,48 +104,16 @@ def pagerank(edges: DataFrame, n_iter: int = 10) -> DataFrame:
     the rank table, and crucially no eager per-superstep job (the r13
     in-loop comment records the measured broadcast alternative losing
     2x). FP drift vs the explicit dangling sum is ~1e-15/iteration, far
-    under the 1e-6 NumPy pin in tests. Lineage is truncated by
-    localCheckpoint every
-    PAGERANK_CHECKPOINT_EVERY iterations (not every one): the plan grows
-    LINEARLY in supersteps (each adds one join + one agg + one window),
-    so a 5-superstep chain optimizes fine in one job and the job count
-    drops from 2/superstep to 1/checkpoint — each checkpoint job is
-    scheduling overhead on a small graph, so fewer, deeper jobs win
-    until plan-optimization time catches up (see the constant's sweep).
-    On a real cluster swap localCheckpoint for a reliable checkpoint dir."""
-    # materialize the input edge list ONCE: nodes / out-weights /
-    # normalized edges all derive from it, and without this the upstream
-    # lineage (e.g. the co-watch pair generation) would replay in each of
-    # their checkpoint jobs
-    edges = edges.select("src", "dst", "weight").localCheckpoint()
-    n_edges = edges.count()
-    # Size EVERY shuffle of this fixpoint computation by the data, not
-    # the session default: the node skeleton, the normalized-edge
-    # layout, and the per-superstep rank reshuffle (groupBy + window)
-    # all hold graph-sized tables, and an over-provisioned reduce spec
-    # costs task scheduling AQE cannot give back (AQE coalesces the
-    # reads, but the 5-node test graph still paid ~2x wall time in
-    # 32-wide bookkeeping across 10 supersteps — measured 3.6s -> 2.1s
-    # at one partition). ~100k edges per partition, capped at session
-    # parallelism, keeps the layout wide at cluster scale. The session
-    # value is restored in finally; the result is materialized by a
-    # final localCheckpoint INSIDE the scope so the returned DataFrame
-    # is a plain scan and never replans under the restored width.
-    parallelism = edges.sparkSession.sparkContext.defaultParallelism
-    n_parts = max(1, min(parallelism, n_edges // 100_000 + 1))
-    sess = edges.sparkSession
-    old_sp = sess.conf.get("spark.sql.shuffle.partitions")
-    sess.conf.set("spark.sql.shuffle.partitions", str(n_parts))
-    try:
-        nodes = (
-            edges.select(F.col("src").alias("node"))
-            .union(edges.select(F.col("dst").alias("node")))
-            .distinct()
-            .localCheckpoint()  # reused every superstep (rank-table skeleton)
+    under the 1e-6 NumPy pin in tests."""
+    with Fixpoint(edges.select("src", "dst", "weight")) as fx:
+        edges = fx.source
+        # reused every superstep (rank-table skeleton)
+        nodes = fx.checkpoint(
+            edges.selectExpr("src AS node").union(edges.selectExpr("dst AS node")).distinct()
         )
-        n = nodes.count()
+        n = rows(nodes)
         outw = edges.groupBy("src").agg(F.sum("weight").alias("outw"))
-        norm_edges = (
+        norm_edges = fx.checkpoint(
             edges.join(outw, "src")
             .select(
                 F.col("src").alias("e_src"),
@@ -159,11 +126,9 @@ def pagerank(edges: DataFrame, n_iter: int = 10) -> DataFrame:
             # removes one edge-table exchange from every superstep — the
             # classic "partition once, iterate many" layout for iterative
             # graph dataflow
-            .repartition(n_parts, F.col("e_src"))
-            .localCheckpoint()
+            .repartition(fx.width, F.col("e_src"))
         )
         zero_rows = nodes.select("node", F.lit(0.0).alias("c"))
-        ranks = nodes.select("node", F.lit(1.0 / n).alias("pr"))
         # CAST('<repr>' AS DOUBLE) round-trips the exact binary64 constant
         # through the SQL parser (a bare decimal literal would parse as
         # DECIMAL and re-round); one selectExpr per superstep keeps the
@@ -186,19 +151,18 @@ def pagerank(edges: DataFrame, n_iter: int = 10) -> DataFrame:
             f"{teleport} + {damp} * (contrib + "
             f"(1.0 - sum(contrib) OVER ()) / CAST('{float(n)!r}' AS DOUBLE)) AS pr"
         )
-        for i in range(n_iter):
+
+        def superstep(ranks: DataFrame, _round: int) -> DataFrame:
             spread = ranks.join(norm_edges, ranks.node == norm_edges.e_src).selectExpr(
                 "e_dst AS node", "pr * p AS c"
             )
             contribs = (
                 spread.unionByName(zero_rows).groupBy("node").agg(F.sum("c").alias("contrib"))
             )
-            ranks = contribs.selectExpr("node", rank_expr)
-            if (i + 1) % PAGERANK_CHECKPOINT_EVERY == 0 and (i + 1) < n_iter:
-                ranks = ranks.localCheckpoint()
-        return ranks.localCheckpoint()
-    finally:
-        sess.conf.set("spark.sql.shuffle.partitions", old_sp)
+            return contribs.selectExpr("node", rank_expr)
+
+        ranks = nodes.select("node", F.lit(1.0 / n).alias("pr"))
+        return fx.result(fx.converge(ranks, superstep, PAGERANK_ITERS))
 
 
 def q_graph_pagerank(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -214,7 +178,7 @@ def q_graph_pagerank(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.col("movie_b").alias("src"), F.col("movie_a").alias("dst"), F.col("n_co_watchers").alias("weight")
         )
     )
-    pr = pagerank(edges, n_iter=10)
+    pr = pagerank(edges)
     return pr.select(F.col("node").alias("movie_id"), F.round("pr", 6).alias("pr"))
 
 

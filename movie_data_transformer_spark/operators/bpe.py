@@ -17,10 +17,8 @@ replace(' l r ' -> ' lr ') — Spark's replace substitutes leftmost
 non-overlapping occurrences, which IS BPE's merge order.
 
 Scale: each round is one tiny shuffle (pair counts over |vocab| rows) +
-a 1-row argmax collect (driver involvement identical in shape to
-graph_pagerank's convergence probe); the word table is localCheckpointed
-every few rounds to keep the plan linear. The loop is inherently
-iterative/order-dependent, so the registry entry is rows-only; binding
+a 1-row argmax collect. The loop is inherently iterative and
+order-dependent, so the registry entry is rows-only; binding
 driver evidence comes from `bpe_invariants_gate` (first-round argmax
 recomputed independently + structural invariants, oracle = literal
 expected table) and the classic low/lower/newest golden pytest.
@@ -30,6 +28,10 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
+
+from movie_data_transformer_spark.operators.fixpoint import Fixpoint
+
+N_MERGES = 12
 
 #: adjacent symbol pairs of the space-joined symbol string `s`
 #: (exploded), carrying the word frequency
@@ -80,29 +82,25 @@ def top_pair(words: DataFrame):
     return (rows[0].left, rows[0].right, rows[0].pair_count) if rows else None
 
 
-def learn_bpe_merges(docs: DataFrame, n_merges: int = 12) -> DataFrame:
+def learn_bpe_merges(docs: DataFrame) -> DataFrame:
     """The merge table (merge_idx, left, right, pair_count) after
-    n_merges rounds (stops early if the vocabulary runs out of pairs)."""
-    spark = docs.sparkSession
-    words = words_as_symbols(docs).localCheckpoint()
+    N_MERGES rounds (stops early if the vocabulary runs out of pairs).
+    The loop over the word table is operators/fixpoint.py's."""
     learned = []
-    for idx in range(n_merges):
+
+    def merge(words: DataFrame, _round: int) -> DataFrame | None:
         best = top_pair(words)
         if best is None:
-            break
-        left, right, cnt = best
-        learned.append((idx, left, right, cnt))
-        words = words.withColumn(
-            "s",
-            F.replace(
-                F.col("s"),
-                F.lit(f" {left} {right} "),
-                F.lit(f" {left}{right} "),
-            ),
+            return None
+        learned.append((len(learned), *best))
+        left, right, _ = best
+        return words.withColumn(
+            "s", F.replace(F.col("s"), F.lit(f" {left} {right} "), F.lit(f" {left}{right} "))
         )
-        if (idx + 1) % 4 == 0:
-            words = words.localCheckpoint()
-    return spark.createDataFrame(
+
+    with Fixpoint(words_as_symbols(docs)) as fx:
+        fx.converge(fx.source, merge, N_MERGES)
+    return docs.sparkSession.createDataFrame(
         learned, "merge_idx int, left string, right string, pair_count bigint"
     )
 

@@ -39,6 +39,7 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
+from movie_data_transformer_spark.operators.fixpoint import Fixpoint
 from movie_data_transformer_spark.operators.pairs import (
     bucket_pairs,
     jaccard_micro,
@@ -399,23 +400,6 @@ def incremental_minhash_pairs_from_index(
     return jaccard_verify_arrays(cands, all_sets, 0.3)
 
 
-def _release_local_checkpoint(df: DataFrame) -> None:
-    """Free the block-manager storage behind an (already superseded)
-    localCheckpoint'd DataFrame NOW, instead of waiting for the JVM
-    ContextCleaner to notice the RDD is garbage. Reaches through the
-    analyzed LogicalRDD to the persisted internal RDD (probed working on
-    Spark 4.1.2); best-effort — on any internal-API drift the blocks
-    just revert to GC-based cleanup, so failure is swallowed. NEVER call
-    this on a checkpoint a live plan still reads: a truncated-lineage
-    RDD whose blocks are gone cannot be recomputed."""
-    try:
-        plan = df._jdf.queryExecution().analyzed()
-        if plan.getClass().getSimpleName() == "LogicalRDD":
-            plan.rdd().unpersist(False)
-    except Exception:
-        pass
-
-
 def exact_substr_runs(corpus: DataFrame, window: int = 15) -> DataFrame:
     """Longest shared token RUN per duplicate-linked pair — the quantity
     the ExactSubstr paper actually removes (Lee et al. cut the shared
@@ -506,75 +490,38 @@ def connected_components(pairs: DataFrame) -> DataFrame:
     unique fixpoint in O(component diameter) rounds (near-dup clusters
     are dense, so diameter is tiny). Each round is one shuffle join +
     one aggregation — the standard Spark connected-components shape
-    (GraphX/GraphFrames do the same dataflow). localCheckpoint after
-    each round truncates the exponentially-growing lineage; on a
-    cluster use a reliable checkpoint dir instead.
+    (GraphX/GraphFrames do the same dataflow); the loop is
+    operators/fixpoint.py's. Labels only fall, so their sum stops moving
+    exactly when a round changes no label: that sum is the convergence
+    probe.
 
     Singleton docs (no pairs) are not emitted — callers union them back
     as their own roots if needed. Raises if not converged in 20 rounds
     (never observed <6 rounds on the test corpora)."""
-    sess = pairs.sparkSession
     sym = pairs.select(F.col("doc_a").alias("src"), F.col("doc_b").alias("dst")).unionAll(
         pairs.select(F.col("doc_b").alias("src"), F.col("doc_a").alias("dst"))
     )
-    # materialize the (possibly expensive) pairs lineage exactly ONCE:
-    # the edge count that sizes the fixpoint's shuffle width is read off
-    # the checkpointed edges, not a separate pairs.count() job
-    edges0 = sym.distinct().localCheckpoint()
-    n_edges = edges0.count() // 2  # symmetrized
-    # data-sized shuffle width for the whole fixpoint (the pagerank
-    # lesson: AQE coalesces reads but not the per-stage bookkeeping of an
-    # over-wide spec on a small graph); restored in finally
-    parallelism = sess.sparkContext.defaultParallelism
-    n_parts = max(1, min(parallelism, n_edges // 100_000 + 1))
-    old_sp = sess.conf.get("spark.sql.shuffle.partitions")
-    sess.conf.set("spark.sql.shuffle.partitions", str(n_parts))
-    try:
-        # partition once (from the materialized edges) on the per-round
-        # join key, iterate many
-        edges = edges0.repartition(n_parts, F.col("dst")).localCheckpoint()
-        # the repartitioned checkpoint supersedes the raw one: release
-        # edges0's blocks now instead of holding both for the whole
-        # fixpoint (r6 ADVICE — block-manager storage grew linearly)
-        _release_local_checkpoint(edges0)
-        labels = (
-            edges.select(F.col("src").alias("doc_id"))
-            .distinct()
-            .withColumn("label", F.col("doc_id"))
-        )
-        prev_ckpt: DataFrame | None = None
-        for _ in range(20):
+    with Fixpoint(sym.distinct()) as fx:
+        # partition once on the per-round join key, iterate many
+        edges = fx.checkpoint(fx.source.repartition(fx.width, F.col("dst")))
+
+        def propagate(labels: DataFrame, _round: int) -> DataFrame:
             neighbor_min = (
                 edges.join(labels, edges.dst == labels.doc_id)
                 .groupBy("src")
                 .agg(F.min("label").alias("nbr_label"))
             )
-            # carry the old label through the step so convergence is a
-            # filter over THIS frame — not a second labels join per round
-            stepped = (
-                labels.join(neighbor_min, labels.doc_id == neighbor_min.src, "left")
-                .select(
-                    labels.doc_id.alias("doc_id"),
-                    labels.label.alias("old_label"),
-                    F.least(
-                        labels.label, F.coalesce(F.col("nbr_label"), labels.label)
-                    ).alias("label"),
-                )
-                .localCheckpoint()
+            return labels.join(neighbor_min, labels.doc_id == neighbor_min.src, "left").select(
+                labels.doc_id.alias("doc_id"),
+                F.least(labels.label, F.coalesce(F.col("nbr_label"), labels.label)).alias("label"),
             )
-            changed = stepped.filter(F.col("label") != F.col("old_label")).count()
-            # stepped (eager checkpoint) is materialized, so the previous
-            # round's blocks are dead — release them instead of letting
-            # them pile up for the remaining rounds awaiting GC
-            if prev_ckpt is not None:
-                _release_local_checkpoint(prev_ckpt)
-            prev_ckpt = stepped
-            labels = stepped.select("doc_id", "label")
-            if changed == 0:
-                return labels.select("doc_id", F.col("label").alias("cluster_root"))
-    finally:
-        sess.conf.set("spark.sql.shuffle.partitions", old_sp)
-    raise RuntimeError("connected_components did not converge in 20 rounds")
+
+        def label_sum(labels: DataFrame):
+            return labels.agg(F.sum(F.col("label").cast("decimal(38,0)"))).collect()[0][0]
+
+        labels = edges.selectExpr("src AS doc_id", "src AS label").distinct()
+        labels = fx.converge(labels, propagate, 20, measure=label_sum, must_converge=True)
+        return fx.result(labels.select("doc_id", F.col("label").alias("cluster_root")))
 
 
 # SimHash parameters: 64-bit fingerprints banded as 4 x 16 bits. The

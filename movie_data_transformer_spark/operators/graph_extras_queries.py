@@ -12,9 +12,10 @@ self-join the working table, so unrolling is the portable form, and the
 MATERIALIZED hint stops the chained stages from inlining exponentially. Peeling is monotone,
 so once the node set is stable every further round is a no-op: the
 Spark loop early-exits on convergence and still equals the oracle's
-fixed 6 rounds. `test_kcore_converges_within_bound` pins that 6 rounds
-ARE a fixpoint at every test SF (the cohort graph peels in <=2), so the
-bound is a proven invariant, not silent truncation.
+fixed 6 rounds. `test_kcore_converges_within_bound_and_peels_the_chain`
+pins the result to a pure-Python peel run to its fixpoint (the cohort
+graph peels in <=2 rounds), so the bound is a proven invariant, not
+silent truncation.
 
 Graph fixture: recsys_queries.interactions' taste-cohort watch table —
 users are adjacent when they share >= 2 titles (cohorts within distance
@@ -33,15 +34,12 @@ sf0.1, so the default never binds in driver runs.
 
 The cohort graph is deliberately dense (every user has degree >= 3), so
 a PLANTED pendant chain c0 - p:0 - p:1 - ... - p:4 is unioned in (the
-repo's planted-truth pattern): round r peels exactly p:{5-r}, so all
-five peel rounds do real verified work, and round 6 is the proven no-op
-that makes the convergence gate honest rather than vacuous.
+repo's planted-truth pattern): no chain node reaches degree K_CORE, so
+the whole chain peels out while its anchor c0 stays in the core, and
+BFS walks it one level per hop.
 
 Scale: each peel round = one degree agg (shuffle on node) + one
-semi-join of edges against survivors; MAX_PEELS bounds the rounds, and
-the edge set is localCheckpoint'd once (feeds every round) then
-shrunk per round — the standard iterative-graph pattern here
-(graph_pagerank's loop discipline).
+semi-join of edges against survivors; MAX_PEELS bounds the rounds.
 """
 
 from __future__ import annotations
@@ -49,6 +47,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from movie_data_transformer_spark.operators.fixpoint import Fixpoint, rows
 from movie_data_transformer_spark.operators.pairs import shared_key_pairs
 from movie_data_transformer_spark.operators.recsys_queries import (
     INTERACTIONS_CTE,
@@ -84,10 +83,12 @@ def cowatch_user_edges(
     )
 
 
-def kcore_peel(edges: DataFrame, max_peels: int = MAX_PEELS) -> DataFrame:
+def kcore_peel(edges: DataFrame) -> DataFrame:
     """Surviving (customerId, core_degree) after the bounded K_CORE-core
-    peel. Early-exits when a round removes nothing (== the oracle's fixed
-    max_peels rounds, since further rounds are no-ops).
+    peel of at most MAX_PEELS rounds. Stops when a round removes nothing
+    (== the oracle's fixed MAX_PEELS rounds, since further rounds are
+    no-ops): peeling is monotone, so an equal survivor count is the
+    fixpoint. The loop is operators/fixpoint.py's.
 
     Peels on the ALIVE-NODE set, not the edge set: the edge table is
     materialized ONCE and stays fixed; each round semi-joins it against
@@ -97,39 +98,32 @@ def kcore_peel(edges: DataFrame, max_peels: int = MAX_PEELS) -> DataFrame:
     O(nodes) instead of O(edges) — at sf0.1 this cut the operator from
     8.1s to ~2s, and at 100 TB it is the difference between shuffling
     the edge set 6 times and once."""
-    edges = edges.localCheckpoint()  # scanned every round, materialize once
+    with Fixpoint(edges) as fx:
 
-    def degrees(alive: DataFrame | None) -> DataFrame:
-        sub = edges
-        if alive is not None:
-            sub = sub.join(
-                alive.withColumnRenamed("node", "u"), "u", "left_semi"
-            ).join(alive.withColumnRenamed("node", "v"), "v", "left_semi")
-        return (
-            sub.select(F.col("u").alias("node"))
-            .union(sub.select(F.col("v").alias("node")))
-            .groupBy("node")
-            .agg(F.count("*").alias("deg"))
+        def degrees(alive: DataFrame | None) -> DataFrame:
+            sub = fx.source
+            if alive is not None:
+                for end in ("u", "v"):
+                    sub = sub.join(alive.withColumnRenamed("node", end), end, "left_semi")
+            return (
+                sub.select(F.col("u").alias("node"))
+                .union(sub.select(F.col("v").alias("node")))
+                .groupBy("node")
+                .agg(F.count("*").alias("deg"))
+            )
+
+        def peel(alive: DataFrame | None, _round: int) -> DataFrame:
+            return degrees(alive).filter(F.col("deg") >= K_CORE).select("node")
+
+        alive = fx.converge(None, peel, MAX_PEELS, measure=rows)
+        return fx.result(
+            degrees(alive).selectExpr("node AS customerId", "CAST(deg AS BIGINT) AS core_degree")
         )
 
-    alive: DataFrame | None = None
-    n_alive = -1
-    for _ in range(max_peels):
-        deg = degrees(alive)
-        nxt = deg.filter(F.col("deg") >= K_CORE).select("node").localCheckpoint()
-        n_nxt = nxt.count()
-        if n_nxt == n_alive:  # monotone => equal count = fixpoint
-            alive = nxt
-            break
-        alive, n_alive = nxt, n_nxt
-    return degrees(alive).selectExpr(
-        "node AS customerId", "CAST(deg AS BIGINT) AS core_degree"
-    )
 
-
-#: pendant chain planted below the co-watch graph: peels one node per
-#: round (p:4 in round 1 ... p:0 in round 5; round 6 is the no-op that
-#: proves the fixpoint). 'c0' = user_id 0, present at every SF.
+#: pendant chain planted below the co-watch graph: every chain node has
+#: degree < K_CORE, so the k-core peels it out, and BFS from c0 reaches
+#: one chain node per hop. 'c0' = user_id 0, present at every SF.
 PENDANT_CHAIN = [("c0", "p:0"), ("p:0", "p:1"), ("p:1", "p:2"), ("p:2", "p:3"), ("p:3", "p:4")]
 
 
@@ -194,30 +188,27 @@ MAX_HOPS = 6
 
 def bfs_distances(edges: DataFrame, seeds: DataFrame) -> DataFrame:
     """(customerId, dist) — unweighted shortest-path levels from the seed
-    set, bounded at MAX_HOPS (the oracle's unrolled depth). Frontier
-    iteration keeps O(reached nodes) state per round (the kcore alive-set
-    discipline): the edge table is materialized once; each round expands
-    the FRONTIER only (not the whole reached set) through one semi-join +
-    distinct, and early-exits when the frontier empties."""
-    edges = edges.localCheckpoint()
-    both = edges.unionAll(edges.selectExpr("v AS u", "u AS v"))
-    reached = seeds.selectExpr("node", "CAST(0 AS INT) AS dist").localCheckpoint()
-    frontier = reached.select("node")
-    for hop in range(1, MAX_HOPS + 1):
-        nxt = (
-            both.join(frontier.withColumnRenamed("node", "u"), "u", "left_semi")
-            .select(F.col("v").alias("node"))
-            .distinct()
-            .join(reached.select("node"), "node", "left_anti")
-            .localCheckpoint()
-        )
-        if nxt.isEmpty():
-            break
-        reached = reached.unionAll(
-            nxt.selectExpr("node", f"CAST({hop} AS INT) AS dist")
-        ).localCheckpoint()
-        frontier = nxt
-    return reached.selectExpr("node AS customerId", "dist")
+    set, bounded at MAX_HOPS (the oracle's unrolled depth). The state is
+    the reached set; round `hop` expands only its FRONTIER (the nodes at
+    dist hop - 1) through one semi-join + distinct against the edge
+    table, materialized once, and stops when the reached count stops
+    growing (the frontier emptied). The loop is operators/fixpoint.py's."""
+    with Fixpoint(edges) as fx:
+        both = fx.source.unionAll(fx.source.selectExpr("v AS u", "u AS v"))
+
+        def expand(reached: DataFrame, hop: int) -> DataFrame:
+            frontier = reached.filter(F.col("dist") == hop - 1).select(F.col("node").alias("u"))
+            nxt = (
+                both.join(frontier, "u", "left_semi")
+                .select(F.col("v").alias("node"))
+                .distinct()
+                .join(reached.select("node"), "node", "left_anti")
+            )
+            return reached.unionAll(nxt.selectExpr("node", f"CAST({hop} AS INT) AS dist"))
+
+        reached = seeds.selectExpr("node", "CAST(0 AS INT) AS dist")
+        reached = fx.converge(reached, expand, MAX_HOPS, measure=rows)
+        return fx.result(reached.selectExpr("node AS customerId", "dist"))
 
 
 def q_graph_bfs_distances(spark: SparkSession, sf_dir: str) -> DataFrame:

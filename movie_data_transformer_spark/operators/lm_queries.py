@@ -403,7 +403,7 @@ def q_bpe_learn_merges(spark: SparkSession, sf_dir: str) -> DataFrame:
     low/lower/newest golden pytest (tests/test_bpe.py)."""
     from movie_data_transformer_spark.operators.bpe import learn_bpe_merges
 
-    return learn_bpe_merges(load_table(spark, sf_dir, "documents"), n_merges=12)
+    return learn_bpe_merges(load_table(spark, sf_dir, "documents"))
 
 
 def q_bpe_invariants_gate(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -424,7 +424,7 @@ def q_bpe_invariants_gate(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
     docs = load_table(spark, sf_dir, "documents")
-    learned = learn_bpe_merges(docs, n_merges=12).orderBy("merge_idx").collect()
+    learned = learn_bpe_merges(docs).orderBy("merge_idx").collect()
     first = top_pair(words_as_symbols(docs))
     first_ok = bool(
         learned

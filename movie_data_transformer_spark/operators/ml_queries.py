@@ -75,9 +75,9 @@ def _features(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 def train_lr(
-    spark: SparkSession, sf_dir: str, iters: int = ITERS
+    spark: SparkSession, sf_dir: str
 ) -> tuple[list[float], float, list[float], float]:
-    """Run full-batch GD; returns (weights, bias, loss_history, final_acc).
+    """Run ITERS rounds of full-batch GD; returns (weights, bias, loss_history, final_acc).
 
     NO cross-call memo (r12 VERDICT what's-wrong #3): every invocation
     trains from the parquet inputs. Training is deterministic (decimal
@@ -86,17 +86,13 @@ def train_lr(
     per process, inside each entry's own timed region where it belongs.
     """
     f = _features(spark, sf_dir).persist()
-    # the per-round aggregate is 1-row; a 32-wide exchange spec is pure
-    # scheduling overhead (the pagerank fixpoint lesson) — scope it down
-    prev_width = spark.conf.get("spark.sql.shuffle.partitions")
-    spark.conf.set("spark.sql.shuffle.partitions", "1")
     try:
         n = f.count()
         w = [0.0] * DIM
         b = 0.0
         losses: list[float] = []
         acc = 0.0
-        for _ in range(iters):
+        for _ in range(ITERS):
             z = (
                 " + ".join(f"CAST('{w[i]!r}' AS DOUBLE) * x{i}" for i in range(DIM))
                 + f" + CAST('{b!r}' AS DOUBLE)"
@@ -122,7 +118,6 @@ def train_lr(
             b -= LEARN_RATE * float(r.gb) / n
         return w, b, losses, acc
     finally:
-        spark.conf.set("spark.sql.shuffle.partitions", prev_width)
         f.unpersist()
 
 

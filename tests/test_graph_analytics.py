@@ -5,9 +5,11 @@ invariants."""
 from __future__ import annotations
 
 import numpy as np
+import pytest
 from pyspark.sql import functions as F
 
 from movie_data_transformer_spark.operators.analytics_queries import (
+    PAGERANK_ITERS,
     pagerank,
     q_events_value_outliers,
     q_graph_pagerank,
@@ -24,7 +26,7 @@ def test_pagerank_matches_numpy_power_iteration(spark):
         (2, 4, 1.0),
     ]
     edges = spark.createDataFrame(rows, "src long, dst long, weight double")
-    got = {r.node: r.pr for r in pagerank(edges, n_iter=20).collect()}
+    got = {r.node: r.pr for r in pagerank(edges).collect()}
 
     nodes = sorted({r[0] for r in rows} | {r[1] for r in rows})
     idx = {v: i for i, v in enumerate(nodes)}
@@ -39,7 +41,7 @@ def test_pagerank_matches_numpy_power_iteration(spark):
         else:
             M[:, j] = 1.0 / n  # dangling: uniform redistribution
     pr = np.full(n, 1.0 / n)
-    for _ in range(20):
+    for _ in range(PAGERANK_ITERS):
         pr = (1 - 0.85) / n + 0.85 * (M @ pr)
     for v in nodes:
         assert abs(got[v] - pr[idx[v]]) < 1e-6, (v, got[v], pr[idx[v]])
@@ -100,10 +102,10 @@ def test_lr_trainer_learns_the_label_bucket(spark):
     ]
     df = spark.createDataFrame(texts, "doc_id long, text string")
     with patch.object(m, "load_table", lambda _s, _d, _t: df):
-        w1, b1, losses, acc = m.train_lr(spark, "synthetic-a", iters=10)
+        w1, b1, losses, acc = m.train_lr(spark, "synthetic-a")
         # no cross-call memo anymore (r13): the second run retrains from
         # scratch and must land on bit-identical weights
-        w2, b2, _, _ = m.train_lr(spark, "synthetic-a", iters=10)
+        w2, b2, _, _ = m.train_lr(spark, "synthetic-a")
     assert losses[-1] < losses[0]
     assert acc == 1.0
     others = max(x for i, x in enumerate(w1) if i != m.LABEL_BUCKET)
@@ -185,28 +187,82 @@ def test_assoc_rules_match_python_recount(spark, sf_dir):
         assert r.conf_p2_p1_micro == c12 * 1_000_000 // item[r.p2]
 
 
-def test_connected_components_releases_round_checkpoints(spark):
-    """r6 ADVICE: the label-propagation fixpoint localCheckpoints a frame
-    per round; superseded rounds' blocks (and the pre-repartition edges
-    checkpoint) must be released as the loop advances, not accumulate
-    until GC. A 17-node path graph needs ~8 min-propagation rounds, yet
-    at most the live checkpoints (partitioned edges + final labels +
-    transient result) may remain persisted afterwards."""
+def _pagerank_case(spark):
+    edges = spark.createDataFrame(
+        [(1, 2, 1.0), (2, 3, 2.0), (3, 1, 1.0), (3, 4, 1.0), (2, 4, 1.0)],
+        "src long, dst long, weight double",
+    )
+    return pagerank(edges)
+
+
+def _connected_components_case(spark):
     from movie_data_transformer_spark.operators.dedup import connected_components
 
-    sc = spark.sparkContext
-    baseline = len(sc._jsc.sc().getRDDStorageInfo())
+    # a 17-node path: ~8 min-propagation rounds
+    pairs = spark.createDataFrame([(i, i + 1) for i in range(16)], "doc_a long, doc_b long")
+    return connected_components(pairs)
 
-    pairs = spark.createDataFrame(
-        [(i, i + 1) for i in range(16)], "doc_a long, doc_b long"
+
+def _kcore_case(spark):
+    from movie_data_transformer_spark.operators.graph_extras_queries import kcore_peel
+
+    # a K4 core with a tail t1..t4: t4 has degree 2, and each peel drops
+    # the next tail node to degree 2, so the peel runs 5 rounds
+    core = [("a", "b"), ("a", "c"), ("a", "d"), ("b", "c"), ("b", "d"), ("c", "d")]
+    tail = [("a", "t1"), ("b", "t1"), ("t1", "t2"), ("c", "t2"), ("t2", "t3"),
+            ("d", "t3"), ("t3", "t4"), ("a", "t4")]
+    return kcore_peel(spark.createDataFrame(core + tail, "u string, v string"))
+
+
+def _bfs_case(spark):
+    from movie_data_transformer_spark.operators.graph_extras_queries import (
+        PENDANT_CHAIN,
+        bfs_distances,
     )
-    out = connected_components(pairs)
-    rows = {(r.doc_id, r.cluster_root) for r in out.collect()}
-    assert rows == {(i, 0) for i in range(17)}
-    live = len(sc._jsc.sc().getRDDStorageInfo())
-    # a path graph of 17 nodes runs ~8 rounds; without per-round release
-    # this sits ~8+ above baseline
-    assert live - baseline <= 3, (live, baseline)
+
+    edges = spark.createDataFrame(PENDANT_CHAIN, "u string, v string")
+    return bfs_distances(edges, spark.createDataFrame([("c0",)], "node string"))
+
+
+def _bpe_case(spark):
+    from movie_data_transformer_spark.operators.bpe import learn_bpe_merges
+
+    text = " ".join(["low"] * 5 + ["lower"] * 2 + ["newest"] * 6 + ["widest"] * 3)
+    return learn_bpe_merges(spark.createDataFrame([(1, text)], "doc_id long, text string"))
+
+
+@pytest.mark.parametrize(
+    "build, reads, expected",
+    [
+        pytest.param(_pagerank_case, 1, {(1,), (2,), (3,), (4,)}, id="pagerank"),
+        pytest.param(
+            _connected_components_case, 1, {(i, 0) for i in range(17)},
+            id="connected_components",
+        ),
+        pytest.param(_kcore_case, 2, {(n, 3) for n in "abcd"}, id="kcore_peel"),
+        pytest.param(
+            _bfs_case, 1, {("c0", 0)} | {(f"p:{i}", i + 1) for i in range(5)},
+            id="bfs_distances",
+        ),
+        pytest.param(_bpe_case, 0, {(i,) for i in range(12)}, id="learn_bpe_merges"),
+    ],
+)
+def test_fixpoint_releases_what_its_result_does_not_read(spark, build, reads, expected):
+    """r6 ADVICE: every fixpoint localCheckpoints its state round after
+    round, and `clearCache()` does not free those blocks. Once the
+    result is collected (its rows checked on their first
+    len(expected row) columns), the RDDs it left persisted are at most
+    the checkpoints the returned DataFrame reads (`reads`): superseded
+    rounds and the materialised input are released, not left for the
+    JVM's garbage collector."""
+    def persisted() -> set[int]:
+        return {i.id() for i in spark.sparkContext._jsc.sc().getRDDStorageInfo()}
+
+    baseline = persisted()
+    width = len(next(iter(expected)))
+    assert {tuple(r)[:width] for r in build(spark).collect()} == expected
+    left = persisted() - baseline
+    assert len(left) <= reads, sorted(left)
 
 
 def test_theil_sen_matches_python_and_resists_outliers(spark, sf_dir):

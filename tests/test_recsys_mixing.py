@@ -5,6 +5,7 @@ oracle; these pin the PROPERTIES an oracle mismatch wouldn't name.)"""
 
 from __future__ import annotations
 
+from collections import Counter
 from collections.abc import Iterator
 
 import pandas as pd
@@ -85,30 +86,30 @@ def test_group_split_has_no_leakage_and_partitions_orders(spark, sf_dir):
 
 
 def test_kcore_converges_within_bound_and_peels_the_chain(spark, sf_dir):
+    """q_graph_kcore equals a pure-Python peel run to its fixpoint over
+    the collected edges: the MAX_PEELS bound reaches the true core."""
     from movie_data_transformer_spark.operators.graph_extras_queries import (
-        MAX_PEELS,
+        K_CORE,
+        PENDANT_CHAIN,
         cowatch_user_edges,
-        kcore_peel,
         q_graph_kcore,
     )
+    from movie_data_transformer_spark.operators.recsys_queries import interactions
 
     core = {r.customerId: r.core_degree for r in q_graph_kcore(spark, sf_dir).collect()}
     # every planted pendant node peels out; the anchor survives
     assert not any(c.startswith("p:") for c in core)
     assert "c0" in core
-    # MAX_PEELS is a true fixpoint: one extra round changes nothing
-    chain = spark.createDataFrame(
-        [("c0", "p:0"), ("p:0", "p:1"), ("p:1", "p:2"), ("p:2", "p:3"), ("p:3", "p:4")],
-        "u string, v string",
-    )
-    from movie_data_transformer_spark.operators.recsys_queries import interactions
 
-    edges = cowatch_user_edges(interactions(spark, sf_dir)).unionAll(chain)
-    more = {
-        r.customerId: r.core_degree
-        for r in kcore_peel(edges, max_peels=MAX_PEELS + 1).collect()
-    }
-    assert more == core
+    edges = [(r.u, r.v) for r in cowatch_user_edges(interactions(spark, sf_dir)).collect()]
+    edges += PENDANT_CHAIN
+    while True:
+        deg = Counter(n for e in edges for n in e)
+        kept = [(u, v) for u, v in edges if deg[u] >= K_CORE and deg[v] >= K_CORE]
+        if kept == edges:
+            break
+        edges = kept
+    assert core == dict(Counter(n for e in edges for n in e))
 
 
 def test_compaction_bins_cover_all_files_within_target(spark, sf_dir):

@@ -149,9 +149,6 @@ def test_package_modules_have_no_unused_imports():
 #: Defaulted package parameters that every caller outside the tests
 #: passes one value, kept because the named test sets another one.
 KEPT_TEST_KNOBS = {
-    "operators.analytics_queries.pagerank(n_iter)":
-        "test_graph_analytics.py::test_pagerank_matches_numpy_power_iteration",
-    "operators.bpe.learn_bpe_merges(n_merges)": "test_bpe.py::test_bpe_classic_golden",
     "operators.dedup.containment_pairs(max_shingle_df)":
         "test_dedup.py::test_containment_df_cap_is_conservative",
     "operators.dedup.containment_pairs(threshold)":
@@ -162,16 +159,12 @@ KEPT_TEST_KNOBS = {
         "test_dedup.py::test_containment_catches_jaccard_blind_embedding",
     "operators.dedup.simhash_near_pairs(max_bucket_size)":
         "test_dedup.py::test_simhash_mega_bucket_cap_routes_to_exact_dedup",
-    "operators.graph_extras_queries.kcore_peel(max_peels)":
-        "test_recsys_mixing.py::test_kcore_converges_within_bound_and_peels_the_chain",
     "operators.layout_queries.small_files_inventory(glob)":
         "test_dedup.py::test_streaming_dedup_compaction_bounds_file_count",
     "operators.layout_queries.small_files_inventory(recursive)":
         "test_dedup.py::test_streaming_dedup_compaction_bounds_file_count",
     "operators.linkpred_queries.predicted_links(max_degree)":
         "test_r8_properties.py::test_link_prediction_nonadjacent_and_hub_cap",
-    "operators.ml_queries.train_lr(iters)":
-        "test_graph_analytics.py::test_lr_trainer_learns_the_label_bucket",
     "operators.ordered_stats.attach_order_stats(n_buckets)":
         "test_r13_opt_plans.py::test_ordered_stats_descending_and_small_n",
     "operators.recsys_queries.item_similarities(max_watchlist)":
@@ -407,6 +400,48 @@ def test_pairs_of_rows_that_share_a_key_are_made_in_one_place():
     assert not stray, sorted(stray)
 
 
+#: The one module that sizes the shuffle width of an iteration and
+#: checkpoints and releases its state, and the session builder.
+FIXPOINT_DRIVER = "operators.fixpoint"
+WIDTH_WRITERS = {FIXPOINT_DRIVER, "session"}
+
+
+def test_fixpoint_state_is_kept_in_one_place():
+    """Every DataFrame-state iteration runs through
+    `operators/fixpoint.py`. Outside it (and `session.py`), nothing
+    writes `spark.sql.shuffle.partitions`; outside it, no
+    `.localCheckpoint()` is called inside a `for` or `while` body, and no
+    function both reaches `queryExecution()` and calls `.unpersist(`
+    (the release of a checkpoint's blocks). A one-shot materialisation
+    outside a loop is not loop state and may stay where it is."""
+    stray = set()
+    for mod, tree in _package_modules().items():
+        for node in ast.walk(tree):
+            if (
+                mod not in WIDTH_WRITERS
+                and isinstance(node, ast.Call)
+                and _called_name(node) in {"set", "config", "setConf"}
+                and node.args
+                and isinstance(node.args[0], ast.Constant)
+                and node.args[0].value == "spark.sql.shuffle.partitions"
+            ):
+                stray.add(f"{mod}: writes spark.sql.shuffle.partitions")
+            if mod == FIXPOINT_DRIVER:
+                continue
+            if isinstance(node, (ast.For, ast.AsyncFor, ast.While)) and any(
+                isinstance(c, ast.Call) and _called_name(c) == "localCheckpoint"
+                for body in (node.body, node.orelse)
+                for stmt in body
+                for c in ast.walk(stmt)
+            ):
+                stray.add(f"{mod}: localCheckpoint in a loop")
+            if isinstance(node, (ast.FunctionDef, ast.AsyncFunctionDef)):
+                calls = {_called_name(c) for c in ast.walk(node) if isinstance(c, ast.Call)}
+                if {"queryExecution", "unpersist"} <= calls:
+                    stray.add(f"{mod}: unpersists through queryExecution()")
+    assert not stray, sorted(stray)
+
+
 def test_capture_plans_writes_only_to_its_out_dir(spark, sf_dir, tmp_path, monkeypatch):
     """tools/capture_plans.py writes each plan it captures into the
     directory its first argument names, and leaves the checked-in
@@ -440,7 +475,7 @@ ROWS_ONLY_FLOORS = {
     "semdedup_pairs": 25,  # observed 50 (planted near-dups)
     "agg_approx_sketches": 3,  # one row per region bucket
     "agg_hll_mergeable": 3,  # exactly one row per returnflag
-    "bpe_learn_merges": 6,  # exactly n_merges=12 on any non-trivial corpus
+    "bpe_learn_merges": 6,  # exactly N_MERGES=12 on any non-trivial corpus
     "agg_kll_quantiles": 5,  # exactly one row per event_type
     "lr_train_quality": 33,  # exactly DIM=32 weights + the bias row
 }
