@@ -18,8 +18,12 @@ At 100 TB the state side must not be the whole state: the streaming
 caller (streaming/merge_stream.py) passes only the state rows of the
 batch's keys, found by a broadcast semi join over the unshuffled state,
 and commits the result as a delta of a merge-on-read store, so both
-sides of this join are batch-sized. Clustering the state by customerId
-would let that semi join prune files instead of scanning the whole base.
+sides of this join are batch-sized. The store writes every version as
+zstd parquet sorted by (movieId, customerId) within each file: a
+72,881-row base is 403 KB that way, 688 KB as unsorted snappy and 649 KB
+as zstd sorted by customerId. The semi join still scans the whole base: a
+broadcast semi join prunes no files under either order, which would take
+the batch's keys pushed into the scan.
 
 Both sides are deduped first (the engine's uniform-dedup divergence,
 SURVEY.md §2.2 item 4 — the reference's intra-batch duplicate retention is

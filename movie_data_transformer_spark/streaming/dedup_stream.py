@@ -196,7 +196,7 @@ def run_streaming_incremental_dedup(
     work_dir: str,
     max_files_per_trigger: int = 1,
     max_bucket_size: int | None = None,
-    compact_after: int | None = None,
+    compact_after: int = 8,
 ) -> str:
     """Stream JSONL doc files from input_dir in micro-batches, link each
     against the growing corpus index seeded from seed_docs, and return
@@ -206,7 +206,9 @@ def run_streaming_incremental_dedup(
     The files are read by `sources.jsonl.stream_jsonl` and run by
     `harness.run_available_now`: everything available now is processed,
     then the call returns; the checkpoint under `work_dir` makes it
-    restartable."""
+    restartable. Before each batch, each of the three stores folds its
+    committed ingests into one once more than `compact_after` are live,
+    so a long-running stream keeps a bounded number of dirs."""
     sets_store = AppendOnlyStore(spark, os.path.join(work_dir, "index_sets"))
     bands_store = AppendOnlyStore(spark, os.path.join(work_dir, "index_bands"))
     pairs_store = AppendOnlyStore(spark, os.path.join(work_dir, "pairs"))
@@ -228,12 +230,11 @@ def run_streaming_incremental_dedup(
 
     def _link_batch(batch_docs: DataFrame, batch_id: int) -> None:
         ingest_id = str(batch_id)
-        if compact_after is not None:
-            # between-trigger maintenance, never folding the in-flight
-            # ingest (a replay of THIS batch must still be able to
-            # exclude its own previous partial output)
-            for store in (sets_store, bands_store, pairs_store):
-                store.compact(max_ingests=compact_after, exclude=ingest_id)
+        # between-trigger maintenance, never folding the in-flight
+        # ingest (a replay of THIS batch must still be able to
+        # exclude its own previous partial output)
+        for store in (sets_store, bands_store, pairs_store):
+            store.compact(max_ingests=compact_after, exclude=ingest_id)
         new_sets = doc_shingle_sets(batch_docs).persist()
         new_bands = band_table(minhash_signatures_from_arrays(new_sets)).persist()
         try:

@@ -13,11 +13,12 @@ proportion to the keys it touches, not to the whole state: the state is
 read restricted to the batch's (customerId, movieId) keys by a broadcast
 semi join, only those rows are merged, and the merged rows are committed
 as a delta version of a merge-on-read store (ParquetStateStore). No job
-shuffles or sorts the stored state. A `_CURRENT` pointer file flips
-atomically per commit, so reads are snapshot-consistent, unlike the
-reference's non-atomic per-key GET/SET (:180-193). On a real deployment
-this is `MERGE INTO` on a Delta/Iceberg table with deletion vectors or
-merge-on-read positional deletes, clustered by customerId.
+shuffles the stored state; a commit sorts what it writes within each
+partition. A `_CURRENT` pointer file flips atomically per commit, so
+reads are snapshot-consistent, unlike the reference's non-atomic per-key
+GET/SET (:180-193). On a real deployment this is `MERGE INTO` on a
+Delta/Iceberg table with deletion vectors or merge-on-read positional
+deletes.
 
 Divergence: ratings whose customerId or movieId is null are dropped
 before the merge. A null key matches no stored row, so such rows would
@@ -78,7 +79,17 @@ class ParquetStateStore:
     proportion to its input; once a base carries `_MAX_DELTAS` deltas, the
     next commit folds the chain into a new base, which bounds the joins a
     read makes. Directories are relative to `root`, so a copied store
-    reads the same."""
+    reads the same.
+
+    Every version (first base, delta or fold) is zstd parquet, each part
+    file sorted by (movieId, customerId): a local sort, no shuffle. One
+    JSONL document is one movie with its viewers, so in that order
+    `movieId`, `title` and `yearOfRelease` form long dictionary/RLE runs;
+    in customerId order (~1.4 rows per customer) they scatter. One
+    72,881-row base as one file: 688 KB snappy unsorted, 477 KB zstd
+    unsorted, 649 KB zstd by (customerId, movieId), 403 KB zstd by
+    (movieId, customerId). The session's default parquet codec is left
+    as it is for every other write."""
 
     def __init__(self, spark: SparkSession, root: str):
         self.spark = spark
@@ -137,7 +148,9 @@ class ParquetStateStore:
             chain = self._chain(cur)
             if len(chain) > _MAX_DELTAS:
                 df, base = _upsert(self._read_chain(chain), df), True
-        df.write.mode("overwrite").parquet(path)
+        df.sortWithinPartitions("movieId", "customerId").write.mode("overwrite").option(
+            "compression", "zstd"
+        ).parquet(path)
         if base:
             with open(os.path.join(path, _BASE), "w"):
                 pass

@@ -7,6 +7,7 @@ import json
 import os
 import shutil
 
+import pyarrow.parquet as pq
 import pytest
 
 from movie_data_transformer_spark.schemas import MOVIE_INPUT, RATING_FLAT
@@ -46,13 +47,36 @@ def test_corrupt_records_extraction(spark, tmp_path):
     assert bad == ["BROKEN {{{"]
 
 
+def _assert_compact_layout(version_dir):
+    """Every column chunk of every part file is zstd, and each file's
+    rows are in (movieId, customerId) order, nulls first."""
+    parts = [p for p in os.listdir(version_dir) if p.startswith("part-")]
+    assert parts, version_dir
+    for p in parts:
+        f = pq.ParquetFile(os.path.join(version_dir, p))
+        meta = f.metadata
+        codecs = {
+            meta.row_group(g).column(c).compression
+            for g in range(meta.num_row_groups)
+            for c in range(meta.num_columns)
+        }
+        assert codecs == {"ZSTD"}, (p, codecs)
+        cols = f.read(columns=["movieId", "customerId"]).to_pydict()
+        keys = [
+            (m is not None, m or "", c is not None, c or "")
+            for m, c in zip(cols["movieId"], cols["customerId"])
+        ]
+        assert keys == sorted(keys), p
+
+
 def test_state_store_prunes_old_versions(spark, tmp_path):
     """The merge-on-read store against a pure-Python upsert, across two
     folds at the delta cap and a delta after them. After every commit:
     `read()` equals the model (null keys never match, so every null-key
     row is kept); the current version and the two before it each read
-    back from their own chain; and nothing older than the base that the
-    oldest of them reads is left on disk."""
+    back from their own chain; nothing older than the base that the
+    oldest of them reads is left on disk; and the version just written,
+    base, delta or fold, is zstd sorted by (movieId, customerId)."""
     store = ParquetStateStore(spark, str(tmp_path / "st"))
 
     def row(c, m, rating):
@@ -72,6 +96,7 @@ def test_state_store_prunes_old_versions(spark, tmp_path):
     for v, rows in enumerate(commits, start=1):
         assert store.commit(spark.createDataFrame(rows, RATING_FLAT).coalesce(1)) == v
         assert store.current_version() == v
+        _assert_compact_layout(store._dir(v))
         for r in rows:
             if r[3] is None:
                 nulls.append(r)
